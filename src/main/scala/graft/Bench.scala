@@ -21,14 +21,13 @@ import java.nio.file.{Files, Paths}
   * Methodology note, stated here and in the JSON (`cache_policy`): the
   * warm-up pass runs every headline query once at the target SF before
   * timing, so timed runs measure warm steady-state — C2-compiled generated
-  * code, JIT'd parquet readers, resident file-listing caches. Since
-  * round-19 (VERDICT r18 #6) the [[graft.core.Caching]] LRU registry is
-  * CLEARED before every timed repetition: a query that caches a shared
+  * code, JIT'd parquet readers, resident file-listing caches. The warm-up
+  * and every timed repetition each run inside their own
+  * [[graft.core.Caching.scoped]] scope: a query that caches a shared
   * subtree pays that cache's population inside each rep (the within-run
-  * reuse it legitimately buys still counts), instead of runs 2..3 reading
-  * the cache run 1 left behind — min-of-3 now measures steady-state cost
-  * including cache fill. Set SPARK_GRAFT_BENCH_KEEP_LRU=1 for the old
-  * warm-LRU comparison.
+  * reuse it legitimately buys still counts), and the scope releases the
+  * cache when the rep ends — runs 2..3 never read a cache run 1 left
+  * behind, so min-of-3 measures steady-state cost including cache fill.
   */
 object Bench {
 
@@ -553,7 +552,7 @@ object Bench {
     // Errors here are not swallowed silently — they will recur in the timed
     // loop and be reported there.
     (headline ++ extras).filter(keep).foreach { name =>
-      try materialize(benchOp(name)(spark, sfDir))
+      try graft.core.Caching.scoped(materialize(benchOp(name)(spark, sfDir)))
       catch { case _: Throwable => }
     }
 
@@ -562,20 +561,17 @@ object Bench {
     // contention-free estimate of steady-state cost and makes
     // round-over-round regression comparison meaningful.
     val runsPerQuery = 3
-    // Measurement hygiene (round-19, VERDICT r18 #6): clear the Caching
-    // LRU registry before EVERY timed repetition, so each rep pays its own
-    // cache population (the within-run reuse a cache legitimately buys
-    // stays inside the rep; what goes away is runs 2..3 reading run 1's
-    // leftover cache — min-of-3 now measures steady-state cost). Old-style
-    // warm-LRU numbers remain comparable via SPARK_GRAFT_BENCH_KEEP_LRU=1.
-    val keepLru = sys.env.contains("SPARK_GRAFT_BENCH_KEEP_LRU")
+    // Measurement hygiene (round-19, VERDICT r18 #6): EVERY timed
+    // repetition is its own cache scope, so each rep pays its own cache
+    // population (the within-run reuse a cache legitimately buys stays
+    // inside the rep; runs 2..3 never read run 1's leftover cache). The
+    // clock stops before the scope releases its frames.
     def timeAll(names: Seq[String]): Seq[(String, Option[Double], Option[String])] =
       names.map { name =>
         val fn = benchOp(name)
         val results = (1 to runsPerQuery).map { _ =>
-          if (!keepLru) graft.core.Caching.clearRegistry()
-          val t0 = System.nanoTime()
-          try {
+          try graft.core.Caching.scoped {
+            val t0 = System.nanoTime()
             materialize(fn(spark, sfDir))
             Right((System.nanoTime() - t0) / 1e9)
           } catch {
@@ -675,7 +671,7 @@ object Bench {
         s""""remeasured":${remeasured.distinct.map(jstr).mkString("[", ",", "]")},"extras":$extraTimes,""" +
         s""""baseline":${jstr(baselineName)},"load":$loadJson,"tainted":$tainted,"setup_sec":$setupJson,""" +
         s""""runs_per_query":$runsPerQuery,"aggregation":"min","timing_action":"hash_rows",""" +
-        s""""cache_policy":"warm JVM, cold Caching-LRU per rep${if (keepLru) " (KEEP_LRU override: warm)" else ""}; min of $runsPerQuery runs per query; action = xxhash64 over every output column (full materialization, count() pruned pure projections); q98/q130/q161/q163 timed as stored-index probes, q106/q119/q127/q141/q148 against prebuilt warehouses, q140/q145 as post-sweep serving reads, q165/q171 as range probes over prebuilt rollups, q182 as the stream over a prelanded fixture dir (builds in setup_sec)"}"""
+        s""""cache_policy":"warm JVM, one Caching scope per rep (caches released at rep end); min of $runsPerQuery runs per query; action = xxhash64 over every output column (full materialization, count() pruned pure projections); q98/q130/q161/q163 timed as stored-index probes, q106/q119/q127/q141/q148 against prebuilt warehouses, q140/q145 as post-sweep serving reads, q165/q171 as range probes over prebuilt rollups, q182 as the stream over a prelanded fixture dir (builds in setup_sec)"}"""
     // Full-fidelity record → BENCH_LOCAL_<sf>.json, keyed by SF so runs at
     // different scale factors never clobber each other (r11: a tainted
     // sf0.001 run overwrote the only untainted sf0.1 record and disarmed
@@ -729,7 +725,7 @@ object Bench {
         s""""baseline":${jstr(baselineName)},"load":$loadJson,""" +
         s""""tainted":$tainted,"setup_sec":$shortSetup,"runs_per_query":$runsPerQuery,""" +
         s""""aggregation":"min","timing_action":"hash_rows","key_style":"qnum",""" +
-        s""""cache_policy":"warm JVM cold-LRU-per-rep${if (keepLru) " (KEEP_LRU: warm)" else ""} min-of-$runsPerQuery, hash_rows; maps cap to slowest (sums/counts uncapped); full record in BENCH_LOCAL_<sf>.json"}"""
+        s""""cache_policy":"warm JVM scoped-cache-per-rep min-of-$runsPerQuery, hash_rows; maps cap to slowest (sums/counts uncapped); full record in BENCH_LOCAL_<sf>.json"}"""
     // never fail a finished run over line length: shrink the caps until
     // the record (plus sbt's trailing "[success]" line) fits the window
     val shortLine = Seq((30, 15), (15, 8), (6, 3))

@@ -881,7 +881,7 @@ object Queries {
     // shared-subtree cache (round-18, guide §5): the tokenizing feature
     // pass feeds BOTH the value-count pass and the final rank join —
     // uncached the corpus is tokenized twice per run. One narrow row per
-    // doc; standard Caching LRU retention (the q37 signature-table
+    // doc, cached for the caller's scope (the q37 signature-table
     // pattern).
     val feats = graft.core.Caching.cached(
       TextAnalysis.qualityFeatures(t(s, dir, "documents"))

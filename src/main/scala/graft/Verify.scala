@@ -22,8 +22,8 @@ object Verify {
       // leave a stale dump for the checker to greenwash as PASS — a
       // missing dir is an honest missing_dump FAIL
       new scala.reflect.io.Directory(new java.io.File(s"$outDir/$name")).deleteRecursively()
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try graft.core.Caching.scoped(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

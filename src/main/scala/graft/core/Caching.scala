@@ -1,97 +1,67 @@
 package graft.core
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** Idempotent caching for operator-internal shared subtrees.
+/** The one caching primitive: operator-internal shared subtrees are
+  * cached for the lifetime of a SCOPE.
   *
-  * `Dataset.storageLevel` consults the session's CacheManager by canonical
-  * plan, so when the same operator is re-invoked over the same input (the
-  * bench's warm-up + min-of-3 loop, or a retried pipeline stage) the lookup
-  * finds the existing entry and we reuse it instead of calling `.cache()`
-  * again — which logs "CacheManager: Asked to cache already cached data"
-  * and re-registers nothing.
+  * [[scoped]] runs a body; when the body returns or throws, every frame
+  * [[cached]] inside it (and not already cached before) is unpersisted.
+  * [[cached]] registers a frame with the innermost scope open on the
+  * calling thread. Outside any scope it returns the frame unchanged, so no
+  * cache can outlive its owner.
   *
-  * RETENTION CONTRACT: frames entered through [[cached]] live in a bounded
-  * LRU registry ([[maxEntries]] frames); registering a new frame beyond the
-  * bound unpersists the least-recently-used one (non-blocking — Spark
-  * recomputes it if a concurrent job still needs it). So repeated operator
-  * invocations over the SAME input stay warm (the dedup/ANN signature-table
-  * reuse the bench measures), while a long-lived session sweeping DISTINCT
-  * inputs is bounded at `maxEntries` cached frames instead of accumulating
-  * executor memory forever. Callers with a scoped lifetime (train loops,
-  * DQ multi-pass) should prefer [[cachedOwned]] + [[releaseOwned]], which
-  * bypass the registry entirely and free eagerly at operator exit.
+  * Who opens the scope: whoever ends the work on the frame. An operator
+  * that runs its frame's consumers itself (a training loop, a multi-pass
+  * DQ suite, a write) scopes its own body. An operator that returns a lazy
+  * frame over a cached subtree does not: the caller that runs the action
+  * (a bench rep, a Verify dump, a test) holds the scope, and the cache
+  * lives exactly as long as that action.
+  *
+  * Idempotence: `Dataset.storageLevel` consults the session's CacheManager
+  * by canonical plan, so a frame already cached (by an outer scope or by
+  * anyone else) is reused as is, and stays the responsibility of whoever
+  * cached it first. Scopes are tracked in a plain (non-inheritable)
+  * ThreadLocal: a stream's `foreachBatch` thread opens its own.
   */
 object Caching {
 
-  /** Upper bound on distinct frames [[cached]] keeps persisted. 64 frames
-    * of operator-internal intermediates (signature tables, cell
-    * assignments) is far beyond any single pipeline's working set; lower it
-    * for memory-tight deployments before first use.
+  private val scopes = new ThreadLocal[List[collection.mutable.ArrayBuffer[DataFrame]]] {
+    override def initialValue(): List[collection.mutable.ArrayBuffer[DataFrame]] = Nil
+  }
+  private val held = new AtomicInteger(0)
+
+  /** Run `body`; on exit (normal or thrown) unpersist every frame
+    * [[cached]] inside it that was not already cached. Non-blocking:
+    * eviction proceeds in the background while the caller returns.
     */
-  @volatile var maxEntries: Int = 64
-
-  // access-ordered: get() refreshes recency. Keyed by the canonicalized
-  // ANALYZED plan — CacheManager's storageLevel lookup resolves through
-  // analysis, so keying on the raw logical plan would let two
-  // analysis-equal frames (same view reached via different API paths)
-  // share a cache entry but miss each other's recency refresh.
-  private val lru =
-    new java.util.LinkedHashMap[AnyRef, DataFrame](16, 0.75f, true)
-
-  private def key(df: DataFrame): AnyRef = df.queryExecution.analyzed.canonicalized
-
-  /** Cache `df` unless its canonical plan is already cached (by this
-    * registry or anyone else). See the retention contract above.
-    */
-  def cached(df: DataFrame): DataFrame = synchronized {
-    if (df.storageLevel != StorageLevel.NONE) {
-      lru.get(key(df)) // refresh recency if it is ours; no-op otherwise
-      df
-    } else {
-      df.cache()
-      lru.put(key(df), df)
-      while (lru.size > maxEntries) {
-        val it = lru.entrySet().iterator()
-        val eldest = it.next()
-        it.remove()
-        eldest.getValue.unpersist(blocking = false)
-      }
-      df
+  def scoped[T](body: => T): T = {
+    val mine = collection.mutable.ArrayBuffer.empty[DataFrame]
+    scopes.set(mine :: scopes.get)
+    try body
+    finally {
+      scopes.set(scopes.get.tail)
+      mine.foreach(_.unpersist(blocking = false))
+      held.addAndGet(-mine.size)
     }
   }
 
-  /** Number of frames currently tracked (and persisted) by the registry. */
-  def registrySize: Int = synchronized(lru.size)
-
-  /** Unpersist and forget every frame the registry tracks. Measurement
-    * hygiene hook (round-19, VERDICT r18 #6): the bench clears the
-    * registry between timed repetitions so min-of-N measures the
-    * steady-state cost — cache population INCLUDED — instead of runs 2..N
-    * reading a cache run 1 left warm. Unpersists are non-blocking; frames
-    * are recomputed on demand if anything still references them.
+  /** Cache `df` for the innermost open scope on this thread. A frame whose
+    * canonical plan is already cached is returned as is; outside any scope
+    * `df` is returned uncached.
     */
-  def clearRegistry(): Unit = synchronized {
-    val it = lru.values().iterator()
-    while (it.hasNext) { it.next().unpersist(blocking = false); () }
-    lru.clear()
+  def cached(df: DataFrame): DataFrame = {
+    scopes.get.headOption.foreach { mine =>
+      synchronized {
+        if (df.storageLevel == StorageLevel.NONE) { df.cache(); mine += df; held.incrementAndGet() }
+      }
+    }
+    df
   }
 
-  /** Like [[cached]], but reports ownership and bypasses the LRU registry:
-    * `owned = true` iff THIS call created the cache entry (the caller must
-    * then [[releaseOwned]] when done); `false` means someone upstream
-    * already cached the same plan and keeps responsibility for it. For
-    * operator-scoped lifetimes where eager release beats LRU retention.
-    */
-  def cachedOwned(df: DataFrame): (DataFrame, Boolean) =
-    if (df.storageLevel == StorageLevel.NONE) (df.cache(), true) else (df, false)
-
-  /** Unpersist a frame IF this caller owns it (the `owned` flag from
-    * [[cachedOwned]]). Non-blocking: eviction proceeds in the background
-    * while the caller returns. A no-op when `owned` is false — someone
-    * upstream cached the same canonical plan first and keeps the entry.
-    */
-  def releaseOwned(df: DataFrame, owned: Boolean): Unit =
-    if (owned) { df.unpersist(blocking = false); () }
+  /** Number of frames held by open scopes, across all threads. */
+  def registrySize: Int = held.get
 }

@@ -73,16 +73,14 @@ object DqSuite {
     * grouped agg per uniqueness check; when the suite needs multiple passes
     * the batch is cached so each pass doesn't recompute the source.
     */
-  def run(df0: DataFrame, expectations: Seq[Expectation], batchId: String, fileIdentifier: String): Seq[DqResult] = {
-    val rowScoped = expectations.filter(!_.isInstanceOf[Unique])
-    val uniques = expectations.collect { case u: Unique => u }
-    val passes = (if (rowScoped.nonEmpty) 1 else 0) + uniques.size
-    // own the cache only if the caller hasn't already cached this plan
-    val (df, owned) =
-      if (passes > 1) graft.core.Caching.cachedOwned(df0) else (df0, false)
-    try runOn(df, rowScoped, uniques, batchId, fileIdentifier)
-    finally if (owned) { df.unpersist(); () }
-  }
+  def run(df0: DataFrame, expectations: Seq[Expectation], batchId: String, fileIdentifier: String): Seq[DqResult] =
+    graft.core.Caching.scoped {
+      val rowScoped = expectations.filter(!_.isInstanceOf[Unique])
+      val uniques = expectations.collect { case u: Unique => u }
+      val passes = (if (rowScoped.nonEmpty) 1 else 0) + uniques.size
+      val df = if (passes > 1) graft.core.Caching.cached(df0) else df0
+      runOn(df, rowScoped, uniques, batchId, fileIdentifier)
+    }
 
   /** Deterministic GX-style identifiers (reference: opaque GX batch ids /
     * checkpoint run names; here pure functions of the inputs so replays

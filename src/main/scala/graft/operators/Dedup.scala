@@ -192,25 +192,23 @@ object Dedup {
     // the stats job runs TWO actions over the signature lineage (dict agg
     // + postings volume) — cache it for the probe's duration so the
     // shingling/minhashing isn't recomputed (VERDICT r17 #8 hygiene)
-    withSig.cache()
-    try autoStatsOf(withSig, size(col("shingles")), selfJoinVolume(banded, "bucket"))
-    finally withSig.unpersist()
+    graft.core.Caching.scoped {
+      graft.core.Caching.cached(withSig)
+      autoStatsOf(withSig, size(col("shingles")), selfJoinVolume(banded, "bucket"))
+    }
   }
 
   /** [[autoStatsMinhashLsh]]'s twin for the jaccardPairsPrefix stage. */
   private[graft] def autoStatsJaccardPrefix(
       docs: DataFrame, idCol: String, textCol: String,
-      tNum: Long, tDen: Long, shingleSize: Int): (Long, Double, Double, Long, Double) = {
-    val sets = jaccardSets(docs, idCol, textCol, shingleSize)
+      tNum: Long, tDen: Long, shingleSize: Int): (Long, Double, Double, Long, Double) = graft.core.Caching.scoped {
     // same two-action shape as autoStatsMinhashLsh: the ordered frame's
-    // prefix postings AND the dict agg both fold the shingle sets — cache
-    // across the pair of jobs (VERDICT r17 #8 hygiene)
-    sets.cache()
-    try {
-      val ordered = jaccardOrdered(sets, tNum, tDen)
-      autoStatsOf(sets, size(col("s")),
-        selfJoinVolume(ordered.select(explode(expr("slice(sorted_elems, 1, p)")).as("e")), "e"))
-    } finally sets.unpersist()
+    // prefix postings AND the dict agg both fold the shingle sets, which
+    // jaccardSets caches for this scope (VERDICT r17 #8 hygiene)
+    val sets = jaccardSets(docs, idCol, textCol, shingleSize)
+    val ordered = jaccardOrdered(sets, tNum, tDen)
+    autoStatsOf(sets, size(col("s")),
+      selfJoinVolume(ordered.select(explode(expr("slice(sorted_elems, 1, p)")).as("e")), "e"))
   }
 
   private def autoStatsOf(dict: DataFrame, setSize: Column, estCand: Long): (Long, Double, Double, Long, Double) = {
@@ -1533,7 +1531,7 @@ object Dedup {
       shingleSize: Int = 3,
       bands: Int = 8,
       rowsPerBand: Int = 2
-  ): Unit = {
+  ): Unit = graft.core.Caching.scoped {
     val sig = graft.core.Caching.cached(portableSigTable(df, idCol, textCol, shingleSize, bands * rowsPerBand))
     lshCommitBatch(spark, indexPath, "base", sig, bands, rowsPerBand)
   }
@@ -1622,7 +1620,7 @@ object Dedup {
       minJaccard: Double = 0.5,
       batchId: Option[String] = None,
       persistPairs: DataFrame => Unit = _ => ()
-  ): DataFrame = {
+  ): DataFrame = graft.core.Caching.scoped {
     val newSig = graft.core.Caching.cached(portableSigTable(newBatch, idCol, textCol, shingleSize, bands * rowsPerBand))
     val out = lshProbePairs(spark, indexPath, newSig, bands, rowsPerBand, minJaccard)
     // SEVER LINEAGE before appending: the result plan scans `sigs/`, and

@@ -91,7 +91,7 @@ object Packing {
       outDir: String,
       idCol: String = "doc_id",
       textCol: String = "text"
-  ): DataFrame = {
+  ): DataFrame = graft.core.Caching.scoped {
     val packed = graft.core.Caching.cached(packGreedy(df, budget, nShards, idCol, textCol))
     packed.write.mode("overwrite").partitionBy("shard").parquet(s"$outDir/shards")
     val fp = graft.plans.HashExpressions.md5Prefix60(

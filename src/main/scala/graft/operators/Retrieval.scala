@@ -197,7 +197,8 @@ object Retrieval {
     *   - `stats/` — ONE row (n_docs, sum_dl, n_buckets): the probe reads
     *     nBuckets from here, so an index is self-describing.
     */
-  def writeBm25Index(docs: DataFrame, idCol: String, textCol: String, path: String, nBuckets: Int = 64): Unit = {
+  def writeBm25Index(docs: DataFrame, idCol: String, textCol: String, path: String,
+      nBuckets: Int = 64): Unit = graft.core.Caching.scoped {
     require(nBuckets > 0, s"writeBm25Index: nBuckets=$nBuckets must be positive")
     val toks = graft.core.Caching.cached(
       docs.select(col(idCol).cast("long").as("doc_id"), TextAnalysis.tokens(col(textCol)).as("ws"))

@@ -182,29 +182,27 @@ object Scd2 {
       commitMeta: Map[String, String] = Map.empty
   ): Long = {
     import graft.sources.VersionedTable
-    def attempt(): Long = {
+    def attempt(): Long = graft.core.Caching.scoped {
       // operator-scoped cache of the bucketed batch (round-18, guide §2.4):
       // the batch subtree (often a window/join pipeline) is referenced by
       // the touched-list collect, the upsert's key set, and the inserted
       // branch — uncached it re-executed up to 3x per load. Batch-sized
       // (bounded by the load, not the table), MEMORY_AND_DISK, released at
       // commit; recomputed per invocation, never across runs.
-      val (b, ownB) = graft.core.Caching.cachedOwned(batch.withColumn(bucketCol, keyBucket(keyCols, nBuckets)))
-      try {
-        // bounded driver-side list: at most nBuckets values
-        val touched = b.select(bucketCol).distinct().collect().map(_.getLong(0)).sorted
-        val targetTouched = VersionedTable.latestVersion(spark, warehousePath) match {
-          case Some(v) =>
-            // one manifest read + ONE multi-dir relation for every touched
-            // bucket (round-18: was one scan per bucket + a 16-way union);
-            // mergeSchema null-pads drift as the union did
-            VersionedTable.readPartitionsUnioned(spark, warehousePath, touched.map(_.toString).toSeq, Some(v))
-              .getOrElse(emptyTarget(b, bucketCol))
-          case None => emptyTarget(b, bucketCol)
-        }
-        val result = upsert(targetTouched, b, keyCols, now)
-        VersionedTable.commitDelta(spark, warehousePath, result, bucketCol, extraMeta = commitMeta)
-      } finally graft.core.Caching.releaseOwned(b, ownB)
+      val b = graft.core.Caching.cached(batch.withColumn(bucketCol, keyBucket(keyCols, nBuckets)))
+      // bounded driver-side list: at most nBuckets values
+      val touched = b.select(bucketCol).distinct().collect().map(_.getLong(0)).sorted
+      val targetTouched = VersionedTable.latestVersion(spark, warehousePath) match {
+        case Some(v) =>
+          // one manifest read + ONE multi-dir relation for every touched
+          // bucket (round-18: was one scan per bucket + a 16-way union);
+          // mergeSchema null-pads drift as the union did
+          VersionedTable.readPartitionsUnioned(spark, warehousePath, touched.map(_.toString).toSeq, Some(v))
+            .getOrElse(emptyTarget(b, bucketCol))
+        case None => emptyTarget(b, bucketCol)
+      }
+      val result = upsert(targetTouched, b, keyCols, now)
+      VersionedTable.commitDelta(spark, warehousePath, result, bucketCol, extraMeta = commitMeta)
     }
     // a losing concurrent writer aborts with ConcurrentModificationException;
     // the whole attempt (target read + upsert + commit) rebases on the new

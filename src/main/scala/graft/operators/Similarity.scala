@@ -232,14 +232,11 @@ object Similarity {
     // beats populating + spilling a corpus-sized cache (this was the
     // original design rule; round-18 cached it anyway and the driver
     // measured q85 0.56x / q86 0.62x — the two worst headline regressions
-    // of that round. VERDICT r18 #5 prescribes exactly this gate).
-    val cachedSample =
-      if (sample.isDefined && iters > 1)
-        Some(graft.core.Caching.cachedOwned(
-          df.filter(sample.get).select(col(vecCol))))
-      else None
-    val base = cachedSample.map(_._1).getOrElse(df)
-    try {
+    // of that round. VERDICT r18 #5 prescribes exactly this gate). The
+    // sample FILTER applies whatever `iters` is; only the cache is gated.
+    graft.core.Caching.scoped {
+      val sampled = sample.fold(df)(p => df.filter(p).select(col(vecCol)))
+      val base = if (sample.isDefined && iters > 1) graft.core.Caching.cached(sampled) else sampled
       var cur = init
       for (_ <- 0 until iters) {
         val stats = base
@@ -262,7 +259,7 @@ object Similarity {
         }
       }
       cur
-    } finally cachedSample.foreach { case (f, owned) => graft.core.Caching.releaseOwned(f, owned) }
+    }
   }
 
   /** Cell-size budget for [[semanticDedup]]'s within-cell pair join: the
@@ -370,21 +367,15 @@ object Similarity {
     val dsub = dim / m
     init.foreach(cb => require(cb.map(_._1) == (0L until cb.length.toLong), "trainPqCodebooks: codebook ids must be 0..k-1"))
     val scale = 1048576.0 // 2^20 — exact in IEEE 754, same as trainIvfCentroids
-    // training-loop cache, re-gated round-19 like trainIvfCentroids: the
-    // projected vector column is CORPUS-sized (PQ training has no sample
-    // lever), so a persist only pays when enough iterations rescan it to
-    // amortize the columnar-cache population — at the suite's iters=2 the
-    // round-18 unconditional cache was net overhead (same mechanism the
-    // driver measured on q85/q86). Residual derivation is re-done per
-    // iteration below the gate, exactly the pre-r18 shape.
-    val cachedVecs =
-      if (iters > 2) Some(graft.core.Caching.cachedOwned(df.select(col(vecCol))))
-      else None
-    val base = cachedVecs.map(_._1).getOrElse(df)
+    // no training-loop cache: the vector column is CORPUS-sized (PQ
+    // training has no sample lever), the same rule as trainIvfCentroids'
+    // full-corpus path — re-scanning parquet beats populating and spilling
+    // a corpus-sized cache (round-18's unconditional cache was net overhead
+    // at iters=2). Residual derivation is re-done per iteration.
     var cur = init
-    try for (_ <- 0 until iters) {
+    for (_ <- 0 until iters) {
       val cellsArr = array((0 until m).map(j => ivfCellAt(col(vecCol), cur(j), j * dsub)): _*)
-      val stats = base
+      val stats = df
         .select(cellsArr.as("cells"), posexplode(col(vecCol)).as(Seq("i", "x")))
         .select(
           expr(s"i div $dsub").cast("int").as("sub"),
@@ -408,7 +399,7 @@ object Similarity {
           }
         }
       }
-    } finally cachedVecs.foreach { case (f, owned) => graft.core.Caching.releaseOwned(f, owned) }
+    }
     cur
   }
 
@@ -936,7 +927,7 @@ object Similarity {
       coarse: Seq[(Long, Seq[Double])],
       codebooks: Seq[Seq[(Long, Seq[Double])]],
       extraMeta: Map[String, String] = Map.empty
-  ): Long = {
+  ): Long = graft.core.Caching.scoped {
     val enc = graft.core.Caching.cached(encodeResidualPq(df, idCol, vecCol, dim, coarse, codebooks))
     // bounded collect: at most nCells distinct values (the coarse k)
     val touched = enc.select(col("cell")).distinct().collect().map(_.getLong(0).toString).toSeq

@@ -776,7 +776,7 @@ object TextAnalysis {
       buckets: Int = 4096,
       iters: Int = 4,
       lrDen: Long = 1024L
-  ): DataFrame = {
+  ): DataFrame = graft.core.Caching.scoped {
     require(buckets > 0 && (buckets & (buckets - 1)) == 0, s"buckets must be a power of two, got $buckets")
     require(iters >= 1 && iters <= 64, s"trainHashedLinear: iters=$iters out of range")
     require(lrDen >= 1L, s"trainHashedLinear: lrDen=$lrDen must be positive")
@@ -787,7 +787,7 @@ object TextAnalysis {
       col(idCol).as("__id"),
       (col(labelCol).cast("long") * lit(1000000L)).as("__y6"),
       col(textCol).as("__text"))
-    // Both persisted frames are REPARTITIONED BY __id before the persist
+    // Both cached frames are REPARTITIONED BY __id before the cache
     // (round-18, guide §2.4 "two operations keyed the same way share one
     // exchange"): every iteration's prediction aggregation groups feats by
     // __id and the gradient join keys feats⋈err by __id — with the cache
@@ -802,7 +802,7 @@ object TextAnalysis {
     // ONE exchange of the feature rows instead of the round-18 two
     // (partial-agg exchange on (id,bucket), then a second full exchange
     // re-keying the aggregated frame to __id).
-    val feats = base
+    val feats = graft.core.Caching.cached(base
       .withColumn("__toks", tokens(col("__text")))
       .withColumn("__feat", explode(concat(toks, wordShinglesFromTokens(toks, 2))))
       .select(
@@ -810,14 +810,11 @@ object TextAnalysis {
         (graft.plans.HashExpressions.md5Prefix60(col("__feat")) % buckets).cast("int").as("bucket"))
       .repartition(col("__id"))
       .groupBy(col("__id"), col("bucket"))
-      .agg(count(lit(1)).as("__x"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // labels persist too: without it each of the k gradient jobs (plus the
+      .agg(count(lit(1)).as("__x")))
+    // labels are cached too: without it each of the k gradient jobs (plus the
     // count) re-scans and re-projects the source — k+1 redundant corpus
     // passes on the timed training path
-    val labels = base.select(col("__id"), col("__y6"))
-      .repartition(col("__id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val labels = graft.core.Caching.cached(base.select(col("__id"), col("__y6")).repartition(col("__id")))
     val d = BigInt(labels.count()) * lrDen
     val w = Array.fill(buckets)(0L)
     for (_ <- 1 to iters) {
@@ -841,13 +838,10 @@ object TextAnalysis {
         w(b) = w(b) - ((g - ((g % d + d) % d)) / d).toLong
       }
     }
-    val out = feats.select(col("bucket")).distinct()
+    feats.select(col("bucket")).distinct()
       .collect().map(_.getInt(0)).sorted
       .map(b => (b.toLong, w(b))).toSeq
       .toDF("bucket", "w_e6")
-    feats.unpersist()
-    labels.unpersist()
-    out
   }
 
   /** DATASET CARD — the per-source datasheet every corpus release ships:

@@ -965,7 +965,7 @@ object VersionedTable {
       keyCols: Seq[String],
       partCol: String,
       extraMeta: Map[String, String] = Map.empty
-  ): Long = {
+  ): Long = graft.core.Caching.scoped {
     require(keyCols.nonEmpty, "applyChangeFeed: keyCols must be non-empty")
     require(feed.columns.contains("_change_type"), "applyChangeFeed: feed must carry _change_type")
     // feed-scoped cache (round-18): the feed subtree is referenced by the
@@ -973,8 +973,7 @@ object VersionedTable {
     // branch — uncached (e.g. a changeFeed diff, or a streaming
     // micro-batch source) it re-executed up to 3x per apply. Feed-sized,
     // MEMORY_AND_DISK, released before return.
-    val (feedC, ownF) = graft.core.Caching.cachedOwned(feed)
-    try {
+    val feedC = graft.core.Caching.cached(feed)
     val touched = feedC.select(col(partCol).cast("string")).distinct()
       .collect().map(_.getString(0)).sorted.toSeq
     if (touched.isEmpty)
@@ -1002,7 +1001,6 @@ object VersionedTable {
       }
       commitDelta(spark, replicaPath, next, partCol, clearedParts = touched, extraMeta = extraMeta)
     }
-    } finally graft.core.Caching.releaseOwned(feedC, ownF)
   }
 
   /** Targeted row deletion (the right-to-be-forgotten / takedown sweep a

@@ -201,10 +201,10 @@ object Streaming {
                   df.exceptAll(active)
               }
           }
-          // the diff feeds isEmpty AND the upsert's plan: persist so the
+          // the diff feeds isEmpty AND the upsert's plan: cache it so the
           // bucket-scoped exceptAll runs once, and release on every exit
-          val changedC = changed.persist()
-          try {
+          graft.core.Caching.scoped {
+            val changedC = graft.core.Caching.cached(changed)
             if (!changedC.isEmpty) {
               graft.operators.Scd2.upsertPartitioned(
                 spark, warehousePath, changedC, keyCols, nBuckets, now(v),
@@ -213,9 +213,6 @@ object Streaming {
               )
               ()
             }
-          } finally {
-            changedC.unpersist()
-            ()
           }
         }
       }
@@ -573,31 +570,29 @@ object Streaming {
       .foreachBatch { (df: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         VersionedTable.withCommitRetry() {
           val alreadyApplied = lastStreamBatch(spark, rollupPath, streamId).exists(_ >= batchId)
-          if (!alreadyApplied) {
+          if (!alreadyApplied) graft.core.Caching.scoped {
             // batch-scoped cache (round-18): the batch aggregation feeds
             // both the touched-day collect and the merge union — uncached
             // it re-aggregated the whole micro-batch twice
-            val (batchSk, own) = graft.core.Caching.cachedOwned(
+            val batchSk = graft.core.Caching.cached(
               df.toDF()
                 .groupBy(col("day"), col("event_type"))
                 .agg(hll_sketch_agg(col("user_id")).as("sk")))
-            try {
-              val touched = batchSk.select(col("day")).distinct()
-                .collect().map(_.getString(0)).sorted.toSeq // bounded: days per batch
-              val existing = VersionedTable.latestVersion(spark, rollupPath)
-                .flatMap(_ => VersionedTable.readPartitionsUnioned(spark, rollupPath, touched))
-              val merged = existing match {
-                case Some(ex) => ex.select(col("day"), col("event_type"), col("sk"))
-                  .unionByName(batchSk)
-                  .groupBy(col("day"), col("event_type"))
-                  .agg(hll_union_agg(col("sk")).as("sk"))
-                case None => batchSk
-              }
-              VersionedTable.commitDelta(
-                spark, rollupPath, merged, "day",
-                extraMeta = Map(s"stream_batch:$streamId" -> batchId.toString))
-              ()
-            } finally graft.core.Caching.releaseOwned(batchSk, own)
+            val touched = batchSk.select(col("day")).distinct()
+              .collect().map(_.getString(0)).sorted.toSeq // bounded: days per batch
+            val existing = VersionedTable.latestVersion(spark, rollupPath)
+              .flatMap(_ => VersionedTable.readPartitionsUnioned(spark, rollupPath, touched))
+            val merged = existing match {
+              case Some(ex) => ex.select(col("day"), col("event_type"), col("sk"))
+                .unionByName(batchSk)
+                .groupBy(col("day"), col("event_type"))
+                .agg(hll_union_agg(col("sk")).as("sk"))
+              case None => batchSk
+            }
+            VersionedTable.commitDelta(
+              spark, rollupPath, merged, "day",
+              extraMeta = Map(s"stream_batch:$streamId" -> batchId.toString))
+            ()
           }
         }
         ()

@@ -1,79 +1,105 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Caching
 
-/** The retention contract of Caching.cached: bounded LRU — re-invocation
-  * over the same input stays warm, a sweep over distinct inputs cannot grow
-  * executor memory past maxEntries frames.
+/** The scoped contract of Caching: a frame cached inside `scoped` lives
+  * until that scope exits (normally or by a throw), frames cached by
+  * someone else stay theirs, and outside any scope nothing is cached.
   */
 class CachingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  private def isCached(df: org.apache.spark.sql.DataFrame) = df.storageLevel != StorageLevel.NONE
+
   test("cached: idempotent for the same canonical plan — one registry entry, stays persisted") {
-    val before = Caching.registrySize
-    val df = Seq(1, 2, 3).toDF("x").filter($"x" > 1)
-    val c1 = Caching.cached(df)
-    c1.count()
-    assert(Caching.registrySize == before + 1)
-    // a structurally identical but distinct DataFrame object: same entry
-    val c2 = Caching.cached(Seq(1, 2, 3).toDF("x").filter($"x" > 1))
-    assert(Caching.registrySize == before + 1)
-    assert(c2.storageLevel != StorageLevel.NONE)
-  }
-
-  test("cached: sweeping distinct inputs evicts LRU — registry and executor memory stay bounded") {
-    val saved = Caching.maxEntries
-    try {
-      Caching.maxEntries = 3
-      val frames = (0 until 8).map { i =>
-        val f = Caching.cached(Seq(i, i + 1).toDF("x").filter($"x" >= i))
-        f.count()
-        f
-      }
-      assert(Caching.registrySize <= 3)
-      // the early frames were unpersisted by eviction...
-      assert(frames.take(5).forall(_.storageLevel == StorageLevel.NONE),
-        "evicted frames must be unpersisted")
-      // ...the most recent ones are still warm
-      assert(frames.takeRight(3).forall(_.storageLevel != StorageLevel.NONE),
-        "frames within the bound must stay cached")
-      // an evicted input re-enters cleanly on next use
-      val back = Caching.cached(Seq(0, 1).toDF("x").filter($"x" >= 0))
-      assert(back.storageLevel != StorageLevel.NONE)
-    } finally Caching.maxEntries = saved
-  }
-
-  test("clearRegistry: unpersists and forgets every tracked frame (bench per-rep hygiene hook)") {
-    val a = Caching.cached(Seq(21).toDF("x").filter($"x" > 0))
-    val b = Caching.cached(Seq(22).toDF("x").filter($"x" > 0))
-    a.count(); b.count()
-    assert(Caching.registrySize >= 2)
-    Caching.clearRegistry()
+    Caching.scoped {
+      val df = Seq(1, 2, 3).toDF("x").filter($"x" > 1)
+      val c1 = Caching.cached(df)
+      c1.count()
+      assert(Caching.registrySize == 1)
+      // a structurally identical but distinct DataFrame object: same entry
+      val c2 = Caching.cached(Seq(1, 2, 3).toDF("x").filter($"x" > 1))
+      assert(Caching.registrySize == 1)
+      assert(isCached(c2))
+    }
     assert(Caching.registrySize == 0)
-    assert(a.storageLevel == StorageLevel.NONE && b.storageLevel == StorageLevel.NONE)
-    // frames re-enter cleanly after a clear (the next bench rep re-caches)
-    val again = Caching.cached(Seq(21).toDF("x").filter($"x" > 0))
-    assert(again.storageLevel != StorageLevel.NONE)
-    Caching.clearRegistry()
   }
 
-  test("cachedOwned/releaseOwned: scoped lifetime bypasses the registry and frees eagerly") {
-    val before = Caching.registrySize
-    val (df, owned) = Caching.cachedOwned(Seq(9).toDF("x"))
-    assert(owned)
-    df.count()
-    assert(Caching.registrySize == before, "owned frames must not enter the LRU registry")
-    Caching.releaseOwned(df, owned)
-    assert(df.storageLevel == StorageLevel.NONE)
-    // not owned -> release is a no-op on someone else's entry
-    val shared = Caching.cached(Seq(10).toDF("x"))
-    val (same, owned2) = Caching.cachedOwned(Seq(10).toDF("x"))
-    assert(!owned2)
-    Caching.releaseOwned(same, owned2)
-    assert(shared.storageLevel != StorageLevel.NONE)
+  test("scoped: releases its frames on normal exit and when the body throws") {
+    val a = Seq(11).toDF("x").filter($"x" > 0)
+    val n = Caching.scoped { Caching.cached(a).count() }
+    assert(n == 1 && !isCached(a))
+    val b = Seq(12).toDF("x").filter($"x" > 0)
+    intercept[IllegalStateException] {
+      Caching.scoped {
+        Caching.cached(b).count()
+        assert(isCached(b))
+        throw new IllegalStateException("boom")
+      }
+    }
+    assert(!isCached(b))
+    assert(Caching.registrySize == 0)
+  }
+
+  test("scoped: a frame someone else cached first is left persisted") {
+    val shared = Seq(13).toDF("x").filter($"x" > 0).cache()
+    try {
+      Caching.scoped {
+        Caching.cached(Seq(13).toDF("x").filter($"x" > 0)).count()
+        assert(Caching.registrySize == 0, "a frame cached before the scope is not the scope's to track")
+      }
+      assert(isCached(shared))
+    } finally shared.unpersist()
+  }
+
+  test("scoped: a nested scope releases only its own frames") {
+    val outer = Seq(14).toDF("x").filter($"x" > 0)
+    val inner = Seq(15).toDF("x").filter($"x" > 0)
+    Caching.scoped {
+      Caching.cached(outer)
+      Caching.scoped {
+        Caching.cached(inner)
+        // already cached by the outer scope: the inner scope must not take it
+        Caching.cached(Seq(14).toDF("x").filter($"x" > 0))
+        assert(Caching.registrySize == 2)
+      }
+      assert(!isCached(inner))
+      assert(isCached(outer))
+      assert(Caching.registrySize == 1)
+    }
+    assert(!isCached(outer))
+    assert(Caching.registrySize == 0)
+  }
+
+  test("cached: outside any scope returns the frame uncached") {
+    val df = Seq(16).toDF("x").filter($"x" > 0)
+    assert(Caching.cached(df) eq df)
+    assert(!isCached(df))
+    assert(Caching.registrySize == 0)
+  }
+
+  test("no raw cache(), persist( or unpersist( in src/main outside core/Caching.scala") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath} is missing")
+    val raw = """\.(cache\(\)|persist\(|unpersist\()""".r
+    val walk = Files.walk(root)
+    val offenders =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .filterNot(_.endsWith(Paths.get("core", "Caching.scala")))
+        .flatMap { f =>
+          Files.readAllLines(f).asScala.zipWithIndex.collect {
+            case (line, i) if raw.findFirstIn(line).isDefined => s"$f:${i + 1}: ${line.trim}"
+          }
+        }.toList
+      finally walk.close()
+    assert(offenders.isEmpty, "cache through graft.core.Caching.scoped/cached instead:\n" + offenders.mkString("\n"))
   }
 }

@@ -67,6 +67,18 @@ class SimilaritySpec extends AnyFunSuite {
     assert(allProbe == exact)
   }
 
+  test("trainIvfCentroids: iters = 1 trains on the hash sample, not the full corpus") {
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val init = emb.filter($"vec_id" < 8).select($"vec_id", $"embedding")
+      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble)).sortBy(_._1).toSeq
+    val p = graft.operators.Sampling.hashBucket($"vec_id", 4) === 0
+    val sampled = Similarity.trainIvfCentroids(emb, "embedding", init, iters = 1, sample = Some(p))
+    val onFiltered = Similarity.trainIvfCentroids(emb.filter(p), "embedding", init, iters = 1)
+    assert(sampled == onFiltered)
+    // not vacuous: the sample trains to different centroids than the corpus
+    assert(onFiltered != Similarity.trainIvfCentroids(emb, "embedding", init, iters = 1))
+  }
+
   test("trainIvfCentroids: deterministic, SSE non-increasing, balance and recall not worse than untrained") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val init = emb.filter($"vec_id" < 8).select($"vec_id", $"embedding")
