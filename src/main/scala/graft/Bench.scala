@@ -11,8 +11,8 @@ import java.nio.file.{Files, Paths}
   * Failure-honest: a query that throws is recorded with `null` time plus an
   * entry in `errors` (never folded into the headline total as a fake-fast
   * time). Round-over-round guard: per-query times are compared against a
-  * FLOOR taken as the min across all untainted BENCH_r*.json records
-  * (plus the round-2 numbers inlined below) and >2x slowdowns are listed
+  * FLOOR taken as the min across all untainted BENCH_r*.json records and
+  * the floor store (see `loadBaseline`), and >2x slowdowns are listed
   * in `regressions_x`, keyed by query name with the slowdown RATIO
   * (now/baseline) as the value. The record carries load telemetry
   * (`load`, `tainted`): a run that shared the machine with another
@@ -41,8 +41,8 @@ object Bench {
     * work it now honestly exposes. Map-typed columns aren't hashable —
     * such frames (none currently) fall back to count().
     *
-    * THE one timing action: [[Scratch]] calls this same method, so
-    * isolated floor comparisons stay 1:1 with bench records by
+    * THE one timing action: an isolated timing is a Bench run narrowed
+    * by SPARK_GRAFT_BENCH_ONLY, so it stays 1:1 with bench records by
     * construction (ADVICE r14 #3 — no second copy to drift).
     */
   def materialize(df: DataFrame): Unit = {
@@ -64,42 +64,9 @@ object Bench {
     }
   }
 
-  /** Re-based comparison floor (VERDICT r02 "what's wrong #5"): per-query
-    * seconds from BENCH_r02.json — the first round measured under the
-    * CURRENT methodology (warm-up pass + min-of-3), inlined so the
-    * regression guard compares like-for-like even if the file vanishes.
-    * The round-1 cold single-run numbers are retired: comparing a min-of-3
-    * floor against them understated regressions by the warm-up delta.
-    */
-  private val r02Baseline: Map[String, Double] = Map(
-    "q01_pricing_summary" -> 0.273064604, "q03_join_revenue" -> 0.673557633,
-    "q04_semi_join" -> 0.451076967, "q07_window_latest" -> 0.318894504,
-    "q11_scd2_upsert" -> 0.755488641, "q12_state_delta" -> 0.206440562,
-    "q13_explode_tokens" -> 0.166958701, "q21_dq_suite" -> 0.722663292,
-    "q30_dedup_exact" -> 0.244745102, "q32_text_quality" -> 0.206659361,
-    "q36_jaccard_pairs" -> 0.681421693, "q37_minhash_lsh" -> 0.576626292,
-    "q40_ann_bruteforce" -> 0.256108543, "q41_ann_lsh" -> 0.32213532,
-    "q43_event_windows" -> 0.253241066, "q24_sessions" -> 0.474027218,
-    "q49_asof_join" -> 0.196485629, "q50_multi_join" -> 0.932504144,
-    "q47_embedding_neardup" -> 0.664460294, "q64_tfidf" -> 0.815248317,
-    "q68_quality_filter" -> 1.026726051, "q39_simhash_portable" -> 0.123807525,
-    // the five headline queries added after r02 and the r06/r07 extras,
-    // floored at their first min-of-3 measurements (BENCH_r06 /
-    // round-7 local run) so the fallback guard covers the WHOLE suite —
-    // a missing key here would silently exempt a query from the >2x check
-    "q80_scd2_partitioned" -> 5.2854, "q85_ann_ivf_trained" -> 2.2633,
-    "q86_semantic_dedup" -> 2.6845, "q87_mixture_sample" -> 0.1503,
-    "q88_dup_groups" -> 2.0388,
-    "q89_gopher_gates" -> 0.9794, "q90_ann_ivf_sampled" -> 1.0807,
-    "q91_image_decode" -> 0.2959, "q92_hot_spans" -> 0.8659,
-    "q93_url_screen" -> 0.1364, "q94_audio_decode" -> 0.1838,
-    "q95_video_meta" -> 0.1396, "q96_ann_sq8" -> 0.1809,
-    "q97_corpus_pipeline" -> 0.7346, "q98_ann_ivf_sq8" -> 0.2491
-  )
-
   /** Per-query FLOOR = min across every parseable, UNTAINTED
-    * BENCH_r*.json in cwd (queries + extras), min-merged with the inlined
-    * r02-policy floor. Rationale (VERDICT r08 "what's wrong #1"): the
+    * BENCH_r*.json in cwd (queries + extras) and the floor store.
+    * Rationale (VERDICT r08 "what's wrong #1"): the
     * previous newest-round-wins rule made one contention-polluted
     * round-close record (r06, r08) the comparison base for the next round,
     * producing phantom `regressions_x` that each cost a manual
@@ -108,8 +75,7 @@ object Bench {
     * load telemetry below is excluded outright.
     *
     * The floor is SF-SCOPED: only records whose `sf` dir matches the
-    * current run contribute, and the r02 inline floor (an sf0.1
-    * measurement) applies only to sf0.1 runs — comparing an sf1 run
+    * current run contribute — comparing an sf1 run
     * against an sf0.1 floor flags every query ~10x "regressed", which is
     * scale, not regression (the first telemetry-era sf1 refresh hit
     * exactly this). A run at an SF with no prior record gets an empty
@@ -166,7 +132,6 @@ object Bench {
         floorsOf(if (f.getName.matches("BENCH_r\\d+\\.json")) root.path("parsed") else root)
       } catch { case _: Throwable => None }
     }.flatten
-    locally { val _ = r02Baseline } // retained for provenance; not merged (count()-era policy)
     val merged = perRound.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).min }
     (s"min_untainted_rounds(n=$used,sf=${sfName(sfDir)})", merged)
   }
@@ -236,135 +201,75 @@ object Bench {
       s"""{"sf":${graft.core.Json.str(sfDir)},"tainted":false,"timing_action":"hash_rows","queries":$qs,"note":"min-merged floor store; written only by untainted Bench runs"}""" + "\n")
   }
 
+  private[graft] type Op = (SparkSession, String) => DataFrame
+
+  /** The setup step's result: each kept query's timed op, or the error
+    * that left it without one, and each setup's seconds in build order. */
+  private[graft] final case class Prepared(ops: Map[String, Either[String, Op]], setupSec: Seq[(String, Double)])
+
+  private def message(e: Throwable): String =
+    Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+
+  /** The setup step: builds each [[Setup]] the given specs need once (a
+    * base before what builds on it), timing it under its key. A staged
+    * query's op is its serve half against the built value; any other
+    * query's op is its whole body. A setup that throws fails every query
+    * that depends on it, directly or through a base: the query gets the
+    * error instead of an op and is recorded with no time.
+    */
+  private[graft] def prepare(spark: SparkSession, sfDir: String, specs: Seq[QuerySpec]): Prepared = {
+    val built = scala.collection.mutable.Map.empty[String, Either[String, Any]]
+    val setupSec = Seq.newBuilder[(String, Double)]
+    def build(setup: Setup[_]): Either[String, Any] = built.get(setup.key) match {
+      case Some(done) => done
+      case None =>
+        val done = setup.base.fold[Either[String, Any]](Right(null))(build).flatMap { baseValue =>
+          val t0 = System.nanoTime()
+          try {
+            val value = setup.build(spark, sfDir, baseValue)
+            setupSec += setup.key -> (System.nanoTime() - t0) / 1e9
+            Right(value)
+          } catch { case e: Throwable => Left(s"setup ${setup.key}: ${message(e)}") }
+        }
+        built(setup.key) = done
+        done
+    }
+    val ops = specs.map { spec =>
+      spec.name -> spec.staged.fold[Either[String, Op]](Right(spec.run))(st => build(st.setup).map(st.serveFrom))
+    }.toMap
+    Prepared(ops, setupSec.result())
+  }
+
+  /** Min of `runs` timed reps per query, or its first error. Measurement
+    * hygiene (round-19, VERDICT r18 #6): EVERY rep is its own cache
+    * scope, so each rep pays its own cache population (the within-run
+    * reuse a cache legitimately buys stays inside the rep; runs 2..3 never
+    * read run 1's leftover cache). The clock stops before the scope
+    * releases its frames. A query without an op is not run.
+    */
+  private[graft] def timeOps(spark: SparkSession, sfDir: String, names: Seq[String],
+      ops: Map[String, Either[String, Op]], runs: Int): Seq[(String, Option[Double], Option[String])] =
+    names.map { name =>
+      ops(name) match {
+        case Left(err) => (name, None, Some(err))
+        case Right(fn) =>
+          val results = (1 to runs).map { _ =>
+            try graft.core.Caching.scoped {
+              val t0 = System.nanoTime()
+              materialize(fn(spark, sfDir))
+              Right((System.nanoTime() - t0) / 1e9)
+            } catch { case e: Throwable => Left(message(e)) }
+          }
+          val oks = results.collect { case Right(t) => t }
+          if (oks.nonEmpty) (name, Some(oks.min), None)
+          else (name, None, results.collectFirst { case Left(m) => m })
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = graft.core.Sessions.local(cpus, "graft-bench")
-
-    val headline: Seq[String] = Seq(
-      "q01_pricing_summary", "q03_join_revenue", "q04_semi_join",
-      "q07_window_latest", "q11_scd2_upsert", "q12_state_delta",
-      "q13_explode_tokens", "q21_dq_suite",
-      "q30_dedup_exact", "q32_text_quality", "q36_jaccard_pairs",
-      "q37_minhash_lsh", "q40_ann_bruteforce", "q41_ann_lsh",
-      "q43_event_windows", "q24_sessions", "q49_asof_join", "q50_multi_join",
-      // round-2 formulations under watch: LSH-blocked embedding near-dup,
-      // quantized-idf TF-IDF (single job), two-level exact percentile cut,
-      // fused-codegen SimHash sketching
-      "q47_embedding_neardup", "q64_tfidf", "q68_quality_filter",
-      "q39_simhash_portable",
-      // round-3 formulations under watch: trained-IVF ANN (k-means in the
-      // query path), partitioned SCD-2 warehouse load, cell-blocked
-      // semantic dedup, mixture sampling, iterative dup-group components
-      "q85_ann_ivf_trained", "q80_scd2_partitioned",
-      "q86_semantic_dedup", "q87_mixture_sample", "q88_dup_groups"
-    )
-
-    // Round-6/7 additions, timed but reported SEPARATELY (`extras`) and
-    // excluded from `total`: the headline set is held fixed since round 3
-    // so round-over-round totals stay like-for-like.
-    val extras: Seq[String] =
-      Seq("q89_gopher_gates", "q90_ann_ivf_sampled", "q91_image_decode", "q92_hot_spans",
-        "q93_url_screen", "q94_audio_decode", "q95_video_meta", "q96_ann_sq8",
-        "q97_corpus_pipeline", "q98_ann_ivf_sq8", "q99_bpe_tokens",
-        // round-9/10 additions (VERDICT r9 "missing #2": eight oracle-green
-        // operators had no timing record): perplexity filter, packing,
-        // streaming dedup + interval join, BM25 + RRF hybrid, substring
-        // dedup (+ its recipe-integrated q108), change feed
-        "q100_lm_perplexity", "q101_seq_packing", "q102_stream_dedup",
-        "q103_bm25_topk", "q104_stream_interval_join", "q105_substring_dedup",
-        "q106_change_feed", "q107_hybrid_rrf", "q108_recipe_substring",
-        "q109_bm25_batch", "q110_video_frames",
-        "q111_stream_enrich", "q112_fuzzy_match", "q113_heavy_hitters",
-        "q114_ann_pq", "q115_ann_ivf_pq",
-        // round-10 batch 2: graph/time-series/view-maintenance operators
-        "q116_pagerank", "q117_gapfill", "q118_funnel",
-        "q119_incremental_mv", "q120_range_join", "q121_leakage_split",
-        "q122_retention", "q123_cube", "q124_moving_agg",
-        "q125_hll_sketch", "q126_neardup_split", "q127_pit_lookup",
-        // round-10 batch 3: perceptual-hash image dedup and friends
-        "q128_image_neardup", "q129_bloom_decontam", "q130_bm25_index",
-        "q131_topk_per_group", "q132_collocations", "q133_sampled_quantiles",
-        "q134_canonical_dedup", "q135_ppjoin",
-        "q136_orc_roundtrip", "q137_embedding_centroids", "q138_entity_resolution",
-        "q139_bpe_training", "q140_gdpr_sweep", "q141_version_drift",
-        "q142_repetition", "q143_quality_classifier", "q144_zone_map",
-        "q145_gdpr_deferred", "q146_incremental_lsh", "q147_domain_cap",
-        "q148_cdc_apply", "q149_containment", "q150_decayed_value",
-        "q151_stream_decay", "q152_triangles", "q153_golden_record",
-        "q154_widened_read", "q155_replica_audit", "q156_label_screen",
-        "q157_dimension_stats", "q158_histogram", "q159_balanced_sample",
-        "q160_shard_manifest",
-        // round-11: persisted IVF+PQ probe (timed probe-only, build in setup)
-        "q161_pq_index_probe",
-        // round-12: streaming LSH dedup, residual-encoded IVF+PQ (IVFADC)
-        "q162_stream_lsh_dedup", "q163_ann_ivf_pq_residual",
-        "q164_stream_vector_index",
-        // round-12: persisted sketch rollup (timed as range probes over the
-        // stored sketches, the two day-range commits in setup), streaming
-        // CDC apply (timed as bootstrap + streamed consumer against the
-        // prebuilt q106 warehouse)
-        "q165_sketch_rollup", "q166_stream_cdc_apply",
-        // round-12: distributed fixed-point GD training (timed whole —
-        // training IS the operation), cross-corpus LSH decontamination
-        "q167_classifier_training", "q168_crosscorpus_lsh",
-        // round-12: stream-maintained sketch rollup (timed whole — the
-        // 3-batch merge-on-write build IS the operation; serve cost is
-        // q165's)
-        "q169_stream_sketch_mv",
-        // round-12: mixture upsampling (zero-shuffle projection), histogram
-        // rollup (range probes over prebuilt partials, build in setup),
-        // incremental join-MV (bootstrap+feeds+maintain per run)
-        "q170_mixture_upsample", "q171_histogram_rollup", "q172_join_mv",
-        // round-12: retention sweep (commit+sweep+read per run — the sweep
-        // IS the operation), dataset card (one aggregation pass)
-        "q173_retention_sweep", "q174_dataset_card",
-        // round-12: WARC ingest (fixture encode + two-layer parse per run),
-        // CCNet line dedup (three hashed-key exchanges), Avro roundtrip
-        // (container write + read + aggregate per run — I/O IS the op)
-        "q175_warc_ingest", "q176_line_dedup", "q177_avro_roundtrip",
-        // round-12: HTML extraction (pure codegen regexp chains — the
-        // crawl→text and crawl→link-graph steps)
-        "q178_html_text", "q179_html_links",
-        // round-12: RNG-free epoch shuffle (one exchange + shard-local
-        // sort), crawl→corpus end-to-end recipe (WARC encode+parse+extract)
-        "q180_epoch_shuffle", "q181_crawl_corpus",
-        // round-12: streaming WARC ingest (5 forced micro-batches over the
-        // landed fixture), T5 span corruption (explode+window+reassembly)
-        "q182_stream_warc", "q183_span_corruption",
-        // round-12: packed-sequence materialization (two text moves),
-        // importance sampling (zero-shuffle scan filter over the scorer)
-        "q184_packed_sequences", "q185_importance_sample",
-        // round-12: k-anonymity publish (O(levels) group-count passes),
-        // JSONL quarantine ingest (write + native PERMISSIVE scan), label
-        // aggregation (one count agg + tiny-frame window; audit adds the
-        // votes-to-consensus join)
-        "q186_k_anonymity", "q187_jsonl_ingest", "q188_label_vote",
-        "q189_annotator_audit",
-        // round-12: distribution drift (two histogram passes, O(bins) out),
-        // XML StAX ingest (encode + parse per run, zero shuffles)
-        "q190_distribution_drift", "q191_xml_ingest",
-        // round-12: bloom-indexed point lookup (commit+build+probe per run)
-        "q192_bloom_index",
-        // round-14: charset-aware WARC decode (fixture encode + charset
-        // resolution + decode per run), Dawid-Skene hard-EM refinement
-        // (two M/E rounds over the 5-annotator vote table)
-        "q193_warc_charset", "q194_dawid_skene",
-        // round-14: Delta column-mapping round trip (commit + metadata
-        // export + import read per run — interop cost IS the op)
-        "q195_delta_roundtrip",
-        // round-15: IVF-celled kNN label screen (train + celled probe per
-        // run — the corpus-scale twin of q156, timed whole at nprobe=all),
-        // PQ ADC shortlist -> exact re-rank (train + encode + two-stage
-        // serve per run — the production recipe over the code layouts)
-        "q196_label_screen_ivf", "q197_ann_pq_rerank",
-        // round-15: cross-dimension covariance (posexplode + reused-exchange
-        // self-join + partial-agg to 2080 rows — the PCA/whitening prep)
-        "q198_covariance",
-        // round-16: the same cells via the per-row outer-product fold —
-        // zero row-proportional exchange (q198's escape hatch, A/B-able
-        // against it in every bench artifact)
-        "q199_covariance_fold")
 
     // SPARK_GRAFT_BENCH_ONLY (regex over query names): run only the
     // matching subset — for at-scale records (BENCH_SF3) where the full
@@ -375,6 +280,12 @@ object Bench {
     // builders are skipped when their probe query is filtered out.
     val benchOnly = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.r)
     def keep(n: String): Boolean = benchOnly.forall(_.findFirstIn(n).isDefined)
+    // the headline set (behind `total`) and the extras (timed outside it)
+    // come from the registry's tiers, in its order
+    val benched = SparkEntry.specs.filter(_.tier != Tier.VerifyOnly)
+    val kept = benched.filter(s => keep(s.name))
+    val headline = kept.filter(_.tier == Tier.Headline).map(_.name)
+    val extras = kept.filter(_.tier == Tier.Extra).map(_.name)
 
     // Load telemetry (VERDICT r08 "what's wrong #1"): three round-close
     // records in a row were contention-polluted and their regressions_x
@@ -387,173 +298,18 @@ object Bench {
     val loadStart = loadAvg1m()
     val sysT0 = sysBusyTicks(); val selfT0 = selfTicks()
 
-    // One-time setup OUTSIDE timing: build the q98 IVF+SQ8 serving layout
-    // once so the timed op is the probe — the per-query serving cost —
-    // not the index build (VERDICT r08 "what's wrong #2": build noise was
-    // masking probe-path regressions). The build cost is still reported,
-    // in `setup_sec`.
-    val q98SetupT0 = System.nanoTime()
-    val q98Built =
-      if (!keep("q98_ann_ivf_sq8")) None else try {
-        val (idx, cents, qv) = Queries.q98BuildIndex(spark, sfDir)
-        Some((idx, cents, qv, (System.nanoTime() - q98SetupT0) / 1e9))
-      } catch { case _: Throwable => None }
-    // One-time q106 warehouse build, same rationale: the timed op is the
-    // change-feed read (the per-invocation serving cost), not the two
-    // SCD-2 commit cycles that produce the versions (q80 already times
-    // those). Build cost lands in setup_sec.
-    val q106SetupT0 = System.nanoTime()
-    val q106Built =
-      if (!Seq("q106_change_feed", "q119_incremental_mv", "q141_version_drift", "q148_cdc_apply", "q166_stream_cdc_apply", "q172_join_mv").exists(keep)) None else try {
-        val (path, v1, v2) = Queries.q106Build(spark, sfDir)
-        Some((path, v1, v2, (System.nanoTime() - q106SetupT0) / 1e9))
-      } catch { case _: Throwable => None }
-    // One-time q127 PIT-warehouse build (record_from-stamped batches);
-    // the timed op is the probe join, the per-lookup serving cost.
-    val q127SetupT0 = System.nanoTime()
-    val q127Built =
-      if (!keep("q127_pit_lookup")) None else try {
-        val (path, _, v2) = Queries.q127Build(spark, sfDir)
-        Some((path, v2, (System.nanoTime() - q127SetupT0) / 1e9))
-      } catch { case _: Throwable => None }
-    // One-time q130 inverted-index build; the timed op is the bucket-pruned
-    // probe — the per-query serving cost, exactly q98's adjudication.
-    val q130SetupT0 = System.nanoTime()
-    val q130Built =
-      if (!keep("q130_bm25_index")) None else try Some((Queries.q130Build(spark, sfDir), (System.nanoTime() - q130SetupT0) / 1e9))
-      catch { case _: Throwable => None }
-    // One-time q148 replica bootstrap (on q106's prebuilt source); the
-    // timed op is feed + idempotent apply + active read — the per-batch
-    // replication cost, not the two warehouse builds it sat on before
-    // (which timed 13.9 s of q80-shaped commit I/O per run).
-    val q148SetupT0 = System.nanoTime()
-    val q148Built = (if (keep("q148_cdc_apply")) q106Built else None).flatMap { case (path, v1, _, _) =>
-      try {
-        // fast scratch medium, mirroring Queries.scratchRoot (round-18;
-        // round-19 adds the same 8 GiB tmpfs headroom gate — ADVICE r18):
-        // the replica is per-run ephemeral
-        val repBase = sys.env.get("SPARK_GRAFT_SCRATCH").orElse {
-          val shm = java.nio.file.Paths.get("/dev/shm")
-          if (java.nio.file.Files.isWritable(shm) && shm.toFile.getUsableSpace >= (8L << 30)) Some("/dev/shm")
-          else None
-        }
-        val rep = (repBase match {
-          case Some(b) => java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(b), "bench-q148")
-          case None => java.nio.file.Files.createTempDirectory("bench-q148")
-        }).toString + "/replica"
-        graft.sources.VersionedTable.commitDelta(
-          spark, rep, graft.sources.VersionedTable.read(spark, path, Some(v1)), "key_bucket")
-        Some((rep, (System.nanoTime() - q148SetupT0) / 1e9))
-      } catch { case _: Throwable => None }
-    }
-    // One-time q140/q145 sweeps (VERDICT r10 "what's wrong #3": their 5-9 s
-    // bench numbers were ~75% in-query warehouse rebuild measured for the
-    // fourth time): each gets its OWN prebuilt warehouse (the sweeps mutate
-    // it, so the shared q106 warehouse can't be reused), the delete runs
-    // once in setup, and the timed op is the serving read — the post-sweep
-    // active read (q140) / the DV merge-on-read path (q145).
-    val q140SetupT0 = System.nanoTime()
-    val q140Built =
-      if (!keep("q140_gdpr_sweep")) None else try Some((Queries.q140Build(spark, sfDir), (System.nanoTime() - q140SetupT0) / 1e9))
-      catch { case _: Throwable => None }
-    val q145SetupT0 = System.nanoTime()
-    val q145Built =
-      if (!keep("q145_gdpr_deferred")) None else try Some((Queries.q145Build(spark, sfDir), (System.nanoTime() - q145SetupT0) / 1e9))
-      catch { case _: Throwable => None }
-    // One-time q161 PQ index build (train + encode + commit); the timed op
-    // is the ADC probe over stored codes — the per-query serving cost.
-    val q161SetupT0 = System.nanoTime()
-    val q161Built =
-      if (!keep("q161_pq_index_probe")) None else try {
-        val (idx, coarse, cbs, qv) = Queries.q161BuildIndex(spark, sfDir)
-        Some((idx, coarse, cbs, qv, (System.nanoTime() - q161SetupT0) / 1e9))
-      } catch { case _: Throwable => None }
-    // One-time q163 residual-PQ index build, same adjudication as q161:
-    // the timed op is the per-cell residual-ADC probe over stored codes.
-    val q163SetupT0 = System.nanoTime()
-    val q163Built =
-      if (!keep("q163_ann_ivf_pq_residual")) None else try {
-        val (idx, coarse, cbs, qv) = Queries.q163BuildIndex(spark, sfDir)
-        Some((idx, coarse, cbs, qv, (System.nanoTime() - q163SetupT0) / 1e9))
-      } catch { case _: Throwable => None }
-    // One-time q182 fixture landing (round-19): gzip-encoding the corpus
-    // into ~corpus/5 .warc.gz files is input generation, not the streaming
-    // operator — the timed op is the multi-batch ingest over the landed
-    // directory (fresh checkpoint per run), same adjudication as q130.
-    val q182SetupT0 = System.nanoTime()
-    val q182Built =
-      if (!keep("q182_stream_warc")) None else try Some((Queries.q182Build(spark, sfDir), (System.nanoTime() - q182SetupT0) / 1e9))
-      catch { case _: Throwable => None }
-    // One-time q165 sketch-rollup build (two day-range commits); the timed
-    // op is the range serve from stored sketch bytes — the recurring cost.
-    val q165SetupT0 = System.nanoTime()
-    val q165Built =
-      if (!keep("q165_sketch_rollup")) None else try {
-        val path = Queries.q165Build(spark, sfDir)
-        Some((path, (System.nanoTime() - q165SetupT0) / 1e9))
-      } catch { case _: Throwable => None }
-    // One-time q171 histogram-partial build; the timed op is the exact
-    // range merge over stored partials.
-    val q171SetupT0 = System.nanoTime()
-    val q171Built =
-      if (!keep("q171_histogram_rollup")) None else try {
-        val path = Queries.q171Build(spark, sfDir)
-        Some((path, (System.nanoTime() - q171SetupT0) / 1e9))
-      } catch { case _: Throwable => None }
-
-    // benched ops: SparkEntry.queries, with q98 overridden to probe-only
-    // against the prebuilt index and q106 to feed-only against the
-    // prebuilt warehouse (oracle semantics unchanged — Verify still runs
-    // the full build+probe / build+feed queries).
-    val benchOp: Map[String, (SparkSession, String) => DataFrame] =
-      SparkEntry.queries ++ q98Built.map { case (idx, cents, qv, _) =>
-        "q98_ann_ivf_sq8" -> ((s: SparkSession, _: String) => Queries.q98Probe(s, idx, cents, qv))
-      } ++ q106Built.map { case (path, v1, v2, _) =>
-        "q106_change_feed" -> ((s: SparkSession, _: String) => Queries.q106Feed(s, path, v1, v2))
-      } ++ q106Built.map { case (path, v1, v2, _) =>
-        // q119 maintains its view from the SAME prebuilt warehouse — the
-        // timed op is bootstrap+feed+fold (the per-commit consumer cost)
-        "q119_incremental_mv" -> ((s: SparkSession, _: String) => Queries.q119Maintain(s, path, v1, v2))
-      } ++ q127Built.map { case (path, v2, _) =>
-        "q127_pit_lookup" -> ((s: SparkSession, d: String) => Queries.q127Probe(s, path, v2, d))
-      } ++ q130Built.map { case (idx, _) =>
-        "q130_bm25_index" -> ((s: SparkSession, _: String) => Queries.q130Probe(s, idx))
-      } ++ (for ((path, v1, v2, _) <- q106Built; (rep, _) <- q148Built) yield
-        "q148_cdc_apply" -> ((s: SparkSession, _: String) => Queries.q148Apply(s, path, v1, v2, rep))
-      ) ++ q140Built.map { case (path, _) =>
-        "q140_gdpr_sweep" -> ((s: SparkSession, _: String) => Queries.q140Read(s, path))
-      } ++ q145Built.map { case (path, _) =>
-        "q145_gdpr_deferred" -> ((s: SparkSession, _: String) => Queries.q145Read(s, path))
-      } ++ q106Built.map { case (path, v1, v2, _) =>
-        // q141 diffs versions of the SAME prebuilt warehouse — the timed
-        // cost is two time-travel reads + the metric aggregation
-        "q141_version_drift" -> ((s: SparkSession, _: String) => Queries.q141Drift(s, path, v1, v2))
-      } ++ q161Built.map { case (idx, coarse, cbs, qv, _) =>
-        "q161_pq_index_probe" -> ((s: SparkSession, _: String) => Queries.q161Probe(s, idx, coarse, cbs, qv))
-      } ++ q163Built.map { case (idx, coarse, cbs, qv, _) =>
-        "q163_ann_ivf_pq_residual" -> ((s: SparkSession, _: String) => Queries.q163Probe(s, idx, coarse, cbs, qv))
-      } ++ q165Built.map { case (path, _) =>
-        "q165_sketch_rollup" -> ((s: SparkSession, d: String) => Queries.q165Probe(s, path, d))
-      } ++ q106Built.map { case (path, v1, v2, _) =>
-        // q166 streams the SAME prebuilt warehouse's feed — the timed cost
-        // is the consumer side (fresh replica bootstrap + 2-batch apply)
-        "q166_stream_cdc_apply" -> ((s: SparkSession, _: String) => Queries.q166Stream(s, path, v1, v2))
-      } ++ q171Built.map { case (path, _) =>
-        "q171_histogram_rollup" -> ((s: SparkSession, _: String) => Queries.q171Probe(s, path))
-      } ++ q182Built.map { case (landing, _) =>
-        "q182_stream_warc" -> ((s: SparkSession, _: String) => Queries.q182Stream(s, landing))
-      } ++ q106Built.map { case (path, v1, v2, _) =>
-        // q172 maintains its view against the SAME prebuilt fact warehouse —
-        // the timed cost is the consumer cycle (dim build + feeds + maintain)
-        "q172_join_mv" -> ((s: SparkSession, d: String) => Queries.q172Maintain(s, path, v1, v2, d))
-      }
+    // One-time setup OUTSIDE timing: each staged query's build runs once
+    // here and the timed op is its serve half (see `prepare`).
+    val prepared = prepare(spark, sfDir, kept)
 
     // warm-up: every headline query once at the target SF (see scaladoc).
     // Errors here are not swallowed silently — they will recur in the timed
     // loop and be reported there.
-    (headline ++ extras).filter(keep).foreach { name =>
-      try graft.core.Caching.scoped(materialize(benchOp(name)(spark, sfDir)))
-      catch { case _: Throwable => }
+    (headline ++ extras).foreach { name =>
+      prepared.ops(name).foreach { fn =>
+        try graft.core.Caching.scoped(materialize(fn(spark, sfDir)))
+        catch { case _: Throwable => }
+      }
     }
 
     // min of 3 timed runs per query: the machine the bench shares is noisy
@@ -561,33 +317,13 @@ object Bench {
     // contention-free estimate of steady-state cost and makes
     // round-over-round regression comparison meaningful.
     val runsPerQuery = 3
-    // Measurement hygiene (round-19, VERDICT r18 #6): EVERY timed
-    // repetition is its own cache scope, so each rep pays its own cache
-    // population (the within-run reuse a cache legitimately buys stays
-    // inside the rep; runs 2..3 never read run 1's leftover cache). The
-    // clock stops before the scope releases its frames.
-    def timeAll(names: Seq[String]): Seq[(String, Option[Double], Option[String])] =
-      names.map { name =>
-        val fn = benchOp(name)
-        val results = (1 to runsPerQuery).map { _ =>
-          try graft.core.Caching.scoped {
-            val t0 = System.nanoTime()
-            materialize(fn(spark, sfDir))
-            Right((System.nanoTime() - t0) / 1e9)
-          } catch {
-            case e: Throwable => Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
-          }
-        }
-        val oks = results.collect { case Right(t) => t }
-        if (oks.nonEmpty) (name, Some(oks.min), None)
-        else (name, None, results.collectFirst { case Left(m) => m })
-      }
-    val timedFirst = timeAll(headline.filter(keep))
+    def timeAll(names: Seq[String]) = timeOps(spark, sfDir, names, prepared.ops, runsPerQuery)
+    val timedFirst = timeAll(headline)
 
     // extras: min-of-3 like the headline set, but outside `total`; a
     // permanently-failing extra reports its first error message just like
     // a headline query (never a silent null)
-    val extraTimedFirst = timeAll(extras.filter(keep))
+    val extraTimedFirst = timeAll(extras)
 
     val (baselineName, baseline) = loadBaseline(sfDir)
 
@@ -650,19 +386,8 @@ object Bench {
     val tainted = loadStart > 1.5 || extShare.exists(_ > 0.30)
     val loadJson =
       s"""{"start":${num(loadStart)},"end":${num(loadEnd)},"ext_cpu_share":${extShare.map(num).getOrElse("null")},"quiesce_wait_sec":${num(quiesceWait)}}"""
-    val setupPairs: Seq[(String, Double)] =
-      q98Built.map { case (_, _, _, t) => "q98_index_build" -> t }.toSeq ++
-        q106Built.map { case (_, _, _, t) => "q106_warehouse_build" -> t }.toSeq ++
-        q127Built.map { case (_, _, t) => "q127_warehouse_build" -> t }.toSeq ++
-        q130Built.map { case (_, t) => "q130_index_build" -> t }.toSeq ++
-        q148Built.map { case (_, t) => "q148_replica_bootstrap" -> t }.toSeq ++
-        q140Built.map { case (_, t) => "q140_sweep_build" -> t }.toSeq ++
-        q145Built.map { case (_, t) => "q145_dv_build" -> t }.toSeq ++
-        q161Built.map { case (_, _, _, _, t) => "q161_index_build" -> t }.toSeq ++
-        q163Built.map { case (_, _, _, _, t) => "q163_index_build" -> t }.toSeq ++
-        q165Built.map { case (_, t) => "q165_rollup_build" -> t }.toSeq ++
-        q171Built.map { case (_, t) => "q171_rollup_build" -> t }.toSeq ++
-        q182Built.map { case (_, t) => "q182_fixture_land" -> t }.toSeq
+    val setupPairs = prepared.setupSec
+    val staged = benched.filter(_.staged.isDefined).map(s => qkey(s.name)).mkString("/")
     val setupJson = setupPairs.map { case (k, t) => s"${jstr(k)}:${num(t)}" }.mkString("{", ",", "}")
 
     val line =
@@ -671,7 +396,7 @@ object Bench {
         s""""remeasured":${remeasured.distinct.map(jstr).mkString("[", ",", "]")},"extras":$extraTimes,""" +
         s""""baseline":${jstr(baselineName)},"load":$loadJson,"tainted":$tainted,"setup_sec":$setupJson,""" +
         s""""runs_per_query":$runsPerQuery,"aggregation":"min","timing_action":"hash_rows",""" +
-        s""""cache_policy":"warm JVM, one Caching scope per rep (caches released at rep end); min of $runsPerQuery runs per query; action = xxhash64 over every output column (full materialization, count() pruned pure projections); q98/q130/q161/q163 timed as stored-index probes, q106/q119/q127/q141/q148 against prebuilt warehouses, q140/q145 as post-sweep serving reads, q165/q171 as range probes over prebuilt rollups, q182 as the stream over a prelanded fixture dir (builds in setup_sec)"}"""
+        s""""cache_policy":"warm JVM, one Caching scope per rep (caches released at rep end); min of $runsPerQuery runs per query; action = xxhash64 over every output column (full materialization, count() pruned pure projections); $staged timed as the serve half against a setup built once (builds in setup_sec)"}"""
     // Full-fidelity record → BENCH_LOCAL_<sf>.json, keyed by SF so runs at
     // different scale factors never clobber each other (r11: a tainted
     // sf0.001 run overwrote the only untainted sf0.1 record and disarmed

@@ -1927,18 +1927,8 @@ object Queries {
     * set — so any stored/inline divergence fails the gate. SimilaritySpec
     * additionally proves the probe's file reads stay inside the nprobe
     * partition dirs.
-    */
-  def q98(s: SparkSession, dir: String): DataFrame = {
-    // served from the PERSISTED layout: quantize once, store codes
-    // cell-partitioned in a VersionedTable, probe opens only nprobe
-    // partition dirs — the oracle replays the inline computation, so a
-    // stored/inline divergence (codes, cells, kernel) fails the gate.
-    // Unique dir per call: each oracle run gates a fresh build.
-    val (idx, centroids, qvec) = q98BuildIndex(s, dir)
-    q98Probe(s, idx, centroids, qvec)
-  }
-
-  /** q98's one-time half: resolve centroids/query driver-side (8 rows +
+    *
+    * q98's one-time half: resolve centroids/query driver-side (8 rows +
     * 1 row — bounded) and persist the IVF+SQ8 serving layout. Split out
     * so Bench can build ONCE in setup and time only [[q98Probe]] — the
     * repeated serving op a deployment actually pays per query — without
@@ -2247,17 +2237,11 @@ object Queries {
     * (even inside rewritten buckets) emit nothing. Only manifest-changed
     * buckets are read on either side. Oracle recomputes all three change
     * classes relationally from `orders`.
-    */
-  def q106(s: SparkSession, dir: String): DataFrame = {
-    val (path, v1, v2) = q106Build(s, dir)
-    q106Feed(s, path, v1, v2)
-  }
-
-  /** q106's one-time warehouse build (two SCD-2 commit cycles). The bench
+    *
+    * q106's one-time warehouse build (two SCD-2 commit cycles). The bench
     * runs this once in setup (reported as `setup_sec`) so the TIMED
     * operation is [[q106Feed]] — the change feed itself, the per-invocation
-    * serving cost — mirroring q98's stored-index probe timing. Verify
-    * still runs the full build+feed [[q106]].
+    * serving cost — mirroring q98's stored-index probe timing.
     */
   def q106Build(s: SparkSession, dir: String): (String, Long, Long) = {
     val orders = t(s, dir, "orders")
@@ -2412,13 +2396,8 @@ object Queries {
     * computation (q115's chain), so any stored/inline divergence — codes,
     * cells, pack, ADC kernel — fails the gate; SimilaritySpec adds the
     * file-level pruning proof.
-    */
-  def q161(s: SparkSession, dir: String): DataFrame = {
-    val (idx, coarse, cbs, qvec) = q161BuildIndex(s, dir)
-    q161Probe(s, idx, coarse, cbs, qvec)
-  }
-
-  /** q161's one-time half: train codebooks, encode, persist the PQ layout
+    *
+    * q161's one-time half: train codebooks, encode, persist the PQ layout
     * (split out so Bench times only the probe — the per-query serving op).
     */
   def q161BuildIndex(s: SparkSession, dir: String): (String, Seq[(Long, Seq[Double])], Seq[Seq[(Long, Seq[Double])]], Seq[Float]) = {
@@ -2469,12 +2448,8 @@ object Queries {
     * (SimilaritySpec measures it head-to-head). The oracle replays the
     * whole chain — coarse assign, residual, residual-space training,
     * encode, per-cell ADC — bit-for-bit over the stored index.
-    */
-  def q163(s: SparkSession, dir: String): DataFrame = {
-    val (idx, coarse, cbs, qvec) = q163BuildIndex(s, dir)
-    q163Probe(s, idx, coarse, cbs, qvec)
-  }
-  /** q163's one-time half: residual-space training + encode + commit
+    *
+    * q163's one-time half: residual-space training + encode + commit
     * (split out so Bench times only the probe, q161's adjudication).
     */
   def q163BuildIndex(s: SparkSession, dir: String): (String, Seq[(Long, Seq[Double])], Seq[Seq[(Long, Seq[Double])]], Seq[Float]) = {
@@ -2687,13 +2662,8 @@ object Queries {
     * superseded), probes at 2002-06-01 see the post-upsert state — no
     * future leakage in either direction. Oracle replays both probe
     * instants relationally from `orders`.
-    */
-  def q127(s: SparkSession, dir: String): DataFrame = {
-    val (path, _, v2) = q127Build(s, dir)
-    q127Probe(s, path, v2, dir)
-  }
-
-  /** q127's warehouse build (two SCD-2 commits whose batches carry
+    *
+    * q127's warehouse build (two SCD-2 commits whose batches carry
     * `record_from`). Bench times [[q127Probe]] only, build in setup_sec.
     */
   def q127Build(s: SparkSession, dir: String): (String, Long, Long) = {
@@ -2714,7 +2684,7 @@ object Queries {
     (tmp, v1, v2)
   }
 
-  /** The probe read for [[q127]]: every warehouse custkey probed at two
+  /** The probe read for q127: every warehouse custkey probed at two
     * instants (between the commits, and after both).
     */
   def q127Probe(s: SparkSession, path: String, v2: Long, dir: String): DataFrame = {
@@ -2786,13 +2756,8 @@ object Queries {
     * view, never a second snapshot scan. The oracle recomputes the v2
     * view relationally from `orders`, so the hash gate proves
     * maintain(bootstrap(v1), feed) == recompute(v2) exactly.
-    */
-  def q119(s: SparkSession, dir: String): DataFrame = {
-    val (path, v1, v2) = q106Build(s, dir)
-    q119Maintain(s, path, v1, v2)
-  }
-
-  /** The maintenance read for [[q119]] against a prebuilt warehouse (the
+    *
+    * The maintenance read for q119 against a prebuilt warehouse (the
     * bench times this — the per-commit consumer cost — with the build in
     * `setup_sec`, like q106).
     */
@@ -2955,11 +2920,8 @@ object Queries {
     * twin of q98's stored IVF+SQ8 serving path; the bench times the probe
     * with the one-time build in setup_sec). Result is row-identical to
     * running bm25TopK directly, which is what the oracle recomputes.
-    */
-  def q130(s: SparkSession, dir: String): DataFrame =
-    q130Probe(s, q130Build(s, dir))
-
-  /** q130's one-time half: tokenize + persist the index layout. */
+    *
+    * q130's one-time half: tokenize + persist the index layout. */
   def q130Build(s: SparkSession, dir: String): String = {
     val idx = scratchDir("bm25idx")
     Retrieval.writeBm25Index(t(s, dir, "documents"), "doc_id", "text", idx, nBuckets = 16)
@@ -3139,11 +3101,8 @@ object Queries {
     * latest order per customer minus the doomed segment — so the delete
     * path's bucket pruning, manifest clears and anti-join semantics are
     * all hash-gated, not just spec-proven.
-    */
-  def q140(s: SparkSession, dir: String): DataFrame =
-    q140Read(s, q140Build(s, dir))
-
-  /** q140's one-time half: build the two-commit warehouse and run the
+    *
+    * q140's one-time half: build the two-commit warehouse and run the
     * copy-on-write takedown sweep once. Split out so Bench times only
     * [[q140Read]] — the post-sweep serving read — instead of re-measuring
     * the q80-shaped commit I/O a fourth time (VERDICT r10 "what's wrong
@@ -3218,11 +3177,8 @@ object Queries {
     * read serving path; VersionedTableSpec covers the no-bucket-
     * rewritten claim, compact's physical apply + entry clear, and
     * vacuum's sidecar reclaim.
-    */
-  def q145(s: SparkSession, dir: String): DataFrame =
-    q145Read(s, q145Build(s, dir))
-
-  /** q145's one-time half: warehouse build + the O(|keys|) deferred
+    *
+    * q145's one-time half: warehouse build + the O(|keys|) deferred
     * delete commit. Bench times only [[q145Read]] — the merge-on-read
     * serving path (base read anti-joined against the DV sidecar), which
     * is what the deletion-vector design exists to make cheap.
@@ -3277,17 +3233,15 @@ object Queries {
     * source relations, so bootstrap + feed + apply are all gated.
     * VersionedTableSpec asserts full-table equality (history included)
     * and idempotent re-apply.
+    *
+    * q148's setup half on top of q106's warehouse at `path`: bootstrap a
+    * scratch replica at v1 and return its path ([[q148Apply]] serves).
     */
-  def q148(s: SparkSession, dir: String): DataFrame = {
+  def q148Bootstrap(s: SparkSession, path: String, v1: Long): String = {
     import graft.sources.VersionedTable
-    val (path, v1, v2) = q106Build(s, dir)
     val replica = scratchDir("cdc_replica") + "/replica"
     VersionedTable.commitDelta(s, replica, VersionedTable.read(s, path, Some(v1)), "key_bucket")
-    val feed = VersionedTable.changeFeed(s, path, v1, v2, Seq("o_custkey", "o_orderkey"))
-    VersionedTable.applyChangeFeed(s, replica, feed, Seq("o_custkey", "o_orderkey"), "key_bucket")
-    VersionedTable.read(s, replica)
-      .filter(col("actv_flg") === "Y")
-      .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
+    replica
   }
 
   /** q149: CONTAINMENT SELF-JOIN ([[Dedup.containmentPairs]]) —
@@ -3496,7 +3450,7 @@ object Queries {
     * an already-bootstrapped replica: derive the feed, apply it
     * (idempotent — a re-apply converges, which is exactly what repeated
     * bench runs exercise), read the active snapshot. The bench times
-    * this; Verify still runs the full build+bootstrap+apply [[q148]].
+    * this; the full q148 is q106's build, [[q148Bootstrap]], then this.
     */
   def q148Apply(s: SparkSession, srcPath: String, v1: Long, v2: Long, replicaPath: String): DataFrame = {
     import graft.sources.VersionedTable
@@ -3515,13 +3469,8 @@ object Queries {
     * oracle re-derives both versions' stats from the source relations
     * (v1 = pre-1998 latest per key, v2 = v1 superseded by the post-1998
     * batch), so time travel AND the SCD-2 close arithmetic are gated.
-    */
-  def q141(s: SparkSession, dir: String): DataFrame = {
-    val (path, v1, v2) = q106Build(s, dir)
-    q141Drift(s, path, v1, v2)
-  }
-
-  /** q141's per-invocation half: the between-versions drift diff against
+    *
+    * q141's per-invocation half: the between-versions drift diff against
     * an existing warehouse (Bench runs it on the prebuilt q106 warehouse
     * so the timed cost is the two time-travel reads + aggregation, not
     * the commit cycles that produced them).
@@ -3554,13 +3503,8 @@ object Queries {
     * side is the audit (`est_ok`: merged estimate within 5% of exact),
     * pinned TRUE by the oracle — the q63/q113/q125 self-validating
     * pattern, so an estimate drifting out of bound hash-fails.
-    */
-  def q165(s: SparkSession, dir: String): DataFrame = {
-    val path = q165Build(s, dir)
-    q165Probe(s, path, dir)
-  }
-
-  /** q165's build half: two incremental day-range commits of
+    *
+    * q165's build half: two incremental day-range commits of
     * per-(day, event_type) HLL sketches. Bench times [[q165Probe]] only
     * (build in setup_sec) — the production shape is one commit per day.
     */
@@ -3634,13 +3578,8 @@ object Queries {
     * batch boundaries, the marker protocol, and replay order are all
     * hash-gated. StreamingSpec adds the lost-checkpoint restart case
     * (re-delivered batch ids commit nothing).
-    */
-  def q166(s: SparkSession, dir: String): DataFrame = {
-    val (path, v1, v2) = q106Build(s, dir)
-    q166Stream(s, path, v1, v2)
-  }
-
-  /** q166's per-invocation half: fresh replica bootstrap at v1 + the
+    *
+    * q166's per-invocation half: fresh replica bootstrap at v1 + the
     * two-batch streamed apply + the final active read (Bench reuses the
     * prebuilt q106 warehouse, so the timed cost is the consumer side).
     */
@@ -3761,13 +3700,8 @@ object Queries {
     * partials — no tolerance, no sketch: the merged histogram IS the
     * direct histogram of the range, which the oracle recomputes from
     * raw events and hash-compares.
-    */
-  def q171(s: SparkSession, dir: String): DataFrame = {
-    val path = q171Build(s, dir)
-    q171Probe(s, path)
-  }
-
-  /** q171's build half: two incremental day-range commits of sparse
+    *
+    * q171's build half: two incremental day-range commits of sparse
     * per-day histogram partials (bench times [[q171Probe]] only).
     */
   def q171Build(s: SparkSession, dir: String): String = {
@@ -3812,13 +3746,8 @@ object Queries {
     * join, untouched. O(changed keys), never a snapshot join. The oracle
     * recomputes the full join at the to-versions, so carry/recompute
     * partitioning errors hash-fail.
-    */
-  def q172(s: SparkSession, dir: String): DataFrame = {
-    val (aPath, a1, a2) = q106Build(s, dir)
-    q172Maintain(s, aPath, a1, a2, dir)
-  }
-
-  /** q172's per-invocation half: dimension-side build + bootstrap + both
+    *
+    * q172's per-invocation half: dimension-side build + bootstrap + both
     * feeds + maintenance (Bench reuses the prebuilt q106 fact warehouse,
     * so the timed cost is the consumer cycle, not the fact-side commits).
     */
@@ -4105,17 +4034,13 @@ object Queries {
     * must converge to the batch parse bit-for-bit, torn-file sentinels
     * included. Fixture files are written executor-side (no driver
     * funnel), one .warc.gz per 5 docs.
-    */
-  def q182(s: SparkSession, dir: String): DataFrame =
-    q182Stream(s, q182Build(s, dir))
-
-  /** q182's one-time half: generate and land the .warc.gz fixture files.
+    *
+    * q182's one-time half: generate and land the .warc.gz fixture files.
     * Split out (round-19) so Bench can time only [[q182Stream]] — the
     * streaming ingest itself, the recurring per-trigger cost — with the
     * fixture generation (gzip-encoding the corpus and creating ~corpus/5
     * files, input we'd GET for free in production) in setup_sec, the
-    * same adjudication as q130/q140/q148. Verify still runs the full
-    * build+stream query.
+    * same adjudication as q130/q140/q148.
     */
   def q182Build(s: SparkSession, dir: String): String = {
     import s.implicits._
