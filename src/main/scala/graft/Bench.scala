@@ -143,12 +143,14 @@ object Bench {
   private def sfName(dir: String): String =
     dir.stripSuffix("/").split('/').lastOption.getOrElse(dir)
 
-  /** Busy CPU ticks (user+nice+system, all cpus) from /proc/stat. */
-  private def sysBusyTicks(): Option[Long] =
+  /** (busy, total) CPU ticks, all cpus, from /proc/stat: busy is
+    * user+nice+system, total is every field (idle and iowait included).
+    */
+  private def cpuTicks(): Option[(Long, Long)] =
     try {
       val line = Files.readAllLines(Paths.get("/proc/stat")).get(0)
       val f = line.trim.split("\\s+").drop(1).map(_.toLong)
-      Some(f(0) + f(1) + f(2))
+      Some((f(0) + f(1) + f(2), f.sum))
     } catch { case _: Throwable => None }
 
   /** This JVM's utime+stime ticks from /proc/self/stat (fields 14/15;
@@ -164,20 +166,36 @@ object Bench {
   private def loadAvg1m(): Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
 
-  /** Bounded wait-for-quiesce (r11 fix): the round-close record was stamped
-    * tainted because another workload was still draining when the bench
-    * started (1-min load 5.38). Before sampling the taint telemetry, sleep
-    * while the 1-min loadavg says >1.5 runnable external tasks, capped at
-    * 5 minutes so a genuinely-shared machine still produces a (tainted)
-    * record instead of hanging. Returns seconds waited, reported in the
-    * record as `quiesce_wait_sec`.
+  /** External CPU share at the start of a run: over a short window before
+    * the Spark session exists, the share of the machine's whole CPU time
+    * (idle included) that processes other than this JVM kept busy. Unlike
+    * the 1-min loadavg, it excludes this JVM's own launch, and it does not
+    * carry a previous run that has already exited; the build tool that
+    * forked the bench sits idle meanwhile. The denominator is all ticks,
+    * not busy ticks, because this JVM idles through the window: over busy
+    * ticks a quiet machine would read ~1.
     */
-  private def waitForQuiesce(threshold: Double = 1.5, capSec: Int = 300): Double = {
-    val t0 = System.nanoTime()
-    while (loadAvg1m() > threshold && (System.nanoTime() - t0) / 1e9 < capSec)
-      Thread.sleep(10000)
-    (System.nanoTime() - t0) / 1e9
+  private def startExtShare(windowMs: Long = 2000): Option[Double] = {
+    val t0 = cpuTicks(); val p0 = selfTicks()
+    Thread.sleep(windowMs)
+    for {
+      (b0, n0) <- t0; (b1, n1) <- cpuTicks(); s0 <- p0; s1 <- selfTicks()
+      totalD = n1 - n0 if totalD > 0
+    } yield math.max(0.0, ((b1 - b0) - (s1 - s0)).toDouble / totalD)
   }
+
+  /** Taint verdict: another workload shared the machine if it kept more
+    * than 30% of the CPU busy at the start (`startShare`, see
+    * [[startExtShare]]) or burned more than 30% of the busy CPU during
+    * the run (`runShare`: machine-wide busy ticks not attributable to
+    * this JVM, over all busy ticks). r08's pollution signature was ~50%;
+    * a quiet machine reads <0.1. Start load matters independently of the
+    * run share because a workload dying during our warm-up skews the
+    * first timed queries while averaging to ~0 over the whole run. A
+    * share that could not be sampled taints nothing.
+    */
+  private[graft] def isTainted(startShare: Option[Double], runShare: Option[Double]): Boolean =
+    startShare.exists(_ > 0.30) || runShare.exists(_ > 0.30)
 
   /** Durable floor store: min-merge this run's per-query times into
     * BENCH_FLOORS_<sf>.json. Called ONLY for untainted runs — the floors
@@ -269,6 +287,12 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // Load telemetry (VERDICT r08 "what's wrong #1"): three round-close
+    // records in a row were contention-polluted and their regressions_x
+    // flags phantom. The start share is sampled before any work of ours
+    // (see startExtShare); the 1-min loadavg is kept as information.
+    val startShare = startExtShare()
+    val loadStart = loadAvg1m()
     val spark = graft.core.Sessions.local(cpus, "graft-bench")
 
     // SPARK_GRAFT_BENCH_ONLY (regex over query names): run only the
@@ -287,16 +311,11 @@ object Bench {
     val headline = kept.filter(_.tier == Tier.Headline).map(_.name)
     val extras = kept.filter(_.tier == Tier.Extra).map(_.name)
 
-    // Load telemetry (VERDICT r08 "what's wrong #1"): three round-close
-    // records in a row were contention-polluted and their regressions_x
-    // flags phantom. Sample 1-min loadavg before any work (external load —
-    // our own hasn't started) and busy-CPU ticks system-wide vs this JVM
-    // across the whole run; the record is stamped tainted when either says
-    // another workload shared the machine, and tainted records are excluded
-    // from the baseline floor (see loadBaseline).
-    val quiesceWait = waitForQuiesce()
-    val loadStart = loadAvg1m()
-    val sysT0 = sysBusyTicks(); val selfT0 = selfTicks()
+    // busy-CPU ticks system-wide vs this JVM across the whole run; the
+    // record is stamped tainted when this or the start share says another
+    // workload shared the machine, and tainted records are excluded from
+    // the baseline floor (see loadBaseline)
+    val sysT0 = cpuTicks().map(_._1); val selfT0 = selfTicks()
 
     // One-time setup OUTSIDE timing: each staged query's build runs once
     // here and the timed op is its serve half (see `prepare`).
@@ -369,23 +388,17 @@ object Bench {
       .map { case (k, t, _) => jstr(k) + ":" + t.map(num).getOrElse("null") }
       .mkString("{", ",", "}")
 
-    // Taint verdict: ANY external 1-min load at start (>1.5 runnable tasks
-    // before our own work begins — r9's polluted record had 6.44 yet
-    // passed the old 0.25*cpus gate), OR >30% of the busy CPU burned
-    // machine-wide during the run not attributable to this JVM (r08's
-    // pollution signature was ~50%; a quiet machine runs <0.1). Tick units
-    // cancel in the share, so no HZ assumption is needed. Start-load
-    // matters independently of the run-average share because a workload
-    // dying during our warm-up skews the first timed queries while
-    // averaging to ~0 over the whole run.
+    // Taint verdict (see isTainted). Tick units cancel in the shares, so
+    // no HZ assumption is needed.
     val loadEnd = loadAvg1m()
     val extShare = for {
-      s0 <- sysT0; s1 <- sysBusyTicks(); p0 <- selfT0; p1 <- selfTicks()
+      s0 <- sysT0; s1 <- cpuTicks().map(_._1); p0 <- selfT0; p1 <- selfTicks()
       sysD = s1 - s0 if sysD > 0
     } yield math.max(0.0, (sysD - (p1 - p0)).toDouble / sysD)
-    val tainted = loadStart > 1.5 || extShare.exists(_ > 0.30)
+    val tainted = isTainted(startShare, extShare)
+    def share(x: Option[Double]): String = x.map(num).getOrElse("null")
     val loadJson =
-      s"""{"start":${num(loadStart)},"end":${num(loadEnd)},"ext_cpu_share":${extShare.map(num).getOrElse("null")},"quiesce_wait_sec":${num(quiesceWait)}}"""
+      s"""{"start":${num(loadStart)},"end":${num(loadEnd)},"ext_cpu_share":${share(extShare)},"start_ext_cpu_share":${share(startShare)}}"""
     val setupPairs = prepared.setupSec
     val staged = benched.filter(_.staged.isDefined).map(s => qkey(s.name)).mkString("/")
     val setupJson = setupPairs.map { case (k, t) => s"${jstr(k)}:${num(t)}" }.mkString("{", ",", "}")

@@ -3494,7 +3494,7 @@ object Queries {
     * warehouse DAY-PARTITIONED (two incremental commits here — the
     * nightly append shape: a new day's load touches only its own
     * partitions), then range queries served by MERGING the stored
-    * sketch bytes — `readPartitions` over the enumerated day list, so
+    * sketch bytes — `readPartitionsUnioned` over the enumerated day list, so
     * the manifest prunes to the range's partitions before any file is
     * listed, and the events table is never rescanned. q125 proved HLL
     * mergeability inside one job; this is the cross-job half: the

@@ -159,9 +159,8 @@ object Scd2 {
     * the batch touches, upserts within them, and commits just those
     * partitions — untouched partitions carry forward by manifest reference
     * with zero data movement. This is the load shape that survives a 100 TB
-    * target (the round-1 full-snapshot `Pipeline.load` copies the whole
-    * table per run; reference semantics per loading.py:25-133 are
-    * unchanged).
+    * target: a run costs the touched buckets, not a copy of the table
+    * (reference semantics per loading.py:25-133).
     *
     * Correctness of the scoping: `actv_flg` flips only for rows whose key
     * appears in the batch, and a key's rows live in exactly one bucket

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.core.{ServiceConfig, SourceConfig, StagePath}
 import graft.operators.{DeltaState, Flatten, Scd2, Transform}
@@ -91,13 +90,7 @@ object Pipeline {
     (main, treatedSides)
   }
 
-  /** Loading stage (loading.py:25-133 shape): staged pipe-CSV -> SCD-2
-    * upsert committed as a new snapshot of a [[graft.sources.VersionedTable]]
-    * — readers keep a consistent view mid-load, each run is time-travelable,
-    * and rollback = read the previous version. Staging "truncate" is the
-    * overwrite of the staged file on the next run.
-    */
-  /** Warehouse-side drift check shared by the loaders: the staged batch's
+  /** Warehouse-side drift check of the SCD-2 loader: the staged batch's
     * columns vs the existing warehouse payload columns (SCD-2 bookkeeping
     * excluded). The load itself absorbs drift (unionByName null-padding /
     * mergeSchema reads); this surfaces the diff to `notifier` so it is
@@ -122,10 +115,8 @@ object Pipeline {
       // superseded history would otherwise count as 'existing' forever,
       // its removal never reported and its re-introduction silently
       // suppressed as an added-column event
-      val contributing: Seq[Long] = VersionedTable.partitionMap(spark, warehousePath, latest) match {
-        case None     => Seq(latest) // full snapshot: latest manifest is the whole view
-        case Some(pm) => (pm.values.toSeq :+ latest).distinct.sorted
-      }
+      val contributing: Seq[Long] =
+        (VersionedTable.manifest(spark, warehousePath, latest).values.toSeq :+ latest).distinct.sorted
       val existing = contributing
         .flatMap(v => VersionedTable.commitField(spark, warehousePath, v, "schema"))
         .flatMap(s => org.apache.spark.sql.types.DataType.fromJson(s).asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames)
@@ -141,45 +132,14 @@ object Pipeline {
     }
   }
 
-  def load(
-      spark: SparkSession,
-      run: PipelineRun,
-      alias: String,
-      warehousePath: String,
-      keyCols: Seq[String],
-      notifier: graft.core.Drift.Notifier = graft.core.Drift.noop
-  ): DataFrame = {
-    import graft.sources.VersionedTable
-    val staged = IO.readPipeCsv(spark, run.path(alias, "transformation", "csv"))
-    emitWarehouseDrift(spark, warehousePath, staged, notifier)
-    // optimistic-concurrency loop: the snapshot is a read-modify-write of
-    // the whole table, so a commit that lands between our read and our
-    // publish would be silently reverted by an unconditional commit. A
-    // checked commit aborts instead; the retry rebases on the fresh read
-    // (the same loop shape as upsertPartitioned/commitDelta).
-    VersionedTable.withCommitRetry() {
-      val base = VersionedTable.latestVersion(spark, warehousePath)
-      val target = base match {
-        case Some(_) => VersionedTable.read(spark, warehousePath)
-        case None =>
-          // empty target with the staged schema + SCD columns
-          staged
-            .limit(0)
-            .withColumn("actv_flg", lit("Y"))
-            .withColumn("record_to", lit(null).cast("timestamp"))
-      }
-      val result = Scd2.upsert(target, staged, keyCols, run.now)
-      VersionedTable.commitChecked(result, warehousePath, base)
-    }
-    VersionedTable.read(spark, warehousePath)
-  }
-
-  /** Partition-scoped loading stage — same reference semantics as [[load]]
-    * (loading.py:25-133), but against a delta-committed warehouse table:
-    * only the key-bucket partitions touched by this batch are rewritten;
-    * the rest carry forward by manifest reference. Use this shape for big
-    * fact targets ([[load]]'s full snapshot is fine for small dimensions —
-    * at 100 TB a full-table copy per daily load is not).
+  /** Loading stage (loading.py:25-133 shape): staged pipe-CSV -> SCD-2
+    * upsert committed as a new version of a [[graft.sources.VersionedTable]]
+    * — readers keep a consistent view mid-load, each run is time-travelable,
+    * and rollback = read the previous version. Only the key-bucket
+    * partitions touched by this batch are rewritten; the rest carry forward
+    * by manifest reference, so a daily load costs its batch, not a copy of
+    * the table. Staging "truncate" is the overwrite of the staged file on
+    * the next run.
     */
   def loadPartitioned(
       spark: SparkSession,

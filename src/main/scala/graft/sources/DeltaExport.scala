@@ -27,11 +27,10 @@ import graft.core.Json
   *    schema-evolution story)
   *  - each commit emits `add` actions for every parquet file in the
   *    version dirs it NEWLY references, and `remove` actions for files it
-  *    no longer references vs its parent: full-snapshot commits swap the
-  *    whole file set; delta commits swap exactly the rewritten/cleared
-  *    partitions (the carried-forward partitions' files stay live without
-  *    re-adding — Delta state is cumulative, same as the manifest's
-  *    by-reference carry-forward)
+  *    no longer references vs its parent: exactly the rewritten/cleared
+  *    partitions swap (the carried-forward partitions' files stay live
+  *    without re-adding — Delta state is cumulative, same as the
+  *    manifest's by-reference carry-forward)
   *  - by default `partitionValues` is `{}`: the engine keeps the partition
   *    column IN the data files (the `p=` layout is pure path convention),
   *    so the exported table is an unpartitioned Delta table whose files
@@ -64,10 +63,7 @@ object DeltaExport {
     */
   private def referencedFiles(spark: SparkSession, path: String, v: Long): Seq[(String, Long, Long)] = {
     val f = fs(spark, path)
-    val dirs: Seq[String] = VersionedTable.partitionMap(spark, path, v) match {
-      case None        => Seq(s"v=$v")
-      case Some(parts) => parts.toSeq.sortBy(_._1).map { case (p, pv) => s"v=$pv/p=$p" }
-    }
+    val dirs = VersionedTable.manifest(spark, path, v).toSeq.sortBy(_._1).map { case (p, pv) => s"v=$pv/p=$p" }
     dirs.flatMap { d =>
       val dp = new Path(s"$path/$d")
       if (!f.exists(dp)) Nil
@@ -181,8 +177,6 @@ object DeltaExport {
       if (!partitioned) None
       else {
         val cols = versions.map { v =>
-          require(VersionedTable.partitionMap(spark, path, v).isDefined,
-            s"partitioned export: version $v of $path is a full snapshot, not a partitioned commit")
           VersionedTable.commitField(spark, path, v, "partition_column").getOrElse(
             throw new IllegalArgumentException(s"partitioned export: version $v of $path records no partition_column"))
         }.distinct

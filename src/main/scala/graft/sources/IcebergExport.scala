@@ -40,8 +40,8 @@ import graft.core.Json
   *    typed partition value (the data files retain the source column, as
   *    Iceberg's identity transform expects), so [[IcebergImport]]'s
   *    `partitionFilter` — or any Iceberg planner — prunes FILES from the
-  *    manifest alone. Full-snapshot tables (and pre-field commits) export
-  *    unpartitioned, mirroring [[DeltaExport]]'s call
+  *    manifest alone. Pre-field commits and partition columns of types
+  *    the spec cannot express export unpartitioned
   *  - `record_count`/`file_size_in_bytes` are real (parquet footer /
   *    file-status reads, driver-side, metadata-sized): Iceberg planners
   *    budget scans from these, lying would mis-plan a consumer
@@ -281,8 +281,8 @@ object IcebergExport {
     // ONE recorded partition column of a spec-expressible type: manifest
     // tuples then carry the typed value and IcebergImport's partitionFilter
     // (or any Iceberg planner) prunes FILES from the manifest alone. Tables
-    // without the recorded column (pre-field commits, full snapshots, or
-    // exotic types) export unpartitioned — correct, just unpruned.
+    // without the recorded column (pre-field commits or exotic types)
+    // export unpartitioned — correct, just unpruned.
     val partColOpt: Option[String] = {
       val pcs = versions.map(v => VersionedTable.commitField(spark, path, v, "partition_column"))
       if (pcs.nonEmpty && pcs.forall(_.isDefined) && pcs.flatten.distinct.size == 1) pcs.head else None
@@ -330,11 +330,8 @@ object IcebergExport {
     // files live at each version (relative path, size, partition value),
     // via the same manifest walk DeltaExport uses; first-referencing
     // snapshot tracked so carried-forward files export as EXISTING
-    def referencedFiles(v: Long): Seq[(String, Long, Option[String])] = {
-      val dirs: Seq[(String, Option[String])] = VersionedTable.partitionMap(spark, path, v) match {
-        case None        => Seq((s"v=$v", None))
-        case Some(parts) => parts.toSeq.sortBy(_._1).map { case (p, pv) => (s"v=$pv/p=$p", Some(p)) }
-      }
+    def referencedFiles(v: Long): Seq[(String, Long, String)] = {
+      val dirs = VersionedTable.manifest(spark, path, v).toSeq.sortBy(_._1).map { case (p, pv) => (s"v=$pv/p=$p", p) }
       dirs.flatMap { case (d, part) =>
         val dp = new Path(s"$path/$d")
         if (!f.exists(dp)) Nil
@@ -370,7 +367,7 @@ object IcebergExport {
           df.put("file_path", qualifyData(rel)) // full location URI per spec
           df.put("file_format", "PARQUET")
           val pr = new GenericData.Record(df.getSchema.getField("partition").schema())
-          partField.foreach { case (n, _) => part.foreach(p => pr.put(n, partValue(p))) }
+          partField.foreach { case (n, _) => pr.put(n, partValue(part)) }
           df.put("partition", pr)
           df.put("record_count", counts(rel))
           df.put("file_size_in_bytes", size)

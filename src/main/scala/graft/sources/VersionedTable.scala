@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
   * Layout:
   * {{{
   *   table/
-  *     v=1/  v=2/ ...           # immutable parquet snapshot directories
-  *       p=<part>/ ...          # (delta commits) per-partition data dirs
-  *     _commits/1.json ...      # commit metadata, written AFTER the data
+  *     v=1/  v=2/ ...           # immutable per-version directories
+  *       p=<part>/ ...          # parquet data of the partitions v rewrote
+  *     _commits/1.json ...      # commit manifest, written AFTER the data
   *     _commits/1.reserved ...  # version reservations (writer lock files)
   * }}}
   *
@@ -32,15 +32,15 @@ import org.apache.spark.sql.functions._
   *    local/HDFS filesystems; an object store without atomic create (raw
   *    S3) needs a catalog/lock service here, exactly as Delta does.
   *
-  * Two commit flavors:
-  *  - [[commit]]: full copy-on-write snapshot — the standard trade for
-  *    small dimension/state tables (SCD-2 targets, config, snapshots).
-  *  - [[commitDelta]]: partition-scoped rewrite for big fact tables — only
-  *    the partitions present in the written DataFrame get new data; every
-  *    other partition is carried forward BY REFERENCE in the commit
-  *    manifest (`"partitions": {"<part>": <version holding its data>}`).
-  *    A daily SCD-2 load over a 100 TB table rewrites the few key-bucket
-  *    partitions its batch touches instead of copying the table.
+  * One layout, one commit: [[commitDelta]] is a partition-scoped rewrite —
+  * only the partitions present in the written DataFrame get new data;
+  * every other partition is carried forward BY REFERENCE in the commit
+  * manifest (`"partitions": {"<part>": <version holding its data>}`). A
+  * daily SCD-2 load over a 100 TB table rewrites the few key-bucket
+  * partitions its batch touches instead of copying the table; a small
+  * table that is rewritten whole commits on one constant partition value.
+  * Every reader resolves a version through that manifest; a commit json
+  * without one is refused (`IllegalStateException`).
   */
 object VersionedTable {
 
@@ -112,75 +112,11 @@ object VersionedTable {
     f.delete(new Path(s"$path/_commits/$v.reserved"), false)
   }
 
-  /** Commit a new FULL snapshot; returns the version number. Unconditional:
-    * the newest commit wins regardless of what it was computed from — right
-    * for full refreshes, wrong for read-modify-write loads (use
-    * [[commitChecked]] there).
-    */
-  def commit(df: DataFrame, path: String): Long = fullCommit(df, path, check = None)
-
-  /** Full-snapshot commit with optimistic concurrency: `base` is the latest
-    * version the caller's snapshot was derived from (None = table was
-    * empty). If anyone published since, this commit aborts with
-    * `ConcurrentModificationException` instead of silently reverting the
-    * concurrent writer's rows — pair with [[withCommitRetry]] and rebuild
-    * the snapshot from a fresh read, mirroring [[commitDelta]]'s loop.
-    */
-  def commitChecked(df: DataFrame, path: String, base: Option[Long]): Long =
-    fullCommit(df, path, check = Some(base))
-
-  private def fullCommit(df: DataFrame, path: String, check: Option[Option[Long]]): Long = {
-    val spark = df.sparkSession
-    val f = fs(spark, path)
-    val v = reserveVersion(f, path)
-    // v is exclusively ours: the data dir cannot collide with any other
-    // writer, so no deletion of foreign dirs is ever needed
-    val tmp = new Path(s"$path/.v=$v.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    val finalDir = clearStaleDir(f, path, v)
-    if (!f.rename(tmp, finalDir))
-      throw new IllegalStateException(s"failed to move snapshot into place for version $v of $path")
-    check.foreach { base =>
-      if (latestVersion(spark, path) != base) {
-        f.delete(finalDir, true) // burned reservation marks the version dead
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent commit on $path (base was $base); rebuild the snapshot on the new latest version")
-      }
-    }
-    // a checked commit records its base so later writers' conflict checks
-    // can tell "built on me" from "never saw me" (commitDelta semantics)
-    val baseJson = check.map(b => s""""base": ${b.getOrElse(0L)}, """).getOrElse("")
-    publish(f, path, v,
-      s"""{"version": $v, $baseJson"schema": ${jsonStr(df.schema.json)}, "committed_at": ${System.currentTimeMillis()}}""")
-    check.foreach { base =>
-      // close the check-then-publish window exactly like commitDelta: any
-      // commit that landed between base and v, or a higher one that never
-      // saw us, demotes this commit (unless a successor already built on it)
-      def conflictingSuccessor(w: Long): Boolean =
-        try commitBase(spark, path, w).forall(_ < v)
-        catch { case _: IllegalArgumentException => false } // demoted concurrently
-      val conflict = committedVersions(f, path).filter { w =>
-        (w > base.getOrElse(0L) && w < v) || (w > v && conflictingSuccessor(w))
-      }
-      if (conflict.nonEmpty && !durableThroughSuccessor(spark, f, path, v)) {
-        try { val out = f.create(new Path(s"$path/_commits/$v.reserved"), false); out.close() }
-        catch { case _: java.io.IOException => () } // marker already present
-        f.delete(new Path(s"$path/_commits/$v.json"), false)
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent commit(s) ${conflict.sorted.mkString(",")} on $path conflict with base $base; retry the load")
-      }
-    }
-    v
-  }
-
   /** Commit a DELTA: only the partitions present in `updated` (by the
     * string form of `partCol`) get new data under `v=N/p=<part>/`; all
     * other partitions carry forward by reference. The partition column
     * stays a real data column in the files (the `p=` layout is additional,
     * for pruned single-partition reads).
-    *
-    * The table must have been created by commitDelta (or be empty): mixing
-    * full-snapshot and delta commits on one table is rejected.
     *
     * `clearedParts`: partitions this commit intends to touch even if the
     * written DataFrame holds NO rows for them — they are dropped from the
@@ -216,11 +152,7 @@ object VersionedTable {
     // carry-forward manifest (optimistic concurrency: the loser aborts and
     // retries on a fresh base)
     val base = latestVersion(spark, path)
-    val prev = base.map { pv =>
-      partitionMap(spark, path, pv).getOrElse(
-        throw new IllegalStateException(
-          s"table at $path version $pv is a full snapshot; commitDelta requires a delta-style table"))
-    }.getOrElse(Map.empty[String, Long])
+    val prev = base.map(manifest(spark, path, _)).getOrElse(Map.empty[String, Long])
     // exactly-once stream markers ride ALONG THE LINEAGE: every delta commit
     // (loads, deletions, compaction) inherits the base manifest's
     // `stream_batch:*` fields, so the NEWEST commit always carries them and
@@ -457,8 +389,8 @@ object VersionedTable {
       .map(_.stripSuffix(".json").toLong).toSeq
   }
 
-  /** The `base` a delta commit was built on (None for pre-base-field or
-    * full-snapshot commits — treated as "did not see us" conservatively).
+  /** The `base` a commit was built on (None when its json records none —
+    * treated as "did not see us" conservatively).
     */
   private def commitBase(spark: SparkSession, path: String, version: Long): Option[Long] = {
     val root = readCommitJson(spark, path, version)
@@ -494,11 +426,7 @@ object VersionedTable {
   def servableVersions(spark: SparkSession, path: String): Seq[Long] = {
     val f = fs(spark, path)
     committedVersions(f, path).sorted.filter { v =>
-      val dirs: Seq[String] = partitionMap(spark, path, v) match {
-        case None        => Seq(s"v=$v")
-        case Some(parts) => parts.values.toSeq.distinct.map(pv => s"v=$pv")
-      }
-      dirs.forall(d => f.exists(new Path(s"$path/$d")))
+      manifest(spark, path, v).values.toSeq.distinct.forall(pv => f.exists(new Path(s"$path/v=$pv")))
     }
   }
 
@@ -560,8 +488,8 @@ object VersionedTable {
     * copy-on-write [[graft.operators.Scd2.deleteKeys]] semantics.
     * (Caveat inherited from partition-granularity scoping: an upsert
     * that REWRITES a bucket containing other doomed keys re-emits that
-    * bucket DV-filtered — [[readPartitions]] applies the vectors during
-    * the rebuild — so those keys stay deleted through the rewrite.)
+    * bucket DV-filtered — [[readPartitionsUnioned]] applies the vectors
+    * during the rebuild — so those keys stay deleted through the rewrite.)
     *
     * The GDPR trade vs [[graft.operators.Scd2.deleteKeys]] (copy-on-
     * write): deferred deletes make the takedown instant and cheap, but
@@ -577,8 +505,7 @@ object VersionedTable {
         require(c.matches("[A-Za-z0-9_]+"), s"keyCol '$c' must be [A-Za-z0-9_]+ (it is serialized in the manifest)"))
       val v0 = latestVersion(spark, path).getOrElse(
         throw new IllegalArgumentException(s"no committed versions at $path"))
-      require(partitionMap(spark, path, v0).isDefined,
-        s"table at $path is not delta-committed; deferred deletes need a manifest")
+      manifest(spark, path, v0) // the vector's boundary scoping needs one
       val partCol = commitField(spark, path, v0, "partition_column").getOrElse(
         throw new IllegalStateException(s"version $v0 of $path records no partition_column"))
       val id = s"dv-${java.util.UUID.randomUUID().toString.take(12)}"
@@ -601,14 +528,11 @@ object VersionedTable {
       }
     }
 
-  /** Anti-join `df` against every deletion vector pending at `version`
-    * (null-safe on the recorded key columns — a doomed NULL key must
-    * still match NULL-keyed rows). No pending vectors: returns `df`
-    * unchanged, zero plan overhead.
+  /** Anti-join `df` against the given deletion-vector specs (null-safe on
+    * the recorded key columns — a doomed NULL key must still match
+    * NULL-keyed rows). No specs: returns `df` unchanged, zero plan
+    * overhead.
     */
-  private def applyDvPending(spark: SparkSession, path: String, version: Long, df: DataFrame): DataFrame =
-    applyDvSpecs(spark, path, dvMarkers(spark, path, version).values.toSeq.sorted, df)
-
   private def applyDvSpecs(spark: SparkSession, path: String, specs: Seq[String], df: DataFrame): DataFrame =
     specs.foldLeft(df) { (d, spec) =>
       val fields = spec.split("\\|", 3)
@@ -620,13 +544,10 @@ object VersionedTable {
 
   /** Does a dv spec apply to a partition last rewritten at `pv`? A spec
     * `<file>|<cols>|<boundary>` scopes the vector to partitions committed
-    * at or before the delete's base version; a legacy two-field spec
-    * applies table-wide.
+    * at or before the delete's base version.
     */
-  private def dvApplies(spec: String, pv: Long): Boolean = {
-    val fields = spec.split("\\|", 3)
-    fields.length < 3 || pv <= fields(2).toLong
-  }
+  private def dvApplies(spec: String, pv: Long): Boolean =
+    pv <= spec.split("\\|", 3)(2).toLong
 
   /** Assemble a multi-partition read with BOUNDARY-SCOPED deletion
     * vectors: partitions are grouped by which pending vectors apply to
@@ -691,29 +612,24 @@ object VersionedTable {
   def readWidened(spark: SparkSession, path: String, version: Option[Long] = None): DataFrame = {
     val v = version.orElse(latestVersion(spark, path)).getOrElse(
       throw new IllegalArgumentException(s"no committed versions at $path"))
-    partitionMap(spark, path, v) match {
-      case None => read(spark, path, Some(v))
-      case Some(parts) =>
-        val dfs = parts.toSeq.sortBy(_._1).map { case (p, pv) =>
-          spark.read.parquet(s"$path/v=$pv/p=$p")
-        }
-        val target: Seq[(String, org.apache.spark.sql.types.DataType)] = dfs
-          .flatMap(_.schema.fields.map(f => f.name -> f.dataType))
-          .groupBy(_._1)
-          .map { case (n, ts) => n -> ts.map(_._2).reduce(widenType) }
-          .toSeq
-          .sortBy(_._1)
-        def conform(d: DataFrame): DataFrame =
-          d.select(target.map { case (n, t) =>
-            (if (d.columns.contains(n)) col(n) else lit(null)).cast(t).as(n)
-          }: _*)
-        // boundary-scoped DV application per partition (pre-union, so each
-        // partition anti-joins only the vectors that apply to its pv)
-        val dvSpecs = dvMarkers(spark, path, v).values.toSeq.sorted
-        parts.toSeq.sortBy(_._1).zip(dfs).map { case ((_, pv), d) =>
-          conform(applyDvSpecs(spark, path, dvSpecs.filter(s => dvApplies(s, pv)), d))
-        }.reduce(_.unionByName(_))
-    }
+    val parts = manifest(spark, path, v).toSeq.sortBy(_._1)
+    val dfs = parts.map { case (p, pv) => spark.read.parquet(s"$path/v=$pv/p=$p") }
+    val target: Seq[(String, org.apache.spark.sql.types.DataType)] = dfs
+      .flatMap(_.schema.fields.map(f => f.name -> f.dataType))
+      .groupBy(_._1)
+      .map { case (n, ts) => n -> ts.map(_._2).reduce(widenType) }
+      .toSeq
+      .sortBy(_._1)
+    def conform(d: DataFrame): DataFrame =
+      d.select(target.map { case (n, t) =>
+        (if (d.columns.contains(n)) col(n) else lit(null)).cast(t).as(n)
+      }: _*)
+    // boundary-scoped DV application per partition (pre-union, so each
+    // partition anti-joins only the vectors that apply to its pv)
+    val dvSpecs = dvMarkers(spark, path, v).values.toSeq.sorted
+    parts.zip(dfs).map { case ((_, pv), d) =>
+      conform(applyDvSpecs(spark, path, dvSpecs.filter(s => dvApplies(s, pv)), d))
+    }.reduce(_.unionByName(_))
   }
 
   /** REPLICA DIVERGENCE AUDIT (the anti-entropy check behind q148's CDC
@@ -785,8 +701,7 @@ object VersionedTable {
   ): (Seq[String], Seq[String]) = {
     val v = version.orElse(latestVersion(spark, path)).getOrElse(
       throw new IllegalArgumentException(s"no committed versions at $path"))
-    val parts = partitionMap(spark, path, v).getOrElse(
-      throw new IllegalStateException(s"table at $path is not delta-committed; zone maps need a manifest"))
+    val parts = manifest(spark, path, v)
     val zones = zoneMarkers(spark, path, v)
     val (scan, skip) = parts.keys.toSeq.sorted.partition { p =>
       zones.get(s"zone:$statsCol:$p") match {
@@ -820,19 +735,16 @@ object VersionedTable {
     val v = version.orElse(latestVersion(spark, path)).getOrElse(
       throw new IllegalArgumentException(s"no committed versions at $path"))
     val residual = col(statsCol).cast("long").between(lo, hi)
-    partitionMap(spark, path, v) match {
-      case None => read(spark, path, Some(v)).filter(residual) // full snapshot: no manifest to prune by
-      case Some(parts) =>
-        val (scan, _) = zonePrunePlan(spark, path, statsCol, lo, hi, Some(v))
-        if (scan.isEmpty) read(spark, path, Some(v)).limit(0).filter(residual)
-        else
-          readWithDv(spark, path, dvMarkers(spark, path, v).values.toSeq.sorted,
-            scan.map(p => p -> parts(p))).filter(residual)
-    }
+    val parts = manifest(spark, path, v)
+    val (scan, _) = zonePrunePlan(spark, path, statsCol, lo, hi, Some(v))
+    if (scan.isEmpty) read(spark, path, Some(v)).limit(0).filter(residual)
+    else
+      readWithDv(spark, path, dvMarkers(spark, path, v).values.toSeq.sorted,
+        scan.map(p => p -> parts(p))).filter(residual)
   }
 
-  /** The partition->version manifest of a delta commit; None for full
-    * snapshots.
+  /** The partition->version manifest of a commit; None when the commit
+    * json carries no `partitions` object.
     */
   def partitionMap(spark: SparkSession, path: String, version: Long): Option[Map[String, Long]] = {
     val parts = readCommitJson(spark, path, version).path("partitions")
@@ -843,10 +755,18 @@ object VersionedTable {
     )
   }
 
+  /** The manifest every reader and writer resolves a version through. A
+    * commit json without a `partitions` object is not a table this layout
+    * can read — refused, naming the path and version.
+    */
+  private[graft] def manifest(spark: SparkSession, path: String, version: Long): Map[String, Long] =
+    partitionMap(spark, path, version).getOrElse(
+      throw new IllegalStateException(s"version $version of $path has no partitions manifest"))
+
   private def jsonStr(s: String): String = graft.core.Json.str(s)
 
-  /** Read a specific version, or the latest committed one. Delta-committed
-    * tables resolve each partition to the version dir that last rewrote it.
+  /** Read a specific version, or the latest committed one. Each partition
+    * resolves to the version dir that last rewrote it.
     */
   def read(spark: SparkSession, path: String, version: Option[Long] = None): DataFrame = {
     val v = version.orElse(latestVersion(spark, path)).getOrElse(
@@ -855,55 +775,28 @@ object VersionedTable {
     // merge-on-read: deletion vectors pending at v filter EVERY read path
     // (deferred deletes are visible from their commit version onward),
     // boundary-scoped so partitions written AFTER a delete are exempt
-    partitionMap(spark, path, v) match {
-      case None => applyDvPending(spark, path, v, spark.read.parquet(s"$path/v=$v"))
-      case Some(parts) =>
-        readWithDv(spark, path, dvMarkers(spark, path, v).values.toSeq.sorted, parts.toSeq)
-    }
+    readWithDv(spark, path, dvMarkers(spark, path, v).values.toSeq.sorted, manifest(spark, path, v).toSeq)
   }
 
-  /** Pruned read of ONE partition of a delta-committed table — the scan a
-    * point query / per-bucket job does instead of touching the whole table.
-    * Partitions the table has never written return None.
+  /** Pruned read of ONE partition — the scan a point query / per-bucket job
+    * does instead of touching the whole table. Partitions the table has
+    * never written return None.
     */
   def readPartition(spark: SparkSession, path: String, part: String, version: Option[Long] = None): Option[DataFrame] =
-    readPartitions(spark, path, Seq(part), version).headOption.flatten
+    readPartitionsUnioned(spark, path, Seq(part), version)
 
-  /** Pruned read of several partitions with ONE manifest read (a per-
-    * partition readPartition loop would re-open and re-parse the commit
-    * json per call — O(n) driver metadata round-trips on an object store).
-    * Result aligns with `parts`; never-written partitions are None.
-    */
-  def readPartitions(spark: SparkSession, path: String, parts: Seq[String], version: Option[Long] = None): Seq[Option[DataFrame]] = {
-    val v = version.orElse(latestVersion(spark, path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path")
-    )
-    val m = partitionMap(spark, path, v).getOrElse(
-      throw new IllegalStateException(s"table at $path is not delta-committed; read the snapshot instead"))
-    // merge-on-read here too: the SCD-2 touched-bucket rebuild reads
-    // through this path — without the DV filter an upsert would copy
-    // doomed rows back into the buckets it rewrites. DV specs resolved
-    // once, honoring this method's one-manifest-read contract.
-    val dvSpecs = dvMarkers(spark, path, v).values.toSeq.sorted
-    parts.map(p => m.get(p).map { pv =>
-      applyDvSpecs(spark, path, dvSpecs.filter(s => dvApplies(s, pv)), spark.read.parquet(s"$path/v=$pv/p=$p"))
-    })
-  }
-
-  /** Pruned read of several partitions as ONE relation (round-18, guide
-    * §2.4/§6): [[readPartitions]] builds a separate parquet relation per
-    * bucket and every caller unions them — a 16-bucket upsert planned 16
-    * leaf scans, 16 file listings and a 16-way union per touched-bucket
-    * read. This variant hands all requested dirs of each DV-group to a
-    * single mergeSchema read (exactly [[read]]'s own assembly, via
+  /** Pruned read of several partitions as ONE relation with ONE manifest
+    * read (round-18, guide §2.4/§6): all requested dirs of each DV-group go
+    * to a single mergeSchema read (exactly [[read]]'s own assembly, via
     * [[readWithDv]]), so the read plans and lists once and downstream
-    * joins see one relation. Returns None when none of the requested
-    * partitions exist. Row set identical to unioning [[readPartitions]]
-    * for COLUMN-ADD drift (same dirs, same DV filters; mergeSchema
-    * null-pads missing columns exactly as
-    * `unionByName(allowMissingColumns)` did). Cross-commit numeric TYPE
-    * drift (e.g. int -> long widening across versions) is REFUSED by the
-    * mergeSchema read, where the old per-dir read + union coerced — the
+    * joins see one relation — a per-bucket relation + union planned 16
+    * leaf scans, 16 file listings and a 16-way union per touched-bucket
+    * read of a 16-bucket upsert. Returns None when none of the requested
+    * partitions exist. Merge-on-read applies here too: the SCD-2
+    * touched-bucket rebuild reads through this path, and without the DV
+    * filter an upsert would copy doomed rows back into the buckets it
+    * rewrites. Cross-commit numeric TYPE drift (e.g. int -> long widening
+    * across versions) is REFUSED by the mergeSchema read — the
     * delta-commit write path never produces such tables (the schema is
     * recorded per commit and upserts write the merged batch), and tables
     * that need widening semantics read via [[readWidened]].
@@ -917,8 +810,7 @@ object VersionedTable {
     val v = version.orElse(latestVersion(spark, path)).getOrElse(
       throw new IllegalArgumentException(s"no committed versions at $path")
     )
-    val m = partitionMap(spark, path, v).getOrElse(
-      throw new IllegalStateException(s"table at $path is not delta-committed; read the snapshot instead"))
+    val m = manifest(spark, path, v)
     val present = parts.distinct.flatMap(p => m.get(p).map(pv => p -> pv))
     if (present.isEmpty) None
     else Some(readWithDv(spark, path, dvMarkers(spark, path, v).values.toSeq.sorted, present))
@@ -1091,8 +983,7 @@ object VersionedTable {
     // clearing every prior partition drops any partition whose rows were
     // ALL deleted (it writes no data and must not carry stale bytes
     // forward).
-    val prevParts = latestVersion(spark, path)
-      .flatMap(partitionMap(spark, path, _)).map(_.keys.toSeq).getOrElse(Nil)
+    val prevParts = latestVersion(spark, path).map(manifest(spark, path, _).keys.toSeq).getOrElse(Nil)
     val current = read(spark, path).repartition(col(partCol))
     commitDelta(spark, path, current, partCol, clearedParts = prevParts, clearDv = true)
   }
@@ -1114,9 +1005,7 @@ object VersionedTable {
     val retained = committed.takeRight(retainVersions)
     // every v-dir any retained manifest references stays (delta commits
     // reference OLDER version dirs for carried-forward partitions)
-    val referenced: Set[Long] = retained.toSet ++ retained.flatMap { v =>
-      partitionMap(spark, path, v).map(_.values.toSeq).getOrElse(Nil)
-    }
+    val referenced: Set[Long] = retained.toSet ++ retained.flatMap(manifest(spark, path, _).values)
     // a version with a live reservation marker may belong to an IN-FLIGHT
     // writer (reserved, data staged, publish not yet run) — deleting it
     // would corrupt the commit that then publishes. Only reclaim reserved
@@ -1188,11 +1077,8 @@ object VersionedTable {
     import org.apache.spark.sql.functions._
     require(fromVersion < toVersion, s"changeFeed: fromVersion $fromVersion must precede toVersion $toVersion")
     require(keyCols.nonEmpty, "changeFeed: keyCols must be non-empty")
-    def manifest(v: Long): Map[String, Long] = partitionMap(spark, path, v).getOrElse(
-      throw new IllegalArgumentException(
-        s"changeFeed: version $v at $path is a full snapshot — the feed needs delta-style (partitioned) commits"))
-    val mOld = manifest(fromVersion)
-    val mNew = manifest(toVersion)
+    val mOld = manifest(spark, path, fromVersion)
+    val mNew = manifest(spark, path, toVersion)
     val changed = (mOld.keySet ++ mNew.keySet).filter(p => mOld.get(p) != mNew.get(p)).toSeq.sorted
 
     // one multi-dir relation per side (round-18, guide §2.4): the previous

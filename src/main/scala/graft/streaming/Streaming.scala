@@ -110,24 +110,18 @@ object Streaming {
       checkpointLocation: String,
       streamId: String = "default"
   ): StreamingQuery = {
-    import graft.sources.VersionedTable
     source.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (df: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        VersionedTable.withCommitRetry() {
-          val alreadyApplied = lastStreamBatch(spark, warehousePath, streamId).exists(_ >= batchId)
-          if (!alreadyApplied) {
-            // maxRetries=0: a commit conflict must bubble to THIS loop so the
-            // marker is re-checked before any re-attempt
-            graft.operators.Scd2.upsertPartitioned(
-              spark, warehousePath, df.toDF(), keyCols, nBuckets, now(batchId),
-              maxRetries = 0,
-              commitMeta = Map(s"stream_batch:$streamId" -> batchId.toString)
-            )
-          }
+        exactlyOnce(spark, warehousePath, streamId, batchId) { marker =>
+          // maxRetries=0: a commit conflict must bubble to the marker's
+          // retry loop so the marker is re-checked before any re-attempt
+          graft.operators.Scd2.upsertPartitioned(
+            spark, warehousePath, df.toDF(), keyCols, nBuckets, now(batchId),
+            maxRetries = 0, commitMeta = marker)
+          ()
         }
-        ()
       }
       .trigger(Trigger.AvailableNow())
       .start()
@@ -171,48 +165,43 @@ object Streaming {
   ): Long = {
     import graft.sources.VersionedTable
     graft.sources.DeltaImport.tail(spark, deltaRoot, checkpointLocation, (df, v) =>
-      VersionedTable.withCommitRetry() {
-        val alreadyApplied = lastStreamBatch(spark, warehousePath, streamId).exists(_ >= v)
-        if (!alreadyApplied) {
-          // change detection: drop rows whose current active warehouse row
-          // is identical — the idempotent-content half of exactly-once.
-          // Scoped to the key-buckets this batch touches (the same pruning
-          // upsertPartitioned does): a steady tail of small commits must
-          // cost O(batch), not a full-warehouse exceptAll per version
-          val changed = VersionedTable.latestVersion(spark, warehousePath) match {
-            case None => df
-            case Some(ver) =>
-              import org.apache.spark.sql.functions.col
-              val b = df.withColumn("__kb", graft.operators.Scd2.keyBucket(keyCols, nBuckets))
-              // bounded driver-side list: at most nBuckets values
-              val touched = b.select("__kb").distinct().collect().map(_.getLong(0)).sorted
-              // single-relation touched read (round-18: one scan, not one
-              // per bucket + a union)
-              VersionedTable
-                .readPartitionsUnioned(spark, warehousePath, touched.map(_.toString).toSeq, Some(ver)) match {
-                case None => df // none of the touched buckets exist yet
-                // a batch carrying columns the warehouse lacks is schema
-                // drift: nothing can be content-identical, apply it whole
-                case Some(wh) if !df.columns.forall(wh.columns.contains) => df
-                case Some(wh) =>
-                  val active = wh
-                    .filter(col("actv_flg") === "Y")
-                    .select(df.columns.map(col).toIndexedSeq: _*)
-                  df.exceptAll(active)
-              }
-          }
-          // the diff feeds isEmpty AND the upsert's plan: cache it so the
-          // bucket-scoped exceptAll runs once, and release on every exit
-          graft.core.Caching.scoped {
-            val changedC = graft.core.Caching.cached(changed)
-            if (!changedC.isEmpty) {
-              graft.operators.Scd2.upsertPartitioned(
-                spark, warehousePath, changedC, keyCols, nBuckets, now(v),
-                maxRetries = 0,
-                commitMeta = Map(s"stream_batch:$streamId" -> v.toString)
-              )
-              ()
+      exactlyOnce(spark, warehousePath, streamId, v) { marker =>
+        // change detection: drop rows whose current active warehouse row
+        // is identical — the idempotent-content half of exactly-once.
+        // Scoped to the key-buckets this batch touches (the same pruning
+        // upsertPartitioned does): a steady tail of small commits must
+        // cost O(batch), not a full-warehouse exceptAll per version
+        val changed = VersionedTable.latestVersion(spark, warehousePath) match {
+          case None => df
+          case Some(ver) =>
+            import org.apache.spark.sql.functions.col
+            val b = df.withColumn("__kb", graft.operators.Scd2.keyBucket(keyCols, nBuckets))
+            // bounded driver-side list: at most nBuckets values
+            val touched = b.select("__kb").distinct().collect().map(_.getLong(0)).sorted
+            // single-relation touched read (round-18: one scan, not one
+            // per bucket + a union)
+            VersionedTable
+              .readPartitionsUnioned(spark, warehousePath, touched.map(_.toString).toSeq, Some(ver)) match {
+              case None => df // none of the touched buckets exist yet
+              // a batch carrying columns the warehouse lacks is schema
+              // drift: nothing can be content-identical, apply it whole
+              case Some(wh) if !df.columns.forall(wh.columns.contains) => df
+              case Some(wh) =>
+                val active = wh
+                  .filter(col("actv_flg") === "Y")
+                  .select(df.columns.map(col).toIndexedSeq: _*)
+                df.exceptAll(active)
             }
+        }
+        // the diff feeds isEmpty AND the upsert's plan: cache it so the
+        // bucket-scoped exceptAll runs once, and release on every exit
+        graft.core.Caching.scoped {
+          val changedC = graft.core.Caching.cached(changed)
+          if (!changedC.isEmpty) {
+            graft.operators.Scd2.upsertPartitioned(
+              spark, warehousePath, changedC, keyCols, nBuckets, now(v),
+              maxRetries = 0, commitMeta = marker)
+            ()
           }
         }
       }
@@ -230,6 +219,21 @@ object Streaming {
       .map(_.toLong)
       .nextOption()
   }
+
+  /** The exactly-once marker protocol every stream sink shares: inside a
+    * commit-retry loop, skip `batchId` if this stream's newest marker at
+    * `path` already covers it, else run `apply` with the marker field
+    * (`stream_batch:<streamId>` -> batch id) that its ONE commit must
+    * carry. The check sits inside the loop, so a writer that loses a
+    * commit race re-checks and sees a winner's marker instead of
+    * re-applying the batch; `apply` must not retry on its own.
+    */
+  private def exactlyOnce(spark: SparkSession, path: String, streamId: String, batchId: Long)(
+      apply: Map[String, String] => Unit): Unit =
+    graft.sources.VersionedTable.withCommitRetry() {
+      if (!lastStreamBatch(spark, path, streamId).exists(_ >= batchId))
+        apply(Map(s"stream_batch:$streamId" -> batchId.toString))
+    }
 
   final case class CounterEvent(key: String, counters: Map[String, Long], ts: java.sql.Timestamp)
   final case class CounterDelta(key: String, deltas: Map[String, Long], ts: java.sql.Timestamp)
@@ -477,21 +481,15 @@ object Streaming {
       checkpointLocation: String,
       streamId: String = "vec"
   ): StreamingQuery = {
-    import graft.sources.VersionedTable
     source.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (df: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        VersionedTable.withCommitRetry() {
-          val alreadyApplied = lastStreamBatch(spark, indexPath, streamId).exists(_ >= batchId)
-          if (!alreadyApplied) {
-            graft.operators.Similarity.appendResidualPqBatch(
-              spark, indexPath, df.toDF(), idCol, vecCol, dim, coarse, codebooks,
-              extraMeta = Map(s"stream_batch:$streamId" -> batchId.toString))
-            ()
-          }
+        exactlyOnce(spark, indexPath, streamId, batchId) { marker =>
+          graft.operators.Similarity.appendResidualPqBatch(
+            spark, indexPath, df.toDF(), idCol, vecCol, dim, coarse, codebooks, extraMeta = marker)
+          ()
         }
-        ()
       }
       .trigger(Trigger.AvailableNow())
       .start()
@@ -526,16 +524,10 @@ object Streaming {
       .outputMode("append")
       .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (df: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        VersionedTable.withCommitRetry() {
-          val alreadyApplied = lastStreamBatch(spark, replicaPath, streamId).exists(_ >= batchId)
-          if (!alreadyApplied) {
-            VersionedTable.applyChangeFeedOnce(
-              spark, replicaPath, df.toDF(), keyCols, partCol,
-              extraMeta = Map(s"stream_batch:$streamId" -> batchId.toString))
-            ()
-          }
+        exactlyOnce(spark, replicaPath, streamId, batchId) { marker =>
+          VersionedTable.applyChangeFeedOnce(spark, replicaPath, df.toDF(), keyCols, partCol, extraMeta = marker)
+          ()
         }
-        ()
       }
       .trigger(Trigger.AvailableNow())
       .start()
@@ -568,9 +560,8 @@ object Streaming {
       .outputMode("append")
       .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (df: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        VersionedTable.withCommitRetry() {
-          val alreadyApplied = lastStreamBatch(spark, rollupPath, streamId).exists(_ >= batchId)
-          if (!alreadyApplied) graft.core.Caching.scoped {
+        exactlyOnce(spark, rollupPath, streamId, batchId) { marker =>
+          graft.core.Caching.scoped {
             // batch-scoped cache (round-18): the batch aggregation feeds
             // both the touched-day collect and the merge union — uncached
             // it re-aggregated the whole micro-batch twice
@@ -589,13 +580,10 @@ object Streaming {
                 .agg(hll_union_agg(col("sk")).as("sk"))
               case None => batchSk
             }
-            VersionedTable.commitDelta(
-              spark, rollupPath, merged, "day",
-              extraMeta = Map(s"stream_batch:$streamId" -> batchId.toString))
+            VersionedTable.commitDelta(spark, rollupPath, merged, "day", extraMeta = marker)
             ()
           }
         }
-        ()
       }
       .trigger(Trigger.AvailableNow())
       .start()

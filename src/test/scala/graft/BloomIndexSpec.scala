@@ -91,12 +91,4 @@ class BloomIndexSpec extends AnyFunSuite {
     assert(BloomIndex.NullPart.charAt(0) === 0.toChar)
     assert(BloomIndex.NullPart === 0.toChar + "__NULL_PARTITION__")
   }
-
-  test("refusal on a full-snapshot (non-delta) table") {
-    val base = Files.createTempDirectory("bloomidx").toString
-    VersionedTable.commit(Seq((1L, "x")).toDF("id", "name"), s"$base/t")
-    val e = intercept[IllegalStateException](
-      BloomIndex.build(spark, s"$base/t", s"$base/i", "name"))
-    assert(e.getMessage.contains("delta"))
-  }
 }

@@ -80,10 +80,12 @@ class DeltaExportSpec extends AnyFunSuite {
     live.foreach(p => assert(new java.io.File(s"$path/$p").isFile, s"live file missing: $p"))
   }
 
-  test("full-snapshot tables export as whole-set swaps with schema evolution") {
+  test("whole-table rewrites swap the whole file set; a schema change emits metaData") {
     val path = Files.createTempDirectory("graft-dexp2").toString + "/t"
-    VersionedTable.commit(Seq((1, "a")).toDF("id", "v"), path)
-    VersionedTable.commit(Seq((1, "a", true), (2, "b", false)).toDF("id", "v", "flag"), path)
+    // every row on one constant partition value: each commit rewrites it all
+    VersionedTable.commitDelta(spark, path, Seq((1, "a")).toDF("id", "v").withColumn("p", lit("0")), "p")
+    VersionedTable.commitDelta(spark, path,
+      Seq((1, "a", true), (2, "b", false)).toDF("id", "v", "flag").withColumn("p", lit("0")), "p")
 
     val entries = DeltaExport.export(spark, path)
     assert(entries.size == 2)
@@ -99,7 +101,7 @@ class DeltaExportSpec extends AnyFunSuite {
 
     val live = replayLiveFiles(entries)
     val viaDelta = spark.read.parquet(live.toSeq.sorted.map(p => s"$path/$p"): _*)
-    assert(viaDelta.columns.sorted.toSeq == Seq("flag", "id", "v"))
+    assert(viaDelta.columns.sorted.toSeq == Seq("flag", "id", "p", "v"))
     assert(viaDelta.count() == 2)
   }
 
@@ -286,13 +288,6 @@ class DeltaExportSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(prunedPlan.contains("p=a") && !prunedPlan.contains("p=b"),
       s"checkpoint-seeded read must still prune on partitionValues:\n$prunedPlan")
-
-    // a full-snapshot table has no partition layout to declare — refused
-    val snap = Files.createTempDirectory("graft-dexp-snap").toString + "/t"
-    VersionedTable.commit(Seq((1, "x")).toDF("a", "b"), snap)
-    val e = intercept[IllegalArgumentException](
-      DeltaExport.buildLog(spark, snap, partitioned = true))
-    assert(e.getMessage.contains("full snapshot"))
   }
 
   test("vacuumed history is skipped, never exported as a partial file set") {

@@ -19,14 +19,14 @@ class IcebergExportSpec extends AnyFunSuite {
   private def rows(df: org.apache.spark.sql.DataFrame): Set[(String, Int)] =
     df.select(col("bucket"), col("x")).collect().map(r => (r.getString(0), r.getInt(1))).toSet
 
-  test("round-trip: full-snapshot commits export as snapshots, import matches at every version") {
+  test("round-trip: whole-table rewrites export and import at every version") {
     val path = Files.createTempDirectory("graft-iexp").toString + "/t"
-    VersionedTable.commit(Seq(("a", 1), ("b", 2)).toDF("bucket", "x"), path)
-    VersionedTable.commit(Seq(("a", 1), ("b", 20), ("c", 3)).toDF("bucket", "x"), path)
+    VersionedTable.commitDelta(spark, path, Seq(("a", 1), ("b", 2)).toDF("bucket", "x"), "bucket")
+    VersionedTable.commitDelta(spark, path, Seq(("a", 1), ("b", 20), ("c", 3)).toDF("bucket", "x"), "bucket")
     val snaps = IcebergExport.export(spark, path)
     assert(snaps.map(_.snapshotId) == Seq(1L, 2L))
     assert(snaps.map(_.sequenceNumber) == Seq(1L, 2L))
-    // full snapshots swap the whole file set: everything ADDED each time
+    // each commit rewrites every partition: everything ADDED each time
     assert(snaps.forall(_.existingFiles.isEmpty))
 
     assert(rows(IcebergImport.read(spark, path)) == rows(VersionedTable.read(spark, path)))
@@ -141,9 +141,9 @@ class IcebergExportSpec extends AnyFunSuite {
       }
     }
     val path = Files.createTempDirectory("graft-iexp-rn").toString + "/t"
-    VersionedTable.commit(Seq(("a", 1)).toDF("bucket", "x"), path)
-    VersionedTable.commit(Seq(("a", 10)).toDF("bucket", "y"), path) // x renamed to y
-    VersionedTable.commit(Seq(("a", 10, "n")).toDF("bucket", "y", "z"), path) // then append
+    VersionedTable.commitDelta(spark, path, Seq(("a", 1)).toDF("bucket", "x"), "bucket")
+    VersionedTable.commitDelta(spark, path, Seq(("a", 10)).toDF("bucket", "y"), "bucket") // x renamed to y
+    VersionedTable.commitDelta(spark, path, Seq(("a", 10, "n")).toDF("bucket", "y", "z"), "bucket") // then append
     IcebergExport.export(spark, path)
     val ids1 = schemaIds(s"$path/metadata/v1.metadata.json")
     assert(ids1.size == 3)
@@ -154,23 +154,23 @@ class IcebergExportSpec extends AnyFunSuite {
 
     // re-export after one more commit: the carried-over schemas' ids (and
     // JSON) must not move
-    VersionedTable.commit(Seq(("b", 20, "m")).toDF("bucket", "y", "z"), path)
+    VersionedTable.commitDelta(spark, path, Seq(("b", 20, "m")).toDF("bucket", "y", "z"), "bucket")
     IcebergExport.export(spark, path)
     val ids2 = schemaIds(s"$path/metadata/v2.metadata.json")
     assert(ids2.take(3) == ids1, s"re-export drifted carried-over field ids:\nwas $ids1\nnow ${ids2.take(3)}")
-    assert(rows(IcebergImport.read(spark, path).withColumnRenamed("y", "x")) == Set(("b", 20)))
+    assert(rows(IcebergImport.read(spark, path).withColumnRenamed("y", "x")) == Set(("a", 10), ("b", 20)))
   }
 
   test("re-export after new commits bumps the metadata version; hint points at the newest") {
     val path = Files.createTempDirectory("graft-iexp-r").toString + "/t"
-    VersionedTable.commit(Seq(("a", 1)).toDF("bucket", "x"), path)
+    VersionedTable.commitDelta(spark, path, Seq(("a", 1)).toDF("bucket", "x"), "bucket")
     IcebergExport.export(spark, path)
     // published snapshots' manifest files are immutable: a concurrent
     // reader following v1.metadata.json must never see a torn rewrite
     val m1 = java.nio.file.Paths.get(s"$path/metadata/manifest-1.avro")
     val ml1 = java.nio.file.Paths.get(s"$path/metadata/snap-1-manifest-list.avro")
     val before = (Files.getLastModifiedTime(m1), Files.getLastModifiedTime(ml1))
-    VersionedTable.commit(Seq(("a", 1), ("z", 9)).toDF("bucket", "x"), path)
+    VersionedTable.commitDelta(spark, path, Seq(("a", 1), ("z", 9)).toDF("bucket", "x"), "bucket")
     IcebergExport.export(spark, path)
     assert(
       (Files.getLastModifiedTime(m1), Files.getLastModifiedTime(ml1)) == before,
@@ -194,7 +194,7 @@ class IcebergExportSpec extends AnyFunSuite {
       finally r.close()
     }
     val path = Files.createTempDirectory("graft-iexp-uri").toString + "/t"
-    VersionedTable.commit(Seq(("a", 1)).toDF("bucket", "x"), path)
+    VersionedTable.commitDelta(spark, path, Seq(("a", 1)).toDF("bucket", "x"), "bucket")
     IcebergExport.export(spark, path)
     val meta = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$path/metadata/v1.metadata.json")), "UTF-8")
@@ -213,9 +213,9 @@ class IcebergExportSpec extends AnyFunSuite {
 
   test("time travel by timestamp resolves the newest snapshot at-or-before") {
     val path = Files.createTempDirectory("graft-iexp-ts").toString + "/t"
-    VersionedTable.commit(Seq(("a", 1)).toDF("bucket", "x"), path)
+    VersionedTable.commitDelta(spark, path, Seq(("a", 1)).toDF("bucket", "x"), "bucket")
     Thread.sleep(10) // distinct committed_at millis for the two snapshots
-    VersionedTable.commit(Seq(("b", 2)).toDF("bucket", "x"), path)
+    VersionedTable.commitDelta(spark, path, Seq(("b", 2)).toDF("bucket", "x"), "bucket", clearedParts = Seq("a"))
     IcebergExport.export(spark, path)
     val meta = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$path/metadata/v1.metadata.json")))
@@ -275,7 +275,7 @@ class IcebergExportSpec extends AnyFunSuite {
 
   test("manifests carry real record counts and spec-shaped lineage fields") {
     val path = Files.createTempDirectory("graft-iexp-m").toString + "/t"
-    VersionedTable.commit((1 to 57).map(i => (s"k$i", i)).toDF("bucket", "x"), path)
+    VersionedTable.commitDelta(spark, path, (1 to 57).map(i => (s"k$i", i)).toDF("bucket", "x"), "bucket")
     IcebergExport.export(spark, path)
     // read the manifest back through the import side's own avro walk: the
     // one manifest-list row must account for all 57 rows as ADDED

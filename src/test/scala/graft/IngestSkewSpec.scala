@@ -84,13 +84,13 @@ class IngestSkewSpec extends AnyFunSuite {
     // first load: no existing warehouse, no drift possible, no event
     graft.sources.IO.writePipeCsv(Seq((1L, "a")).toDF("id", "v"), stagedPath)
     val c0 = new graft.core.Drift.Collecting
-    graft.pipeline.Pipeline.load(spark, run, "t", s"$tmp/wh", Seq("id"), notifier = c0)
+    graft.pipeline.Pipeline.loadPartitioned(spark, run, "t", s"$tmp/wh", Seq("id"), nBuckets = 4, notifier = c0)
     assert(c0.events.isEmpty)
 
     // second load widens the batch by one column: event carries the diff
     graft.sources.IO.writePipeCsv(Seq((1L, "a", true)).toDF("id", "v", "flag"), stagedPath)
     val c1 = new graft.core.Drift.Collecting
-    graft.pipeline.Pipeline.load(spark, run, "t", s"$tmp/wh", Seq("id"), notifier = c1)
+    graft.pipeline.Pipeline.loadPartitioned(spark, run, "t", s"$tmp/wh", Seq("id"), nBuckets = 4, notifier = c1)
     assert(c1.events.size == 1)
     assert(c1.events.head.newColumns == Seq("flag"))
     assert(c1.events.head.missingColumns.isEmpty)

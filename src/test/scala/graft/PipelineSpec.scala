@@ -94,11 +94,11 @@ class PipelineSpec extends AnyFunSuite {
 
     // loading: SCD-2 into warehouse, then a second run closes the old version
     val wh = s"$root/warehouse/tbl_line_item"
-    val v1 = Pipeline.load(spark, run, "line_item", wh, Seq("line_item_id"))
+    val v1 = Pipeline.loadPartitioned(spark, run, "line_item", wh, Seq("line_item_id"), nBuckets = 4)
     assert(v1.filter($"actv_flg" === "Y").count() == 2)
 
     val run2 = run.copy(now = lit("2024-06-02 00:00:01").cast("timestamp"))
-    val v2 = Pipeline.load(spark, run2, "line_item", wh, Seq("line_item_id"))
+    val v2 = Pipeline.loadPartitioned(spark, run2, "line_item", wh, Seq("line_item_id"), nBuckets = 4)
     assert(v2.count() == 4) // 2 closed + 2 new active
     assert(v2.filter($"actv_flg" === "Y").count() == 2)
     assert(v2.filter($"actv_flg" === "N" && $"record_to".isNotNull).count() == 2)

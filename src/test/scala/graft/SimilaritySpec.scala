@@ -127,7 +127,7 @@ class SimilaritySpec extends AnyFunSuite {
   test("IVF cell-partitioned storage: a probe reads only its nprobe partitions") {
     // the at-rest layout SCALE.md claims for IVF: store the table
     // delta-committed partitioned by cell id, so a probe is a pruned
-    // readPartitions of nprobe dirs — never a full scan
+    // readPartitionsUnioned of nprobe dirs — never a full scan
     import graft.sources.VersionedTable
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val init = emb.filter($"vec_id" < 8).select($"vec_id", $"embedding")
@@ -140,16 +140,16 @@ class SimilaritySpec extends AnyFunSuite {
 
     val q = emb.filter($"vec_id" === 0).select($"embedding").head().getSeq[Float](0)
     val probe = Similarity.ivfProbeCells(q, centroids, nprobe = 3)
-    val pruned = VersionedTable.readPartitions(spark, path, probe.map(_.toString)).flatten
+    val pruned = VersionedTable.readPartitionsUnioned(spark, path, probe.map(_.toString))
     assert(pruned.nonEmpty)
-    val prunedRows = pruned.map(_.count()).sum
+    val prunedRows = pruned.get.count()
     val cellSizes = celled.groupBy($"cell").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     // the pruned read returns exactly the probed cells' rows — nothing else
     assert(prunedRows == probe.map(c => cellSizes.getOrElse(c.toString, 0L)).sum)
     assert(prunedRows < emb.count(), "probe read the whole table — pruning is not happening")
 
     // and ranking over the pruned read == ivfTopK over the full table
-    val fromStore = pruned.reduce(_.unionByName(_))
+    val fromStore = pruned.get
     val qArr = array(q.map(v => lit(v.toDouble)): _*)
     val viaStore = fromStore.filter($"vec_id" =!= 0)
       .select($"vec_id", Similarity.cosine(transform($"embedding", _.cast("double")), qArr).as("cosine"))

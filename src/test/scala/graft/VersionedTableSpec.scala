@@ -2,61 +2,94 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit, udf}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.VersionedTable
+
+/** A competing writer for the stale-base abort test: copies a commit
+  * prepared in another copy of the table into place, data dir first and
+  * commit json last (the publish order), once.
+  */
+object StaleBase {
+  def copyTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
+    val walk = java.nio.file.Files.walk(src)
+    try walk.forEach { p =>
+      val to = dst.resolve(src.relativize(p).toString)
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(to)
+      else java.nio.file.Files.copy(p, to)
+    } finally walk.close()
+  }
+
+  def publishOnce(prep: String, path: String, v: Long): Unit = synchronized {
+    val json = java.nio.file.Paths.get(s"$path/_commits/$v.json")
+    if (!java.nio.file.Files.exists(json)) {
+      copyTree(java.nio.file.Paths.get(s"$prep/v=$v"), java.nio.file.Paths.get(s"$path/v=$v"))
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$prep/_commits/$v.json"), json)
+    }
+  }
+}
 
 class VersionedTableSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  // a whole-table rewrite: every row on one constant partition value
+  private def commitWhole(df: DataFrame, path: String): Long =
+    VersionedTable.commitDelta(spark, path, df.withColumn("p", lit("0")), "p")
+
   test("commit/read/time-travel/rollback semantics") {
     val path = Files.createTempDirectory("graft-vt").toString + "/t"
     assert(VersionedTable.latestVersion(spark, path).isEmpty)
 
-    val v1 = VersionedTable.commit(Seq((1, "a")).toDF("id", "v"), path)
-    val v2 = VersionedTable.commit(Seq((1, "a"), (2, "b")).toDF("id", "v"), path)
+    val v1 = commitWhole(Seq((1, "a")).toDF("id", "v"), path)
+    val v2 = commitWhole(Seq((1, "a"), (2, "b")).toDF("id", "v"), path)
     assert((v1, v2) == (1L, 2L))
 
     assert(VersionedTable.read(spark, path).count() == 2) // latest
     assert(VersionedTable.read(spark, path, Some(1)).count() == 1) // time travel
     // published snapshots are immutable: a new commit doesn't change v1
-    VersionedTable.commit(Seq((9, "z")).toDF("id", "v"), path)
+    commitWhole(Seq((9, "z")).toDF("id", "v"), path)
     assert(VersionedTable.read(spark, path, Some(1)).head().getInt(0) == 1)
     assert(VersionedTable.read(spark, path).count() == 1) // v3 content
   }
 
-  test("commitChecked aborts a stale full-snapshot commit instead of reverting the winner") {
+  test("commitDelta aborts a stale-base commit instead of reverting the winner") {
     val path = Files.createTempDirectory("graft-vt-cc").toString + "/t"
     def state: Set[(Int, String)] =
       VersionedTable.read(spark, path).collect().map(r => (r.getInt(0), r.getString(1))).toSet
+    commitWhole(Seq((1, "a")).toDF("id", "v"), path)
 
-    VersionedTable.commit(Seq((1, "a")).toDF("id", "v"), path)
-    val base = VersionedTable.latestVersion(spark, path) // our read-modify-write base
-    // a concurrent writer publishes before we do
-    VersionedTable.commit(Seq((2, "b")).toDF("id", "v"), path)
+    // the competitor: a v3 built on base 1 (version 2 is reserved, so the
+    // writer under test takes it), prepared in a copy of the table
+    val prep = Files.createTempDirectory("graft-vt-cc-prep").toString + "/t"
+    StaleBase.copyTree(java.nio.file.Paths.get(path), java.nio.file.Paths.get(prep))
+    Files.writeString(java.nio.file.Paths.get(s"$prep/_commits/2.reserved"), "")
+    assert(commitWhole(Seq((2, "b")).toDF("id", "v"), prep) == 3L)
+
+    // the competitor publishes WHILE our write job runs: the UDF copies its
+    // data dir, then its commit json, into the table (local mode: the task
+    // runs in this JVM)
+    val publishWinner = udf { (id: Int) => StaleBase.publishOnce(prep, path, 3L); id }
+    val ours = Seq((3, "c")).toDF("id", "v").withColumn("id", publishWinner(col("id")))
     intercept[java.util.ConcurrentModificationException] {
-      VersionedTable.commitChecked(Seq((3, "c")).toDF("id", "v"), path, base)
+      commitWhole(ours, path)
     }
+    assert(VersionedTable.latestVersion(spark, path).contains(3L))
     assert(state == Set((2, "b")), "the concurrent winner must not be reverted")
+    assert(!new java.io.File(s"$path/v=2").exists(), "the aborted commit's data must be removed")
     // the retry (fresh base) wins cleanly — the withCommitRetry loop shape
-    VersionedTable.commitChecked(
-      Seq((3, "c")).toDF("id", "v"), path, VersionedTable.latestVersion(spark, path))
+    assert(commitWhole(Seq((3, "c")).toDF("id", "v"), path) == 4L)
     assert(state == Set((3, "c")))
-    // fresh-table case: base = None means "expected empty"
-    val p2 = Files.createTempDirectory("graft-vt-cc2").toString + "/t"
-    VersionedTable.commit(Seq((9, "z")).toDF("id", "v"), p2)
-    intercept[java.util.ConcurrentModificationException] {
-      VersionedTable.commitChecked(Seq((8, "y")).toDF("id", "v"), p2, None)
-    }
   }
 
   test("commit recovers from a crash-orphaned version directory") {
     val path = Files.createTempDirectory("graft-vt3").toString + "/t"
-    VersionedTable.commit(Seq((1, "a")).toDF("id", "v"), path)
+    commitWhole(Seq((1, "a")).toDF("id", "v"), path)
     // crash orphan: v=2 data exists, no commit file
-    Seq((99, "dead")).toDF("id", "v").write.parquet(s"$path/v=2")
-    val v = VersionedTable.commit(Seq((2, "b"), (3, "c")).toDF("id", "v"), path)
+    Seq((99, "dead")).toDF("id", "v").write.parquet(s"$path/v=2/p=0")
+    val v = commitWhole(Seq((2, "b"), (3, "c")).toDF("id", "v"), path)
     assert(v == 2L)
     // the dead run's data must NOT survive inside the published v=2
     val got = VersionedTable.read(spark, path, Some(2)).collect().map(_.getInt(0)).sorted
@@ -65,9 +98,9 @@ class VersionedTableSpec extends AnyFunSuite {
 
   test("uncommitted versions are invisible") {
     val path = Files.createTempDirectory("graft-vt2").toString + "/t"
-    VersionedTable.commit(Seq((1, "a")).toDF("id", "v"), path)
+    commitWhole(Seq((1, "a")).toDF("id", "v"), path)
     // simulate a writer crash: data dir exists, commit file doesn't
-    Seq((2, "b")).toDF("id", "v").write.parquet(s"$path/v=2")
+    Seq((2, "b")).toDF("id", "v").write.parquet(s"$path/v=2/p=0")
     assert(VersionedTable.latestVersion(spark, path).contains(1L))
     assert(VersionedTable.read(spark, path).count() == 1)
     assertThrows[IllegalArgumentException](VersionedTable.read(spark, path, Some(2)))
@@ -75,17 +108,42 @@ class VersionedTableSpec extends AnyFunSuite {
 
   test("a concurrent writer's reservation is never reused or deleted") {
     val path = Files.createTempDirectory("graft-vt4").toString + "/t"
-    VersionedTable.commit(Seq((1, "a")).toDF("id", "v"), path)
+    commitWhole(Seq((1, "a")).toDF("id", "v"), path)
     // another writer holds version 2 (reservation file, data not yet
     // published) — round 1's protocol would have deleted its data dir
     Files.createDirectories(java.nio.file.Paths.get(s"$path/_commits"))
     Files.writeString(java.nio.file.Paths.get(s"$path/_commits/2.reserved"), "")
-    Seq((99, "other-writer")).toDF("id", "v").write.parquet(s"$path/v=2")
-    val v = VersionedTable.commit(Seq((2, "b")).toDF("id", "v"), path)
+    Seq((99, "other-writer")).toDF("id", "v").write.parquet(s"$path/v=2/p=0")
+    val v = commitWhole(Seq((2, "b")).toDF("id", "v"), path)
     assert(v == 3L) // skipped the reserved number
     // the other writer's in-flight data is untouched
-    assert(spark.read.parquet(s"$path/v=2").head().getInt(0) == 99)
+    assert(spark.read.parquet(s"$path/v=2/p=0").head().getInt(0) == 99)
     assert(VersionedTable.read(spark, path).head().getInt(0) == 2)
+  }
+
+  test("a commit json without a partitions manifest is refused everywhere") {
+    import graft.sources.{BloomIndex, DeltaExport}
+    val base = Files.createTempDirectory("graft-vt-nomanifest").toString
+    val path = s"$base/t"
+    // two hand-written commits whose json has no `partitions` object
+    val df = Seq((1L, "x")).toDF("k", "v")
+    Files.createDirectories(java.nio.file.Paths.get(s"$path/_commits"))
+    Seq(1L, 2L).foreach { n =>
+      df.write.parquet(s"$path/v=$n")
+      Files.writeString(java.nio.file.Paths.get(s"$path/_commits/$n.json"),
+        s"""{"version": $n, "schema": ${graft.core.Json.str(df.schema.json)}, "committed_at": $n}""")
+    }
+    def refused(what: String)(body: => Any): Unit = {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.contains(path), s"$what: the refusal must name the table: ${e.getMessage}")
+    }
+    refused("read")(VersionedTable.read(spark, path))
+    refused("changeFeed")(VersionedTable.changeFeed(spark, path, 1L, 2L, Seq("k")))
+    refused("commitDelta")(VersionedTable.commitDelta(spark, path, df, "v"))
+    refused("deleteKeysDeferred")(VersionedTable.deleteKeysDeferred(spark, path, Seq(1L).toDF("k"), Seq("k")))
+    refused("BloomIndex.build")(BloomIndex.build(spark, path, s"$base/i", "v"))
+    refused("DeltaExport.export")(DeltaExport.export(spark, path))
+    assert(VersionedTable.latestVersion(spark, path).contains(2L), "a refusal must not publish")
   }
 
   test("delta commits rewrite only touched partitions; rest carry forward by reference") {
@@ -251,11 +309,11 @@ class VersionedTableSpec extends AnyFunSuite {
     val rows = VersionedTable.read(spark, path).collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
     assert(rows.toSeq == Seq((0L, "a"), (1L, "b2"), (2L, "c")))
 
-    // full-snapshot table: old versions actually get reclaimed
+    // whole-table rewrites: old versions actually get reclaimed
     val p2 = Files.createTempDirectory("graft-vt8").toString + "/t"
-    VersionedTable.commit(Seq((1, "x")).toDF("id", "v"), p2)
-    VersionedTable.commit(Seq((2, "y")).toDF("id", "v"), p2)
-    VersionedTable.commit(Seq((3, "z")).toDF("id", "v"), p2)
+    commitWhole(Seq((1, "x")).toDF("id", "v"), p2)
+    commitWhole(Seq((2, "y")).toDF("id", "v"), p2)
+    commitWhole(Seq((3, "z")).toDF("id", "v"), p2)
     assert(VersionedTable.vacuum(spark, p2, retainVersions = 1) == Seq(1L, 2L))
     assert(VersionedTable.read(spark, p2).head().getInt(0) == 3)
     assertThrows[IllegalArgumentException](VersionedTable.read(spark, p2, Some(1L))) // expired
@@ -430,7 +488,7 @@ class VersionedTableSpec extends AnyFunSuite {
       s"wrong error: $e")
   }
 
-  test("changeFeed: identical rewrite emits nothing; version order and snapshot tables refused") {
+  test("changeFeed: identical rewrite emits nothing; version order enforced") {
     val path = Files.createTempDirectory("graft-vt-cdf3").toString + "/t"
     val df = Seq((1L, "a", 10)).toDF("id", "p", "x")
     val v1 = VersionedTable.commitDelta(spark, path, df, "p")
@@ -438,12 +496,6 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(VersionedTable.changeFeed(spark, path, v1, v2, Seq("id")).count() == 0)
     intercept[IllegalArgumentException] {
       VersionedTable.changeFeed(spark, path, v2, v1, Seq("id"))
-    }
-    val snap = Files.createTempDirectory("graft-vt-cdf4").toString + "/t"
-    val s1 = VersionedTable.commit(df, snap)
-    val s2 = VersionedTable.commit(df, snap)
-    intercept[IllegalArgumentException] {
-      VersionedTable.changeFeed(spark, snap, s1, s2, Seq("id"))
     }
   }
 
@@ -524,13 +576,6 @@ class VersionedTableSpec extends AnyFunSuite {
     val dvDir = new org.apache.hadoop.fs.Path(s"$path/_dv")
     assert(!f.exists(dvDir) || f.listStatus(dvDir).isEmpty, "spent sidecars must be reclaimed")
     assert(keys() == Set(5L, 4L), "post-vacuum state unchanged")
-
-    // guard rails: full snapshots have no manifest to hang a vector on
-    val snap = Files.createTempDirectory("graft-vt-dv2").toString + "/t"
-    VersionedTable.commit(Seq((1L, "x")).toDF("k", "v"), snap)
-    intercept[IllegalArgumentException] {
-      VersionedTable.deleteKeysDeferred(spark, snap, Seq(1L).toDF("k"), Seq("k"))
-    }
   }
 
   test("deletion vectors are boundary-scoped: a post-delete re-insert of a doomed key stays visible") {
