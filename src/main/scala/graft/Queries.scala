@@ -3343,8 +3343,8 @@ object Queries {
     * ([[graft.sources.VersionedTable.readWidened]]) — partitions written
     * under different numeric types across commits (customer key INT in
     * the first load, LONG plus a new price column in the second) read
-    * as one relation under the widest type per column; mergeSchema
-    * alone refuses the parquet type conflict. Oracle recomputes the
+    * as one relation under the widest type per column; a plain
+    * `VersionedTable.read` refuses the type conflict. Oracle recomputes the
     * widened union relationally.
     */
   def q154(s: SparkSession, dir: String): DataFrame = {

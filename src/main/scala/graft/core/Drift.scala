@@ -7,7 +7,8 @@ package graft.core
   *
   * The engine's drift HANDLING is self-healing ([[graft.operators.Flatten
   * .reconcileSchema]]: missing -> null, new -> appended;
-  * `VersionedTable.read` mergeSchema on the warehouse side); this module is
+  * `VersionedTable.read`'s folded commit-log schema on the warehouse
+  * side); this module is
   * the missing OBSERVABILITY half: a pluggable notifier that surfaces the
   * diff at the moment drift is absorbed, instead of burying it in a
   * silently-widened registry.

@@ -53,7 +53,7 @@ object Scd2 {
     // allowMissingColumns: schema drift between target and batch (a widened
     // batch against a pre-widening target, or the reverse after reading a
     // mix of old/new buckets) null-pads instead of throwing — the write-path
-    // mirror of VersionedTable.read's mergeSchema story
+    // mirror of VersionedTable.read's schema fold
     inactive
       .unionByName(closed)
       .unionByName(untouched)
@@ -195,7 +195,7 @@ object Scd2 {
         case Some(v) =>
           // one manifest read + ONE multi-dir relation for every touched
           // bucket (round-18: was one scan per bucket + a 16-way union);
-          // mergeSchema null-pads drift as the union did
+          // the schema fold null-pads drift as the union did
           VersionedTable.readPartitionsUnioned(spark, warehousePath, touched.map(_.toString).toSeq, Some(v))
             .getOrElse(emptyTarget(b, bucketCol))
         case None => emptyTarget(b, bucketCol)
@@ -233,11 +233,9 @@ object Scd2 {
       .select(bucketCol).distinct().collect().map(_.getLong(0)).sorted.map(_.toString).toSeq
     // single-relation touched read (round-18): the anti join distributes
     // over the bucket union — one scan + one join instead of per-bucket
-    val existing = VersionedTable.readPartitionsUnioned(spark, warehousePath, touched)
-    existing match {
-      case None =>
-        VersionedTable.latestVersion(spark, warehousePath)
-          .getOrElse(throw new IllegalArgumentException(s"no committed versions at $warehousePath"))
+    val snap = VersionedTable.Snapshot.resolve(spark, warehousePath)
+    VersionedTable.readPartitionsUnioned(spark, snap, touched) match {
+      case None => snap.version
       case Some(part) =>
         // NULL-SAFE anti join: a doomed key with NULL components must still
         // match NULL-keyed target rows (plain left_anti equality never

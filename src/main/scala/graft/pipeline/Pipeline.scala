@@ -93,9 +93,9 @@ object Pipeline {
   /** Warehouse-side drift check of the SCD-2 loader: the staged batch's
     * columns vs the existing warehouse payload columns (SCD-2 bookkeeping
     * excluded). The load itself absorbs drift (unionByName null-padding /
-    * mergeSchema reads); this surfaces the diff to `notifier` so it is
-    * observed, not just absorbed — the reference's `Completedwitherrors`
-    * notification (ingestion.py:99-122).
+    * reads under the commit log's folded schema); this surfaces the diff
+    * to `notifier` so it is observed, not just absorbed — the reference's
+    * `Completedwitherrors` notification (ingestion.py:99-122).
     */
   private[graft] def emitWarehouseDrift(
       spark: SparkSession,
@@ -107,21 +107,17 @@ object Pipeline {
     VersionedTable.latestVersion(spark, warehousePath).foreach { latest =>
       val bookkeeping = Set("actv_flg", "record_to", "key_bucket")
       // column names come from the commit manifests' schema JSON — commit-
-      // count-sized driver work, no mergeSchema footer scan across the
+      // count-sized driver work, no parquet footer read across the
       // warehouse. A delta commit records only its TOUCHED partitions'
-      // schema, so union over the manifests still CONTRIBUTING live
+      // schema, so fold the schemas of the commits still CONTRIBUTING live
       // partitions at the latest version (partition map values + latest) —
       // not over ALL surviving manifests: a column present only in
       // superseded history would otherwise count as 'existing' forever,
       // its removal never reported and its re-introduction silently
       // suppressed as an added-column event
-      val contributing: Seq[Long] =
-        (VersionedTable.manifest(spark, warehousePath, latest).values.toSeq :+ latest).distinct.sorted
-      val existing = contributing
-        .flatMap(v => VersionedTable.commitField(spark, warehousePath, v, "schema"))
-        .flatMap(s => org.apache.spark.sql.types.DataType.fromJson(s).asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames)
-        .distinct
-        .filterNot(bookkeeping)
+      val snap = VersionedTable.Snapshot.at(spark, warehousePath, latest)
+      val contributing = (snap.partitions.values.toSeq :+ latest).distinct.sorted
+      val existing = VersionedTable.foldSchemas(spark, snap, contributing).fieldNames.toSeq.filterNot(bookkeeping)
       val incoming = staged.columns.toSeq
       graft.core.Drift.emit(
         notifier,

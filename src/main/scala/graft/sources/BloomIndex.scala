@@ -57,12 +57,11 @@ object BloomIndex {
       k: Int = 3,
       version: Option[Long] = None
   ): Long = {
-    val v = version.orElse(VersionedTable.latestVersion(spark, tablePath)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $tablePath"))
-    val partCol = VersionedTable.commitField(spark, tablePath, v, "partition_column").getOrElse(
+    val snap = VersionedTable.Snapshot.resolve(spark, tablePath, version)
+    val v = snap.version
+    val partCol = snap.partitionColumn.getOrElse(
       throw new IllegalStateException(s"$tablePath@$v is not a delta table; bloom index needs partitions"))
-    val snap = VersionedTable.read(spark, tablePath, Some(v))
-    snap
+    VersionedTable.read(spark, snap)
       .select(
         coalesce(col(partCol).cast("string"), lit(NullPart)).as("part"),
         graft.plans.HashExpressions.md5Prefix60(col(column).cast("string")).as("h"))

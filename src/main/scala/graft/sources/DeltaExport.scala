@@ -61,9 +61,10 @@ object DeltaExport {
   /** All parquet files (path relative to table root, size, mtime) a given
     * source version's manifest references, sorted by path.
     */
-  private def referencedFiles(spark: SparkSession, path: String, v: Long): Seq[(String, Long, Long)] = {
+  private def referencedFiles(spark: SparkSession, snap: VersionedTable.Snapshot): Seq[(String, Long, Long)] = {
+    val path = snap.path
     val f = fs(spark, path)
-    val dirs = VersionedTable.manifest(spark, path, v).toSeq.sortBy(_._1).map { case (p, pv) => s"v=$pv/p=$p" }
+    val dirs = snap.partitions.toSeq.sortBy(_._1).map { case (p, pv) => s"v=$pv/p=$p" }
     dirs.flatMap { d =>
       val dp = new Path(s"$path/$d")
       if (!f.exists(dp)) Nil
@@ -73,11 +74,6 @@ object DeltaExport {
           .map(s => (s"$d/${s.getPath.getName}", s.getLen, s.getModificationTime))
     }.sortBy(_._1)
   }
-
-  private def commitSchema(spark: SparkSession, path: String, v: Long): String =
-    VersionedTable.commitField(spark, path, v, "schema").getOrElse(
-      throw new IllegalStateException(s"commit $v of $path has no schema field")
-    )
 
   /** Rewrite a manifest schema into its column-mapped logical twin:
     * every field (any nesting depth, through arrays and maps) gains
@@ -141,18 +137,9 @@ object DeltaExport {
     // (its own JSON surviving via a newer manifest's carry-forward) would
     // export as a PARTIAL file set — files flickering out of and back into
     // the log. Export only fully-servable versions; the newest must be one.
-    val committed = VersionedTable.committedVersionsPublic(spark, path).sorted
-    require(committed.nonEmpty, s"no committed versions at $path — nothing to export")
-    val versions = VersionedTable.servableVersions(spark, path)
-    require(
-      versions.lastOption.contains(committed.last),
-      s"newest commit ${committed.last} of $path references vacuumed data — table is corrupt"
-    )
+    val snaps = VersionedTable.servableSnapshots(spark, path)
     if (renames.nonEmpty) {
-      val newest = DataType.fromJson(commitSchema(spark, path, versions.last)) match {
-        case s: StructType => s.fieldNames.toSet
-        case _ => Set.empty[String]
-      }
+      val newest = snaps.last.schema.fieldNames.toSet
       val missing = renames.keySet -- newest
       require(missing.isEmpty,
         s"renames name columns absent from the newest schema of $path: ${missing.toSeq.sorted.mkString(", ")}")
@@ -176,9 +163,9 @@ object DeltaExport {
     val partCol: Option[String] =
       if (!partitioned) None
       else {
-        val cols = versions.map { v =>
-          VersionedTable.commitField(spark, path, v, "partition_column").getOrElse(
-            throw new IllegalArgumentException(s"partitioned export: version $v of $path records no partition_column"))
+        val cols = snaps.map { s =>
+          s.partitionColumn.getOrElse(throw new IllegalArgumentException(
+            s"partitioned export: version ${s.version} of $path records no partition_column"))
         }.distinct
         require(cols.size == 1,
           s"partitioned export: $path changes partition column across commits (${cols.mkString(", ")}) — Delta metadata cannot represent that")
@@ -204,9 +191,10 @@ object DeltaExport {
     var prevFiles = Map.empty[String, (Long, Long)]
     var prevSchema: Option[String] = None
     var prevMarkers = Map.empty[String, String]
-    versions.zipWithIndex.map { case (v, i) =>
-      val files = referencedFiles(spark, path, v).map { case (p, sz, mt) => p -> (sz, mt) }.toMap
-      val schema = commitSchema(spark, path, v)
+    snaps.zipWithIndex.map { case (snap, i) =>
+      val v = snap.version
+      val files = referencedFiles(spark, snap).map { case (p, sz, mt) => p -> (sz, mt) }.toMap
+      val schema = snap.schemaJson
       val now = System.currentTimeMillis()
       val (schemaOut, configJson) =
         if (!mapColumns) (schema, "{}")
@@ -237,7 +225,7 @@ object DeltaExport {
       // idempotency contract VersionedTable's manifest lineage provides
       // (`stream_batch:<id>` -> appId `<id>`). Carried-forward (unchanged)
       // markers emit nothing — Delta txn state is cumulative.
-      val markers = VersionedTable.streamMarkers(spark, path, v)
+      val markers = snap.fields("stream_batch")
       val txns = markers.toSeq
         .filter { case (k, value) => !prevMarkers.get(k).contains(value) }
         .filter(_._2.matches("-?\\d+")) // txn.version is a Delta long

@@ -257,20 +257,12 @@ object IcebergExport {
     // only fully-servable versions export (vacuum can orphan an old commit's
     // JSON while deleting dirs it references — a partial snapshot would be
     // silent wrongness; same guard as DeltaExport.buildLog)
-    val committed = VersionedTable.committedVersionsPublic(spark, path).sorted
-    require(committed.nonEmpty, s"$path has no committed versions to export")
-    val versions = VersionedTable.servableVersions(spark, path)
-    require(
-      versions.lastOption.contains(committed.last),
-      s"newest commit ${committed.last} of $path references vacuumed data — table is corrupt"
-    )
+    val snaps = VersionedTable.servableSnapshots(spark, path)
+    val versions = snaps.map(_.version)
 
     // distinct schemas in commit order -> schema-ids 0..k
-    val commitSchemas: Seq[(Long, String)] = versions.map { v =>
-      v -> VersionedTable.commitField(spark, path, v, "schema").getOrElse(
-        throw new IllegalStateException(s"commit $v of $path has no schema field"))
-    }
-    val distinctSchemas = commitSchemas.map(_._2).distinct
+    val commitSchemas: Seq[String] = snaps.map(_.schemaJson)
+    val distinctSchemas = commitSchemas.distinct
     val schemaIdOf: Map[String, Int] = distinctSchemas.zipWithIndex.toMap
     val icebergSchemas = distinctSchemas.zipWithIndex.map { case (json, sid) =>
       icebergSchemaJson(DataType.fromJson(json).asInstanceOf[StructType], sid)
@@ -284,7 +276,7 @@ object IcebergExport {
     // without the recorded column (pre-field commits or exotic types)
     // export unpartitioned — correct, just unpruned.
     val partColOpt: Option[String] = {
-      val pcs = versions.map(v => VersionedTable.commitField(spark, path, v, "partition_column"))
+      val pcs = snaps.map(_.partitionColumn)
       if (pcs.nonEmpty && pcs.forall(_.isDefined) && pcs.flatten.distinct.size == 1) pcs.head else None
     }
     val currentSchema = DataType.fromJson(distinctSchemas.last).asInstanceOf[StructType]
@@ -330,8 +322,8 @@ object IcebergExport {
     // files live at each version (relative path, size, partition value),
     // via the same manifest walk DeltaExport uses; first-referencing
     // snapshot tracked so carried-forward files export as EXISTING
-    def referencedFiles(v: Long): Seq[(String, Long, String)] = {
-      val dirs = VersionedTable.manifest(spark, path, v).toSeq.sortBy(_._1).map { case (p, pv) => (s"v=$pv/p=$p", p) }
+    def referencedFiles(snap: VersionedTable.Snapshot): Seq[(String, Long, String)] = {
+      val dirs = snap.partitions.toSeq.sortBy(_._1).map { case (p, pv) => (s"v=$pv/p=$p", p) }
       dirs.flatMap { case (d, part) =>
         val dp = new Path(s"$path/$d")
         if (!f.exists(dp)) Nil
@@ -344,9 +336,10 @@ object IcebergExport {
 
     val added = scala.collection.mutable.Map.empty[String, (Long, Long)] // rel path -> (snapshotId, seq)
     val counts = scala.collection.mutable.Map.empty[String, Long]        // rel path -> record count
-    val snapshots = versions.zipWithIndex.map { case (v, i) =>
+    val snapshots = snaps.zipWithIndex.map { case (snap, i) =>
+      val v = snap.version
       val seq = i + 1L
-      val live = referencedFiles(v)
+      val live = referencedFiles(snap)
       live.foreach { case (rel, _, _) =>
         if (!added.contains(rel)) {
           added(rel) = (v, seq)
@@ -379,7 +372,7 @@ object IcebergExport {
           e.put("data_file", df)
           e
         }
-        val schemaJson = icebergSchemas(schemaIdOf(commitSchemas(i)._2))._1
+        val schemaJson = icebergSchemas(schemaIdOf(commitSchemas(i)))._1
         val manifestPath = s"$metaDir/manifest-$v.avro"
         val manifestLen = writeAvro(
           f, manifestPath, entrySch,
@@ -414,14 +407,12 @@ object IcebergExport {
     }
 
     // ------------------------------------------------------- metadata json
-    val committedAt: Map[Long, Long] = versions.map { v =>
-      v -> VersionedTable.commitFieldNumber(spark, path, v, "committed_at").getOrElse(0L)
-    }.toMap
+    val committedAt: Map[Long, Long] = snaps.map(s => s.version -> s.committedAt.getOrElse(0L)).toMap
     val snapJson = versions.zipWithIndex.map { case (v, i) =>
       val parent = if (i == 0) "" else s""""parent-snapshot-id": ${versions(i - 1)}, """
       s"""{"snapshot-id": $v, $parent"sequence-number": ${i + 1}, "timestamp-ms": ${committedAt(v)}, """ +
         s""""summary": {"operation": "append"}, "manifest-list": ${Json.str(qualifyMeta(s"snap-$v-manifest-list.avro"))}, """ +
-        s""""schema-id": ${schemaIdOf(commitSchemas(i)._2)}}"""
+        s""""schema-id": ${schemaIdOf(commitSchemas(i))}}"""
     }
     val snapLog = versions.map(v => s"""{"timestamp-ms": ${committedAt(v)}, "snapshot-id": $v}""")
     val current = versions.last

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Minimal transactional table layout: versioned snapshots with an atomic
   * commit log — the engine's stand-in for a Delta/Iceberg table format
@@ -47,15 +48,8 @@ object VersionedTable {
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def latestVersion(spark: SparkSession, path: String): Option[Long] = {
-    val f = fs(spark, path)
-    val commits = new Path(s"$path/_commits")
-    if (!f.exists(commits)) None
-    else {
-      val vs = f.listStatus(commits).map(_.getPath.getName).filter(_.endsWith(".json")).map(_.stripSuffix(".json").toLong)
-      if (vs.isEmpty) None else Some(vs.max)
-    }
-  }
+  def latestVersion(spark: SparkSession, path: String): Option[Long] =
+    committedVersions(fs(spark, path), path).maxOption
 
   /** Reserve the next free version number with an exclusive create of
     * `_commits/N.reserved`. The reservation IS the write lock: losing the
@@ -151,8 +145,9 @@ object VersionedTable {
     // concurrent delta commit can't be silently reverted by our stale
     // carry-forward manifest (optimistic concurrency: the loser aborts and
     // retries on a fresh base)
-    val base = latestVersion(spark, path)
-    val prev = base.map(manifest(spark, path, _)).getOrElse(Map.empty[String, Long])
+    val base = latestVersion(spark, path).map(Snapshot.at(spark, path, _))
+    val baseVersion = base.map(_.version)
+    val prev = base.map(_.partitions).getOrElse(Map.empty[String, Long])
     // exactly-once stream markers ride ALONG THE LINEAGE: every delta commit
     // (loads, deletions, compaction) inherits the base manifest's
     // `stream_batch:*` fields, so the NEWEST commit always carries them and
@@ -165,8 +160,8 @@ object VersionedTable {
     // table, so the entries are spent)
     val inheritedDv =
       if (clearDv) Map.empty[String, String]
-      else base.map(dvMarkers(spark, path, _)).getOrElse(Map.empty[String, String])
-    val meta = base.map(streamMarkers(spark, path, _)).getOrElse(Map.empty) ++ inheritedDv ++ extraMeta
+      else base.map(_.fields("dv:")).getOrElse(Map.empty[String, String])
+    val meta = base.map(_.fields("stream_batch")).getOrElse(Map.empty) ++ inheritedDv ++ extraMeta
     // ZONE MAPS (the Delta/Iceberg data-skipping analogue): per written
     // partition, min/max of each requested long-castable column, recorded
     // in the manifest as `zone:<col>:<part>` -> "<min>,<max>". One extra
@@ -284,10 +279,10 @@ object VersionedTable {
     // carry-forward map is stale — abort (data dir stays orphaned under the
     // burned version number; reservation marks it dead). Caller retries the
     // whole upsert against the new latest.
-    if (latestVersion(spark, path) != base) {
+    if (latestVersion(spark, path) != baseVersion) {
       f.delete(finalDir, true)
       throw new java.util.ConcurrentModificationException(
-        s"concurrent commit on $path (base was $base); retry the delta against the new latest version")
+        s"concurrent commit on $path (base was $baseVersion); retry the delta against the new latest version")
     }
     val parts = (prev -- clearedParts.filterNot(written.contains)) ++ written.map(_ -> v)
     // zone stats ride the lineage like stream markers, but per PARTITION:
@@ -295,7 +290,7 @@ object VersionedTable {
     // cleared partitions drop them (fresh entries only if statsCols asked)
     val carried = parts.collect { case (p, pv) if pv != v => p }.toSet
     val inheritedZone = base
-      .map(zoneMarkers(spark, path, _))
+      .map(_.fields("zone:"))
       .getOrElse(Map.empty[String, String])
       .filter { case (k, _) => k.split(":", 3).lift(2).exists(carried.contains) }
     val newZone = zoneStats.flatMap { case (p, cs) =>
@@ -305,7 +300,7 @@ object VersionedTable {
     val partsJson = parts.toSeq.sortBy(_._1).map { case (p, pv) => s"${jsonStr(p)}: $pv" }.mkString("{", ", ", "}")
     val extraJson = metaAll.toSeq.sortBy(_._1).map { case (k, x) => s", ${jsonStr(k)}: ${jsonStr(x)}" }.mkString
     publish(f, path, v,
-      s"""{"version": $v, "base": ${base.getOrElse(0L)}, "schema": ${jsonStr(updated.schema.json)}, "committed_at": ${System.currentTimeMillis()}, "partition_column": ${jsonStr(partCol)}, "partitions": $partsJson$extraJson}""")
+      s"""{"version": $v, "base": ${baseVersion.getOrElse(0L)}, "schema": ${jsonStr(updated.schema.json)}, "committed_at": ${System.currentTimeMillis()}, "partition_column": ${jsonStr(partCol)}, "partitions": $partsJson$extraJson}""")
     // Close the remaining check-then-publish window. Conflict shapes:
     //  (a) a commit landed BETWEEN our base and v — its partitions are
     //      missing from our carry-forward manifest;
@@ -324,17 +319,17 @@ object VersionedTable {
     //     commit may reference our partition dirs from its manifest;
     //     reclamation is vacuum's job, which honors such references.
     def conflictingSuccessor(w: Long): Boolean =
-      try commitBase(spark, path, w).forall(_ < v)
+      try Snapshot.at(spark, path, w).base.forall(_ < v)
       catch { case _: IllegalArgumentException => false } // demoted concurrently
     val conflict = committedVersions(f, path).filter { w =>
-      (w > base.getOrElse(0L) && w < v) || (w > v && conflictingSuccessor(w))
+      (w > baseVersion.getOrElse(0L) && w < v) || (w > v && conflictingSuccessor(w))
     }
     if (conflict.nonEmpty && !durableThroughSuccessor(spark, f, path, v)) {
       try { val out = f.create(new Path(s"$path/_commits/$v.reserved"), false); out.close() }
       catch { case _: java.io.IOException => () } // marker already present
       f.delete(new Path(s"$path/_commits/$v.json"), false)
       throw new java.util.ConcurrentModificationException(
-        s"concurrent commit(s) ${conflict.sorted.mkString(",")} on $path conflict with base $base; retry the delta")
+        s"concurrent commit(s) ${conflict.sorted.mkString(",")} on $path conflict with base $baseVersion; retry the delta")
     }
     v
   }
@@ -357,7 +352,7 @@ object VersionedTable {
     */
   private[graft] def durableThroughSuccessor(spark: SparkSession, f: FileSystem, path: String, v: Long): Boolean =
     committedVersions(f, path).exists { w =>
-      w > v && (try commitBase(spark, path, w).exists(_ >= v)
+      w > v && (try Snapshot.at(spark, path, w).base.exists(_ >= v)
       catch { case _: IllegalArgumentException => false }) // successor demoted concurrently
     }
 
@@ -389,15 +384,6 @@ object VersionedTable {
       .map(_.stripSuffix(".json").toLong).toSeq
   }
 
-  /** The `base` a commit was built on (None when its json records none —
-    * treated as "did not see us" conservatively).
-    */
-  private def commitBase(spark: SparkSession, path: String, version: Long): Option[Long] = {
-    val root = readCommitJson(spark, path, version)
-    val b = root.path("base")
-    if (b.isNumber) Some(b.asLong()) else None
-  }
-
   private def readCommitJson(spark: SparkSession, path: String, version: Long): com.fasterxml.jackson.databind.JsonNode = {
     val f = fs(spark, path)
     val p = new Path(s"$path/_commits/$version.json")
@@ -407,66 +393,89 @@ object VersionedTable {
     new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
   }
 
+  /** One committed version, resolved from its commit json in ONE read and
+    * parse; readers and writers resolve a version once and pass this value
+    * on. `partitionMap` is None when the json carries no `partitions`
+    * object — [[partitions]] refuses such a commit. `raw` holds every
+    * textual top-level field: the recorded `schema`, `partition_column`,
+    * and the markers (`stream_batch*`, `zone:*`, `dv:*`) and extraMeta
+    * that ride the lineage. The schema is parsed only when a reader asks
+    * for it.
+    */
+  private[graft] final case class Snapshot(
+      path: String,
+      version: Long,
+      base: Option[Long],
+      committedAt: Option[Long],
+      partitionMap: Option[Map[String, Long]],
+      raw: Map[String, String]
+  ) {
+    def partitionColumn: Option[String] = raw.get("partition_column")
+
+    /** The manifest every reader and writer resolves partitions through. */
+    def partitions: Map[String, Long] = partitionMap.getOrElse(
+      throw new IllegalStateException(s"version $version of $path has no partitions manifest"))
+
+    /** The textual fields whose name starts with `prefix` (`stream_batch`,
+      * `zone:`, `dv:` — the marker families every commit carries forward).
+      */
+    def fields(prefix: String): Map[String, String] = raw.filter(_._1.startsWith(prefix))
+
+    /** The recorded schema json of the DataFrame this commit wrote (the
+      * schema of its own partitions).
+      */
+    def schemaJson: String =
+      raw.getOrElse("schema", throw new IllegalStateException(s"commit $version of $path has no schema field"))
+
+    def schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+  }
+
+  private[graft] object Snapshot {
+
+    /** Read and parse `_commits/<version>.json`. A json that does not exist
+      * (never published, or demoted meanwhile) is an IllegalArgumentException.
+      */
+    def at(spark: SparkSession, path: String, version: Long): Snapshot = {
+      import scala.jdk.CollectionConverters._
+      val root = readCommitJson(spark, path, version)
+      def num(name: String): Option[Long] = Some(root.path(name)).filter(_.isNumber).map(_.asLong())
+      val parts = root.path("partitions")
+      Snapshot(
+        path, version, num("base"), num("committed_at"),
+        if (parts.isObject) Some(parts.properties().asScala.iterator.map(e => e.getKey -> e.getValue.asLong()).toMap)
+        else None,
+        root.properties().asScala.iterator.filter(_.getValue.isTextual).map(e => e.getKey -> e.getValue.asText()).toMap)
+    }
+
+    /** The given version, or the latest committed one. */
+    def resolve(spark: SparkSession, path: String, version: Option[Long] = None): Snapshot =
+      at(spark, path, version.orElse(latestVersion(spark, path)).getOrElse(
+        throw new IllegalArgumentException(s"no committed versions at $path")))
+  }
+
   /** A string field of a commit's metadata json (e.g. an exactly-once
     * stream batch marker written via commitDelta's extraMeta).
     */
-  def commitField(spark: SparkSession, path: String, version: Long, name: String): Option[String] = {
-    val node = readCommitJson(spark, path, version).path(name)
-    if (node.isTextual) Some(node.asText()) else None
-  }
+  def commitField(spark: SparkSession, path: String, version: Long, name: String): Option[String] =
+    Snapshot.at(spark, path, version).raw.get(name)
 
-  /** Committed versions whose FULL referenced file set still exists on
+  /** Committed snapshots whose FULL referenced file set still exists on
     * disk, oldest first. Vacuum deletes version dirs referenced only by
     * non-retained manifests — but an old commit's JSON can survive (its own
     * dir still carried forward by a newer manifest) while dirs IT references
     * are gone. Such a version cannot be read or exported faithfully any
-    * more; exporters must skip it rather than emit a silently partial
-    * snapshot.
+    * more; exporters skip it rather than emit a silently partial snapshot.
+    * The newest commit must be servable: a table whose latest manifest
+    * references vacuumed data is refused as corrupt.
     */
-  def servableVersions(spark: SparkSession, path: String): Seq[Long] = {
+  private[graft] def servableSnapshots(spark: SparkSession, path: String): Seq[Snapshot] = {
     val f = fs(spark, path)
-    committedVersions(f, path).sorted.filter { v =>
-      manifest(spark, path, v).values.toSeq.distinct.forall(pv => f.exists(new Path(s"$path/v=$pv")))
-    }
-  }
-
-  /** Numeric commit-manifest field (e.g. `committed_at`). */
-  def commitFieldNumber(spark: SparkSession, path: String, version: Long, name: String): Option[Long] = {
-    val node = readCommitJson(spark, path, version).path(name)
-    if (node.isNumber) Some(node.asLong()) else None
-  }
-
-  /** All exactly-once stream markers (`stream_batch*` fields) in a commit's
-    * manifest. Every delta commit carries its base's markers forward (see
-    * [[commitDelta]]), so the newest commit's markers are the complete,
-    * vacuum-proof set.
-    */
-  def streamMarkers(spark: SparkSession, path: String, version: Long): Map[String, String] = {
-    val root = readCommitJson(spark, path, version)
-    scala.jdk.CollectionConverters.IterableHasAsScala(root.properties()).asScala.iterator
-      .filter(e => e.getKey.startsWith("stream_batch") && e.getValue.isTextual)
-      .map(e => e.getKey -> e.getValue.asText())
-      .toMap
-  }
-
-  /** All `zone:<col>:<part>` data-skipping entries of a commit manifest. */
-  def zoneMarkers(spark: SparkSession, path: String, version: Long): Map[String, String] = {
-    val root = readCommitJson(spark, path, version)
-    scala.jdk.CollectionConverters.IterableHasAsScala(root.properties()).asScala.iterator
-      .filter(e => e.getKey.startsWith("zone:") && e.getValue.isTextual)
-      .map(e => e.getKey -> e.getValue.asText())
-      .toMap
-  }
-
-  /** All pending `dv:<id>` deletion-vector entries of a commit manifest
-    * (value format `<file>|<keyCol1,keyCol2,...>`).
-    */
-  def dvMarkers(spark: SparkSession, path: String, version: Long): Map[String, String] = {
-    val root = readCommitJson(spark, path, version)
-    scala.jdk.CollectionConverters.IterableHasAsScala(root.properties()).asScala.iterator
-      .filter(e => e.getKey.startsWith("dv:") && e.getValue.isTextual)
-      .map(e => e.getKey -> e.getValue.asText())
-      .toMap
+    val committed = committedVersions(f, path).sorted
+    val newest = Snapshot.resolve(spark, path, committed.lastOption)
+    def servable(s: Snapshot): Boolean =
+      s.partitions.values.toSeq.distinct.forall(pv => f.exists(new Path(s"$path/v=$pv")))
+    require(servable(newest), s"newest commit ${newest.version} of $path references vacuumed data — table is corrupt")
+    committed.filter(_ < newest.version).map(Snapshot.at(spark, path, _)).filter(servable) :+ newest
   }
 
   /** DEFERRED KEY DELETION (merge-on-read, the Delta deletion-vector /
@@ -503,11 +512,10 @@ object VersionedTable {
       require(keyCols.nonEmpty, "keyCols must be non-empty")
       keyCols.foreach(c =>
         require(c.matches("[A-Za-z0-9_]+"), s"keyCol '$c' must be [A-Za-z0-9_]+ (it is serialized in the manifest)"))
-      val v0 = latestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"no committed versions at $path"))
-      manifest(spark, path, v0) // the vector's boundary scoping needs one
-      val partCol = commitField(spark, path, v0, "partition_column").getOrElse(
-        throw new IllegalStateException(s"version $v0 of $path records no partition_column"))
+      val v0 = Snapshot.resolve(spark, path)
+      v0.partitions // the vector's boundary scoping needs one
+      val partCol = v0.partitionColumn.getOrElse(
+        throw new IllegalStateException(s"version ${v0.version} of $path records no partition_column"))
       val id = s"dv-${java.util.UUID.randomUUID().toString.take(12)}"
       keys.select(keyCols.map(col): _*).distinct().write.mode("errorifexists").parquet(s"$path/_dv/$id")
       // the vector is BOUNDARY-SCOPED to the data that existed when the
@@ -519,8 +527,8 @@ object VersionedTable {
       // compact, diverging from copy-on-write deleteKeys semantics)
       try
         commitDelta(
-          spark, path, read(spark, path, Some(v0)).limit(0), partCol,
-          extraMeta = Map(s"dv:$id" -> s"$id|${keyCols.mkString(",")}|$v0"))
+          spark, path, read(spark, v0).limit(0), partCol,
+          extraMeta = Map(s"dv:$id" -> s"$id|${keyCols.mkString(",")}|${v0.version}"))
       catch {
         case e: Throwable =>
           fs(spark, path).delete(new Path(s"$path/_dv/$id"), true) // unreferenced sidecar
@@ -552,28 +560,55 @@ object VersionedTable {
   /** Assemble a multi-partition read with BOUNDARY-SCOPED deletion
     * vectors: partitions are grouped by which pending vectors apply to
     * them (by the pv<=boundary rule), each group anti-joins only its own
-    * vectors, and the groups union back (null-padding across the groups'
-    * schemas exactly as the mergeSchema read did). With no pending
-    * vectors this is one mergeSchema read — zero plan overhead.
+    * vectors, and the groups union back. Every group reads under the one
+    * schema [[tableSchema]] folds from the commit log, so planning reads
+    * no parquet footer; with no pending vectors this is one read.
     */
-  private def readWithDv(
-      spark: SparkSession,
-      path: String,
-      dvSpecs: Seq[String],
-      parts: Seq[(String, Long)]
-  ): DataFrame = {
+  private def readWithDv(spark: SparkSession, snap: Snapshot, parts: Seq[(String, Long)]): DataFrame = {
+    val schema = tableSchema(spark, snap, parts)
+    val dvSpecs = snap.fields("dv:").values.toSeq.sorted
     val groups = parts.sortBy(_._1)
       .groupBy { case (_, pv) => dvSpecs.filter(s => dvApplies(s, pv)) }
       .toSeq
       .sortBy(_._2.head._1)
     val dfs = groups.map { case (specs, ps) =>
-      val dirs = ps.map { case (p, pv) => s"$path/v=$pv/p=$p" }
-      // partitions carried forward from older versions may predate a
-      // schema-widening commit — merge schemas so old partitions surface
-      // the new columns as nulls
-      applyDvSpecs(spark, path, specs, spark.read.option("mergeSchema", "true").parquet(dirs: _*))
+      val dirs = ps.map { case (p, pv) => s"${snap.path}/v=$pv/p=$p" }
+      applyDvSpecs(spark, snap.path, specs, spark.read.schema(schema).parquet(dirs: _*))
     }
-    dfs.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
+    dfs.reduce(_.unionByName(_))
+  }
+
+  /** The table schema of a set of partitions: the schemas recorded by the
+    * commits that wrote them, folded in partition-name order — the column
+    * order and null-padding a schema-merging parquet read of the same dirs
+    * gives (partitions carried forward from older versions may predate a
+    * schema-widening commit; they surface the new columns as nulls). A
+    * column recorded under two different types is refused here: a read
+    * under a given schema would silently cast the older files instead.
+    */
+  private def tableSchema(spark: SparkSession, snap: Snapshot, parts: Seq[(String, Long)]): StructType =
+    foldSchemas(spark, snap, parts.sortBy(_._1).map(_._2))
+
+  /** The fold of the schemas the given commits recorded, in the given
+    * order; one commit-json read per distinct version (`snap` itself is not
+    * re-read).
+    */
+  private[graft] def foldSchemas(spark: SparkSession, snap: Snapshot, versions: Seq[Long]): StructType = {
+    def merge(a: DataType, b: DataType, column: String): DataType = (a, b) match {
+      case (x: StructType, y: StructType) => mergeStruct(x, y)
+      case (ArrayType(x, n), ArrayType(y, m)) => ArrayType(merge(x, y, column), n || m)
+      case (MapType(k, x, n), MapType(l, y, m)) => MapType(merge(k, l, column), merge(x, y, column), n || m)
+      case _ if a == b => a
+      case _ => throw new IllegalStateException(
+        s"cannot merge the recorded schemas of ${snap.path}: column $column is ${a.sql} in one commit and ${b.sql} in another")
+    }
+    def mergeStruct(a: StructType, b: StructType): StructType = StructType(
+      a.fields.map(f => b.find(_.name == f.name).fold(f)(g =>
+        f.copy(dataType = merge(f.dataType, g.dataType, f.name), nullable = f.nullable || g.nullable))) ++
+        b.fields.filterNot(g => a.fieldNames.contains(g.name)))
+    versions.distinct
+      .map(v => (if (v == snap.version) snap else Snapshot.at(spark, snap.path, v)).schema)
+      .reduce(mergeStruct)
   }
 
   /** Numeric type-widening lattice for schema evolution across commits:
@@ -604,16 +639,17 @@ object VersionedTable {
     * delta table whose partitions were written under DIFFERENT numeric
     * types across commits (a column upgraded int->long or ->double)
     * reads as one relation under the WIDEST type per column. Plain
-    * [[read]]'s mergeSchema refuses conflicting parquet types; this
-    * variant reads each partition under its own file schema, casts up
-    * the widening lattice, and unions — missing columns null-pad as in
-    * the drift story. Deletion vectors apply as in every read path.
+    * [[read]]'s schema fold refuses conflicting recorded types; this
+    * variant reads each partition under the schema its own commit
+    * recorded, casts up the widening lattice, and unions — missing
+    * columns null-pad as in the drift story. Deletion vectors apply as in
+    * every read path.
     */
   def readWidened(spark: SparkSession, path: String, version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(latestVersion(spark, path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    val parts = manifest(spark, path, v).toSeq.sortBy(_._1)
-    val dfs = parts.map { case (p, pv) => spark.read.parquet(s"$path/v=$pv/p=$p") }
+    val snap = Snapshot.resolve(spark, path, version)
+    val parts = snap.partitions.toSeq.sortBy(_._1)
+    val recorded = parts.map(_._2).distinct.map(pv => pv -> foldSchemas(spark, snap, Seq(pv))).toMap
+    val dfs = parts.map { case (p, pv) => spark.read.schema(recorded(pv)).parquet(s"$path/v=$pv/p=$p") }
     val target: Seq[(String, org.apache.spark.sql.types.DataType)] = dfs
       .flatMap(_.schema.fields.map(f => f.name -> f.dataType))
       .groupBy(_._1)
@@ -626,7 +662,7 @@ object VersionedTable {
       }: _*)
     // boundary-scoped DV application per partition (pre-union, so each
     // partition anti-joins only the vectors that apply to its pv)
-    val dvSpecs = dvMarkers(spark, path, v).values.toSeq.sorted
+    val dvSpecs = snap.fields("dv:").values.toSeq.sorted
     parts.zip(dfs).map { case ((_, pv), d) =>
       conform(applyDvSpecs(spark, path, dvSpecs.filter(s => dvApplies(s, pv)), d))
     }.reduce(_.unionByName(_))
@@ -646,8 +682,7 @@ object VersionedTable {
     * you audit a 100 TB replica nightly without shipping the table.
     */
   def divergedPartitions(spark: SparkSession, pathA: String, pathB: String): DataFrame = {
-    def side(path: String, cols: Seq[String], partCol: String): DataFrame = {
-      val d = read(spark, path)
+    def side(d: DataFrame, cols: Seq[String], partCol: String): DataFrame =
       // bit_xor, not sum: hash values span the full long range and an
       // ANSI sum overflows; xor is commutative/associative (order-free
       // across partitionings) and cannot overflow. Caveat carried by the
@@ -665,18 +700,15 @@ object VersionedTable {
       }: _*))
         .groupBy(col(partCol).cast("string").as("part"))
         .agg(count(lit(1)).as("rows"), expr("bit_xor(__h)").as("fp"))
-    }
-    def partColOf(path: String): String = {
-      val v = latestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"no committed versions at $path"))
-      commitField(spark, path, v, "partition_column").getOrElse(
-        throw new IllegalStateException(s"$path is not a delta table (no partition_column)"))
-    }
-    val (pa, pb) = (partColOf(pathA), partColOf(pathB))
-    val common = (read(spark, pathA).columns.toSet intersect read(spark, pathB).columns.toSet).toSeq.sorted
+    def partColOf(snap: Snapshot): String = snap.partitionColumn.getOrElse(
+      throw new IllegalStateException(s"${snap.path} is not a delta table (no partition_column)"))
+    val (sa, sb) = (Snapshot.resolve(spark, pathA), Snapshot.resolve(spark, pathB))
+    val (pa, pb) = (partColOf(sa), partColOf(sb))
+    val (da, db) = (read(spark, sa), read(spark, sb))
+    val common = (da.columns.toSet intersect db.columns.toSet).toSeq.sorted
     require(common.nonEmpty, "replicas share no columns to compare")
-    val a = side(pathA, common, pa).select(col("part"), col("rows").as("rows_a"), col("fp").as("fp_a"))
-    val b = side(pathB, common, pb).select(col("part"), col("rows").as("rows_b"), col("fp").as("fp_b"))
+    val a = side(da, common, pa).select(col("part"), col("rows").as("rows_a"), col("fp").as("fp_a"))
+    val b = side(db, common, pb).select(col("part"), col("rows").as("rows_b"), col("fp").as("fp_b"))
     a.join(b, Seq("part"), "full_outer")
       .select(
         col("part"),
@@ -698,21 +730,18 @@ object VersionedTable {
       lo: Long,
       hi: Long,
       version: Option[Long] = None
-  ): (Seq[String], Seq[String]) = {
-    val v = version.orElse(latestVersion(spark, path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    val parts = manifest(spark, path, v)
-    val zones = zoneMarkers(spark, path, v)
-    val (scan, skip) = parts.keys.toSeq.sorted.partition { p =>
-      zones.get(s"zone:$statsCol:$p") match {
+  ): (Seq[String], Seq[String]) =
+    zonePrunePlan(Snapshot.resolve(spark, path, version), statsCol, lo, hi)
+
+  private def zonePrunePlan(snap: Snapshot, statsCol: String, lo: Long, hi: Long): (Seq[String], Seq[String]) =
+    snap.partitions.keys.toSeq.sorted.partition { p =>
+      snap.raw.get(s"zone:$statsCol:$p") match {
         case Some(s) =>
           val Array(mn, mx) = s.split(",", 2)
           !(mx.toLong < lo || mn.toLong > hi)
         case None => true
       }
     }
-    (scan, skip)
-  }
 
   /** Zone-map pruned range scan — the 100 TB point of the stats: a
     * predicate on a CLUSTERED column (z-ordered / range-bucketed layout)
@@ -732,51 +761,33 @@ object VersionedTable {
       hi: Long,
       version: Option[Long] = None
   ): DataFrame = {
-    val v = version.orElse(latestVersion(spark, path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
+    val snap = Snapshot.resolve(spark, path, version)
     val residual = col(statsCol).cast("long").between(lo, hi)
-    val parts = manifest(spark, path, v)
-    val (scan, _) = zonePrunePlan(spark, path, statsCol, lo, hi, Some(v))
-    if (scan.isEmpty) read(spark, path, Some(v)).limit(0).filter(residual)
-    else
-      readWithDv(spark, path, dvMarkers(spark, path, v).values.toSeq.sorted,
-        scan.map(p => p -> parts(p))).filter(residual)
+    val (scan, _) = zonePrunePlan(snap, statsCol, lo, hi)
+    if (scan.isEmpty) read(spark, snap).limit(0).filter(residual)
+    else readWithDv(spark, snap, scan.map(p => p -> snap.partitions(p))).filter(residual)
   }
 
   /** The partition->version manifest of a commit; None when the commit
     * json carries no `partitions` object.
     */
-  def partitionMap(spark: SparkSession, path: String, version: Long): Option[Map[String, Long]] = {
-    val parts = readCommitJson(spark, path, version).path("partitions")
-    if (!parts.isObject) None
-    else Some(
-      scala.jdk.CollectionConverters.IterableHasAsScala(parts.properties()).asScala.iterator
-        .map(e => e.getKey -> e.getValue.asLong()).toMap
-    )
-  }
-
-  /** The manifest every reader and writer resolves a version through. A
-    * commit json without a `partitions` object is not a table this layout
-    * can read — refused, naming the path and version.
-    */
-  private[graft] def manifest(spark: SparkSession, path: String, version: Long): Map[String, Long] =
-    partitionMap(spark, path, version).getOrElse(
-      throw new IllegalStateException(s"version $version of $path has no partitions manifest"))
+  def partitionMap(spark: SparkSession, path: String, version: Long): Option[Map[String, Long]] =
+    Snapshot.at(spark, path, version).partitionMap
 
   private def jsonStr(s: String): String = graft.core.Json.str(s)
 
   /** Read a specific version, or the latest committed one. Each partition
     * resolves to the version dir that last rewrote it.
     */
-  def read(spark: SparkSession, path: String, version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(latestVersion(spark, path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path")
-    )
-    // merge-on-read: deletion vectors pending at v filter EVERY read path
-    // (deferred deletes are visible from their commit version onward),
-    // boundary-scoped so partitions written AFTER a delete are exempt
-    readWithDv(spark, path, dvMarkers(spark, path, v).values.toSeq.sorted, manifest(spark, path, v).toSeq)
-  }
+  def read(spark: SparkSession, path: String, version: Option[Long] = None): DataFrame =
+    read(spark, Snapshot.resolve(spark, path, version))
+
+  private[graft] def read(spark: SparkSession, snap: Snapshot): DataFrame =
+    // merge-on-read: deletion vectors pending at the snapshot filter EVERY
+    // read path (deferred deletes are visible from their commit version
+    // onward), boundary-scoped so partitions written AFTER a delete are
+    // exempt
+    readWithDv(spark, snap, snap.partitions.toSeq)
 
   /** Pruned read of ONE partition — the scan a point query / per-bucket job
     * does instead of touching the whole table. Partitions the table has
@@ -787,16 +798,17 @@ object VersionedTable {
 
   /** Pruned read of several partitions as ONE relation with ONE manifest
     * read (round-18, guide §2.4/§6): all requested dirs of each DV-group go
-    * to a single mergeSchema read (exactly [[read]]'s own assembly, via
-    * [[readWithDv]]), so the read plans and lists once and downstream
+    * to a single read under the commit log's schema (exactly [[read]]'s
+    * own assembly, via [[readWithDv]]), so the read plans and lists once
+    * and downstream
     * joins see one relation — a per-bucket relation + union planned 16
     * leaf scans, 16 file listings and a 16-way union per touched-bucket
     * read of a 16-bucket upsert. Returns None when none of the requested
     * partitions exist. Merge-on-read applies here too: the SCD-2
     * touched-bucket rebuild reads through this path, and without the DV
     * filter an upsert would copy doomed rows back into the buckets it
-    * rewrites. Cross-commit numeric TYPE drift (e.g. int -> long widening
-    * across versions) is REFUSED by the mergeSchema read — the
+    * rewrites. Cross-commit TYPE drift (e.g. int -> long widening across
+    * versions) is REFUSED by the schema fold ([[tableSchema]]) — the
     * delta-commit write path never produces such tables (the schema is
     * recorded per commit and upserts write the merged batch), and tables
     * that need widening semantics read via [[readWidened]].
@@ -806,14 +818,13 @@ object VersionedTable {
       path: String,
       parts: Seq[String],
       version: Option[Long] = None
-  ): Option[DataFrame] = {
-    val v = version.orElse(latestVersion(spark, path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path")
-    )
-    val m = manifest(spark, path, v)
-    val present = parts.distinct.flatMap(p => m.get(p).map(pv => p -> pv))
+  ): Option[DataFrame] =
+    readPartitionsUnioned(spark, Snapshot.resolve(spark, path, version), parts)
+
+  private[graft] def readPartitionsUnioned(spark: SparkSession, snap: Snapshot, parts: Seq[String]): Option[DataFrame] = {
+    val present = parts.distinct.flatMap(p => snap.partitions.get(p).map(pv => p -> pv))
     if (present.isEmpty) None
-    else Some(readWithDv(spark, path, dvMarkers(spark, path, v).values.toSeq.sorted, present))
+    else Some(readWithDv(spark, snap, present))
   }
 
   /** CDC DOWNSTREAM APPLY — the consumer half of [[changeFeed]]: apply a
@@ -868,14 +879,13 @@ object VersionedTable {
     val feedC = graft.core.Caching.cached(feed)
     val touched = feedC.select(col(partCol).cast("string")).distinct()
       .collect().map(_.getString(0)).sorted.toSeq
-    if (touched.isEmpty)
-      latestVersion(spark, replicaPath).getOrElse(
-        throw new IllegalArgumentException(s"no committed versions at $replicaPath"))
+    val replica = Snapshot.resolve(spark, replicaPath)
+    if (touched.isEmpty) replica.version
     else {
       // single-relation touched read (round-18): the anti join distributes
       // over the bucket union, so one scan + one join replaces a
       // per-bucket join fan-out (same broadcast dict either way)
-      val existing = readPartitionsUnioned(spark, replicaPath, touched)
+      val existing = readPartitionsUnioned(spark, replica, touched)
       val allKeys = feedC.select(keyCols.map(col): _*).distinct()
       val adds = feedC
         .filter(col("_change_type").isin("insert", "update_postimage"))
@@ -916,7 +926,7 @@ object VersionedTable {
     // the WHOLE attempt re-runs on a commit conflict so the re-read rebases
     // on the new latest version
     // single-relation touched read (round-18): filter distributes over the
-    // bucket union; mergeSchema null-pads drift as the union did
+    // bucket union; the schema fold null-pads drift as the union did
     val existing = readPartitionsUnioned(spark, path, touchedParts)
     require(existing.nonEmpty, s"none of ${touchedParts.mkString(",")} exist at $path — nothing to delete")
     // SQL DELETE semantics: remove rows where the predicate is TRUE; rows
@@ -953,10 +963,9 @@ object VersionedTable {
     // Long.MinValue would underflow the zone upper bound below into "touch
     // everything" — and means "delete nothing" anyway
     require(cutoffExclusive > Long.MinValue, "retentionSweep: cutoffExclusive must be > Long.MinValue")
-    val (touched, _) = zonePrunePlan(spark, path, statsCol, Long.MinValue, cutoffExclusive - 1)
-    if (touched.isEmpty)
-      latestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"no committed versions at $path"))
+    val snap = Snapshot.resolve(spark, path)
+    val (touched, _) = zonePrunePlan(snap, statsCol, Long.MinValue, cutoffExclusive - 1)
+    if (touched.isEmpty) snap.version
     else
       // statsCols: re-record the zone map on the rewritten (straddling)
       // partitions, so the NEXT sweep still prunes them — without it the
@@ -983,9 +992,9 @@ object VersionedTable {
     // clearing every prior partition drops any partition whose rows were
     // ALL deleted (it writes no data and must not carry stale bytes
     // forward).
-    val prevParts = latestVersion(spark, path).map(manifest(spark, path, _).keys.toSeq).getOrElse(Nil)
-    val current = read(spark, path).repartition(col(partCol))
-    commitDelta(spark, path, current, partCol, clearedParts = prevParts, clearDv = true)
+    val snap = Snapshot.resolve(spark, path)
+    val current = read(spark, snap).repartition(col(partCol))
+    commitDelta(spark, path, current, partCol, clearedParts = snap.partitions.keys.toSeq, clearDv = true)
   }
 
   /** VACUUM: delete version data no commit at-or-above `retainVersions`-ago
@@ -1002,10 +1011,10 @@ object VersionedTable {
     val f = fs(spark, path)
     val committed = committedVersions(f, path).sorted
     if (committed.isEmpty) return Nil
-    val retained = committed.takeRight(retainVersions)
+    val retained = committed.takeRight(retainVersions).map(Snapshot.at(spark, path, _))
     // every v-dir any retained manifest references stays (delta commits
     // reference OLDER version dirs for carried-forward partitions)
-    val referenced: Set[Long] = retained.toSet ++ retained.flatMap(manifest(spark, path, _).values)
+    val referenced: Set[Long] = retained.map(_.version).toSet ++ retained.flatMap(_.partitions.values)
     // a version with a live reservation marker may belong to an IN-FLIGHT
     // writer (reserved, data staged, publish not yet run) — deleting it
     // would corrupt the commit that then publishes. Only reclaim reserved
@@ -1031,7 +1040,7 @@ object VersionedTable {
     // the pre-compact versions, the doomed bytes' last index dies here —
     // the point where a GDPR delete becomes physically irreversible)
     val referencedDv: Set[String] =
-      retained.flatMap(v => dvMarkers(spark, path, v).values.map(_.split("\\|", 2)(0))).toSet
+      retained.flatMap(_.fields("dv:").values.map(_.split("\\|", 2)(0))).toSet
     val dvDir = new Path(s"$path/_dv")
     if (f.exists(dvDir))
       f.listStatus(dvDir).foreach { st =>
@@ -1061,8 +1070,8 @@ object VersionedTable {
     * rounds), and a feed that is never fully executed never evaluates the
     * guard. Callers that catch the old exception type must adapt. Schema
     * drift between the versions is null-padded (typed nulls, mirroring
-    * `read`'s mergeSchema behavior); a column added between versions
-    * surfaces as `update_*` pairs with the preimage null.
+    * `read`'s schema fold); a column added between versions surfaces as
+    * `update_*` pairs with the preimage null.
     *
     * Output: the union of both versions' columns plus `_change_type`;
     * unchanged rows emit nothing.
@@ -1077,24 +1086,25 @@ object VersionedTable {
     import org.apache.spark.sql.functions._
     require(fromVersion < toVersion, s"changeFeed: fromVersion $fromVersion must precede toVersion $toVersion")
     require(keyCols.nonEmpty, "changeFeed: keyCols must be non-empty")
-    val mOld = manifest(spark, path, fromVersion)
-    val mNew = manifest(spark, path, toVersion)
+    val (sOld, sNew) = (Snapshot.at(spark, path, fromVersion), Snapshot.at(spark, path, toVersion))
+    val (mOld, mNew) = (sOld.partitions, sNew.partitions)
     val changed = (mOld.keySet ++ mNew.keySet).filter(p => mOld.get(p) != mNew.get(p)).toSeq.sorted
 
     // one multi-dir relation per side (round-18, guide §2.4): the previous
     // per-partition read + unionByName planned one leaf scan per changed
-    // bucket per side (2 x 16 scans for the q106 feed); mergeSchema
+    // bucket per side (2 x 16 scans for the q106 feed); the schema fold
     // null-pads cross-commit drift exactly as the union did
-    def side(m: Map[String, Long]): Option[DataFrame] = {
-      val dirs = changed.flatMap(p => m.get(p).map(pv => s"$path/v=$pv/p=$p"))
-      if (dirs.isEmpty) None
-      else Some(spark.read.option("mergeSchema", "true").parquet(dirs: _*))
+    def side(snap: Snapshot): Option[DataFrame] = {
+      val parts = changed.flatMap(p => snap.partitions.get(p).map(p -> _))
+      if (parts.isEmpty) None
+      else Some(spark.read.schema(tableSchema(spark, snap, parts))
+        .parquet(parts.map { case (p, pv) => s"$path/v=$pv/p=$p" }: _*))
     }
 
-    (side(mOld), side(mNew)) match {
+    (side(sOld), side(sNew)) match {
       case (None, None) =>
         // no changed partitions at all: an empty feed with just the keys
-        val empty = read(spark, path, Some(toVersion)).limit(0)
+        val empty = read(spark, sNew).limit(0)
         empty.select(empty.columns.map(col) :+ lit("insert").as("_change_type"): _*).limit(0)
       case (oldSide, newSide) =>
         val oldDf = oldSide

@@ -111,7 +111,7 @@ class StreamingSpec extends AnyFunSuite {
     runStream(s"$tmp/srcB", s"$tmp/ckptB2", "B")
     assert(VersionedTable.read(spark, wh).count() == 2)
     val latest = VersionedTable.latestVersion(spark, wh).get
-    assert(VersionedTable.streamMarkers(spark, wh, latest).keySet ==
+    assert(VersionedTable.Snapshot.at(spark, wh, latest).fields("stream_batch").keySet ==
       Set("stream_batch:A", "stream_batch:B"))
   }
 

@@ -230,9 +230,39 @@ class VersionedTableSpec extends AnyFunSuite {
     // widened schema rewrite of bucket 1 only
     VersionedTable.commitDelta(spark, path, Seq((1L, 2, "extra")).toDF("bucket", "id", "note"), "bucket")
     val t = VersionedTable.read(spark, path)
-    assert(t.columns.sorted.toSeq == Seq("bucket", "id", "note"))
+    assert(t.columns.toSeq == Seq("bucket", "id", "note"))
     val rows = t.collect().map(r => (r.getLong(0), Option(r.getAs[String]("note")))).toMap
     assert(rows(0L).isEmpty && rows(1L).contains("extra"))
+
+    // planning a read takes its schema from the commit log: no footer job
+    val sc = spark.sparkContext
+    val group = s"plan-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "planning only")
+    try {
+      VersionedTable.read(spark, path)
+      VersionedTable.readPartition(spark, path, "1")
+      VersionedTable.changeFeed(spark, path, 1L, 2L, Seq("id"))
+      VersionedTable.readWidened(spark, path)
+    } finally sc.clearJobGroup()
+    val jobs = sc.statusTracker.getJobIdsForGroup(group)
+    assert(jobs.isEmpty, s"planning launched ${jobs.length} job(s)")
+  }
+
+  test("a column recorded as INT by one commit and LONG by another is refused; readWidened widens it") {
+    val path = Files.createTempDirectory("graft-vt-conflict").toString + "/t"
+    VersionedTable.commitDelta(spark, path, Seq((0, "x")).toDF("v", "p"), "p") // v1: x, v INT
+    VersionedTable.commitDelta(spark, path, Seq((1, "a")).toDF("v", "p"), "p") // v2: a, v INT
+    VersionedTable.commitDelta(spark, path, Seq((2L, "b")).toDF("v", "p"), "p") // v3: b, v LONG
+    def refused(what: String)(body: => Any): Unit = {
+      val e = intercept[Exception](body)
+      assert(e.getMessage.toLowerCase.contains("merg"), s"$what: expected a schema-merge refusal, got ${e.getMessage}")
+    }
+    refused("read")(VersionedTable.read(spark, path).collect())
+    refused("readPartitionsUnioned")(VersionedTable.readPartitionsUnioned(spark, path, Seq("a", "b")).get.collect())
+    refused("changeFeed")(VersionedTable.changeFeed(spark, path, 1L, 3L, Seq("p")).collect())
+    val w = VersionedTable.readWidened(spark, path)
+    assert(w.schema("v").dataType == org.apache.spark.sql.types.LongType)
+    assert(w.select("v").as[Long].collect().sorted.toSeq == Seq(0L, 1L, 2L))
   }
 
   test("compact folds accumulated small files into one file per partition; vacuum then reclaims") {
@@ -355,7 +385,7 @@ class VersionedTableSpec extends AnyFunSuite {
     VersionedTable.commitDelta(spark, path, Seq((1L, 2, "b2")).toDF("bucket", "id", "v"), "bucket")
     VersionedTable.compact(spark, path, "bucket")
     val latest = VersionedTable.latestVersion(spark, path).get
-    assert(VersionedTable.streamMarkers(spark, path, latest) == Map("stream_batch:s1" -> "5"))
+    assert(VersionedTable.Snapshot.at(spark, path, latest).fields("stream_batch") == Map("stream_batch:s1" -> "5"))
     // vacuum away every older version INCLUDING the marker-bearing commit's
     // own json — the carried copy in the newest manifest must survive (the
     // re-delivered-after-maintenance exactly-once case)
@@ -367,7 +397,7 @@ class VersionedTableSpec extends AnyFunSuite {
       spark, path, Seq((0L, 1, "a3")).toDF("bucket", "id", "v"), "bucket",
       extraMeta = Map("stream_batch:s2" -> "1"))
     val l2 = VersionedTable.latestVersion(spark, path).get
-    assert(VersionedTable.streamMarkers(spark, path, l2) == Map("stream_batch:s1" -> "5", "stream_batch:s2" -> "1"))
+    assert(VersionedTable.Snapshot.at(spark, path, l2).fields("stream_batch") == Map("stream_batch:s1" -> "5", "stream_batch:s2" -> "1"))
   }
 
   test("commitDelta validates partition values during staging and cleans up on abort") {
@@ -517,7 +547,7 @@ class VersionedTableSpec extends AnyFunSuite {
     // delta commit rewriting ONLY hi (no statsCols): lo inherits its zone
     // entry along the lineage, hi drops its now-stale entry -> always scanned
     VersionedTable.commitDelta(spark, path, Seq((999L, "hi")).toDF("k", "p"), "p")
-    val zones = VersionedTable.zoneMarkers(spark, path, VersionedTable.latestVersion(spark, path).get)
+    val zones = VersionedTable.Snapshot.resolve(spark, path).fields("zone:")
     assert(zones.keySet == Set("zone:k:lo"), s"expected only lo's inherited entry, got $zones")
     val (scan2, skip2) = VersionedTable.zonePrunePlan(spark, path, "k", 2L, 9L)
     assert(scan2.sorted == Seq("hi", "lo") && skip2.isEmpty, "stat-less partition must be scanned")
@@ -534,7 +564,7 @@ class VersionedTableSpec extends AnyFunSuite {
     val p2 = Files.createTempDirectory("graft-vt-zm2").toString + "/t"
     val nulls = Seq((Some(1L), "a"), (None: Option[Long], "b")).toDF("k", "p")
     VersionedTable.commitDelta(spark, p2, nulls, "p", statsCols = Seq("k"))
-    val z2 = VersionedTable.zoneMarkers(spark, p2, VersionedTable.latestVersion(spark, p2).get)
+    val z2 = VersionedTable.Snapshot.resolve(spark, p2).fields("zone:")
     assert(z2.keySet == Set("zone:k:a"))
     val (scanN, skipN) = VersionedTable.zonePrunePlan(spark, p2, "k", 100L, 200L)
     assert(scanN == Seq("b") && skipN == Seq("a"))
@@ -569,7 +599,7 @@ class VersionedTableSpec extends AnyFunSuite {
     // compact = the physical pass: vectors applied, entries cleared,
     // fully-deleted partitions dropped rather than carried stale
     val vc = VersionedTable.compact(spark, path, "p")
-    assert(VersionedTable.dvMarkers(spark, path, vc).isEmpty, "compact must spend the vectors")
+    assert(VersionedTable.Snapshot.at(spark, path, vc).fields("dv:").isEmpty, "compact must spend the vectors")
     assert(keys() == Set(5L, 4L))
     // vacuum with a window past the pre-compact manifests reclaims the sidecar
     VersionedTable.vacuum(spark, path, retainVersions = 1, orphanGraceMs = 0L)
@@ -600,7 +630,7 @@ class VersionedTableSpec extends AnyFunSuite {
       .select("k").as[Long].collect().toSet == Set(1L, 2L))
     // compact (the physical pass) preserves the re-insert and spends the vector
     val vc = VersionedTable.compact(spark, path, "p")
-    assert(VersionedTable.dvMarkers(spark, path, vc).isEmpty)
+    assert(VersionedTable.Snapshot.at(spark, path, vc).fields("dv:").isEmpty)
     assert(keys() == Set(1L, 2L), "compact must not re-suppress the re-insert")
   }
 
