@@ -800,10 +800,9 @@ object VersionedTable {
     * read (round-18, guide §2.4/§6): all requested dirs of each DV-group go
     * to a single read under the commit log's schema (exactly [[read]]'s
     * own assembly, via [[readWithDv]]), so the read plans and lists once
-    * and downstream
-    * joins see one relation — a per-bucket relation + union planned 16
-    * leaf scans, 16 file listings and a 16-way union per touched-bucket
-    * read of a 16-bucket upsert. Returns None when none of the requested
+    * and downstream joins see one relation — a per-bucket relation +
+    * union planned 16 leaf scans, 16 file listings and a 16-way union per
+    * touched-bucket read of a 16-bucket upsert. Returns None when none of the requested
     * partitions exist. Merge-on-read applies here too: the SCD-2
     * touched-bucket rebuild reads through this path, and without the DV
     * filter an upsert would copy doomed rows back into the buckets it
