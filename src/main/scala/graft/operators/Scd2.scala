@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.sources.VersionedTable
+
 /** SCD Type-2 upsert, the reference's core load operator (O-SCD2).
   *
   * Reference semantics (loading.py:25-133, canonical `load_ad_unit`, repeated
@@ -176,37 +178,44 @@ object Scd2 {
       keyCols: Seq[String],
       nBuckets: Int,
       now: Column,
-      bucketCol: String = "key_bucket",
-      maxRetries: Int = 3,
-      commitMeta: Map[String, String] = Map.empty
-  ): Long = {
-    import graft.sources.VersionedTable
-    def attempt(): Long = graft.core.Caching.scoped {
-      // operator-scoped cache of the bucketed batch (round-18, guide §2.4):
-      // the batch subtree (often a window/join pipeline) is referenced by
-      // the touched-list collect, the upsert's key set, and the inserted
-      // branch — uncached it re-executed up to 3x per load. Batch-sized
-      // (bounded by the load, not the table), MEMORY_AND_DISK, released at
-      // commit; recomputed per invocation, never across runs.
-      val b = graft.core.Caching.cached(batch.withColumn(bucketCol, keyBucket(keyCols, nBuckets)))
-      // bounded driver-side list: at most nBuckets values
-      val touched = b.select(bucketCol).distinct().collect().map(_.getLong(0)).sorted
-      val targetTouched = VersionedTable.latestVersion(spark, warehousePath) match {
-        case Some(v) =>
-          // one manifest read + ONE multi-dir relation for every touched
-          // bucket (round-18: was one scan per bucket + a 16-way union);
-          // the schema fold null-pads drift as the union did
-          VersionedTable.readPartitionsUnioned(spark, warehousePath, touched.map(_.toString).toSeq, Some(v))
-            .getOrElse(emptyTarget(b, bucketCol))
-        case None => emptyTarget(b, bucketCol)
-      }
-      val result = upsert(targetTouched, b, keyCols, now)
-      VersionedTable.commitDelta(spark, warehousePath, result, bucketCol, extraMeta = commitMeta)
-    }
-    // a losing concurrent writer aborts with ConcurrentModificationException;
-    // the whole attempt (target read + upsert + commit) rebases on the new
-    // latest version and retries — the optimistic-concurrency loop
-    VersionedTable.withCommitRetry(maxRetries)(attempt())
+      bucketCol: String = "key_bucket"
+  ): Long =
+    VersionedTable.withLatest(spark, warehousePath)(
+      upsertPartitionedOn(spark, _, warehousePath, batch, keyCols, nBuckets, now, bucketCol, Map.empty))
+
+  /** One [[upsertPartitioned]] attempt: reads the touched buckets of
+    * `target` (None: the warehouse has no commit yet) and commits on it,
+    * with `marker` riding the manifest (a stream sink's exactly-once
+    * marker, checked on the same snapshot).
+    */
+  private[graft] def upsertPartitionedOn(
+      spark: org.apache.spark.sql.SparkSession,
+      target: Option[VersionedTable.Snapshot],
+      warehousePath: String,
+      batch: DataFrame,
+      keyCols: Seq[String],
+      nBuckets: Int,
+      now: Column,
+      bucketCol: String,
+      marker: Map[String, String]
+  ): Long = graft.core.Caching.scoped {
+    // operator-scoped cache of the bucketed batch (round-18, guide §2.4):
+    // the batch subtree (often a window/join pipeline) is referenced by
+    // the touched-list collect, the upsert's key set, and the inserted
+    // branch — uncached it re-executed up to 3x per load. Batch-sized
+    // (bounded by the load, not the table), MEMORY_AND_DISK, released at
+    // commit; recomputed per invocation, never across runs.
+    val b = graft.core.Caching.cached(batch.withColumn(bucketCol, keyBucket(keyCols, nBuckets)))
+    // bounded driver-side list: at most nBuckets values
+    val touched = b.select(bucketCol).distinct().collect().map(_.getLong(0)).sorted.map(_.toString).toSeq
+    // ONE multi-dir relation for every touched bucket (round-18: was one
+    // scan per bucket + a 16-way union); the schema fold null-pads drift
+    // as the union did
+    val targetTouched = target
+      .flatMap(VersionedTable.readPartitionsUnioned(spark, _, touched))
+      .getOrElse(emptyTarget(b, bucketCol))
+    val result = upsert(targetTouched, b, keyCols, now)
+    VersionedTable.commitDeltaOn(spark, warehousePath, target, result, bucketCol, extraMeta = marker)
   }
 
   /** GDPR / takedown deletion on a bucketed SCD-2 warehouse: removes EVERY
@@ -225,15 +234,14 @@ object Scd2 {
       keyCols: Seq[String],
       nBuckets: Int,
       bucketCol: String = "key_bucket"
-  ): Long = graft.sources.VersionedTable.withCommitRetry() {
-    import graft.sources.VersionedTable
+  ): Long = VersionedTable.withLatest(spark, warehousePath) { latest =>
+    val snap = latest.getOrElse(VersionedTable.noCommits(warehousePath))
     val doomed = keys.select(keyCols.map(col): _*).distinct()
     val touched = doomed
       .withColumn(bucketCol, keyBucket(keyCols, nBuckets))
       .select(bucketCol).distinct().collect().map(_.getLong(0)).sorted.map(_.toString).toSeq
     // single-relation touched read (round-18): the anti join distributes
     // over the bucket union — one scan + one join instead of per-bucket
-    val snap = VersionedTable.Snapshot.resolve(spark, warehousePath)
     VersionedTable.readPartitionsUnioned(spark, snap, touched) match {
       case None => snap.version
       case Some(part) =>
@@ -243,7 +251,7 @@ object Scd2 {
         val d = doomed.toDF(keyCols.map(c => s"__del_$c"): _*)
         val cond = keyCols.map(c => part(c) <=> d(s"__del_$c")).reduce(_ && _)
         val kept = part.join(broadcast(d), cond, "left_anti")
-        VersionedTable.commitDelta(spark, warehousePath, kept, bucketCol, clearedParts = touched)
+        VersionedTable.commitDeltaOn(spark, warehousePath, latest, kept, bucketCol, clearedParts = touched)
     }
   }
 

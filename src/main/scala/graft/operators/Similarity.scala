@@ -908,33 +908,33 @@ object Similarity {
   /** Append a batch of vectors to a [[writeResidualPqIndex]] table — the
     * maintenance half of a SERVING ANN index under continuous ingestion:
     * encode the batch in residual space, read ONLY the touched cell
-    * partitions, union, and publish one delta version. Cost is
-    * O(batch + touched cells), never the index size; untouched cells
-    * carry forward by manifest reference. `extraMeta` lets a streaming
-    * consumer ride its exactly-once `stream_batch:<id>` marker on the
-    * commit ([[graft.streaming.Streaming.vectorIndexSink]]). For cells
-    * that outgrow a comfortable rewrite (billions of vectors), shard the
-    * partition key to (cell, hash-shard) — the same touched-bucket trade
-    * SCD-2 makes.
+    * partitions of `index` (the snapshot the caller's attempt resolved),
+    * union, and publish one delta version on it carrying `marker` (the
+    * exactly-once marker of [[graft.streaming.Streaming.vectorIndexSink]],
+    * checked on the same snapshot). Cost is O(batch + touched cells),
+    * never the index size; untouched cells carry forward by manifest
+    * reference. For cells that outgrow a comfortable rewrite (billions of
+    * vectors), shard the partition key to (cell, hash-shard) — the same
+    * touched-bucket trade SCD-2 makes.
     */
-  def appendResidualPqBatch(
+  private[graft] def appendResidualPqBatch(
       spark: org.apache.spark.sql.SparkSession,
-      path: String,
+      index: graft.sources.VersionedTable.Snapshot,
       df: DataFrame,
       idCol: String,
       vecCol: String,
       dim: Int,
       coarse: Seq[(Long, Seq[Double])],
       codebooks: Seq[Seq[(Long, Seq[Double])]],
-      extraMeta: Map[String, String] = Map.empty
+      marker: Map[String, String]
   ): Long = graft.core.Caching.scoped {
     val enc = graft.core.Caching.cached(encodeResidualPq(df, idCol, vecCol, dim, coarse, codebooks))
     // bounded collect: at most nCells distinct values (the coarse k)
     val touched = enc.select(col("cell")).distinct().collect().map(_.getLong(0).toString).toSeq
     // one multi-dir relation for the touched cells (round-18)
-    val existing = graft.sources.VersionedTable.readPartitionsUnioned(spark, path, touched)
+    val existing = graft.sources.VersionedTable.readPartitionsUnioned(spark, index, touched)
     val updated = (enc +: existing.toSeq).reduce(_.unionByName(_))
-    graft.sources.VersionedTable.commitDelta(spark, path, updated, "cell", extraMeta = extraMeta)
+    graft.sources.VersionedTable.commitDeltaOn(spark, index.path, Some(index), updated, "cell", extraMeta = marker)
   }
 
   /** Serve a top-k from a [[writeResidualPqIndex]] table: open exactly the

@@ -104,7 +104,7 @@ object Pipeline {
       notifier: graft.core.Drift.Notifier
   ): Unit = {
     import graft.sources.VersionedTable
-    VersionedTable.latestVersion(spark, warehousePath).foreach { latest =>
+    VersionedTable.latestSnapshot(spark, warehousePath).foreach { snap =>
       val bookkeeping = Set("actv_flg", "record_to", "key_bucket")
       // column names come from the commit manifests' schema JSON — commit-
       // count-sized driver work, no parquet footer read across the
@@ -115,8 +115,7 @@ object Pipeline {
       // superseded history would otherwise count as 'existing' forever,
       // its removal never reported and its re-introduction silently
       // suppressed as an added-column event
-      val snap = VersionedTable.Snapshot.at(spark, warehousePath, latest)
-      val contributing = (snap.partitions.values.toSeq :+ latest).distinct.sorted
+      val contributing = (snap.partitions.values.toSeq :+ snap.version).distinct.sorted
       val existing = VersionedTable.foldSchemas(spark, snap, contributing).fieldNames.toSeq.filterNot(bookkeeping)
       val incoming = staged.columns.toSeq
       graft.core.Drift.emit(

@@ -58,23 +58,6 @@ object DeltaExport {
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** All parquet files (path relative to table root, size, mtime) a given
-    * source version's manifest references, sorted by path.
-    */
-  private def referencedFiles(spark: SparkSession, snap: VersionedTable.Snapshot): Seq[(String, Long, Long)] = {
-    val path = snap.path
-    val f = fs(spark, path)
-    val dirs = snap.partitions.toSeq.sortBy(_._1).map { case (p, pv) => s"v=$pv/p=$p" }
-    dirs.flatMap { d =>
-      val dp = new Path(s"$path/$d")
-      if (!f.exists(dp)) Nil
-      else
-        f.listStatus(dp).toSeq
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .map(s => (s"$d/${s.getPath.getName}", s.getLen, s.getModificationTime))
-    }.sortBy(_._1)
-  }
-
   /** Rewrite a manifest schema into its column-mapped logical twin:
     * every field (any nesting depth, through arrays and maps) gains
     * `delta.columnMapping.id` + `delta.columnMapping.physicalName`
@@ -178,22 +161,17 @@ object DeltaExport {
     val partColsJson = partCol
       .map(c => s"[${Json.str(renames.getOrElse(c, c))}]")
       .getOrElse("[]")
-    val partRe = "(?:^|/)p=([^/]+)/".r
-    def partValuesJson(filePath: String): String = partCol match {
-      case None => "{}"
-      case Some(c) =>
-        val v = partRe.findFirstMatchIn(filePath).map(_.group(1)).getOrElse(
-          throw new IllegalStateException(s"partitioned export: file $filePath has no p= segment"))
-        s"{${Json.str(c)}:${Json.str(v)}}"
-    }
+    def partValuesJson(part: String): String = partCol.fold("{}")(c => s"{${Json.str(c)}:${Json.str(part)}}")
     val tableId = java.util.UUID.nameUUIDFromBytes(path.getBytes("UTF-8")).toString
     val colIds = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    var prevFiles = Map.empty[String, (Long, Long)]
+    var prevFiles = Map.empty[String, (Long, Long, String)]
     var prevSchema: Option[String] = None
     var prevMarkers = Map.empty[String, String]
     snaps.zipWithIndex.map { case (snap, i) =>
       val v = snap.version
-      val files = referencedFiles(spark, snap).map { case (p, sz, mt) => p -> (sz, mt) }.toMap
+      val files = VersionedTable.dataFiles(spark, snap).map { case (p, part, st) =>
+        p -> (st.getLen, st.getModificationTime, part)
+      }.toMap
       val schema = snap.schemaJson
       val now = System.currentTimeMillis()
       val (schemaOut, configJson) =
@@ -234,8 +212,8 @@ object DeltaExport {
           s"""{"txn":{"appId":${Json.str(k.stripPrefix("stream_batch:"))},"version":$value,"lastUpdated":$now}}"""
         }
       val adds = (files.keySet -- prevFiles.keySet).toSeq.sorted.map { p =>
-        val (sz, mt) = files(p)
-        s"""{"add":{"path":${Json.str(p)},"partitionValues":${partValuesJson(p)},"size":$sz,"modificationTime":$mt,"dataChange":true}}"""
+        val (sz, mt, part) = files(p)
+        s"""{"add":{"path":${Json.str(p)},"partitionValues":${partValuesJson(part)},"size":$sz,"modificationTime":$mt,"dataChange":true}}"""
       }
       val removes = (prevFiles.keySet -- files.keySet).toSeq.sorted.map { p =>
         s"""{"remove":{"path":${Json.str(p)},"deletionTimestamp":$now,"dataChange":true}}"""

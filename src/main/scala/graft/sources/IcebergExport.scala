@@ -319,27 +319,15 @@ object IcebergExport {
       s"""[{"name": ${Json.str(n)}, "transform": ${Json.str(transform)}, "source-id": ${topIds(partSrc.get._1)}, "field-id": 1000}]"""
     }.getOrElse("[]")
 
-    // files live at each version (relative path, size, partition value),
-    // via the same manifest walk DeltaExport uses; first-referencing
-    // snapshot tracked so carried-forward files export as EXISTING
-    def referencedFiles(snap: VersionedTable.Snapshot): Seq[(String, Long, String)] = {
-      val dirs = snap.partitions.toSeq.sortBy(_._1).map { case (p, pv) => (s"v=$pv/p=$p", p) }
-      dirs.flatMap { case (d, part) =>
-        val dp = new Path(s"$path/$d")
-        if (!f.exists(dp)) Nil
-        else
-          f.listStatus(dp).toSeq
-            .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-            .map(s => (s"$d/${s.getPath.getName}", s.getLen, part))
-      }.sortBy(_._1)
-    }
-
     val added = scala.collection.mutable.Map.empty[String, (Long, Long)] // rel path -> (snapshotId, seq)
     val counts = scala.collection.mutable.Map.empty[String, Long]        // rel path -> record count
     val snapshots = snaps.zipWithIndex.map { case (snap, i) =>
       val v = snap.version
       val seq = i + 1L
-      val live = referencedFiles(snap)
+      // files live at this version (relative path, size, partition value);
+      // the first-referencing snapshot is tracked so carried-forward files
+      // export as EXISTING
+      val live = VersionedTable.dataFiles(spark, snap).map { case (rel, part, st) => (rel, st.getLen, part) }
       live.foreach { case (rel, _, _) =>
         if (!added.contains(rel)) {
           added(rel) = (v, seq)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
@@ -50,6 +50,26 @@ object VersionedTable {
 
   def latestVersion(spark: SparkSession, path: String): Option[Long] =
     committedVersions(fs(spark, path), path).maxOption
+
+  /** The latest committed snapshot; None while the table has no commit. */
+  private[graft] def latestSnapshot(spark: SparkSession, path: String): Option[Snapshot] =
+    latestVersion(spark, path).map(Snapshot.at(spark, path, _))
+
+  private[graft] def noCommits(path: String): Nothing =
+    throw new IllegalArgumentException(s"no committed versions at $path")
+
+  /** One optimistic read-modify-commit cycle: `attempt` reads through,
+    * checks markers on and commits on ([[commitDeltaOn]]) ONE latest
+    * snapshot (None: no commit yet). A commit overtaken since that snapshot
+    * aborts with ConcurrentModificationException and the whole attempt
+    * re-runs on a fresh one, at most 3 more times.
+    */
+  private[graft] def withLatest[T](spark: SparkSession, path: String)(attempt: Option[Snapshot] => T): T = {
+    def run(retries: Int): T =
+      try attempt(latestSnapshot(spark, path))
+      catch { case _: java.util.ConcurrentModificationException if retries > 0 => run(retries - 1) }
+    run(3)
+  }
 
   /** Reserve the next free version number with an exclusive create of
     * `_commits/N.reserved`. The reservation IS the write lock: losing the
@@ -125,6 +145,23 @@ object VersionedTable {
       partCol: String,
       clearedParts: Seq[String] = Nil,
       extraMeta: Map[String, String] = Map.empty,
+      statsCols: Seq[String] = Nil
+  ): Long =
+    commitDeltaOn(spark, path, latestSnapshot(spark, path), updated, partCol, clearedParts, extraMeta, statsCols)
+
+  /** [[commitDelta]] on `base` (None: no commit yet), evaluated once after
+    * the version is reserved: the blind [[commitDelta]] passes the latest
+    * snapshot, a [[withLatest]] attempt the snapshot it read. A commit
+    * published since `base` makes this one abort at publish time.
+    */
+  private[graft] def commitDeltaOn(
+      spark: SparkSession,
+      path: String,
+      base: => Option[Snapshot],
+      updated: DataFrame,
+      partCol: String,
+      clearedParts: Seq[String] = Nil,
+      extraMeta: Map[String, String] = Map.empty,
       statsCols: Seq[String] = Nil,
       clearDv: Boolean = false
   ): Long = {
@@ -141,13 +178,12 @@ object VersionedTable {
       require(c.matches("[A-Za-z0-9_]+"), s"statsCols name '$c' must be [A-Za-z0-9_]+ (it keys manifest fields)"))
     val f = fs(spark, path)
     val v = reserveVersion(f, path)
-    // base version read AFTER reserving; re-checked at publish time so a
-    // concurrent delta commit can't be silently reverted by our stale
-    // carry-forward manifest (optimistic concurrency: the loser aborts and
-    // retries on a fresh base)
-    val base = latestVersion(spark, path).map(Snapshot.at(spark, path, _))
-    val baseVersion = base.map(_.version)
-    val prev = base.map(_.partitions).getOrElse(Map.empty[String, Long])
+    // the base is re-checked at publish time so a concurrent delta commit
+    // can't be silently reverted by our stale carry-forward manifest
+    // (optimistic concurrency: the loser aborts and retries on a fresh base)
+    val baseSnap = base
+    val baseVersion = baseSnap.map(_.version)
+    val prev = baseSnap.map(_.partitions).getOrElse(Map.empty[String, Long])
     // exactly-once stream markers ride ALONG THE LINEAGE: every delta commit
     // (loads, deletions, compaction) inherits the base manifest's
     // `stream_batch:*` fields, so the NEWEST commit always carries them and
@@ -160,8 +196,8 @@ object VersionedTable {
     // table, so the entries are spent)
     val inheritedDv =
       if (clearDv) Map.empty[String, String]
-      else base.map(_.fields("dv:")).getOrElse(Map.empty[String, String])
-    val meta = base.map(_.fields("stream_batch")).getOrElse(Map.empty) ++ inheritedDv ++ extraMeta
+      else baseSnap.map(_.fields("dv:")).getOrElse(Map.empty[String, String])
+    val meta = baseSnap.map(_.fields("stream_batch")).getOrElse(Map.empty) ++ inheritedDv ++ extraMeta
     // ZONE MAPS (the Delta/Iceberg data-skipping analogue): per written
     // partition, min/max of each requested long-castable column, recorded
     // in the manifest as `zone:<col>:<part>` -> "<min>,<max>". One extra
@@ -276,9 +312,8 @@ object VersionedTable {
           throw e
       }
     // publish-time conflict check: if anyone published since `base`, our
-    // carry-forward map is stale — abort (data dir stays orphaned under the
-    // burned version number; reservation marks it dead). Caller retries the
-    // whole upsert against the new latest.
+    // carry-forward map is stale — abort (the burned reservation marks the
+    // number dead); the caller's withLatest re-runs its attempt.
     if (latestVersion(spark, path) != baseVersion) {
       f.delete(finalDir, true)
       throw new java.util.ConcurrentModificationException(
@@ -289,7 +324,7 @@ object VersionedTable {
     // carried-forward partitions keep their base entries, rewritten or
     // cleared partitions drop them (fresh entries only if statsCols asked)
     val carried = parts.collect { case (p, pv) if pv != v => p }.toSet
-    val inheritedZone = base
+    val inheritedZone = baseSnap
       .map(_.fields("zone:"))
       .getOrElse(Map.empty[String, String])
       .filter { case (k, _) => k.split(":", 3).lift(2).exists(carried.contains) }
@@ -356,23 +391,6 @@ object VersionedTable {
       catch { case _: IllegalArgumentException => false }) // successor demoted concurrently
     }
 
-  /** Run `body`, retrying on the optimistic-concurrency abort
-    * (ConcurrentModificationException) so each attempt rebases on the new
-    * latest version.
-    */
-  def withCommitRetry[T](maxRetries: Int = 3)(body: => T): T = {
-    var tries = 0
-    while (true) {
-      try return body
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          tries += 1
-          if (tries > maxRetries) throw e
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
   /** Committed (published) versions of the table, any order. */
   def committedVersionsPublic(spark: SparkSession, path: String): Seq[Long] =
     committedVersions(fs(spark, path), path)
@@ -421,6 +439,14 @@ object VersionedTable {
       */
     def fields(prefix: String): Map[String, String] = raw.filter(_._1.startsWith(prefix))
 
+    /** The pending deletion-vector specs, sorted, that apply to a partition
+      * last rewritten at `pv`: a spec `<file>|<cols>|<boundary>` scopes its
+      * vector to partitions committed at or before the delete's base
+      * version.
+      */
+    def dvSpecsFor(pv: Long): Seq[String] =
+      fields("dv:").values.toSeq.sorted.filter(s => pv <= s.split("\\|", 3)(2).toLong)
+
     /** The recorded schema json of the DataFrame this commit wrote (the
       * schema of its own partitions).
       */
@@ -449,8 +475,7 @@ object VersionedTable {
 
     /** The given version, or the latest committed one. */
     def resolve(spark: SparkSession, path: String, version: Option[Long] = None): Snapshot =
-      at(spark, path, version.orElse(latestVersion(spark, path)).getOrElse(
-        throw new IllegalArgumentException(s"no committed versions at $path")))
+      version.map(at(spark, path, _)).orElse(latestSnapshot(spark, path)).getOrElse(noCommits(path))
   }
 
   /** A string field of a commit's metadata json (e.g. an exactly-once
@@ -476,6 +501,22 @@ object VersionedTable {
       s.partitions.values.toSeq.distinct.forall(pv => f.exists(new Path(s"$path/v=$pv")))
     require(servable(newest), s"newest commit ${newest.version} of $path references vacuumed data — table is corrupt")
     committed.filter(_ < newest.version).map(Snapshot.at(spark, path, _)).filter(servable) :+ newest
+  }
+
+  /** The parquet files a snapshot's manifest references, sorted by their
+    * path relative to the table root: (relative path, partition, status).
+    * The one file walk both exporters project their file lists from.
+    */
+  private[graft] def dataFiles(spark: SparkSession, snap: Snapshot): Seq[(String, String, FileStatus)] = {
+    val f = fs(spark, snap.path)
+    snap.partitions.toSeq.flatMap { case (p, pv) =>
+      val d = s"v=$pv/p=$p"
+      val dp = new Path(s"${snap.path}/$d")
+      if (!f.exists(dp)) Nil
+      else f.listStatus(dp).toSeq
+        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+        .map(s => (s"$d/${s.getPath.getName}", p, s))
+    }.sortBy(_._1)
   }
 
   /** DEFERRED KEY DELETION (merge-on-read, the Delta deletion-vector /
@@ -507,34 +548,35 @@ object VersionedTable {
     *
     * @return the committed version carrying the new vector
     */
-  def deleteKeysDeferred(spark: SparkSession, path: String, keys: DataFrame, keyCols: Seq[String]): Long =
-    withCommitRetry() {
-      require(keyCols.nonEmpty, "keyCols must be non-empty")
-      keyCols.foreach(c =>
-        require(c.matches("[A-Za-z0-9_]+"), s"keyCol '$c' must be [A-Za-z0-9_]+ (it is serialized in the manifest)"))
-      val v0 = Snapshot.resolve(spark, path)
-      v0.partitions // the vector's boundary scoping needs one
-      val partCol = v0.partitionColumn.getOrElse(
-        throw new IllegalStateException(s"version ${v0.version} of $path records no partition_column"))
+  def deleteKeysDeferred(spark: SparkSession, path: String, keys: DataFrame, keyCols: Seq[String]): Long = {
+    require(keyCols.nonEmpty, "keyCols must be non-empty")
+    keyCols.foreach(c =>
+      require(c.matches("[A-Za-z0-9_]+"), s"keyCol '$c' must be [A-Za-z0-9_]+ (it is serialized in the manifest)"))
+    withLatest(spark, path) { latest =>
+      val snap = latest.getOrElse(noCommits(path))
+      snap.partitions // the vector's boundary scoping needs one
+      val partCol = snap.partitionColumn.getOrElse(
+        throw new IllegalStateException(s"version ${snap.version} of $path records no partition_column"))
       val id = s"dv-${java.util.UUID.randomUUID().toString.take(12)}"
       keys.select(keyCols.map(col): _*).distinct().write.mode("errorifexists").parquet(s"$path/_dv/$id")
       // the vector is BOUNDARY-SCOPED to the data that existed when the
       // delete committed (Delta's file-scoped behavior): partitions whose
-      // manifest version pv <= v0 are anti-joined; partitions written by
-      // LATER commits are exempt, so a row legitimately re-inserted with a
-      // doomed key after the delete stays visible (ADVICE r10: the
-      // table-wide vector silently suppressed such re-inserts until
-      // compact, diverging from copy-on-write deleteKeys semantics)
+      // manifest version pv <= the attempt's snapshot are anti-joined;
+      // partitions written by LATER commits are exempt, so a row
+      // legitimately re-inserted with a doomed key after the delete stays
+      // visible (ADVICE r10). The commit is based on that snapshot, so one
+      // landing meanwhile (a compaction) aborts the attempt.
       try
-        commitDelta(
-          spark, path, read(spark, v0).limit(0), partCol,
-          extraMeta = Map(s"dv:$id" -> s"$id|${keyCols.mkString(",")}|${v0.version}"))
+        commitDeltaOn(
+          spark, path, latest, read(spark, snap).limit(0), partCol,
+          extraMeta = Map(s"dv:$id" -> s"$id|${keyCols.mkString(",")}|${snap.version}"))
       catch {
         case e: Throwable =>
           fs(spark, path).delete(new Path(s"$path/_dv/$id"), true) // unreferenced sidecar
           throw e
       }
     }
+  }
 
   /** Anti-join `df` against the given deletion-vector specs (null-safe on
     * the recorded key columns — a doomed NULL key must still match
@@ -550,13 +592,6 @@ object VersionedTable {
       d.join(broadcast(dv), cond, "left_anti")
     }
 
-  /** Does a dv spec apply to a partition last rewritten at `pv`? A spec
-    * `<file>|<cols>|<boundary>` scopes the vector to partitions committed
-    * at or before the delete's base version.
-    */
-  private def dvApplies(spec: String, pv: Long): Boolean =
-    pv <= spec.split("\\|", 3)(2).toLong
-
   /** Assemble a multi-partition read with BOUNDARY-SCOPED deletion
     * vectors: partitions are grouped by which pending vectors apply to
     * them (by the pv<=boundary rule), each group anti-joins only its own
@@ -566,9 +601,8 @@ object VersionedTable {
     */
   private def readWithDv(spark: SparkSession, snap: Snapshot, parts: Seq[(String, Long)]): DataFrame = {
     val schema = tableSchema(spark, snap, parts)
-    val dvSpecs = snap.fields("dv:").values.toSeq.sorted
     val groups = parts.sortBy(_._1)
-      .groupBy { case (_, pv) => dvSpecs.filter(s => dvApplies(s, pv)) }
+      .groupBy { case (_, pv) => snap.dvSpecsFor(pv) }
       .toSeq
       .sortBy(_._2.head._1)
     val dfs = groups.map { case (specs, ps) =>
@@ -662,9 +696,8 @@ object VersionedTable {
       }: _*)
     // boundary-scoped DV application per partition (pre-union, so each
     // partition anti-joins only the vectors that apply to its pv)
-    val dvSpecs = snap.fields("dv:").values.toSeq.sorted
     parts.zip(dfs).map { case ((_, pv), d) =>
-      conform(applyDvSpecs(spark, path, dvSpecs.filter(s => dvApplies(s, pv)), d))
+      conform(applyDvSpecs(spark, path, snap.dvSpecsFor(pv), d))
     }.reduce(_.unionByName(_))
   }
 
@@ -764,8 +797,7 @@ object VersionedTable {
     val snap = Snapshot.resolve(spark, path, version)
     val residual = col(statsCol).cast("long").between(lo, hi)
     val (scan, _) = zonePrunePlan(snap, statsCol, lo, hi)
-    if (scan.isEmpty) read(spark, snap).limit(0).filter(residual)
-    else readWithDv(spark, snap, scan.map(p => p -> snap.partitions(p))).filter(residual)
+    readPartitionsUnioned(spark, snap, scan).getOrElse(read(spark, snap).limit(0)).filter(residual)
   }
 
   /** The partition->version manifest of a commit; None when the commit
@@ -850,23 +882,22 @@ object VersionedTable {
       feed: DataFrame,
       keyCols: Seq[String],
       partCol: String
-  ): Long = withCommitRetry() {
-    applyChangeFeedOnce(spark, replicaPath, feed, keyCols, partCol)
+  ): Long = withLatest(spark, replicaPath) { latest =>
+    applyChangeFeedOn(spark, latest.getOrElse(noCommits(replicaPath)), feed, keyCols, partCol, Map.empty)
   }
 
-  /** One non-retrying apply attempt, for callers that run their own
-    * [[withCommitRetry]] loop with work that must re-execute alongside the
-    * commit (e.g. [[graft.streaming.Streaming.cdcApplySink]]'s exactly-once
-    * marker check — re-checked on every retry so a lost commit race can't
-    * double-apply a micro-batch). `extraMeta` rides the commit manifest.
+  /** One [[applyChangeFeed]] attempt on the replica snapshot `replica`,
+    * committing `marker` with it (a stream sink's exactly-once marker,
+    * checked on the same snapshot:
+    * [[graft.streaming.Streaming.cdcApplySink]]).
     */
-  def applyChangeFeedOnce(
+  private[graft] def applyChangeFeedOn(
       spark: SparkSession,
-      replicaPath: String,
+      replica: Snapshot,
       feed: DataFrame,
       keyCols: Seq[String],
       partCol: String,
-      extraMeta: Map[String, String] = Map.empty
+      marker: Map[String, String]
   ): Long = graft.core.Caching.scoped {
     require(keyCols.nonEmpty, "applyChangeFeed: keyCols must be non-empty")
     require(feed.columns.contains("_change_type"), "applyChangeFeed: feed must carry _change_type")
@@ -878,7 +909,6 @@ object VersionedTable {
     val feedC = graft.core.Caching.cached(feed)
     val touched = feedC.select(col(partCol).cast("string")).distinct()
       .collect().map(_.getString(0)).sorted.toSeq
-    val replica = Snapshot.resolve(spark, replicaPath)
     if (touched.isEmpty) replica.version
     else {
       // single-relation touched read (round-18): the anti join distributes
@@ -900,7 +930,7 @@ object VersionedTable {
         case Some(k) => k.unionByName(adds, allowMissingColumns = true)
         case None => adds
       }
-      commitDelta(spark, replicaPath, next, partCol, clearedParts = touched, extraMeta = extraMeta)
+      commitDeltaOn(spark, replica.path, Some(replica), next, partCol, clearedParts = touched, extraMeta = marker)
     }
   }
 
@@ -921,20 +951,29 @@ object VersionedTable {
       touchedParts: Seq[String],
       predicate: org.apache.spark.sql.Column,
       statsCols: Seq[String] = Nil // re-record zone maps on the rewritten parts
-  ): Long = withCommitRetry() {
-    // the WHOLE attempt re-runs on a commit conflict so the re-read rebases
-    // on the new latest version
+  ): Long = withLatest(spark, path) { latest =>
+    deleteWhereOn(spark, latest.getOrElse(noCommits(path)), partCol, touchedParts, predicate, statsCols)
+  }
+
+  private def deleteWhereOn(
+      spark: SparkSession,
+      snap: Snapshot,
+      partCol: String,
+      touchedParts: Seq[String],
+      predicate: org.apache.spark.sql.Column,
+      statsCols: Seq[String]
+  ): Long = {
     // single-relation touched read (round-18): filter distributes over the
     // bucket union; the schema fold null-pads drift as the union did
-    val existing = readPartitionsUnioned(spark, path, touchedParts)
-    require(existing.nonEmpty, s"none of ${touchedParts.mkString(",")} exist at $path — nothing to delete")
+    val existing = readPartitionsUnioned(spark, snap, touchedParts)
+    require(existing.nonEmpty, s"none of ${touchedParts.mkString(",")} exist at ${snap.path} — nothing to delete")
     // SQL DELETE semantics: remove rows where the predicate is TRUE; rows
     // where it evaluates NULL are KEPT (a bare !predicate would drop them)
     val kept = existing.get.filter(!coalesce(predicate, lit(false)))
     // clearedParts: a bucket whose rows ALL matched writes no data — without
     // the explicit clear its old contents would carry forward (resurrected
     // deletes)
-    commitDelta(spark, path, kept, partCol, clearedParts = touchedParts, statsCols = statsCols)
+    commitDeltaOn(spark, snap.path, Some(snap), kept, partCol, clearedParts = touchedParts, statsCols = statsCols)
   }
 
   /** RETENTION SWEEP — temporal deletion, the time-based twin of the
@@ -962,16 +1001,18 @@ object VersionedTable {
     // Long.MinValue would underflow the zone upper bound below into "touch
     // everything" — and means "delete nothing" anyway
     require(cutoffExclusive > Long.MinValue, "retentionSweep: cutoffExclusive must be > Long.MinValue")
-    val snap = Snapshot.resolve(spark, path)
-    val (touched, _) = zonePrunePlan(snap, statsCol, Long.MinValue, cutoffExclusive - 1)
-    if (touched.isEmpty) snap.version
-    else
-      // statsCols: re-record the zone map on the rewritten (straddling)
-      // partitions, so the NEXT sweep still prunes them — without it the
-      // rewrite would drop their stats and the nightly job would degrade
-      // to conservative full-touch over time
-      deleteWhere(spark, path, partCol, touched, col(statsCol).cast("long") < cutoffExclusive,
-        statsCols = Seq(statsCol))
+    withLatest(spark, path) { latest =>
+      // the zone plan, the read and the commit all use this one snapshot
+      val snap = latest.getOrElse(noCommits(path))
+      val (touched, _) = zonePrunePlan(snap, statsCol, Long.MinValue, cutoffExclusive - 1)
+      if (touched.isEmpty) snap.version
+      else
+        // statsCols: re-record the zone map on the rewritten (straddling)
+        // partitions, so the NEXT sweep still prunes them — without it the
+        // rewrite would drop their stats and the nightly job would degrade
+        // to conservative full-touch over time
+        deleteWhereOn(spark, snap, partCol, touched, col(statsCol).cast("long") < cutoffExclusive, Seq(statsCol))
+    }
   }
 
   /** COMPACT (the OPTIMIZE analogue): rewrite the CURRENT state of a
@@ -982,18 +1023,17 @@ object VersionedTable {
     * [[vacuum]]) releases the old dirs. Readers never block: the compacted
     * version publishes atomically like any commit.
     */
-  def compact(spark: SparkSession, path: String, partCol: String): Long = withCommitRetry() {
+  def compact(spark: SparkSession, path: String, partCol: String): Long = withLatest(spark, path) { latest =>
     // hash-repartition by the partition column: each partition value lands
     // wholly in one task -> exactly one output file per partition dir.
-    // The read+commit attempt re-runs whole on a commit conflict.
     // `read` applies pending deletion vectors, so compaction IS the
     // physical delete pass: clearDv spends the vector entries, and
     // clearing every prior partition drops any partition whose rows were
     // ALL deleted (it writes no data and must not carry stale bytes
     // forward).
-    val snap = Snapshot.resolve(spark, path)
+    val snap = latest.getOrElse(noCommits(path))
     val current = read(spark, snap).repartition(col(partCol))
-    commitDelta(spark, path, current, partCol, clearedParts = snap.partitions.keys.toSeq, clearDv = true)
+    commitDeltaOn(spark, path, latest, current, partCol, clearedParts = snap.partitions.keys.toSeq, clearDv = true)
   }
 
   /** VACUUM: delete version data no commit at-or-above `retainVersions`-ago
@@ -1053,11 +1093,11 @@ object VersionedTable {
     * `delete`, or an `update_preimage`/`update_postimage` pair.
     *
     * Scale shape: the two manifests are diffed FIRST (metadata-sized), and
-    * only partitions whose resolved version differs are read on either
-    * side — an incremental consumer of a 100 TB table pays O(changed
-    * partitions), never a two-snapshot scan. Unchanged partitions cannot
-    * contribute diffs (their files are byte-identical by manifest
-    * reference), so pruning them is exact, not approximate.
+    * only partitions whose resolved version or applying deletion vectors
+    * differ are read on either side — an incremental consumer of a 100 TB
+    * table pays O(changed partitions), never a two-snapshot scan.
+    * Unchanged partitions cannot contribute diffs (the same files under
+    * the same vectors), so pruning them is exact, not approximate.
     *
     * `keyCols` is the row identity the diff joins on; it must be unique
     * per side within the changed partitions — enforced with an in-plan
@@ -1082,32 +1122,27 @@ object VersionedTable {
       toVersion: Long,
       keyCols: Seq[String]
   ): DataFrame = {
-    import org.apache.spark.sql.functions._
     require(fromVersion < toVersion, s"changeFeed: fromVersion $fromVersion must precede toVersion $toVersion")
     require(keyCols.nonEmpty, "changeFeed: keyCols must be non-empty")
     val (sOld, sNew) = (Snapshot.at(spark, path, fromVersion), Snapshot.at(spark, path, toVersion))
-    val (mOld, mNew) = (sOld.partitions, sNew.partitions)
-    val changed = (mOld.keySet ++ mNew.keySet).filter(p => mOld.get(p) != mNew.get(p)).toSeq.sorted
+    // a partition changed when it resolves to another version dir OR
+    // another set of deletion vectors applies to it (a deferred delete
+    // rewrites no partition, it only adds a vector)
+    def state(snap: Snapshot, p: String): Option[(Long, Seq[String])] =
+      snap.partitions.get(p).map(pv => pv -> snap.dvSpecsFor(pv))
+    val changed = (sOld.partitions.keySet ++ sNew.partitions.keySet)
+      .filter(p => state(sOld, p) != state(sNew, p)).toSeq.sorted
 
-    // one multi-dir relation per side (round-18, guide §2.4): the previous
-    // per-partition read + unionByName planned one leaf scan per changed
-    // bucket per side (2 x 16 scans for the q106 feed); the schema fold
-    // null-pads cross-commit drift exactly as the union did
-    def side(snap: Snapshot): Option[DataFrame] = {
-      val parts = changed.flatMap(p => snap.partitions.get(p).map(p -> _))
-      if (parts.isEmpty) None
-      else Some(spark.read.schema(tableSchema(spark, snap, parts))
-        .parquet(parts.map { case (p, pv) => s"$path/v=$pv/p=$p" }: _*))
-    }
+    // one multi-dir relation per side (round-18, guide §2.4), read like
+    // every other read path: under the schema fold and the side's own
+    // deletion vectors
+    def side(snap: Snapshot): Option[DataFrame] = readPartitionsUnioned(spark, snap, changed)
 
     (side(sOld), side(sNew)) match {
       case (None, None) =>
         // no changed partitions at all: an empty feed with just the keys
-        val empty = read(spark, sNew).limit(0)
-        empty.select(empty.columns.map(col) :+ lit("insert").as("_change_type"): _*).limit(0)
-      case (oldSide, newSide) =>
-        val oldDf = oldSide
-        val newDf = newSide
+        read(spark, sNew).limit(0).withColumn("_change_type", lit("insert"))
+      case (oldDf, newDf) =>
         val allCols: Seq[String] = {
           val o = oldDf.map(_.columns.toSeq).getOrElse(Nil)
           val n = newDf.map(_.columns.toSeq).getOrElse(Nil)

@@ -93,12 +93,13 @@ object Streaming {
     *    deletions, compact) carries its base's `stream_batch:*` fields
     *    forward in the manifest, so the newest commit always holds them
     *    even after compact+vacuum expires the stream commit's own json;
-    *  - the marker lookup scans commits newest-first until it finds one
-    *    carrying the stream's marker, so interleaved non-stream commits
-    *    (compaction, deletions, ad-hoc loads) can't hide it;
-    *  - the check runs INSIDE the commit-retry loop: a zombie driver racing
-    *    the failed-over one loses the reservation race, re-checks, sees the
-    *    winner's marker, and skips instead of re-applying.
+    *  - so the marker is read from the latest snapshot alone: interleaved
+    *    non-stream commits (compaction, deletions, ad-hoc loads) carry it
+    *    and can't hide it;
+    *  - the check, the upsert's read and its commit use ONE snapshot per
+    *    attempt: a zombie driver whose batch raced the failed-over one's
+    *    commit is overtaken, aborts at publish, and its retry reads the
+    *    winner's marker and skips instead of re-applying.
     */
   def scd2WarehouseSink(
       spark: SparkSession,
@@ -114,12 +115,9 @@ object Streaming {
       .outputMode("append")
       .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (df: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        exactlyOnce(spark, warehousePath, streamId, batchId) { marker =>
-          // maxRetries=0: a commit conflict must bubble to the marker's
-          // retry loop so the marker is re-checked before any re-attempt
-          graft.operators.Scd2.upsertPartitioned(
-            spark, warehousePath, df.toDF(), keyCols, nBuckets, now(batchId),
-            maxRetries = 0, commitMeta = marker)
+        exactlyOnce(spark, warehousePath, streamId, batchId) { (target, marker) =>
+          graft.operators.Scd2.upsertPartitionedOn(
+            spark, target, warehousePath, df.toDF(), keyCols, nBuckets, now(batchId), "key_bucket", marker)
           ()
         }
       }
@@ -134,7 +132,7 @@ object Streaming {
     *  - [[graft.sources.DeltaImport.tail]] re-delivers on offset loss or
     *    checkpoint-compaction re-seed (at-least-once);
     *  - the `stream_batch:<streamId>` manifest marker (keyed by the SOURCE
-    *    COMMIT VERSION, checked inside the commit-retry loop exactly like
+    *    COMMIT VERSION, checked on the attempt's snapshot exactly like
     *    [[scd2WarehouseSink]]) no-ops a re-delivery of a version already
     *    applied;
     *  - CONTENT-LEVEL change detection absorbs the re-seed case the marker
@@ -165,23 +163,22 @@ object Streaming {
   ): Long = {
     import graft.sources.VersionedTable
     graft.sources.DeltaImport.tail(spark, deltaRoot, checkpointLocation, (df, v) =>
-      exactlyOnce(spark, warehousePath, streamId, v) { marker =>
+      exactlyOnce(spark, warehousePath, streamId, v) { (target, marker) =>
         // change detection: drop rows whose current active warehouse row
         // is identical — the idempotent-content half of exactly-once.
         // Scoped to the key-buckets this batch touches (the same pruning
         // upsertPartitioned does): a steady tail of small commits must
         // cost O(batch), not a full-warehouse exceptAll per version
-        val changed = VersionedTable.latestVersion(spark, warehousePath) match {
+        val changed = target match {
           case None => df
-          case Some(ver) =>
+          case Some(snap) =>
             import org.apache.spark.sql.functions.col
             val b = df.withColumn("__kb", graft.operators.Scd2.keyBucket(keyCols, nBuckets))
             // bounded driver-side list: at most nBuckets values
             val touched = b.select("__kb").distinct().collect().map(_.getLong(0)).sorted
             // single-relation touched read (round-18: one scan, not one
             // per bucket + a union)
-            VersionedTable
-              .readPartitionsUnioned(spark, warehousePath, touched.map(_.toString).toSeq, Some(ver)) match {
+            VersionedTable.readPartitionsUnioned(spark, snap, touched.map(_.toString).toSeq) match {
               case None => df // none of the touched buckets exist yet
               // a batch carrying columns the warehouse lacks is schema
               // drift: nothing can be content-identical, apply it whole
@@ -198,9 +195,8 @@ object Streaming {
         graft.core.Caching.scoped {
           val changedC = graft.core.Caching.cached(changed)
           if (!changedC.isEmpty) {
-            graft.operators.Scd2.upsertPartitioned(
-              spark, warehousePath, changedC, keyCols, nBuckets, now(v),
-              maxRetries = 0, commitMeta = marker)
+            graft.operators.Scd2.upsertPartitionedOn(
+              spark, target, warehousePath, changedC, keyCols, nBuckets, now(v), "key_bucket", marker)
             ()
           }
         }
@@ -208,31 +204,19 @@ object Streaming {
     )
   }
 
-  /** Newest `stream_batch:<streamId>` marker across committed versions
-    * (scanning newest-first past commits that don't carry one — normally
-    * the NEWEST commit already has it via manifest carry-forward).
-    */
-  private def lastStreamBatch(spark: SparkSession, warehousePath: String, streamId: String): Option[Long] = {
-    import graft.sources.VersionedTable
-    VersionedTable.committedVersionsPublic(spark, warehousePath).sorted.reverse.iterator
-      .flatMap(v => VersionedTable.commitField(spark, warehousePath, v, s"stream_batch:$streamId"))
-      .map(_.toLong)
-      .nextOption()
-  }
-
-  /** The exactly-once marker protocol every stream sink shares: inside a
-    * commit-retry loop, skip `batchId` if this stream's newest marker at
-    * `path` already covers it, else run `apply` with the marker field
-    * (`stream_batch:<streamId>` -> batch id) that its ONE commit must
-    * carry. The check sits inside the loop, so a writer that loses a
-    * commit race re-checks and sees a winner's marker instead of
-    * re-applying the batch; `apply` must not retry on its own.
+  /** The exactly-once marker protocol every stream sink shares: per
+    * attempt, skip `batchId` if the latest snapshot's
+    * `stream_batch:<streamId>` marker covers it (every commit carries the
+    * markers forward), else `apply` reads and commits on that snapshot with
+    * the marker. A commit landing in between (a zombie racing a
+    * failed-over driver) aborts `apply`'s commit; the retry re-checks.
     */
   private def exactlyOnce(spark: SparkSession, path: String, streamId: String, batchId: Long)(
-      apply: Map[String, String] => Unit): Unit =
-    graft.sources.VersionedTable.withCommitRetry() {
-      if (!lastStreamBatch(spark, path, streamId).exists(_ >= batchId))
-        apply(Map(s"stream_batch:$streamId" -> batchId.toString))
+      apply: (Option[graft.sources.VersionedTable.Snapshot], Map[String, String]) => Unit): Unit =
+    graft.sources.VersionedTable.withLatest(spark, path) { snap =>
+      val marker = s"stream_batch:$streamId"
+      if (!snap.flatMap(_.raw.get(marker)).exists(_.toLong >= batchId))
+        apply(snap, Map(marker -> batchId.toString))
     }
 
   final case class CounterEvent(key: String, counters: Map[String, Long], ts: java.sql.Timestamp)
@@ -463,9 +447,10 @@ object Streaming {
     * ([[graft.operators.Similarity.appendResidualPqBatch]]); probes keep
     * serving every committed version throughout. Exactly-once rides the
     * warehouse's own `stream_batch:<streamId>` manifest marker, checked
-    * INSIDE the commit-retry loop exactly like [[scd2WarehouseSink]]: a
-    * re-delivered batch id no-ops, a zombie driver that loses the commit
-    * race re-checks and sees the winner's marker. The index a probe sees
+    * on the attempt's snapshot exactly like [[scd2WarehouseSink]]: a
+    * re-delivered batch id no-ops, a zombie driver overtaken by the
+    * winner's commit aborts and its retry sees the winner's marker. The
+    * index a probe sees
     * after batch N is bit-identical to building it from scratch over
     * (corpus + batches 1..N) — the parity q164's oracle gates.
     */
@@ -485,9 +470,10 @@ object Streaming {
       .outputMode("append")
       .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (df: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        exactlyOnce(spark, indexPath, streamId, batchId) { marker =>
+        exactlyOnce(spark, indexPath, streamId, batchId) { (index, marker) =>
           graft.operators.Similarity.appendResidualPqBatch(
-            spark, indexPath, df.toDF(), idCol, vecCol, dim, coarse, codebooks, extraMeta = marker)
+            spark, index.getOrElse(graft.sources.VersionedTable.noCommits(indexPath)),
+            df.toDF(), idCol, vecCol, dim, coarse, codebooks, marker)
           ()
         }
       }
@@ -498,16 +484,17 @@ object Streaming {
   /** STREAMING CDC REPLICA APPLY — the consumer half of the change feed
     * run continuously: each micro-batch of change rows (`_change_type`
     * insert/delete/update_pre/postimage) is applied to the replica by
-    * [[graft.sources.VersionedTable.applyChangeFeedOnce]] — idempotent
-    * upsert-by-key, touched-bucket rewrite only — as ONE delta commit
-    * carrying the exactly-once `stream_batch:<streamId>` manifest marker.
-    * The marker is checked INSIDE the commit-retry loop (the
+    * [[graft.sources.VersionedTable.applyChangeFeed]]'s attempt —
+    * idempotent upsert-by-key, touched-bucket rewrite only — as ONE delta
+    * commit carrying the exactly-once `stream_batch:<streamId>` manifest
+    * marker. The marker is checked on the attempt's snapshot (the
     * [[vectorIndexSink]]/[[scd2WarehouseSink]] discipline): a re-delivered
-    * batch id no-ops, a zombie driver that loses the commit race re-checks
-    * and sees the winner's marker. Precondition: the upstream feed
-    * partitioner must keep all of one key's change rows in one batch
-    * (key-hash splitting satisfies it; q166 stages the feed that way) —
-    * per-key atomicity is what makes replay order within a batch free.
+    * batch id no-ops, a zombie driver overtaken by the winner's commit
+    * aborts and its retry sees the winner's marker. Precondition: the
+    * upstream feed partitioner must keep all of one key's change rows in
+    * one batch (key-hash splitting satisfies it; q166 stages the feed that
+    * way) — per-key atomicity is what makes replay order within a batch
+    * free.
     */
   def cdcApplySink(
       spark: SparkSession,
@@ -524,8 +511,9 @@ object Streaming {
       .outputMode("append")
       .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (df: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        exactlyOnce(spark, replicaPath, streamId, batchId) { marker =>
-          VersionedTable.applyChangeFeedOnce(spark, replicaPath, df.toDF(), keyCols, partCol, extraMeta = marker)
+        exactlyOnce(spark, replicaPath, streamId, batchId) { (replica, marker) =>
+          VersionedTable.applyChangeFeedOn(
+            spark, replica.getOrElse(VersionedTable.noCommits(replicaPath)), df.toDF(), keyCols, partCol, marker)
           ()
         }
       }
@@ -542,7 +530,7 @@ object Streaming {
     * union is associative, so arrival order and batch boundaries cannot
     * change the state), then committed as ONE delta touching only those
     * day partitions, under the exactly-once `stream_batch` marker checked
-    * inside the commit-retry loop. Range probes keep serving every
+    * on the attempt's snapshot. Range probes keep serving every
     * committed version throughout. Per-batch cost: one aggregation of the
     * batch + a read of the touched days' sketch rows (O(types) KB-sized
     * rows per day) — never the historical raw events.
@@ -560,7 +548,7 @@ object Streaming {
       .outputMode("append")
       .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (df: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        exactlyOnce(spark, rollupPath, streamId, batchId) { marker =>
+        exactlyOnce(spark, rollupPath, streamId, batchId) { (rollup, marker) =>
           graft.core.Caching.scoped {
             // batch-scoped cache (round-18): the batch aggregation feeds
             // both the touched-day collect and the merge union — uncached
@@ -571,8 +559,7 @@ object Streaming {
                 .agg(hll_sketch_agg(col("user_id")).as("sk")))
             val touched = batchSk.select(col("day")).distinct()
               .collect().map(_.getString(0)).sorted.toSeq // bounded: days per batch
-            val existing = VersionedTable.latestVersion(spark, rollupPath)
-              .flatMap(_ => VersionedTable.readPartitionsUnioned(spark, rollupPath, touched))
+            val existing = rollup.flatMap(VersionedTable.readPartitionsUnioned(spark, _, touched))
             val merged = existing match {
               case Some(ex) => ex.select(col("day"), col("event_type"), col("sk"))
                 .unionByName(batchSk)
@@ -580,7 +567,7 @@ object Streaming {
                 .agg(hll_union_agg(col("sk")).as("sk"))
               case None => batchSk
             }
-            VersionedTable.commitDelta(spark, rollupPath, merged, "day", extraMeta = marker)
+            VersionedTable.commitDeltaOn(spark, rollupPath, rollup, merged, "day", extraMeta = marker)
             ()
           }
         }

@@ -873,4 +873,66 @@ class StreamingSpec extends AnyFunSuite {
     assert(VersionedTable.committedVersionsPublic(spark, idx).size == 3, "re-delivery committed new versions")
     assert(probe(idx) == probe(oneShotIdx), "re-delivery changed probe results")
   }
+
+  /** The zombie-driver race: the live driver's batch 0 commits the next
+    * version of `target` (prepared by running `sink` on a copy) and lands
+    * while the zombie's batch 0 — the same source re-run under another
+    * checkpoint — runs its read. `sink(path, source, checkpoint)` starts a
+    * sink; the source rows are keyed by the LONG column `idCol`. Returns
+    * the live commit's version.
+    */
+  private def zombieRace(tmp: String, target: String, srcDir: String, schema: String, idCol: String)(
+      sink: (String, org.apache.spark.sql.DataFrame, String) => org.apache.spark.sql.streaming.StreamingQuery): Long = {
+    import graft.sources.VersionedTable
+    val live = s"$tmp/live"
+    StaleBase.copyTree(java.nio.file.Paths.get(target), java.nio.file.Paths.get(live))
+    val liveVersion = VersionedTable.latestVersion(spark, target).get + 1
+    assert(sink(live, spark.readStream.schema(schema).parquet(srcDir), s"$tmp/ckpt-live").awaitTermination(60000))
+    assert(VersionedTable.latestVersion(spark, live).contains(liveVersion))
+    val publishLive = udf { (id: Long) => StaleBase.publishOnce(live, target, liveVersion); id }
+    val zombieSource = spark.readStream.schema(schema).parquet(srcDir).withColumn(idCol, publishLive(col(idCol)))
+    assert(sink(target, zombieSource, s"$tmp/ckpt-zombie").awaitTermination(60000))
+    liveVersion
+  }
+
+  /** The versions of `path` whose commit carries `stream_batch:<streamId>` = `batch`. */
+  private def markedWith(path: String, streamId: String, batch: String): Seq[Long] = {
+    import graft.sources.VersionedTable
+    VersionedTable.committedVersionsPublic(spark, path).sorted
+      .filter(v => VersionedTable.commitField(spark, path, v, s"stream_batch:$streamId").contains(batch))
+  }
+
+  test("a zombie SCD-2 sink overtaken by the live driver's commit skips its batch instead of re-applying it") {
+    import graft.sources.VersionedTable
+    val tmp = Files.createTempDirectory("graft-scd2zombie").toString
+    val wh = s"$tmp/warehouse"
+    val clock = (id: Long) =>
+      org.apache.spark.sql.functions.expr(s"timestamp '2024-01-01 00:00:00' + INTERVAL '$id' SECOND")
+    graft.operators.Scd2.upsertPartitioned(spark, wh, Seq((1L, "a")).toDF("k", "payload"), Seq("k"), 4,
+      expr("timestamp '2023-12-31 00:00:00'")) // v1
+    Seq((1L, "a2")).toDF("k", "payload").write.parquet(s"$tmp/src")
+    val liveVersion = zombieRace(tmp, wh, s"$tmp/src", "k BIGINT, payload STRING", "k") { (path, in, ckpt) =>
+      Streaming.scd2WarehouseSink(spark, in, path, Seq("k"), nBuckets = 4, now = clock, checkpointLocation = ckpt)
+    }
+    assert(VersionedTable.latestVersion(spark, wh).contains(liveVersion), "the zombie must not commit")
+    assert(VersionedTable.read(spark, wh).filter($"k" === 1L).count() == 2, "closed a + active a2, once")
+    assert(markedWith(wh, "default", "0") == Seq(liveVersion))
+  }
+
+  test("a zombie vector-index sink overtaken by the live driver's commit skips its batch instead of re-appending it") {
+    import graft.operators.Similarity
+    import graft.sources.VersionedTable
+    val tmp = Files.createTempDirectory("graft-veczombie").toString
+    val idx = s"$tmp/idx"
+    val coarse = Seq(0L -> Seq(0.0, 0.0), 1L -> Seq(10.0, 10.0))
+    val cbs = Seq(Seq(0L -> Seq(0.0, 0.0), 1L -> Seq(1.0, 1.0)))
+    Similarity.writeResidualPqIndex(spark, Seq((1L, Seq(0.5f, 0.5f))).toDF("id", "vec"), "id", "vec", idx, 2, coarse, cbs)
+    Seq((2L, Seq(9.5f, 9.5f)), (3L, Seq(0.2f, 0.1f))).toDF("id", "vec").write.parquet(s"$tmp/src")
+    val liveVersion = zombieRace(tmp, idx, s"$tmp/src", "id BIGINT, vec ARRAY<FLOAT>", "id") { (path, in, ckpt) =>
+      Streaming.vectorIndexSink(spark, in, path, "id", "vec", 2, coarse, cbs, checkpointLocation = ckpt, streamId = "t")
+    }
+    assert(VersionedTable.latestVersion(spark, idx).contains(liveVersion), "the zombie must not commit")
+    assert(VersionedTable.read(spark, idx).select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+    assert(markedWith(idx, "t", "0") == Seq(liveVersion))
+  }
 }

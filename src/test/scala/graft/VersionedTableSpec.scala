@@ -79,7 +79,7 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(VersionedTable.latestVersion(spark, path).contains(3L))
     assert(state == Set((2, "b")), "the concurrent winner must not be reverted")
     assert(!new java.io.File(s"$path/v=2").exists(), "the aborted commit's data must be removed")
-    // the retry (fresh base) wins cleanly — the withCommitRetry loop shape
+    // the retry (fresh base) wins cleanly — the withLatest loop shape
     assert(commitWhole(Seq((3, "c")).toDF("id", "v"), path) == 4L)
     assert(state == Set((3, "c")))
   }
@@ -717,5 +717,75 @@ class VersionedTableSpec extends AnyFunSuite {
     VersionedTable.retentionSweep(spark, tmp, "pe", "ts_epoch", 250L)
     assert(VersionedTable.committedVersionsPublic(spark, tmp).size == before,
       "a sweep with nothing expiring must not commit")
+  }
+
+  test("a commit based on a superseded snapshot aborts, leaves no version dir, and keeps the winner") {
+    val path = Files.createTempDirectory("graft-vt-superseded").toString + "/t"
+    def state: Set[(Int, String)] =
+      VersionedTable.read(spark, path).collect().map(r => (r.getInt(0), r.getString(1))).toSet
+    commitWhole(Seq((1, "a")).toDF("id", "v"), path)
+    val read1 = VersionedTable.latestSnapshot(spark, path)
+    commitWhole(Seq((2, "b")).toDF("id", "v"), path) // the winner, v2
+    intercept[java.util.ConcurrentModificationException] {
+      VersionedTable.commitDeltaOn(spark, path, read1, Seq((3, "c")).toDF("id", "v").withColumn("p", lit("0")), "p")
+    }
+    assert(VersionedTable.latestVersion(spark, path).contains(2L))
+    assert(!new java.io.File(s"$path/v=3").exists(), "the aborted commit's data must be removed")
+    assert(state == Set((2, "b")), "the winner's rows must stay")
+  }
+
+  test("deleteKeysDeferred overtaken by a compaction retries on it: the deleted key reads 0 rows") {
+    val path = Files.createTempDirectory("graft-vt-dv-race").toString + "/t"
+    VersionedTable.commitDelta(spark, path, Seq((1L, "x", "a"), (2L, "y", "b")).toDF("k", "v", "p"), "p") // v1
+    // the competitor: a compaction of v1 (v2, rewriting every partition),
+    // prepared in a copy and published while the delete's key job runs
+    val prep = Files.createTempDirectory("graft-vt-dv-race-prep").toString + "/t"
+    StaleBase.copyTree(java.nio.file.Paths.get(path), java.nio.file.Paths.get(prep))
+    assert(VersionedTable.compact(spark, prep, "p") == 2L)
+    val publishCompaction = udf { (k: Long) => StaleBase.publishOnce(prep, path, 2L); k }
+    val keys = Seq(1L).toDF("k").withColumn("k", publishCompaction(col("k")))
+    val v = VersionedTable.deleteKeysDeferred(spark, path, keys, Seq("k"))
+    val latest = VersionedTable.read(spark, path)
+    assert(latest.filter($"k" === 1L).count() == 0, "a vector scoped before the compaction exempts every row")
+    assert(latest.count() == 1)
+    // the attempt on v1 burned v3 and aborted; the retry committed on v2
+    assert(v == 4L && VersionedTable.Snapshot.at(spark, path, v).base.contains(2L))
+  }
+
+  test("changeFeed across a deferred delete reports the deleted row; a replica following it drops the key") {
+    val path = Files.createTempDirectory("graft-vt-dv-cdf").toString + "/t"
+    val rep = Files.createTempDirectory("graft-vt-dv-cdf-r").toString + "/t"
+    VersionedTable.commitDelta(spark, path, Seq((1L, "x", "a"), (2L, "y", "a")).toDF("k", "v", "p"), "p")
+    VersionedTable.commitDelta(spark, rep, VersionedTable.read(spark, path), "p")
+    val vDel = VersionedTable.deleteKeysDeferred(spark, path, Seq(1L).toDF("k"), Seq("k"))
+    assert(VersionedTable.read(spark, path).count() == 1)
+    val feed = VersionedTable.changeFeed(spark, path, 1L, vDel, Seq("k"))
+    assert(feed.select("k", "v", "_change_type").as[(Long, String, String)].collect().toSeq == Seq((1L, "x", "delete")))
+    VersionedTable.applyChangeFeed(spark, rep, feed, Seq("k"), "p")
+    assert(VersionedTable.read(spark, rep).select("k").as[Long].collect().toSeq == Seq(2L))
+  }
+
+  test("sinks commit only on the snapshot their marker check read; retired retry names stay gone") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath} is missing")
+    def lines(f: java.nio.file.Path): Seq[(String, Int)] = Files.readAllLines(f).asScala.toSeq.zipWithIndex
+    val retired = """\b(withCommitRetry|applyChangeFeedOnce|lastStreamBatch|commitMeta)\b""".r
+    val walk = Files.walk(root)
+    val offenders =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .filterNot(_.endsWith(java.nio.file.Paths.get("sources", "VersionedTable.scala")))
+        .flatMap(f => lines(f).collect { case (l, i) if retired.findFirstIn(l).isDefined => s"$f:${i + 1}: ${l.trim}" })
+        .toList
+      finally walk.close()
+    assert(offenders.isEmpty, "one retry loop per commit, in VersionedTable.withLatest:\n" + offenders.mkString("\n"))
+    // a sink that called a retrying (or blind) commit form would nest a
+    // second loop inside exactlyOnce's: its retry would rebase without
+    // re-checking the marker
+    val streaming = lines(root.resolve("graft/streaming/Streaming.scala"))
+    val nested = """\b(upsertPartitioned|applyChangeFeed|commitDelta)\(""".r
+    val nestedAt = streaming.collect { case (l, i) if nested.findFirstIn(l).isDefined => s"Streaming.scala:${i + 1}: ${l.trim}" }
+    assert(nestedAt.isEmpty, "sinks must commit through the snapshot-taking forms (upsertPartitionedOn, applyChangeFeedOn, commitDeltaOn):\n" + nestedAt.mkString("\n"))
+    assert(streaming.count(_._1.contains("withLatest(")) == 1, "only exactlyOnce may open a retry loop in Streaming")
   }
 }
