@@ -64,8 +64,7 @@ object DictNecessity {
     val t0 = System.nanoTime()
     val out = graft.operators.Dedup
       .minhashLsh(corpus, "doc_id", "text",
-        shingleSize = 1, bands = 8, rowsPerBand = 2, minJaccard = 0.5, portable = false,
-        broadcastDict = hint)
+        shingleSize = 1, bands = 8, rowsPerBand = 2, minJaccard = 0.5, broadcastDict = hint)
       .select(col("id_a"), col("id_b"), floor(col("jaccard") * 10000).cast("long").as("jaccard_e4"))
     // bit_xor, not sum: hashes span the full long range and an ANSI sum
     // overflows (the Bench.materialize lesson)

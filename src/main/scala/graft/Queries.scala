@@ -608,16 +608,11 @@ object Queries {
 
   /** q35: MinHash signature table (portable md5-prefix hashing; flattened to
     * scalar columns for oracle comparison) — the building block the LSH
-    * banding consumes.
+    * banding consumes, built by the same [[Dedup.sigTable]] as q37/q146/q168.
     */
-  def q35(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "documents")
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("__toks"))
-      .select(col("doc_id"), array_distinct(graft.plans.HashExpressions.shingleHash60(col("__toks"), 3)).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .withColumn("sig", Dedup.minhashSignatureFromHashes(col("sh"), 8))
-    base.select(col("doc_id") +: (0 until 8).map(i => element_at(col("sig"), i + 1).as(s"sig_$i")): _*)
-  }
+  def q35(s: SparkSession, dir: String): DataFrame =
+    Dedup.sigTable(t(s, dir, "documents"), "doc_id", "text", shingleSize = 3, numHashes = 8)
+      .select(col("doc_id") +: (0 until 8).map(i => element_at(col("sig"), i + 1).as(s"sig_$i")): _*)
 
   /** q36: exact n-gram Jaccard near-dup pairs within (source) blocks —
     * the verification path of MinHash-LSH; blocks bound the quadratic term.
@@ -630,24 +625,21 @@ object Queries {
   /** q37: MinHash+LSH near-dup pairs, full pipeline oracle-checked: portable
     * md5-prefix shingle hashes (q35-proven), the same MinHashSig constants in
     * both engines, hash-free band keys (band index + signature slice), and
-    * exact-Jaccard verification. The xxhash64 fast path (same algorithm,
-    * cheaper hash family) stays available via `portable=false` and is
-    * spec-tested.
+    * exact-Jaccard verification.
     */
   def q37(s: SparkSession, dir: String): DataFrame =
     Dedup
-      .minhashLsh(t(s, dir, "documents"), "doc_id", "text", shingleSize = 3, bands = 8, rowsPerBand = 2, minJaccard = 0.5, portable = true)
+      .minhashLsh(t(s, dir, "documents"), "doc_id", "text", shingleSize = 3, bands = 8, rowsPerBand = 2, minJaccard = 0.5)
       .select(col("id_a"), col("id_b"), floor(col("jaccard") * 10000).cast("long").as("jaccard_e4"))
 
   /** q38: SimHash sketch dedup groups over the portable 60-bit sketch
-    * (oracle shares q39's sketch SQL; the xxhash64 64-bit fast path is
-    * spec-tested in DedupSpec).
+    * (oracle shares q39's sketch SQL).
     */
   def q38(s: SparkSession, dir: String): DataFrame =
     Dedup.simhashDuplicates60(t(s, dir, "documents"), "doc_id", "text")
 
-  /** q39: portable 60-bit SimHash sketches with duplicate grouping — the
-    * oracle-checked twin of q38's xxhash64 fast path.
+  /** q39: portable 60-bit SimHash sketches per doc — the sketch q38
+    * groups and q65 bands.
     */
   def q39(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents")
@@ -927,8 +919,7 @@ object Queries {
     * sketch. The pigeonhole banding has exact recall (any pair within budget
     * shares a chunk), so the output equals {pairs: hamming <= 4} and the
     * oracle verifies it with an all-pairs bit_count over q39's sketch SQL —
-    * no banding replication needed. The 64-bit xxhash64 path stays
-    * spec-tested (DedupSpec).
+    * no banding replication needed.
     *
     * maxHamming=4 on 60 bits -> 5 chunks of 12 bits: each chunk position has
     * 2^12 values, so banding cuts candidate pairs by ~4096x vs all-pairs —

@@ -8,13 +8,19 @@ import org.apache.spark.sql.functions._
   *
   * - exact: hash-groupBy on a content fingerprint. One shuffle on a 16-byte
   *   key; with AQE skew handling, safe at any scale.
-  * - MinHash + LSH: signature computed per-row with pure column expressions
-  *   (no UDF), banded, and candidates found by a self-join on
-  *   (band, band-hash) buckets — the join key space is tiny relative to the
-  *   corpus so the shuffle is on the banded keys, never all-pairs.
-  * - SimHash: 64-bit sketch per document; near-dups = identical sketch (or
-  *   bucketed by rotation for Hamming<k).
+  * - MinHash + LSH: signature computed per-row with codegen'd column
+  *   expressions (no UDF), banded, and candidates found by a self-join on
+  *   hash-free (band index, signature slice) keys — the join key space is
+  *   tiny relative to the corpus so the shuffle is on the banded keys,
+  *   never all-pairs.
+  * - SimHash: 60-bit sketch per document; near-dups = identical sketch, or
+  *   within a Hamming budget by pigeonhole chunk banding.
   * - n-gram Jaccard: exact verification on candidate pairs only.
+  *
+  * One hash family throughout: shingles and tokens hash by the md5-prefix
+  * 60-bit digest ([[graft.plans.ShingleHash60]]), which the DuckDB oracle
+  * replays, and every MinHash+LSH operator builds its signature and band
+  * tables through [[sigTable]] and [[bandTable]].
   */
 object Dedup {
 
@@ -107,7 +113,7 @@ object Dedup {
       }
 
       /** Default payload-to-dictionary crossover, calibrated from the
-        * r16/r17 measured A/B (SCALE.md r17 ledger, [[graft.DictAutoProbe]]):
+        * r16/r17 measured A/B (SCALE.md r17 ledger):
         * on q135's stage the sf1 corpus measures ratio 2219 and the
         * un-hinted verify WINS (6.50 vs 7.92 s), the sf3 corpus measures
         * 6698 and the un-hinted plan DNFs where broadcast runs in ~30-42 s
@@ -166,61 +172,6 @@ object Dedup {
       }
   }
 
-  /** [[DictHint.Auto]]'s decision inputs for the q135/q37/q149 stages on a
-    * given corpus — the measured facts behind the calibrated default
-    * ratio (SCALE.md r17 ledger; consumed by [[graft.DictAutoProbe]]).
-    * Returns (dictRows, avgSetLen, dictBytes, estCandidates, payloadRatio).
-    */
-  private[graft] def autoStatsMinhashLsh(
-      df: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int, bands: Int, rowsPerBand: Int, portable: Boolean): (Long, Double, Double, Long, Double) = {
-    // mirrors minhashLsh's signature/banding stages exactly (same hashes,
-    // same band keys) without running the verify
-    val numHashes = bands * rowsPerBand
-    def hashedShingles(toks: Column): Column =
-      if (portable) graft.plans.HashExpressions.shingleHash60(toks, shingleSize)
-      else transform(TextAnalysis.wordShinglesFromTokens(toks, shingleSize), s => xxhash64(s))
-    val withSig = df
-      .select(col(idCol).as("doc_id"), TextAnalysis.tokens(col(textCol)).as("__toks"))
-      .select(col("doc_id"), sort_array(array_distinct(hashedShingles(col("__toks")))).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-      .withColumn("sig", minhashSignatureFromHashes(col("shingles"), numHashes))
-    val bandKey: Int => Column =
-      if (portable) b => concat_ws(":", lit(b), concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)))
-      else b => xxhash64(concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)), lit(b))
-    val banded = withSig.select(col("doc_id"), explode(array((0 until bands).map(bandKey): _*)).as("bucket"))
-    // the stats job runs TWO actions over the signature lineage (dict agg
-    // + postings volume) — cache it for the probe's duration so the
-    // shingling/minhashing isn't recomputed (VERDICT r17 #8 hygiene)
-    graft.core.Caching.scoped {
-      graft.core.Caching.cached(withSig)
-      autoStatsOf(withSig, size(col("shingles")), selfJoinVolume(banded, "bucket"))
-    }
-  }
-
-  /** [[autoStatsMinhashLsh]]'s twin for the jaccardPairsPrefix stage. */
-  private[graft] def autoStatsJaccardPrefix(
-      docs: DataFrame, idCol: String, textCol: String,
-      tNum: Long, tDen: Long, shingleSize: Int): (Long, Double, Double, Long, Double) = graft.core.Caching.scoped {
-    // same two-action shape as autoStatsMinhashLsh: the ordered frame's
-    // prefix postings AND the dict agg both fold the shingle sets, which
-    // jaccardSets caches for this scope (VERDICT r17 #8 hygiene)
-    val sets = jaccardSets(docs, idCol, textCol, shingleSize)
-    val ordered = jaccardOrdered(sets, tNum, tDen)
-    autoStatsOf(sets, size(col("s")),
-      selfJoinVolume(ordered.select(explode(expr("slice(sorted_elems, 1, p)")).as("e")), "e"))
-  }
-
-  private def autoStatsOf(dict: DataFrame, setSize: Column, estCand: Long): (Long, Double, Double, Long, Double) = {
-    val row = dict.agg(count(lit(1)).as("n"), avg(setSize).as("l")).head()
-    val n = row.getLong(0)
-    val avgLen = if (n == 0) 0.0 else row.getDouble(1)
-    val setBytes = avgLen * 8.0
-    val dictBytes = n.toDouble * (setBytes + 48.0)
-    val ratio = if (dictBytes == 0) 0.0 else estCand.toDouble * 2.0 * setBytes / dictBytes
-    (n, avgLen, dictBytes, estCand, ratio)
-  }
-
   /** Σ c·(c−1)/2 over the frequency of `keyCol` in `postings` — the
     * pre-filter self-join volume estimator [[DictHint.Auto]] feeds on
     * (exact for a self-join on the key; an upper bound on what survives
@@ -253,19 +204,6 @@ object Dedup {
     */
   def shingleHash64Hof(s: Column): Column = conv(substring(md5(s), 1, 15), 16, 10).cast("long")
 
-  /** Deterministic MinHash signature as an array column.
-    * hash_i(s) = (a_i * xxhash64(s) + b_i) mod p, signature_i = min over
-    * shingles. a/b derive from the permutation index via splitmix-style
-    * constants so executors need no side data at all.
-    */
-  def minhashSignature(shingles: Column, numHashes: Int): Column = {
-    import graft.plans.MinHashSig.{P, a, b} // single home for the constants
-    val sigs = (0 until numHashes).map { i =>
-      array_min(transform(shingles, s => pmod(lit(a(i)) * pmod(xxhash64(s), lit(P)) + lit(b(i)), lit(P))))
-    }
-    array(sigs: _*)
-  }
-
   /** MinHash + LSH banding: returns candidate near-duplicate pairs
     * (id_a < id_b) with their verified n-gram Jaccard similarity.
     *
@@ -283,51 +221,14 @@ object Dedup {
       bands: Int = 8,
       rowsPerBand: Int = 2,
       minJaccard: Double = 0.5,
-      portable: Boolean = false,
       broadcastDict: DictHint = DictHint.Broadcast
   ): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    // Shingle-hash choice: xxhash64 is cheap but has no cross-engine SQL
-    // twin; `portable=true` switches to the fused md5-prefix shingle hasher
-    // (plans.ShingleHash60 — tokens stream straight into the digest, no
-    // shingle strings materialized) so the whole pipeline including its
-    // banding is verifiable by the DuckDB oracle. Same algorithm either
-    // way — only the hash family differs.
-    //
-    // Tokens are bound as a real column before any HOF stage — interpreted
-    // lambdas re-evaluate their subtrees per element, so chaining the
-    // expressions inline would re-tokenize per shingle (measured ~10x).
-    def hashedShingles(toks: Column): Column =
-      if (portable) graft.plans.HashExpressions.shingleHash60(toks, shingleSize)
-      else transform(TextAnalysis.wordShinglesFromTokens(toks, shingleSize), s => xxhash64(s))
-    // shingle sets are stored ASCENDING-sorted (set semantics — order is
-    // free; the minhash fold below is order-independent) so the verify
-    // intersection is a single merge walk instead of per-pair array builds
-    val withSig = graft.core.Caching.cached(
-      df
-        .select(col(idCol).as("doc_id"), TextAnalysis.tokens(col(textCol)).as("__toks"))
-        .select(col("doc_id"), sort_array(array_distinct(hashedShingles(col("__toks")))).as("shingles"))
-        .filter(size(col("shingles")) > 0)
-        .withColumn("sig", minhashSignatureFromHashes(col("shingles"), numHashes))
-      // the signature table feeds three plan branches (banding + both sides
-      // of the candidate verify); cache it instead of recomputing the
-      // tokenize/shingle/hash subtree per branch. At production scale this
-      // table is persisted to storage once and reused across dedup runs.
-    )
-
-    // band table carries only (doc_id, band-key): the 8x explode must not
-    // replicate the shingle payload through the shuffle. Fast path: the
-    // bucket hash is seeded by the band index, so it alone is the join key
-    // (a plain long — no struct comparison in the join). Portable path: the
-    // band index + slice values joined as a string key — hash-free, so the
-    // oracle can reproduce the key with string concatenation.
-    val bandKey: Int => Column =
-      if (portable) b => concat_ws(":", lit(b), concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)))
-      else b => xxhash64(concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)), lit(b))
-    val banded = withSig.select(
-      col("doc_id"),
-      explode(array((0 until bands).map(bandKey): _*)).as("bucket")
-    )
+    // the signature table feeds three plan branches (banding + both sides
+    // of the candidate verify); cache it instead of recomputing the
+    // tokenize/shingle/hash subtree per branch. At production scale this
+    // table is persisted to storage once and reused across dedup runs.
+    val withSig = graft.core.Caching.cached(sigTable(df, idCol, textCol, shingleSize, bands * rowsPerBand))
+    val banded = bandTable(withSig, bands, rowsPerBand)
 
     val a = banded.select(col("bucket").as("ba"), col("doc_id").as("id_a"))
     val b = banded.select(col("bucket").as("bb2"), col("doc_id").as("id_b"))
@@ -363,6 +264,42 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
+  /** The MinHash signature table: (doc_id, shingles, sig) per doc with at
+    * least one shingle. `shingles` are the doc's distinct md5-prefix
+    * n-gram hashes ([[graft.plans.ShingleHash60]] — tokens stream straight
+    * into the digest, no shingle strings materialized), stored
+    * ASCENDING-sorted (set semantics — order is free; the minhash fold is
+    * order-independent) so a verify intersection is a single merge walk;
+    * `sig` is their `numHashes`-slot MinHash. The persistable LSH index
+    * state, and the one builder behind [[minhashLsh]], [[crossCorpusLsh]],
+    * the incremental index ([[lshIndexBuild]], [[lshProbeAndAppend]]) and
+    * q35 — so the oracle replays one hash chain for all of them.
+    *
+    * Tokens are bound as a real column before any HOF stage — interpreted
+    * lambdas re-evaluate their subtrees per element, so chaining the
+    * expressions inline would re-tokenize per shingle (measured ~10x).
+    */
+  private[graft] def sigTable(df: DataFrame, idCol: String, textCol: String, shingleSize: Int, numHashes: Int): DataFrame =
+    df.select(col(idCol).as("doc_id"), TextAnalysis.tokens(col(textCol)).as("__toks"))
+      .select(
+        col("doc_id"),
+        sort_array(array_distinct(graft.plans.HashExpressions.shingleHash60(col("__toks"), shingleSize))).as("shingles"))
+      .filter(size(col("shingles")) > 0)
+      .withColumn("sig", minhashSignatureFromHashes(col("shingles"), numHashes))
+
+  /** The band table of a [[sigTable]]: (doc_id, bucket), one row per band.
+    * It carries only the two narrow columns, so the explode never
+    * replicates the shingle payload through a shuffle. The bucket key is
+    * hash-free — "b:sig[rb],..,sig[rb+r-1]", the band index and its
+    * signature slice — so the oracle reproduces it with string
+    * concatenation.
+    */
+  private[graft] def bandTable(sig: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
+    sig.select(
+      col("doc_id"),
+      explode(array((0 until bands).map(b =>
+        concat_ws(":", lit(b), concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)))): _*)).as("bucket"))
+
   /** MinHash over pre-hashed shingles: hash_i(h) = (a_i * (h mod p) + b_i)
     * mod p — fused codegen loop (plans.MinHashSig), value-identical to the
     * HOF formulation below.
@@ -386,33 +323,10 @@ object Dedup {
     when(union === 0, lit(0.0)).otherwise(inter / union)
   }
 
-  /** 64-bit SimHash over tokens: bit j of the sketch is set when the sum of
-    * (+1/-1 votes from each token's xxhash64 bit j) is positive. Pure
-    * expression: fold an array accumulator of 64 counters over the tokens,
-    * then pack.
-    */
-  def simhash(text: Column): Column = {
-    // pre-hash tokens once: the per-bit lambda below would otherwise
-    // recompute xxhash64(token) 64 times per token (interpreted HOFs)
-    val hashes = transform(TextAnalysis.tokens(text), t => xxhash64(t))
-    val counters = aggregate(
-      hashes,
-      array_repeat(lit(0), 64),
-      (acc, h) =>
-        zip_with(
-          acc,
-          array((0 until 64).map(j => when(shiftright(h, j).bitwiseAND(1) === 1, 1).otherwise(-1)): _*),
-          (x, y) => x + y
-        )
-    )
-    (0 until 64)
-      .map(j => when(element_at(counters, j + 1) > 0, shiftleft(lit(1L), j)).otherwise(lit(0L)))
-      .reduce((x, y) => x.bitwiseOR(y))
-  }
-
-  /** Portable 60-bit SimHash (md5-prefix token hashes) — same construction
-    * as [[simhash]] but fully replicable in the SQL oracle. Empty docs
-    * sketch to 0. Backed by the fused codegen [[graft.plans.SimHash60]]
+  /** Portable 60-bit SimHash over tokens: bit j of the sketch is set when
+    * the sum of +1/-1 votes from each token's md5-prefix hash bit j is
+    * positive — fully replicable in the SQL oracle. Empty docs sketch to
+    * 0. Backed by the fused codegen [[graft.plans.SimHash60]]
     * (the interpreted HOF evaluated a 60-branch lambda per token — see
     * [[simhash60Hof]], kept as the parity regression baseline).
     */
@@ -439,17 +353,9 @@ object Dedup {
       .reduce((x, y) => x.bitwiseOR(y))
   }
 
-  /** SimHash near-dup grouping: docs with identical sketches (Hamming 0).
-    * For Hamming<=k at scale, band the 64 bits into k+1 chunks and join on
-    * any-equal-chunk (pigeonhole), verifying candidates with bit_count.
-    */
-  def simhashDuplicates(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol).as("doc_id"), simhash(col(textCol)).as("simhash"))
-      .groupBy("simhash")
-      .agg(min("doc_id").as("keeper_id"), count(lit(1)).as("copies"))
-
-  /** [[simhashDuplicates]] over the portable 60-bit sketch — identical
-    * grouping semantics, oracle-replicable hash family.
+  /** SimHash near-dup grouping: docs with identical 60-bit sketches
+    * (Hamming 0), one keeper (min id) per sketch. For Hamming <= k see
+    * [[simhashNearDup60]].
     */
   def simhashDuplicates60(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol).as("doc_id"), simhash60(col(textCol)).as("simhash60"))
@@ -457,24 +363,12 @@ object Dedup {
       .agg(min("doc_id").as("keeper_id"), count(lit(1)).as("copies"))
 
   /** SimHash near-dups within Hamming distance <= maxHamming, at scale:
-    * band the 64 bits into (maxHamming+1) chunks — by pigeonhole, any pair
-    * within the distance agrees exactly on at least one chunk — join on
-    * (chunk index, chunk value), then verify candidates with bit_count(xor).
-    * Shuffle is linear in corpus x chunks; quadratic work only inside
-    * identical-chunk groups.
-    */
-  def simhashNearDup(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxHamming: Int = 3,
-      minChunkBits: Int = MinChunkBits
-  ): DataFrame =
-    simhashNearDupImpl(df, idCol, textCol, maxHamming, simhash(col(textCol)), 64, minChunkBits)
-
-  /** [[simhashNearDup]] over the portable 60-bit sketch. The pigeonhole
-    * banding is an exact-recall filter (any pair within the Hamming budget
-    * agrees on >=1 of the maxHamming+1 chunks), so the OUTPUT is exactly
+    * band the 60 sketch bits into (maxHamming+1) chunks — by pigeonhole,
+    * any pair within the distance agrees exactly on at least one chunk —
+    * join on (chunk index, chunk value), then verify candidates with
+    * bit_count(xor) ([[bandedSketchPairs]]). Shuffle is linear in corpus x
+    * chunks; quadratic work only inside identical-chunk groups. The
+    * banding is an exact-recall filter, so the OUTPUT is exactly
     * {pairs : hamming(sk_a, sk_b) <= maxHamming} — which is why the DuckDB
     * oracle can verify it with a plain all-pairs bit_count at test scale
     * without replicating the banding.
@@ -486,7 +380,9 @@ object Dedup {
       maxHamming: Int = 3,
       minChunkBits: Int = MinChunkBits
   ): DataFrame =
-    simhashNearDupImpl(df, idCol, textCol, maxHamming, simhash60(col(textCol)), 60, minChunkBits)
+    bandedSketchPairs(
+      df.select(col(idCol).as("doc_id"), simhash60(col(textCol)).as("sk")),
+      60, maxHamming, minChunkBits)
 
   /** Scale guard for the pigeonhole banding: expected candidate pairs are
     * ~ chunks * n^2 / 2^bitsPer (uniform sketches), so the chunk width is
@@ -500,27 +396,13 @@ object Dedup {
     */
   val MinChunkBits = 12
 
-  private def simhashNearDupImpl(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxHamming: Int,
-      sketch: Column,
-      sketchBits: Int,
-      minChunkBits: Int
-  ): DataFrame =
-    bandedSketchPairs(
-      df.select(col(idCol).as("doc_id"), sketch.as("sk")),
-      sketchBits, maxHamming, minChunkBits
-    )
-
   /** Exact-recall Hamming pairing over ANY precomputed bit sketch (text
     * SimHash, image dHash, audio fingerprint …): pigeonhole banding into
     * `maxHamming + 1` chunks — a pair within the budget must agree on at
     * least one chunk — then a bit_count verify, so the output is exactly
     * {pairs : hamming <= maxHamming} with no all-pairs join. `sketched`
     * must have columns `doc_id` and `sk` (LongType sketch). The chunk-width
-    * scale guard is the same as [[simhashNearDup]]'s (see [[MinChunkBits]]).
+    * scale guard is the same as [[simhashNearDup60]]'s (see [[MinChunkBits]]).
     */
   def bandedSketchPairs(
       sketched0: DataFrame,
@@ -954,27 +836,13 @@ object Dedup {
       rowsPerBand: Int = 2,
       minJaccard: Double = 0.5
   ): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    def sigTable(df: DataFrame): DataFrame = graft.core.Caching.cached(
-      df
-        .select(col(idCol).as("doc_id"), TextAnalysis.tokens(col(textCol)).as("__toks"))
-        .select(
-          col("doc_id"),
-          array_distinct(graft.plans.HashExpressions.shingleHash60(col("__toks"), shingleSize)).as("shingles"))
-        .filter(size(col("shingles")) > 0)
-        .withColumn("sig", minhashSignatureFromHashes(col("shingles"), numHashes))
-    )
-    // hash-free band keys (band index + signature slice) — the oracle
-    // reproduces them with string concatenation, like q37's portable path
-    val bandKey: Int => Column =
-      b => concat_ws(":", lit(b), concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)))
-    def banded(sigT: DataFrame): DataFrame =
-      sigT.select(col("doc_id"), explode(array((0 until bands).map(bandKey): _*)).as("bucket"))
-    val cSig = sigTable(corpus)
-    val bSig = sigTable(benchmark)
-    val cand = banded(cSig).select(col("bucket"), col("doc_id").as("corpus_id"))
+    def sigs(df: DataFrame): DataFrame =
+      graft.core.Caching.cached(sigTable(df, idCol, textCol, shingleSize, bands * rowsPerBand))
+    val cSig = sigs(corpus)
+    val bSig = sigs(benchmark)
+    val cand = bandTable(cSig, bands, rowsPerBand).select(col("bucket"), col("doc_id").as("corpus_id"))
       .join(
-        banded(bSig).select(col("bucket").as("__bb"), col("doc_id").as("bench_id")),
+        bandTable(bSig, bands, rowsPerBand).select(col("bucket").as("__bb"), col("doc_id").as("bench_id")),
         col("bucket") === col("__bb"))
       .select("corpus_id", "bench_id")
       .distinct()
@@ -1493,26 +1361,6 @@ object Dedup {
       .agg(array_join(expr("transform(array_sort(collect_list(struct(p, tok))), x -> x.tok)"), " ").as("kept_text"))
   }
 
-  /** Portable (md5-prefix family) signature table: (doc_id, shingles,
-    * sig) — the persistable LSH index state. Same hash chain as
-    * [[minhashLsh]]`(portable=true)`, factored for the incremental ops.
-    */
-  private def portableSigTable(df: DataFrame, idCol: String, textCol: String, shingleSize: Int, numHashes: Int): DataFrame =
-    df.select(col(idCol).as("doc_id"), TextAnalysis.tokens(col(textCol)).as("__toks"))
-      .select(col("doc_id"), array_distinct(graft.plans.HashExpressions.shingleHash60(col("__toks"), shingleSize)).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-      .withColumn("sig", minhashSignatureFromHashes(col("shingles"), numHashes))
-
-  /** Hash-free band keys "b:sig[rb],..,sig[rb+r-1]" per doc (the oracle-
-    * replicable key family of [[minhashLsh]]`(portable=true)`).
-    */
-  private def portableBandTable(sig: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
-    sig.select(
-      col("doc_id"),
-      explode(array((0 until bands).map(b =>
-        concat_ws(":", lit(b), concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)))): _*)).as("bucket")
-    )
-
   /** Build the persisted MinHash+LSH index for a corpus: `sigs/`
     * (doc_id, shingles, sig) and `bands/` (bucket, doc_id) parquet
     * tables under `indexPath`, each laid out as `batch=<id>/`
@@ -1532,7 +1380,7 @@ object Dedup {
       bands: Int = 8,
       rowsPerBand: Int = 2
   ): Unit = graft.core.Caching.scoped {
-    val sig = graft.core.Caching.cached(portableSigTable(df, idCol, textCol, shingleSize, bands * rowsPerBand))
+    val sig = graft.core.Caching.cached(sigTable(df, idCol, textCol, shingleSize, bands * rowsPerBand))
     lshCommitBatch(spark, indexPath, "base", sig, bands, rowsPerBand)
   }
 
@@ -1558,7 +1406,7 @@ object Dedup {
   ): Unit = {
     require(batchId.matches("[A-Za-z0-9_-]+"), s"batchId '$batchId' must be filesystem-safe")
     sig.write.mode("overwrite").parquet(s"$indexPath/sigs/batch=$batchId")
-    portableBandTable(sig, bands, rowsPerBand).write.mode("overwrite").parquet(s"$indexPath/bands/batch=$batchId")
+    bandTable(sig, bands, rowsPerBand).write.mode("overwrite").parquet(s"$indexPath/bands/batch=$batchId")
     val fs = new org.apache.hadoop.fs.Path(indexPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.create(new org.apache.hadoop.fs.Path(s"$indexPath/_batches/$batchId"), true).close()
@@ -1621,7 +1469,7 @@ object Dedup {
       batchId: Option[String] = None,
       persistPairs: DataFrame => Unit = _ => ()
   ): DataFrame = graft.core.Caching.scoped {
-    val newSig = graft.core.Caching.cached(portableSigTable(newBatch, idCol, textCol, shingleSize, bands * rowsPerBand))
+    val newSig = graft.core.Caching.cached(sigTable(newBatch, idCol, textCol, shingleSize, bands * rowsPerBand))
     val out = lshProbePairs(spark, indexPath, newSig, bands, rowsPerBand, minJaccard)
     // SEVER LINEAGE before appending: the result plan scans `sigs/`, and
     // Spark invalidates (and transparently recomputes) any cached plan
@@ -1678,7 +1526,7 @@ object Dedup {
       rowsPerBand: Int,
       minJaccard: Double
   ): DataFrame = {
-    val newBands = portableBandTable(newSig, bands, rowsPerBand)
+    val newBands = bandTable(newSig, bands, rowsPerBand)
     val oldBands = lshCommittedTable(spark, indexPath, "bands")
     val probe = newBands.select(col("bucket"), col("doc_id").as("__new_id"))
     val candNewOld = oldBands

@@ -29,18 +29,12 @@ object DeltaState {
     *                        current stays null in the delta (line_item
     *                        behavior)
     */
-  /** @param broadcastSnapshot force-broadcast the snapshot side. Default
-    *        false: Catalyst auto-broadcasts under the threshold, and a
-    *        forced broadcast of a 100M-entity state table would OOM the
-    *        executors; pass true only when the snapshot is known-small.
-    */
   def applyDeltas(
       batch: DataFrame,
       snapshot: DataFrame,
       keyCols: Seq[String],
       counters: Seq[(String, String)],
-      coalesceCurrent: Boolean,
-      broadcastSnapshot: Boolean = false
+      coalesceCurrent: Boolean
   ): DataFrame = {
     counters.foreach { case (cur, prev) =>
       require(cur != prev, s"counter '$cur' must use a distinct snapshot column name (got '$prev')")
@@ -50,8 +44,10 @@ object DeltaState {
     val snap = snapshot
       .select(snapCols.head, snapCols.tail: _*)
       .withColumn("__snap_exists", lit(true))
-    val snapSide = if (broadcastSnapshot) broadcast(snap) else snap
-    val joined = batch.join(snapSide, keyCols, "left_outer")
+    // no broadcast hint: Catalyst auto-broadcasts a snapshot under the
+    // threshold, and a forced broadcast of a 100M-entity state table would
+    // OOM the executors
+    val joined = batch.join(snap, keyCols, "left_outer")
 
     counters
       .foldLeft(joined) { case (df, (cur, prev)) =>

@@ -131,10 +131,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** All-vectors pairwise top-k join via LSH blocking (ANN join). */
-  def annJoin(df: DataFrame, idCol: String, vecCol: String, dim: Int = 64, nBits: Int = 10, minCosine: Double = 0.9): DataFrame =
-    Dedup.embeddingNearDup(df, idCol, vecCol, nBits, minCosine, dim = dim)
-
   // ------------------------------------------------------------------- IVF
 
   /** IVF (inverted-file) coarse quantization: assign each vector to its

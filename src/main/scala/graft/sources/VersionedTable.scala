@@ -152,7 +152,8 @@ object VersionedTable {
   /** [[commitDelta]] on `base` (None: no commit yet), evaluated once after
     * the version is reserved: the blind [[commitDelta]] passes the latest
     * snapshot, a [[withLatest]] attempt the snapshot it read. A commit
-    * published since `base` makes this one abort at publish time.
+    * published since `base` makes this one abort: before any job runs when
+    * it is already there after reserving, else at publish time.
     */
   private[graft] def commitDeltaOn(
       spark: SparkSession,
@@ -178,11 +179,16 @@ object VersionedTable {
       require(c.matches("[A-Za-z0-9_]+"), s"statsCols name '$c' must be [A-Za-z0-9_]+ (it keys manifest fields)"))
     val f = fs(spark, path)
     val v = reserveVersion(f, path)
-    // the base is re-checked at publish time so a concurrent delta commit
-    // can't be silently reverted by our stale carry-forward manifest
-    // (optimistic concurrency: the loser aborts and retries on a fresh base)
+    // the base is checked now and again at publish time so a concurrent
+    // delta commit can't be silently reverted by our stale carry-forward
+    // manifest (optimistic concurrency: the loser aborts and retries on a
+    // fresh base). A base already overtaken aborts here, before the
+    // zone-stats job and the staged write run.
     val baseSnap = base
     val baseVersion = baseSnap.map(_.version)
+    def overtaken = new java.util.ConcurrentModificationException(
+      s"concurrent commit on $path (base was $baseVersion); retry the delta against the new latest version")
+    if (latestVersion(spark, path) != baseVersion) throw overtaken
     val prev = baseSnap.map(_.partitions).getOrElse(Map.empty[String, Long])
     // exactly-once stream markers ride ALONG THE LINEAGE: every delta commit
     // (loads, deletions, compaction) inherits the base manifest's
@@ -316,8 +322,7 @@ object VersionedTable {
     // number dead); the caller's withLatest re-runs its attempt.
     if (latestVersion(spark, path) != baseVersion) {
       f.delete(finalDir, true)
-      throw new java.util.ConcurrentModificationException(
-        s"concurrent commit on $path (base was $baseVersion); retry the delta against the new latest version")
+      throw overtaken
     }
     val parts = (prev -- clearedParts.filterNot(written.contains)) ++ written.map(_ -> v)
     // zone stats ride the lineage like stream markers, but per PARTITION:

@@ -41,7 +41,7 @@ class DedupSpec extends AnyFunSuite {
   test("simhash: identical texts share sketch, disjoint texts differ") {
     val hashes = docs
       .filter($"doc_id".isin(1L, 2L, 4L))
-      .select($"doc_id", Dedup.simhash(lower(regexp_replace($"text", "[^a-zA-Z ]", ""))).as("h"))
+      .select($"doc_id", Dedup.simhash60(lower(regexp_replace($"text", "[^a-zA-Z ]", ""))).as("h"))
       .collect()
       .map(r => r.getLong(0) -> r.getLong(1))
       .toMap
@@ -57,7 +57,7 @@ class DedupSpec extends AnyFunSuite {
     ).toDF("doc_id", "text")
     // big-budget exact-recall property: 17 chunks of 3 bits is a test-only
     // setting (quadratic at scale), so the guard must be explicitly lowered
-    val pairs = Dedup.simhashNearDup(near, "doc_id", "text", maxHamming = 16, minChunkBits = 3)
+    val pairs = Dedup.simhashNearDup60(near, "doc_id", "text", maxHamming = 16, minChunkBits = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)))
     assert(!pairs.contains((1L, 3L)) && !pairs.contains((2L, 3L)))
@@ -506,7 +506,7 @@ class DedupSpec extends AnyFunSuite {
     val got1 = pairSet(Dedup.lshProbeAndAppend(spark, idx, batch1, "doc_id", "text", minJaccard = 0.3))
     // ground truth: full portable LSH over corpus+batch, batch-touching pairs
     val full = Dedup
-      .minhashLsh(corpusDocs.unionByName(batch1), "doc_id", "text", minJaccard = 0.3, portable = true)
+      .minhashLsh(corpusDocs.unionByName(batch1), "doc_id", "text", minJaccard = 0.3)
       .filter(col("id_a") >= 10L || col("id_b") >= 10L)
       .select(col("id_a"), col("id_b"), floor(col("jaccard") * 10000).cast("long"))
     assert(got1 == pairSet(full) && got1.nonEmpty, s"incremental != full: $got1")
@@ -576,9 +576,9 @@ class DedupSpec extends AnyFunSuite {
 
       // q37's shape: portable MinHash+LSH
       val mh = Dedup.minhashLsh(docs, "doc_id", "text",
-        shingleSize = 2, bands = 8, rowsPerBand = 2, minJaccard = 0.3, portable = true)
+        shingleSize = 2, bands = 8, rowsPerBand = 2, minJaccard = 0.3)
       val mhU = Dedup.minhashLsh(docs, "doc_id", "text",
-        shingleSize = 2, bands = 8, rowsPerBand = 2, minJaccard = 0.3, portable = true,
+        shingleSize = 2, bands = 8, rowsPerBand = 2, minJaccard = 0.3,
         broadcastDict = false)
       assert(planOf(mh).contains("BroadcastHashJoin"), "hinted verify must broadcast the dictionary")
       assert(!planOf(mhU).contains("BroadcastHashJoin"), "un-hinted verify must not broadcast")
@@ -646,7 +646,7 @@ class DedupSpec extends AnyFunSuite {
 
       // the other two stages honor Auto too (decision legs shared)
       val mhAuto = Dedup.minhashLsh(docs, "doc_id", "text",
-        shingleSize = 2, bands = 8, rowsPerBand = 2, minJaccard = 0.3, portable = true,
+        shingleSize = 2, bands = 8, rowsPerBand = 2, minJaccard = 0.3,
         broadcastDict = DictHint.Auto(maxDictBytes = 1L))
       assert(!planOf(mhAuto).contains("BroadcastHashJoin"))
       val ctAuto = Dedup.containmentPairs(docs, "doc_id", "text", shingleSize = 1, minContainment = 0.5,

@@ -241,12 +241,7 @@ class PlanQualitySpec extends AnyFunSuite {
     val idx = java.nio.file.Files.createTempDirectory("graft-lshplan").toString + "/index"
     val docs = graft.sources.IO.table(spark, dir, "documents")
     Dedup.lshIndexBuild(spark, idx, docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text")
-    val newSig = docs.filter(col("doc_id") % 5 === 0)
-      .select(col("doc_id"), graft.operators.TextAnalysis.tokens(col("text")).as("__toks"))
-      .select(col("doc_id"), org.apache.spark.sql.functions.array_distinct(
-        graft.plans.HashExpressions.shingleHash60(col("__toks"), 3)).as("shingles"))
-      .filter(org.apache.spark.sql.functions.size(col("shingles")) > 0)
-      .withColumn("sig", Dedup.minhashSignatureFromHashes(col("shingles"), 16))
+    val newSig = Dedup.sigTable(docs.filter(col("doc_id") % 5 === 0), "doc_id", "text", 3, 16)
     val p = Dedup.lshProbePairs(spark, idx, newSig, 8, 2, 0.5).queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin"), s"probe bucket set must broadcast against the index:\n$p")
   }

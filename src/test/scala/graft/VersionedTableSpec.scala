@@ -726,9 +726,14 @@ class VersionedTableSpec extends AnyFunSuite {
     commitWhole(Seq((1, "a")).toDF("id", "v"), path)
     val read1 = VersionedTable.latestSnapshot(spark, path)
     commitWhole(Seq((2, "b")).toDF("id", "v"), path) // the winner, v2
-    intercept[java.util.ConcurrentModificationException] {
+    val sc = spark.sparkContext
+    val group = s"stale-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "overtaken commit")
+    try intercept[java.util.ConcurrentModificationException] {
       VersionedTable.commitDeltaOn(spark, path, read1, Seq((3, "c")).toDF("id", "v").withColumn("p", lit("0")), "p")
-    }
+    } finally sc.clearJobGroup()
+    val jobs = sc.statusTracker.getJobIdsForGroup(group)
+    assert(jobs.isEmpty, s"an overtaken base must abort before any job; ran ${jobs.length}")
     assert(VersionedTable.latestVersion(spark, path).contains(2L))
     assert(!new java.io.File(s"$path/v=3").exists(), "the aborted commit's data must be removed")
     assert(state == Set((2, "b")), "the winner's rows must stay")
