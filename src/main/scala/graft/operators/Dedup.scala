@@ -252,16 +252,25 @@ object Dedup {
       selfJoinVolume(banded, "bucket"))
     val shA = withSig.select(col("doc_id").as("id_a"), col("shingles").as("sh_a"))
     val shB = withSig.select(col("doc_id").as("id_b"), col("shingles").as("sh_b"))
-    val inter = graft.plans.SetExpressions.sortedIntersectCount(col("sh_a"), col("sh_b"))
-    val union = (size(col("sh_a")) + size(col("sh_b")) - col("__inter")).cast("double")
-    cand
-      .join(hinted(shA, bd), "id_a")
-      .join(hinted(shB, bd), "id_b")
-      .withColumn("__inter", inter)
-      .withColumn("jaccard", when(union === 0, lit(0.0)).otherwise(col("__inter").cast("double") / union))
+    withSortedJaccard(cand.join(hinted(shA, bd), "id_a").join(hinted(shB, bd), "id_b"))
       .filter(col("jaccard") >= minJaccard)
       // raw (unrounded) jaccard: callers floor-scale for hash-stable output
       .select(col("id_a"), col("id_b"), col("jaccard"))
+  }
+
+  /** Adds the exact Jaccard of the `sh_a`/`sh_b` shingle arrays of
+    * candidate pairs as `jaccard`. Both arrays must be [[sigTable]]
+    * shingles (ascending, distinct, non-null), so |A∩B| is one
+    * allocation-free merge walk, bound once as `__inter` for the
+    * projection (a threshold filter the optimizer pushes into the verify
+    * join inlines it there). Same integer intersection and union
+    * arithmetic as [[jaccard]], so the double is bit-identical.
+    */
+  private def withSortedJaccard(pairs: DataFrame): DataFrame = {
+    val union = (size(col("sh_a")) + size(col("sh_b")) - col("__inter")).cast("double")
+    pairs
+      .withColumn("__inter", graft.plans.SetExpressions.sortedIntersectCount(col("sh_a"), col("sh_b")))
+      .withColumn("jaccard", when(union === 0, lit(0.0)).otherwise(col("__inter").cast("double") / union))
   }
 
   /** The MinHash signature table: (doc_id, shingles, sig) per doc with at
@@ -846,10 +855,9 @@ object Dedup {
         col("bucket") === col("__bb"))
       .select("corpus_id", "bench_id")
       .distinct()
-    cand
+    withSortedJaccard(cand
       .join(cSig.select(col("doc_id").as("corpus_id"), col("shingles").as("sh_a")), "corpus_id")
-      .join(bSig.select(col("doc_id").as("bench_id"), col("shingles").as("sh_b")), "bench_id")
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
+      .join(bSig.select(col("doc_id").as("bench_id"), col("shingles").as("sh_b")), "bench_id"))
       .filter(col("jaccard") >= minJaccard)
       // raw (unrounded) jaccard: callers floor-scale for hash-stable output
       .select(col("corpus_id"), col("bench_id"), col("jaccard"))
@@ -1540,10 +1548,9 @@ object Dedup {
     val cand = candNewOld.unionByName(candNewNew).distinct()
     val allSh = lshCommittedTable(spark, indexPath, "sigs").select(col("doc_id"), col("shingles"))
       .unionByName(newSig.select(col("doc_id"), col("shingles")))
-    cand
+    withSortedJaccard(cand
       .join(allSh.select(col("doc_id").as("id_a"), col("shingles").as("sh_a")), "id_a")
-      .join(allSh.select(col("doc_id").as("id_b"), col("shingles").as("sh_b")), "id_b")
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
+      .join(allSh.select(col("doc_id").as("id_b"), col("shingles").as("sh_b")), "id_b"))
       .filter(col("jaccard") >= minJaccard)
       .select(col("id_a"), col("id_b"), floor(col("jaccard") * 10000).cast("long").as("jaccard_e4"))
   }

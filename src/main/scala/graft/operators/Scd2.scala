@@ -14,16 +14,25 @@ import graft.sources.VersionedTable
   * every batch row as a new active version (`actv_flg='Y'`, `record_to=null`);
   * (3) truncate staging.
   *
-  * Spark formulation: a left-semi/anti split of the active partition against
-  * the distinct batch keys, then a union. No MERGE engine needed; the whole
-  * thing is three narrow scans plus one shuffle on the key. At 100 TB the
-  * target should be stored partitioned (or bucketed) by the business key's
-  * hash so the semi/anti joins co-locate; the batch key set is typically tiny
-  * relative to the target and broadcast-joins automatically.
+  * Spark formulation: one left join of the target against the distinct batch
+  * keys, which flags the rows to close (the matched/unmatched split of a
+  * MERGE, Delta Lake VLDB 2020), then a union with the inserted batch. No
+  * MERGE engine needed; the whole thing is ONE scan of the target plus the
+  * key join. At 100 TB the target should be stored partitioned (or
+  * bucketed) by the business key's hash so the join co-locates; the batch
+  * key set is typically tiny relative to the target and broadcast-joins
+  * automatically.
   */
 object Scd2 {
 
   /** Close-and-insert upsert on a single business key (J1 + O-SCD2).
+    *
+    * One pass over `target`: a left join against the distinct batch keys
+    * flags each target row whose key the batch carries; a flagged row with
+    * `actv_flg = 'Y'` closes (`actv_flg = 'N'`, `record_to = now`) and every
+    * other row passes through unchanged. A NULL key never matches, so its
+    * row passes through; a NULL or `'N'` flag is never closed; the
+    * `distinct` keeps the join from duplicating target rows.
     *
     * @param target  current SCD-2 table (must contain keyCols, `actv_flg`,
     *                `record_to`)
@@ -35,38 +44,16 @@ object Scd2 {
     *                deterministic tests; reference stamps sysdate,
     *                loading.py:32-35)
     */
-  def upsert(target: DataFrame, batch: DataFrame, keyCols: Seq[String], now: Column): DataFrame = {
-    val keys = batch.select(keyCols.map(col): _*).distinct()
-    val active = target.filter(col("actv_flg") === "Y")
-    val inactive = target.filter(col("actv_flg") =!= "Y" || col("actv_flg").isNull)
-
-    // rows to flip: active AND key present in batch
-    val closed = active
-      .join(keys, keyCols, "left_semi")
-      .withColumn("actv_flg", lit("N"))
-      .withColumn("record_to", now)
-    // rows untouched: active, key absent
-    val untouched = active.join(keys, keyCols, "left_anti")
-
-    val inserted = batch
-      .withColumn("actv_flg", lit("Y"))
-      .withColumn("record_to", lit(null).cast("timestamp"))
-
-    // allowMissingColumns: schema drift between target and batch (a widened
-    // batch against a pre-widening target, or the reverse after reading a
-    // mix of old/new buckets) null-pads instead of throwing — the write-path
-    // mirror of VersionedTable.read's schema fold
-    inactive
-      .unionByName(closed)
-      .unionByName(untouched)
-      .unionByName(inserted, allowMissingColumns = true)
-  }
+  def upsert(target: DataFrame, batch: DataFrame, keyCols: Seq[String], now: Column): DataFrame =
+    closeAndInsert(target, flagHits(target, batch, keyCols, HitFlag), col(HitFlag), batch, now)
 
   /** Two-key close variant (J2): the reference closes `line_item_creative`
     * rows when `creative_id IN (batch creative ids) AND line_item_id IN
     * (batch line item ids)` — two INDEPENDENT in-lists, not a pair-wise key
     * (loading.py:934-938). This closes strictly more rows than pair matching;
-    * the semantics are preserved faithfully here.
+    * the semantics are preserved faithfully here: one left join per key
+    * list, each with its own flag, and an active row closes when both are
+    * set — still one pass over `target`.
     */
   def upsertTwoKeyInLists(
       target: DataFrame,
@@ -75,29 +62,38 @@ object Scd2 {
       key2: String,
       now: Column
   ): DataFrame = {
-    val k1 = batch.select(key1).distinct()
-    val k2 = batch.select(key2).distinct()
-    val active = target.filter(col("actv_flg") === "Y")
-    val inactive = target.filter(col("actv_flg") =!= "Y" || col("actv_flg").isNull)
+    val flagged = flagHits(flagHits(target, batch, Seq(key1), s"${HitFlag}_1"), batch, Seq(key2), s"${HitFlag}_2")
+    closeAndInsert(target, flagged, col(s"${HitFlag}_1") && col(s"${HitFlag}_2"), batch, now)
+  }
 
-    // independent IN-list semantics: semi-join on key1, then semi-join on key2
-    val toClose = active.join(k1, Seq(key1), "left_semi").join(k2, Seq(key2), "left_semi")
-    val closed = toClose
-      .withColumn("actv_flg", lit("N"))
-      .withColumn("record_to", now)
-    // untouched = active minus toClose = anti on key1 OR anti on key2
-    val untouched = active
-      .join(k1, Seq(key1), "left_anti")
-      .unionByName(active.join(k1, Seq(key1), "left_semi").join(k2, Seq(key2), "left_anti"))
+  /** Reserved flag column of the upserts' key joins. */
+  private val HitFlag = "__scd2_hit"
 
+  /** `target` left-joined to the distinct batch values of `keyCols`, with
+    * `flag` true where the row's key is in the batch and NULL elsewhere.
+    */
+  private def flagHits(target: DataFrame, batch: DataFrame, keyCols: Seq[String], flag: String): DataFrame =
+    target.join(batch.select(keyCols.map(col): _*).distinct().withColumn(flag, lit(true)), keyCols, "left")
+
+  /** Closes the active rows of `flagged` that `hit` selects, passes every
+    * other row through in `target`'s column order, and appends the batch
+    * as new active versions.
+    */
+  private def closeAndInsert(target: DataFrame, flagged: DataFrame, hit: Column, batch: DataFrame, now: Column): DataFrame = {
+    val close = col("actv_flg") === "Y" && hit
+    val kept = flagged.select(target.columns.toSeq.map {
+      case "actv_flg"  => when(close, lit("N")).otherwise(col("actv_flg")).as("actv_flg")
+      case "record_to" => when(close, now).otherwise(col("record_to")).as("record_to")
+      case c           => col(s"`${c.replace("`", "``")}`") // names taken verbatim
+    }: _*)
     val inserted = batch
       .withColumn("actv_flg", lit("Y"))
       .withColumn("record_to", lit(null).cast("timestamp"))
-
-    inactive
-      .unionByName(closed)
-      .unionByName(untouched)
-      .unionByName(inserted, allowMissingColumns = true)
+    // allowMissingColumns: schema drift between target and batch (a widened
+    // batch against a pre-widening target, or the reverse after reading a
+    // mix of old/new buckets) null-pads instead of throwing — the write-path
+    // mirror of VersionedTable.read's schema fold
+    kept.unionByName(inserted, allowMissingColumns = true)
   }
 
   /** Latest-version view: one row per key, the most recent by `insrt_ts`

@@ -39,7 +39,9 @@ object Pipeline {
     */
   def cleanse(spark: SparkSession, run: PipelineRun, alias: String, listIndexBound: Int = 4): DataFrame = {
     val raw = IO.readJsonDocs(spark, run.path(alias, "raw", "json"))
-    if (raw.isEmpty) raw // blank-input short-circuit (P12)
+    // blank-input short-circuit (P12). Inferred JSON with a field always
+    // has a row, so only an empty inferred schema pays the isEmpty job
+    if (raw.schema.isEmpty && raw.isEmpty) raw
     else {
       val flat = Flatten.flattenAll(raw, listIndexBound = listIndexBound)
       IO.writePipeCsv(flat, run.path(alias, "cleansing", "csv"))

@@ -266,37 +266,49 @@ object VersionedTable {
         //
         // GATED by the batch's estimated size (round-19, VERDICT r18 #1):
         // a commit whose whole batch fits inside ONE advisory partition
-        // does not need a shuffle to avoid small files — COALESCE(1) gives
-        // exactly one writer task and therefore ONE file per partition
-        // value (the same layout the rebalance produced) at zero exchange
-        // cost. Many-small-commit builders (index builds, per-day loads)
-        // were paying the rebalance exchange + AQE replan on every commit
-        // (driver setup_sec: q130 2.67->16.87 s, q140 8.84->18.68 s),
-        // while simply SKIPPING the rebalance for small batches fans the
-        // write back out to tasks x partitions tiny files, which every
-        // later read of the version then pays for (measured this round:
-        // q80 2.5->6.0 s with the skip-only gate). Above the advisory
-        // size the rebalance stays: AQE sizes writers scale-adaptively.
-        // Plan-statistics estimate: over-estimation keeps the rebalance
-        // (r18 behavior); under-estimation coalesces a somewhat larger
-        // batch through one writer — bounded by how far stats can be off
-        // for the join/union shapes commits carry.
+        // does not need AQE sizing to avoid small files. Many-small-commit
+        // builders (index builds, per-day loads) were paying the rebalance
+        // exchange + AQE replan on every commit (driver setup_sec: q130
+        // 2.67->16.87 s, q140 8.84->18.68 s), while simply SKIPPING the
+        // rebalance for small batches fans the write back out to tasks x
+        // partitions tiny files, which every later read of the version then
+        // pays for (measured in round 19: q80 2.5->6.0 s with the skip-only
+        // gate). Above the advisory size the rebalance stays: AQE sizes
+        // writers scale-adaptively.
         //
-        // TWO-BAND cutoff at advisory/16 (sf1 re-bench evidence): a
-        // single writer is only free while the batch is genuinely tiny —
-        // at ~10-14 MB (the suite's sf1 commit batches) coalesce(1)
-        // serialized the post-exchange apply work and the multi-file
-        // partitioned write that the rebalance parallelizes (q148 sf1
-        // 1.8->3.1 s, q144 sf1 5.1 s measured with a single-band gate),
-        // while the sf0.1-scale builder commits (~1-2 MB) keep the full
-        // zero-shuffle win. The cutoff scales with the advisory conf, so
-        // deployments that raise the advisory raise both bands together.
+        // SMALL BAND: a KEYED placement, repartition(defaultParallelism,
+        // __part). Every row of one partition value hashes to the same
+        // task, so each p= dir still gets exactly ONE file, but the
+        // partition values spread over every core; a task that gets no rows
+        // writes no file. AQE never coalesces a REPARTITION_BY_NUM exchange,
+        // so the writer count stays the core count. Round 19 used
+        // coalesce(1) here (zero exchange), which pulled the whole upstream
+        // into ONE task: the target scan, the upsert join and every bucket
+        // write (the etl_daily load's write task read 8,050 input records
+        // to write 3,117 rows, 600-740 ms, at 14% utilisation). With the
+        // keyed placement and Scd2.upsert's one scan, traced on 4 cores:
+        // etl_daily pipeline.load 1.78 -> 1.21 s, utilisation 0.15 ->
+        // 0.26; stream_ingest load trigger 1.93 -> 1.14 s, 0.11 -> 0.21.
+        //
+        // TWO-BAND cutoff at advisory/16 (sf1 re-bench evidence): the small
+        // band's fixed writer count is only right while the batch is
+        // genuinely tiny — at ~10-14 MB (the suite's sf1 commit batches) a
+        // single writer serialized the post-exchange apply work and the
+        // multi-file partitioned write that the rebalance parallelizes
+        // (q148 sf1 1.8->3.1 s, q144 sf1 5.1 s measured with a single-band
+        // coalesce(1) gate), while the sf0.1-scale builder commits (~1-2 MB)
+        // stay in the small band. The cutoff scales with the advisory conf,
+        // so deployments that raise the advisory raise both bands together.
+        // Plan-statistics estimate: over-estimation keeps the rebalance
+        // (r18 behavior); under-estimation places a somewhat larger batch
+        // through the keyed writers — bounded by how far stats can be off
+        // for the join/union shapes commits carry.
         val advisory = spark.sessionState.conf.getConf(
           org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
         val estBytes = updated.queryExecution.optimizedPlan.stats.sizeInBytes
         val staged = updated.withColumn("__part", validatedPart)
         val placed =
-          if (estBytes <= BigInt(advisory) / 16) staged.coalesce(1)
+          if (estBytes <= BigInt(advisory) / 16) staged.repartition(spark.sparkContext.defaultParallelism, col("__part"))
           else staged.hint("rebalance", col("__part"))
         placed.write.partitionBy("__part").mode("overwrite").parquet(tmp.toString)
         val w = f.listStatus(tmp).map(_.getPath.getName).filter(_.startsWith("__part=")).map(_.stripPrefix("__part="))

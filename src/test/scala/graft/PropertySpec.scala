@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
@@ -8,9 +9,10 @@ import org.scalacheck.rng.Seed
 import graft.functions.Fernet
 import graft.operators.{Dedup, Scd2}
 
-/** Property-based invariants (SURVEY.md §5): SCD-2 active-uniqueness and
-  * idempotence, explode cardinality, encrypt-then-decrypt identity, Jaccard
-  * bounds/symmetry. Deterministic seeds (no scalatest-scalacheck bridge in
+/** Property-based invariants (SURVEY.md §5): SCD-2 active-uniqueness,
+  * idempotence and equality with the multi-scan reference forms, explode
+  * cardinality, encrypt-then-decrypt identity, Jaccard bounds/symmetry.
+  * Deterministic seeds (no scalatest-scalacheck bridge in
   * the offline cache, so generators are sampled directly).
   */
 class PropertySpec extends AnyFunSuite {
@@ -45,6 +47,81 @@ class PropertySpec extends AnyFunSuite {
     val twice = Scd2.upsert(once, batch, Seq("bkey"), now)
     assert(twice.count() == once.count() + 1)
     assert(twice.filter($"actv_flg" === "Y").count() == 1)
+  }
+
+  // The three-scan upsert the one-scan form replaced, kept as the reference
+  // model: inactive rows, semi-joined active rows (closed) and anti-joined
+  // active rows (untouched), then the inserted batch.
+  private def upsertThreeScan(target: DataFrame, batch: DataFrame, keyCols: Seq[String]): DataFrame = {
+    val keys = batch.select(keyCols.map(col): _*).distinct()
+    val active = target.filter($"actv_flg" === "Y")
+    val closed = active.join(keys, keyCols, "left_semi").withColumn("actv_flg", lit("N")).withColumn("record_to", now)
+    target.filter($"actv_flg" =!= "Y" || $"actv_flg".isNull)
+      .unionByName(closed)
+      .unionByName(active.join(keys, keyCols, "left_anti"))
+      .unionByName(inserted(batch), allowMissingColumns = true)
+  }
+
+  // The four-scan two-key form, the reference model of upsertTwoKeyInLists.
+  private def upsertFourScan(target: DataFrame, batch: DataFrame, key1: String, key2: String): DataFrame = {
+    val k1 = batch.select(key1).distinct()
+    val k2 = batch.select(key2).distinct()
+    val active = target.filter($"actv_flg" === "Y")
+    val closed = active.join(k1, Seq(key1), "left_semi").join(k2, Seq(key2), "left_semi")
+      .withColumn("actv_flg", lit("N")).withColumn("record_to", now)
+    val untouched = active.join(k1, Seq(key1), "left_anti")
+      .unionByName(active.join(k1, Seq(key1), "left_semi").join(k2, Seq(key2), "left_anti"))
+    target.filter($"actv_flg" =!= "Y" || $"actv_flg".isNull)
+      .unionByName(closed)
+      .unionByName(untouched)
+      .unionByName(inserted(batch), allowMissingColumns = true)
+  }
+
+  private def inserted(batch: DataFrame): DataFrame =
+    batch.withColumn("actv_flg", lit("Y")).withColumn("record_to", lit(null).cast("timestamp"))
+
+  test("SCD-2 one-scan upserts equal the three-scan and four-scan reference forms") {
+    // small key spaces force hits, misses and duplicate batch keys; None is
+    // a NULL key or a NULL actv_flg
+    val key = Gen.option(Gen.choose(1, 4))
+    val targetRow = for {
+      k1 <- key; k2 <- key
+      flg <- Gen.oneOf(Some("Y"), Some("N"), None)
+      closedBefore <- Gen.oneOf(true, false)
+    } yield (k1, k2, flg, closedBefore)
+    val cases = for {
+      nt <- Gen.choose(0, 12)
+      target <- Gen.listOfN(nt, targetRow)
+      nb <- Gen.choose(1, 6)
+      batch <- Gen.listOfN(nb, Gen.zip(key, key))
+      widens <- Gen.oneOf(true, false) // the batch adds a column the target lacks
+    } yield (target, batch, widens)
+    val drawn = samples(cases, 24)
+    // the drawn cases cover every shape the property is about
+    val targets = drawn.flatMap(_._1)
+    assert(targets.exists(_._1.isEmpty) && drawn.exists(_._2.exists(_._1.isEmpty)), "NULL keys")
+    assert(targets.exists(_._3.isEmpty) && targets.exists(_._3.contains("N")), "NULL and 'N' actv_flg")
+    assert(drawn.exists(d => d._2.map(_._1).distinct.size < d._2.size), "duplicate batch keys")
+    assert(drawn.exists(_._3) && drawn.exists(!_._3), "widening and non-widening batches")
+
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    drawn.zipWithIndex.foreach { case ((tRows, bRows, widens), i) =>
+      val target = tRows.zipWithIndex.map { case ((k1, k2, flg, closedBefore), j) =>
+        (k1, k2, s"t$j", flg, if (closedBefore) Some(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")) else None)
+      }.toDF("k1", "k2", "payload", "actv_flg", "record_to")
+      val b0 = bRows.zipWithIndex.map { case ((k1, k2), j) => (k1, k2, s"b$j") }.toDF("k1", "k2", "payload")
+      val batch = if (widens) b0.withColumn("extra", lit("x")) else b0
+      val ctx = s"case $i: target=$tRows batch=$bRows widens=$widens"
+
+      val one = Scd2.upsert(target, batch, Seq("k1"), now)
+      val ref = upsertThreeScan(target, batch, Seq("k1"))
+      assert(one.columns.toSeq == ref.columns.toSeq, ctx)
+      assert(rows(one) == rows(ref), ctx)
+      val two = Scd2.upsertTwoKeyInLists(target, batch, "k1", "k2", now)
+      val ref2 = upsertFourScan(target, batch, "k1", "k2")
+      assert(two.columns.toSeq == ref2.columns.toSeq, ctx)
+      assert(rows(two) == rows(ref2), ctx)
+    }
   }
 
   test("explode cardinality = sum of list lengths (empty lists drop rows)") {

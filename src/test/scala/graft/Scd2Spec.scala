@@ -76,6 +76,41 @@ class Scd2Spec extends AnyFunSuite {
     assert(out.count() == 6)
   }
 
+  test("upsertPartitioned: the commit's write plan scans the warehouse exactly once") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val path = java.nio.file.Files.createTempDirectory("graft-scd2-scan").toString + "/wh"
+    val warehouse = new java.io.File(path).getAbsolutePath + "/"
+    val load1 = (1 to 40).map(k => (k.toLong, s"v$k")).toDF("k", "payload")
+    Scd2.upsertPartitioned(spark, path, load1, Seq("k"), nBuckets = 4, now = now)
+    // every bucket touched: changed keys plus new ones
+    val load2 = ((1 to 40 by 3).map(k => (k.toLong, s"v$k-new")) ++ Seq((41L, "v41"))).toDF("k", "payload")
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.commandExecuted.isInstanceOf[InsertIntoHadoopFsRelationCommand]) writes.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Scd2.upsertPartitioned(spark, path, load2, Seq("k"), nBuckets = 4, now = now)
+      // listener events arrive through the listener bus: poll for the write
+      eventually(timeout(10.seconds), interval(50.millis))(assert(writes.size == 1))
+    } finally spark.listenerManager.unregister(listener)
+    val plan = writes.peek().executedPlan
+    val scans = new AdaptiveSparkPlanHelper {}
+      .collect(plan) { case s: FileSourceScanExec => s }
+      .filter(_.relation.location.rootPaths.forall(_.toUri.getPath.startsWith(warehouse)))
+    assert(scans.size == 1, s"the upsert must read the touched buckets once, got ${scans.size} scans:\n$plan")
+    assert(scans.head.relation.location.rootPaths.size > 1, "one multi-dir relation over the touched buckets")
+    val t = graft.sources.VersionedTable.read(spark, path)
+    assert(t.count() == 40 + 14 + 1 && t.filter($"actv_flg" === "Y").count() == 41)
+  }
+
   test("pointInTimeLookup: probes resolve to the version valid at their instant; gaps and pre-load probes drop out") {
     import java.sql.Timestamp
     def ts(x: String) = Timestamp.valueOf(x)

@@ -293,18 +293,42 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(VersionedTable.read(spark, path).collect().map(_.getInt(1)).sorted.toSeq == Seq(2, 3, 4, 5))
   }
 
-  test("commitDelta rebalance gate: tiny commits skip the shuffle, above-advisory commits stay file-bounded") {
+  test("commitDelta rebalance gate: tiny commits write one file per dir on every core, above-advisory commits stay file-bounded") {
     val path = Files.createTempDirectory("graft-vt-gate").toString + "/t"
     def files(p: String): Int =
       Option(new java.io.File(p).listFiles()).map(_.count(_.getName.endsWith(".parquet"))).getOrElse(0)
     // SMALL (estimate far below the default 64 MB advisory): the gate
-    // replaces the rebalance exchange with coalesce(1) — one writer task,
-    // exactly ONE file per partition value, no shuffle
+    // replaces the rebalance exchange with a keyed placement on the
+    // partition value over defaultParallelism tasks — each value lands in
+    // one task, so exactly ONE file per partition value, and the write
+    // stage runs on more than one task
     val small = (0 until 64).map(i => (i % 4L, i.toLong)).toDF("bucket", "id").repartition(8)
-    VersionedTable.commitDelta(spark, path, small, "bucket")
+    val sc = spark.sparkContext
+    val group = s"gate-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "small-band commit")
+    try VersionedTable.commitDelta(spark, path, small, "bucket")
+    finally sc.clearJobGroup()
     val smallPerDir = (0 until 4).map(b => files(s"$path/v=1/p=$b"))
     assert(smallPerDir.forall(_ == 1),
-      s"small commit must coalesce to one file per partition dir, got $smallPerDir")
+      s"small commit must write one file per partition dir, got $smallPerDir")
+    // the write stage is the last stage of the group's last job. Job
+    // status reaches the tracker through the listener bus, in order: once
+    // a fence job run after the commit shows as done, every job of the
+    // commit does too
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val fence = s"$group-fence"
+    sc.setJobGroup(fence, "listener-bus fence")
+    try sc.parallelize(Seq(1), 1).count()
+    finally sc.clearJobGroup()
+    eventually(timeout(10.seconds), interval(50.millis)) {
+      assert(sc.statusTracker.getJobIdsForGroup(fence).flatMap(sc.statusTracker.getJobInfo)
+        .exists(_.status == org.apache.spark.JobExecutionStatus.SUCCEEDED))
+    }
+    val jobs = sc.statusTracker.getJobIdsForGroup(group).flatMap(sc.statusTracker.getJobInfo)
+    val writeTasks = sc.statusTracker.getStageInfo(jobs.maxBy(_.jobId).stageIds.max).map(_.numTasks)
+    assert(sc.defaultParallelism > 1 && writeTasks.exists(_ > 1),
+      s"small-band write stage must run on more than one task, ran $writeTasks")
     // LARGE (estimate above advisory): lower the advisory so the same
     // shape crosses the gate — the rebalance bounds files per partition
     // dir by AQE sizing instead of tasks x partitions (8 tasks x 4 buckets
