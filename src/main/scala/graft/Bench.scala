@@ -64,8 +64,20 @@ object Bench {
     }
   }
 
-  /** Per-query FLOOR = min across every parseable, UNTAINTED
-    * BENCH_r*.json in cwd (queries + extras) and the floor store.
+  /** A query's stable identity across record formats: the `qNNN` prefix.
+    * The round-close record uses SHORT keys ("q114") to fit the bounded
+    * tail window it is captured from (r10: the full-name line outgrew the
+    * 2000-char window and the round parsed as null — the regression guard
+    * was silently disarmed); local records keep full names. Flooring by
+    * prefix makes both formats min-mergeable.
+    */
+  private def qkey(name: String): String = name.split('_').head
+
+  /** Per-query FLOOR = min across every UNTAINTED BENCH_r*.json in `dir`
+    * (the working directory by default; queries + extras) and the floor
+    * store. A floor file that does not parse to a JSON object fails the
+    * run, naming the file: a gate that silently compared against nothing
+    * would pass every regression.
     * Rationale (VERDICT r08 "what's wrong #1"): the
     * previous newest-round-wins rule made one contention-polluted
     * round-close record (r06, r08) the comparison base for the next round,
@@ -81,16 +93,7 @@ object Bench {
     * exactly this). A run at an SF with no prior record gets an empty
     * floor and an honest empty `regressions_x`.
     */
-  /** A query's stable identity across record formats: the `qNNN` prefix.
-    * The round-close record the driver captures uses SHORT keys ("q114")
-    * to fit its bounded tail window (r10: the full-name line outgrew the
-    * 2000-char window and the round parsed as null — the regression guard
-    * was silently disarmed); local records keep full names. Flooring by
-    * prefix makes both formats min-mergeable.
-    */
-  private def qkey(name: String): String = name.split('_').head
-
-  private def loadBaseline(sfDir: String): (String, Map[String, Double]) = {
+  private[graft] def loadBaseline(sfDir: String, dir: java.io.File = new java.io.File(".")): (String, Map[String, Double]) = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     var used = 0
     // accepts either wrapper shape: BENCH_r*.json nests the record under
@@ -122,15 +125,16 @@ object Bench {
     //                        by untainted runs (writeFloors below) — a tainted
     //                        run can no longer destroy the only usable floor,
     //                        which is exactly what killed round 11's guard.
-    val files = Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
+    val files = Option(dir.listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.matches("BENCH_r\\d+\\.json") ||
         f.getName.matches("BENCH_LOCAL.*\\.json") || f.getName.matches("BENCH_FLOORS_.*\\.json") ||
         f.getName == "BENCH_SF1.json") // the committed sf1 artifact doubles as the sf1 floor seed
     val perRound = files.flatMap { f =>
-      try {
-        val root = mapper.readTree(f)
-        floorsOf(if (f.getName.matches("BENCH_r\\d+\\.json")) root.path("parsed") else root)
-      } catch { case _: Throwable => None }
+      val root =
+        try mapper.readTree(f)
+        catch { case e: java.io.IOException => throw new IllegalStateException(s"bench floor file $f does not parse: ${e.getMessage}", e) }
+      if (root == null || !root.isObject) throw new IllegalStateException(s"bench floor file $f holds no JSON object")
+      floorsOf(if (f.getName.matches("BENCH_r\\d+\\.json")) root.path("parsed") else root)
     }.flatten
     val merged = perRound.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).min }
     (s"min_untainted_rounds(n=$used,sf=${sfName(sfDir)})", merged)

@@ -260,18 +260,14 @@ object Dedup {
 
   /** Adds the exact Jaccard of the `sh_a`/`sh_b` shingle arrays of
     * candidate pairs as `jaccard`. Both arrays must be [[sigTable]]
-    * shingles (ascending, distinct, non-null), so |A∩B| is one
-    * allocation-free merge walk, bound once as `__inter` for the
-    * projection (a threshold filter the optimizer pushes into the verify
-    * join inlines it there). Same integer intersection and union
-    * arithmetic as [[jaccard]], so the double is bit-identical.
+    * shingles (ascending, distinct, non-null), so it is one
+    * allocation-free merge walk per use: a threshold filter the optimizer
+    * pushes into the verify join walks each pair once, the projection
+    * once. Same integer intersection and union arithmetic as [[jaccard]],
+    * so the double is bit-identical.
     */
-  private def withSortedJaccard(pairs: DataFrame): DataFrame = {
-    val union = (size(col("sh_a")) + size(col("sh_b")) - col("__inter")).cast("double")
-    pairs
-      .withColumn("__inter", graft.plans.SetExpressions.sortedIntersectCount(col("sh_a"), col("sh_b")))
-      .withColumn("jaccard", when(union === 0, lit(0.0)).otherwise(col("__inter").cast("double") / union))
-  }
+  private def withSortedJaccard(pairs: DataFrame): DataFrame =
+    pairs.withColumn("jaccard", graft.plans.SetExpressions.sortedJaccard(col("sh_a"), col("sh_b")))
 
   /** The MinHash signature table: (doc_id, shingles, sig) per doc with at
     * least one shingle. `shingles` are the doc's distinct md5-prefix

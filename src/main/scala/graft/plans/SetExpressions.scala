@@ -40,13 +40,24 @@ object SetExpressions {
     */
   def sortedIntersectCount(a: Column, b: Column): Column =
     ColumnShim.column(SortedArraysIntersectCount(ColumnShim.expression(a), ColumnShim.expression(b)))
+
+  /** Exact Jaccard |a ∩ b| / |a ∪ b| of two sorted arrays as a double (0.0
+    * when both are empty): one merge walk for the intersection, and the
+    * union as |a| + |b| - |a ∩ b| in integer arithmetic. One expression, so
+    * an optimizer that inlines it into a join condition and a projection
+    * still walks each pair once per use. Same contracts as
+    * [[sortedIntersectCount]].
+    */
+  def sortedJaccard(a: Column, b: Column): Column =
+    ColumnShim.column(SortedArraysJaccard(ColumnShim.expression(a), ColumnShim.expression(b)))
 }
 
-case class SortedArraysOverlap(left: Expression, right: Expression) extends BinaryExpression {
+/** Two ascending-sorted arrays of the same element type: bigint (shingle
+  * hashes) or string (tokens, UTF8 binary order).
+  */
+sealed trait SortedArraysInput extends BinaryExpression {
 
-  override def dataType: DataType = BooleanType
-
-  private def elemType: DataType = left.dataType.asInstanceOf[ArrayType].elementType
+  @transient protected lazy val elemType: DataType = left.dataType.asInstanceOf[ArrayType].elementType
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     def ok(dt: DataType): Boolean = dt match {
@@ -58,23 +69,79 @@ case class SortedArraysOverlap(left: Expression, right: Expression) extends Bina
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"SortedArraysOverlap requires two array<bigint> or two array<string> inputs, got ${left.dataType} / ${right.dataType}"
+        s"${getClass.getSimpleName} requires two array<bigint> or two array<string> inputs, got ${left.dataType} / ${right.dataType}"
       )
   }
+
+  /** The comparison of element `i` of `l` with element `j` of `r`, in Java. */
+  protected def compareCode(l: String, r: String, i: String, j: String): String = elemType match {
+    case LongType => s"java.lang.Long.compare($l.getLong($i), $r.getLong($j))"
+    case _        => s"$l.getUTF8String($i).compareTo($r.getUTF8String($j))"
+  }
+
+  protected def compare(la: ArrayData, ra: ArrayData, i: Int, j: Int): Int =
+    if (elemType == LongType) java.lang.Long.compare(la.getLong(i), ra.getLong(j))
+    else la.getUTF8String(i).compareTo(ra.getUTF8String(j))
+}
+
+/** |a ∩ b| of two sorted arrays of distinct elements by one merge walk. */
+sealed trait SortedArraysIntersect extends SortedArraysInput {
+
+  protected def intersectCount(l: Any, r: Any): Int = {
+    val la = l.asInstanceOf[ArrayData]
+    val ra = r.asInstanceOf[ArrayData]
+    val n = la.numElements()
+    val m = ra.numElements()
+    var i = 0
+    var j = 0
+    var acc = 0
+    while (i < n && j < m) {
+      val c = compare(la, ra, i, j)
+      if (c == 0) { acc += 1; i += 1; j += 1 }
+      else if (c < 0) i += 1
+      else j += 1
+    }
+    acc
+  }
+
+  /** Java code leaving |l ∩ r| in the int variable `acc`. */
+  protected def intersectCountCode(ctx: CodegenContext, l: String, r: String, acc: String): String = {
+    val i = ctx.freshName("i")
+    val j = ctx.freshName("j")
+    val n = ctx.freshName("n")
+    val m = ctx.freshName("m")
+    val c = ctx.freshName("c")
+    s"""
+       |int $n = $l.numElements();
+       |int $m = $r.numElements();
+       |int $i = 0;
+       |int $j = 0;
+       |int $acc = 0;
+       |while ($i < $n && $j < $m) {
+       |  int $c = ${compareCode(l, r, i, j)};
+       |  if ($c == 0) { $acc++; $i++; $j++; }
+       |  else if ($c < 0) { $i++; }
+       |  else { $j++; }
+       |}
+     """.stripMargin
+  }
+}
+
+
+case class SortedArraysOverlap(left: Expression, right: Expression) extends SortedArraysInput {
+
+  override def dataType: DataType = BooleanType
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val la = l.asInstanceOf[ArrayData]
     val ra = r.asInstanceOf[ArrayData]
     val n = la.numElements()
     val m = ra.numElements()
-    val isLong = elemType == LongType
     var i = 0
     var j = 0
     var hit = false
     while (!hit && i < n && j < m) {
-      val c =
-        if (isLong) java.lang.Long.compare(la.getLong(i), ra.getLong(j))
-        else la.getUTF8String(i).compareTo(ra.getUTF8String(j))
+      val c = compare(la, ra, i, j)
       if (c == 0) hit = true
       else if (c < 0) i += 1
       else j += 1
@@ -90,10 +157,6 @@ case class SortedArraysOverlap(left: Expression, right: Expression) extends Bina
       val m = ctx.freshName("m")
       val c = ctx.freshName("c")
       val hit = ctx.freshName("hit")
-      val cmp = elemType match {
-        case LongType => s"java.lang.Long.compare($l.getLong($i), $r.getLong($j))"
-        case _        => s"$l.getUTF8String($i).compareTo($r.getUTF8String($j))"
-      }
       s"""
          |int $n = $l.numElements();
          |int $m = $r.numElements();
@@ -101,7 +164,7 @@ case class SortedArraysOverlap(left: Expression, right: Expression) extends Bina
          |int $j = 0;
          |boolean $hit = false;
          |while (!$hit && $i < $n && $j < $m) {
-         |  int $c = $cmp;
+         |  int $c = ${compareCode(l, r, i, j)};
          |  if ($c == 0) { $hit = true; }
          |  else if ($c < 0) { $i++; }
          |  else { $j++; }
@@ -114,71 +177,41 @@ case class SortedArraysOverlap(left: Expression, right: Expression) extends Bina
     copy(left = newLeft, right = newRight)
 }
 
-case class SortedArraysIntersectCount(left: Expression, right: Expression) extends BinaryExpression {
+case class SortedArraysIntersectCount(left: Expression, right: Expression) extends SortedArraysIntersect {
 
   override def dataType: DataType = IntegerType
 
-  private def elemType: DataType = left.dataType.asInstanceOf[ArrayType].elementType
+  override def nullSafeEval(l: Any, r: Any): Any = intersectCount(l, r)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(dt: DataType): Boolean = dt match {
-      case ArrayType(LongType, _)   => true
-      case ArrayType(StringType, _) => true
-      case _                        => false
-    }
-    if (ok(left.dataType) && left.dataType == right.dataType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"SortedArraysIntersectCount requires two array<bigint> or two array<string> inputs, got ${left.dataType} / ${right.dataType}"
-      )
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (l, r) => {
+      val acc = ctx.freshName("acc")
+      s"""${intersectCountCode(ctx, l, r, acc)}
+         |${ev.value} = $acc;
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+case class SortedArraysJaccard(left: Expression, right: Expression) extends SortedArraysIntersect {
+
+  override def dataType: DataType = DoubleType
 
   override def nullSafeEval(l: Any, r: Any): Any = {
-    val la = l.asInstanceOf[ArrayData]
-    val ra = r.asInstanceOf[ArrayData]
-    val n = la.numElements()
-    val m = ra.numElements()
-    val isLong = elemType == LongType
-    var i = 0
-    var j = 0
-    var acc = 0
-    while (i < n && j < m) {
-      val c =
-        if (isLong) java.lang.Long.compare(la.getLong(i), ra.getLong(j))
-        else la.getUTF8String(i).compareTo(ra.getUTF8String(j))
-      if (c == 0) { acc += 1; i += 1; j += 1 }
-      else if (c < 0) i += 1
-      else j += 1
-    }
-    acc
+    val inter = intersectCount(l, r)
+    val union = l.asInstanceOf[ArrayData].numElements() + r.asInstanceOf[ArrayData].numElements() - inter
+    if (union == 0) 0.0 else inter.toDouble / union.toDouble
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (l, r) => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val m = ctx.freshName("m")
-      val c = ctx.freshName("c")
       val acc = ctx.freshName("acc")
-      val cmp = elemType match {
-        case LongType => s"java.lang.Long.compare($l.getLong($i), $r.getLong($j))"
-        case _        => s"$l.getUTF8String($i).compareTo($r.getUTF8String($j))"
-      }
-      s"""
-         |int $n = $l.numElements();
-         |int $m = $r.numElements();
-         |int $i = 0;
-         |int $j = 0;
-         |int $acc = 0;
-         |while ($i < $n && $j < $m) {
-         |  int $c = $cmp;
-         |  if ($c == 0) { $acc++; $i++; $j++; }
-         |  else if ($c < 0) { $i++; }
-         |  else { $j++; }
-         |}
-         |${ev.value} = $acc;
+      val union = ctx.freshName("union")
+      s"""${intersectCountCode(ctx, l, r, acc)}
+         |int $union = $l.numElements() + $r.numElements() - $acc;
+         |${ev.value} = $union == 0 ? 0.0 : (double) $acc / (double) $union;
        """.stripMargin
     })
 

@@ -17,9 +17,9 @@ import graft.core.Json
   *
   * Mapping (see INTEROP.md for the full design note):
   *
-  *  - committed version N (ascending) -> log entry i (0-based, gap-free —
-  *    burned reservations leave version-number gaps that Delta's contiguous
-  *    log cannot represent, so versions are renumbered in commit order)
+  *  - committed version N (ascending) -> log entry i (0-based, gap-free).
+  *    Versions are gap-free (1..n) too; they are renumbered only because
+  *    history that vacuum has made unservable is skipped
   *  - entry 0 additionally carries `protocol` + `metaData` actions;
   *    `metaData.schemaString` IS the manifest's `schema` field verbatim —
   *    both formats serialize Spark's `StructType.json`

@@ -12,36 +12,38 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * Layout:
   * {{{
   *   table/
-  *     v=1/  v=2/ ...           # immutable per-version directories
-  *       p=<part>/ ...          # parquet data of the partitions v rewrote
-  *     _commits/1.json ...      # commit manifest, written AFTER the data
-  *     _commits/1.reserved ...  # version reservations (writer lock files)
+  *     v=1-<8 hex>/ v=2-<8 hex>/ ...  # write-once data dir of one commit attempt
+  *       p=<part>/ ...                 # parquet data of the partitions it rewrote
+  *     _commits/1.json ...             # commit manifest, created AFTER the data
+  *     _dv/<id>                        # deletion-vector key lists
   * }}}
   *
   * Guarantees:
-  *  - readers see only fully-committed versions (the commit file is the
-  *    atomic publish: data is invisible until its rename completes)
+  *  - readers see only committed versions: version N exists once
+  *    `_commits/N.json` does, and that file appears in one atomic step
   *  - time travel: `read(spark, path, Some(v))`
   *  - writers never mutate a published snapshot (rollback = read older v)
-  *  - concurrent writers are safe: each writer RESERVES its version number
-  *    with an exclusive create of `_commits/N.reserved` before touching any
-  *    data path, so no two writers ever share a v-dir and no writer ever
-  *    deletes another writer's data (the round-1 protocol deleted
-  *    "orphan" v-dirs and could silently drop a concurrent writer's commit).
-  *    A writer that dies after reserving leaves a version-number gap —
-  *    harmless, readers only follow `*.json`. Exclusive create is atomic on
-  *    local/HDFS filesystems; an object store without atomic create (raw
-  *    S3) needs a catalog/lock service here, exactly as Delta does.
+  *  - versions are gap-free (1..n): a commit on base b is version b + 1 and
+  *    publishes by an atomic put-if-absent of `_commits/<b+1>.json` (a hard
+  *    link of a fully written tmp file — link(2) refuses an existing
+  *    name). Of concurrent writers on one base exactly one wins; the others
+  *    abort with ConcurrentModificationException and retry on the new
+  *    latest. Each attempt stages its data in a dir whose name is unique to
+  *    it, so a losing or crashed writer never collides with another and
+  *    never deletes another's data; [[vacuum]] reclaims such dirs by age.
+  *    This is Delta's log protocol. Only `file:` tables are committed to:
+  *    an object store needs its own put-if-absent primitive here.
   *
   * One layout, one commit: [[commitDelta]] is a partition-scoped rewrite —
   * only the partitions present in the written DataFrame get new data;
   * every other partition is carried forward BY REFERENCE in the commit
-  * manifest (`"partitions": {"<part>": <version holding its data>}`). A
-  * daily SCD-2 load over a 100 TB table rewrites the few key-bucket
-  * partitions its batch touches instead of copying the table; a small
-  * table that is rewritten whole commits on one constant partition value.
-  * Every reader resolves a version through that manifest; a commit json
-  * without one is refused (`IllegalStateException`).
+  * manifest (`"partitions": {"<part>": <version holding its data>}`, and
+  * `"dirs": {"<version>": "<its data dir>"}`). A daily SCD-2 load over a
+  * 100 TB table rewrites the few key-bucket partitions its batch touches
+  * instead of copying the table; a small table that is rewritten whole
+  * commits on one constant partition value. Every reader resolves a
+  * version through that manifest; a commit json without one is refused
+  * (`IllegalStateException`).
   */
 object VersionedTable {
 
@@ -71,64 +73,24 @@ object VersionedTable {
     run(3)
   }
 
-  /** Reserve the next free version number with an exclusive create of
-    * `_commits/N.reserved`. The reservation IS the write lock: losing the
-    * create race just means trying N+1. Reserved-but-never-published
-    * numbers (writer crash) stay burned — readers never see them.
+  /** Create `_commits/<v>.json` holding `meta` unless a commit already
+    * holds version `v`: the json is written in full to a tmp file that is
+    * hard-linked into place, so the create is atomic and exclusive.
+    * False when version `v` is taken.
     */
-  private def reserveVersion(f: FileSystem, path: String): Long = {
-    val commitsDir = new Path(s"$path/_commits")
-    f.mkdirs(commitsDir)
-    val taken = f.listStatus(commitsDir).map(_.getPath.getName).flatMap { n =>
-      if (n.endsWith(".json")) Some(n.stripSuffix(".json").toLong)
-      else if (n.endsWith(".reserved")) Some(n.stripSuffix(".reserved").toLong)
-      else None
-    }
-    var v = if (taken.isEmpty) 1L else taken.max + 1
-    var attempts = 0
-    while (attempts < 1000) {
-      try {
-        val out = f.create(new Path(commitsDir, s"$v.reserved"), false) // exclusive
-        out.close()
-        return v
-      } catch {
-        case _: java.io.IOException => v += 1; attempts += 1 // lost the race; next number
-      }
-    }
-    throw new IllegalStateException(s"could not reserve a version at $path after 1000 attempts")
-  }
-
-  /** A pre-existing uncommitted `v=N` dir while WE hold the reservation for
-    * N can only be dead data (tampering or pre-reservation-protocol
-    * leftovers — a live writer can't share our number). Remove it so the
-    * rename replaces it instead of nesting inside it. Never touches
-    * committed versions.
-    */
-  private def clearStaleDir(f: FileSystem, path: String, v: Long): Path = {
-    val finalDir = new Path(s"$path/v=$v")
-    if (f.exists(finalDir)) {
-      if (f.exists(new Path(s"$path/_commits/$v.json")))
-        throw new IllegalStateException(s"version $v of $path already committed")
-      f.delete(finalDir, true)
-    }
-    finalDir
-  }
-
-  /** Atomically publish version `v`: metadata to a tmp file, rename to
-    * `N.json`, drop the reservation marker.
-    */
-  private def publish(f: FileSystem, path: String, v: Long, meta: String): Unit = {
-    val tmpCommit = new Path(s"$path/_commits/.$v.json.tmp")
-    val out = f.create(tmpCommit, false)
-    out.write(meta.getBytes("UTF-8")); out.close()
-    if (!f.rename(tmpCommit, new Path(s"$path/_commits/$v.json")))
-      throw new IllegalStateException(s"commit race on version $v of $path")
-    f.delete(new Path(s"$path/_commits/$v.reserved"), false)
+  private def putIfAbsent(f: FileSystem, path: String, v: Long, meta: String): Boolean = {
+    val commits = java.nio.file.Paths.get(f.makeQualified(new Path(s"$path/_commits")).toUri)
+    java.nio.file.Files.createDirectories(commits)
+    val tmp = commits.resolve(s"$v.${java.util.UUID.randomUUID()}.tmp")
+    java.nio.file.Files.write(tmp, meta.getBytes("UTF-8"))
+    try { java.nio.file.Files.createLink(commits.resolve(s"$v.json"), tmp); true }
+    catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    finally java.nio.file.Files.delete(tmp)
   }
 
   /** Commit a DELTA: only the partitions present in `updated` (by the
-    * string form of `partCol`) get new data under `v=N/p=<part>/`; all
-    * other partitions carry forward by reference. The partition column
+    * string form of `partCol`) get new data under `<data dir>/p=<part>/`;
+    * all other partitions carry forward by reference. The partition column
     * stays a real data column in the files (the `p=` layout is additional,
     * for pruned single-partition reads).
     *
@@ -149,16 +111,19 @@ object VersionedTable {
   ): Long =
     commitDeltaOn(spark, path, latestSnapshot(spark, path), updated, partCol, clearedParts, extraMeta, statsCols)
 
-  /** [[commitDelta]] on `base` (None: no commit yet), evaluated once after
-    * the version is reserved: the blind [[commitDelta]] passes the latest
-    * snapshot, a [[withLatest]] attempt the snapshot it read. A commit
-    * published since `base` makes this one abort: before any job runs when
-    * it is already there after reserving, else at publish time.
+  /** [[commitDelta]] on `base` (None: no commit yet) as version
+    * `base + 1`: the blind [[commitDelta]] passes the latest snapshot, a
+    * [[withLatest]] attempt the snapshot it read. The data is staged in a
+    * fresh `v=<base+1>-<8 hex>` dir, then one put-if-absent of
+    * `_commits/<base+1>.json` publishes it. A commit published since
+    * `base` makes this one abort with ConcurrentModificationException:
+    * before any job runs when it is already there, else at the create,
+    * which then deletes the staged dir. Only `file:` tables are accepted.
     */
   private[graft] def commitDeltaOn(
       spark: SparkSession,
       path: String,
-      base: => Option[Snapshot],
+      base: Option[Snapshot],
       updated: DataFrame,
       partCol: String,
       clearedParts: Seq[String] = Nil,
@@ -166,7 +131,7 @@ object VersionedTable {
       statsCols: Seq[String] = Nil,
       clearDv: Boolean = false
   ): Long = {
-    val reserved = Set("version", "base", "schema", "committed_at", "partitions", "partition_column")
+    val reserved = Set("version", "base", "schema", "committed_at", "partitions", "partition_column", "dirs")
     require(
       extraMeta.keySet.intersect(reserved).isEmpty,
       s"extraMeta must not use reserved manifest fields: ${extraMeta.keySet.intersect(reserved).mkString(",")}"
@@ -177,19 +142,20 @@ object VersionedTable {
     )
     statsCols.foreach(c =>
       require(c.matches("[A-Za-z0-9_]+"), s"statsCols name '$c' must be [A-Za-z0-9_]+ (it keys manifest fields)"))
+    val scheme = Option(new Path(path).toUri.getScheme)
+      .getOrElse(FileSystem.getDefaultUri(spark.sparkContext.hadoopConfiguration).getScheme)
+    if (scheme != "file")
+      throw new UnsupportedOperationException(
+        s"cannot commit to $path: its scheme '$scheme' offers no atomic put-if-absent here (only file: tables)")
     val f = fs(spark, path)
-    val v = reserveVersion(f, path)
-    // the base is checked now and again at publish time so a concurrent
-    // delta commit can't be silently reverted by our stale carry-forward
-    // manifest (optimistic concurrency: the loser aborts and retries on a
-    // fresh base). A base already overtaken aborts here, before the
-    // zone-stats job and the staged write run.
-    val baseSnap = base
-    val baseVersion = baseSnap.map(_.version)
+    val baseVersion = base.map(_.version)
+    val v = baseVersion.getOrElse(0L) + 1
     def overtaken = new java.util.ConcurrentModificationException(
       s"concurrent commit on $path (base was $baseVersion); retry the delta against the new latest version")
-    if (latestVersion(spark, path) != baseVersion) throw overtaken
-    val prev = baseSnap.map(_.partitions).getOrElse(Map.empty[String, Long])
+    // a base already overtaken aborts here, before the zone-stats job and
+    // the staged write run
+    if (f.exists(new Path(s"$path/_commits/$v.json"))) throw overtaken
+    val prev = base.map(_.partitions).getOrElse(Map.empty[String, Long])
     // exactly-once stream markers ride ALONG THE LINEAGE: every delta commit
     // (loads, deletions, compaction) inherits the base manifest's
     // `stream_batch:*` fields, so the NEWEST commit always carries them and
@@ -202,8 +168,8 @@ object VersionedTable {
     // table, so the entries are spent)
     val inheritedDv =
       if (clearDv) Map.empty[String, String]
-      else baseSnap.map(_.fields("dv:")).getOrElse(Map.empty[String, String])
-    val meta = baseSnap.map(_.fields("stream_batch")).getOrElse(Map.empty) ++ inheritedDv ++ extraMeta
+      else base.map(_.fields("dv:")).getOrElse(Map.empty[String, String])
+    val meta = base.map(_.fields("stream_batch")).getOrElse(Map.empty) ++ inheritedDv ++ extraMeta
     // ZONE MAPS (the Delta/Iceberg data-skipping analogue): per written
     // partition, min/max of each requested long-castable column, recorded
     // in the manifest as `zone:<col>:<part>` -> "<min>,<max>". One extra
@@ -232,14 +198,15 @@ object VersionedTable {
           }
           .toMap
       }
-    val tmp = new Path(s"$path/.v=$v.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+    val dirName = s"v=$v-${java.util.UUID.randomUUID().toString.take(8)}"
+    val stage = new Path(s"$path/$dirName")
     // duplicate the partition column: partitionBy strips __part from the
     // files, the original column survives as data. Values are validated
-    // INSIDE the write job (before anything is renamed into place): a NULL
-    // or escape-needing value fails the stage, not the manifest — the p=
-    // dir name must stay equal to the data column's value (NULL would land
-    // as __HIVE_DEFAULT_PARTITION__, committed under a name no
-    // readPartition of the real key can reach).
+    // INSIDE the write job (before anything is published): a NULL or
+    // escape-needing value fails the stage, not the manifest — the p= dir
+    // name must stay equal to the data column's value (NULL would land as
+    // __HIVE_DEFAULT_PARTITION__, committed under a name no readPartition
+    // of the real key can reach).
     val partStr = col(partCol).cast("string")
     val validatedPart = when(
       partStr.isNull,
@@ -248,10 +215,9 @@ object VersionedTable {
       !partStr.rlike("^[A-Za-z0-9_.-]+$"),
       raise_error(concat(lit("partition value '"), partStr, lit("' needs escaping; use simple bucket ids"))).cast("string")
     ).otherwise(partStr)
-    // stage + move, cleaning the tmp dir on EVERY abort path (a rejected
-    // value or failed rename must not leave staged garbage; the burned
-    // reservation is harmless — readers only follow *.json)
-    val (written, finalDir) =
+    // stage into this attempt's own dir, deleting it on EVERY abort path (a
+    // rejected value or failed rename must not leave staged garbage)
+    val written =
       try {
         // REBALANCE by the partition value before the partitioned write
         // (round-18, guide §6 "coalesce on write"): without it every task
@@ -310,38 +276,31 @@ object VersionedTable {
         val placed =
           if (estBytes <= BigInt(advisory) / 16) staged.repartition(spark.sparkContext.defaultParallelism, col("__part"))
           else staged.hint("rebalance", col("__part"))
-        placed.write.partitionBy("__part").mode("overwrite").parquet(tmp.toString)
-        val w = f.listStatus(tmp).map(_.getPath.getName).filter(_.startsWith("__part=")).map(_.stripPrefix("__part="))
+        placed.write.partitionBy("__part").mode("errorifexists").parquet(stage.toString)
+        val w = f.listStatus(stage).map(_.getPath.getName).filter(_.startsWith("__part=")).map(_.stripPrefix("__part="))
         w.foreach { p => // defense in depth; the write-side validation already enforced this
           require(p.matches("[A-Za-z0-9_.-]+"), s"partition value '$p' needs escaping; use simple bucket ids")
+          if (!f.rename(new Path(stage, s"__part=$p"), new Path(stage, s"p=$p")))
+            throw new IllegalStateException(s"failed to move partition $p into place in $stage")
         }
-        val fd = clearStaleDir(f, path, v)
-        f.mkdirs(fd)
-        w.foreach { p =>
-          if (!f.rename(new Path(tmp, s"__part=$p"), new Path(fd, s"p=$p")))
-            throw new IllegalStateException(s"failed to move partition $p into place for version $v of $path")
-        }
-        f.delete(tmp, true)
-        (w, fd)
+        if (w.isEmpty) f.delete(stage, true) // a metadata-only commit names no data dir
+        w
       } catch {
         case e: Throwable =>
-          f.delete(tmp, true)
-          f.delete(new Path(s"$path/v=$v"), true) // partially-moved stage (never published)
+          f.delete(stage, true)
           throw e
       }
-    // publish-time conflict check: if anyone published since `base`, our
-    // carry-forward map is stale — abort (the burned reservation marks the
-    // number dead); the caller's withLatest re-runs its attempt.
-    if (latestVersion(spark, path) != baseVersion) {
-      f.delete(finalDir, true)
-      throw overtaken
-    }
     val parts = (prev -- clearedParts.filterNot(written.contains)) ++ written.map(_ -> v)
+    // data dirs ride the lineage like zone stats: every version the
+    // manifest names keeps the dir its base recorded for it
+    val named = parts.values.toSet
+    val dirs = base.map(_.dirs).getOrElse(Map.empty[Long, String]).filter { case (pv, _) => named(pv) } ++
+      (if (written.nonEmpty) Map(v -> dirName) else Map.empty)
     // zone stats ride the lineage like stream markers, but per PARTITION:
     // carried-forward partitions keep their base entries, rewritten or
     // cleared partitions drop them (fresh entries only if statsCols asked)
     val carried = parts.collect { case (p, pv) if pv != v => p }.toSet
-    val inheritedZone = baseSnap
+    val inheritedZone = base
       .map(_.fields("zone:"))
       .getOrElse(Map.empty[String, String])
       .filter { case (k, _) => k.split(":", 3).lift(2).exists(carried.contains) }
@@ -350,63 +309,18 @@ object VersionedTable {
     }
     val metaAll = inheritedZone ++ meta ++ newZone
     val partsJson = parts.toSeq.sortBy(_._1).map { case (p, pv) => s"${jsonStr(p)}: $pv" }.mkString("{", ", ", "}")
+    val dirsJson = dirs.toSeq.sortBy(_._1).map { case (pv, d) => s"${jsonStr(pv.toString)}: ${jsonStr(d)}" }.mkString("{", ", ", "}")
     val extraJson = metaAll.toSeq.sortBy(_._1).map { case (k, x) => s", ${jsonStr(k)}: ${jsonStr(x)}" }.mkString
-    publish(f, path, v,
-      s"""{"version": $v, "base": ${baseVersion.getOrElse(0L)}, "schema": ${jsonStr(updated.schema.json)}, "committed_at": ${System.currentTimeMillis()}, "partition_column": ${jsonStr(partCol)}, "partitions": $partsJson$extraJson}""")
-    // Close the remaining check-then-publish window. Conflict shapes:
-    //  (a) a commit landed BETWEEN our base and v — its partitions are
-    //      missing from our carry-forward manifest;
-    //  (b) a HIGHER version published whose recorded `base` < v — it never
-    //      saw us (a higher version with base >= v legitimately built ON us
-    //      and must NOT trigger a demote). A higher version whose json has
-    //      meanwhile VANISHED was itself demoted — not a conflict.
-    // Either conflict: demote our own commit and abort — the caller retries
-    // on a fresh base, rebasing both updates. Demote protocol:
-    //  1. re-create our reservation marker FIRST, so the version number can
-    //     never be reused while our v-dir exists (a reuser's stale-dir
-    //     clearing could otherwise delete data a successor's manifest
-    //     references);
-    //  2. delete the json (un-publish);
-    //  3. leave the DATA in place — a successor that transiently saw our
-    //     commit may reference our partition dirs from its manifest;
-    //     reclamation is vacuum's job, which honors such references.
-    def conflictingSuccessor(w: Long): Boolean =
-      try Snapshot.at(spark, path, w).base.forall(_ < v)
-      catch { case _: IllegalArgumentException => false } // demoted concurrently
-    val conflict = committedVersions(f, path).filter { w =>
-      (w > baseVersion.getOrElse(0L) && w < v) || (w > v && conflictingSuccessor(w))
-    }
-    if (conflict.nonEmpty && !durableThroughSuccessor(spark, f, path, v)) {
-      try { val out = f.create(new Path(s"$path/_commits/$v.reserved"), false); out.close() }
-      catch { case _: java.io.IOException => () } // marker already present
-      f.delete(new Path(s"$path/_commits/$v.json"), false)
-      throw new java.util.ConcurrentModificationException(
-        s"concurrent commit(s) ${conflict.sorted.mkString(",")} on $path conflict with base $baseVersion; retry the delta")
+    val published =
+      try putIfAbsent(f, path, v,
+        s"""{"version": $v, "base": ${baseVersion.getOrElse(0L)}, "schema": ${jsonStr(updated.schema.json)}, "committed_at": ${System.currentTimeMillis()}, "partition_column": ${jsonStr(partCol)}, "partitions": $partsJson, "dirs": $dirsJson$extraJson}""")
+      catch { case e: Throwable => f.delete(stage, true); throw e }
+    if (!published) {
+      f.delete(stage, true)
+      throw overtaken
     }
     v
   }
-
-  /** Demote fence: once a committed SUCCESSOR has recorded `base >= v`, a
-    * writer that detects a conflict on its own version v must NOT retract
-    * it — the successor read v's published state, so v's effects are
-    * durably embedded in the successor's lineage. Retracting would (a)
-    * leave the successor's carried partition references pointing at a
-    * version readers can no longer justify, and (b) make the caller's
-    * retry RE-APPLY the same batch on top of state that already contains
-    * it — for SCD-2, closing the just-inserted rows and inserting duplicate
-    * versions. The commit is instead treated as durable (the OTHER
-    * conflicting writer's own post-publish check demotes/retries it).
-    * Residual window (documented, not closed): a racer that published and
-    * passed its check between our base read and our publish, combined with
-    * a successor landing inside our post-publish check — microseconds wide,
-    * needs three writers; a pre-publish fence (pending->seal two-phase
-    * commit) would close it at the cost of a second atomic op per commit.
-    */
-  private[graft] def durableThroughSuccessor(spark: SparkSession, f: FileSystem, path: String, v: Long): Boolean =
-    committedVersions(f, path).exists { w =>
-      w > v && (try Snapshot.at(spark, path, w).base.exists(_ >= v)
-      catch { case _: IllegalArgumentException => false }) // successor demoted concurrently
-    }
 
   /** Committed (published) versions of the table, any order. */
   def committedVersionsPublic(spark: SparkSession, path: String): Seq[Long] =
@@ -431,7 +345,8 @@ object VersionedTable {
   /** One committed version, resolved from its commit json in ONE read and
     * parse; readers and writers resolve a version once and pass this value
     * on. `partitionMap` is None when the json carries no `partitions`
-    * object — [[partitions]] refuses such a commit. `raw` holds every
+    * object — [[partitions]] refuses such a commit. `dirs` maps each
+    * version the manifest names to its data dir. `raw` holds every
     * textual top-level field: the recorded `schema`, `partition_column`,
     * and the markers (`stream_batch*`, `zone:*`, `dv:*`) and extraMeta
     * that ride the lineage. The schema is parsed only when a reader asks
@@ -443,6 +358,7 @@ object VersionedTable {
       base: Option[Long],
       committedAt: Option[Long],
       partitionMap: Option[Map[String, Long]],
+      dirs: Map[Long, String],
       raw: Map[String, String]
   ) {
     def partitionColumn: Option[String] = raw.get("partition_column")
@@ -450,6 +366,12 @@ object VersionedTable {
     /** The manifest every reader and writer resolves partitions through. */
     def partitions: Map[String, Long] = partitionMap.getOrElse(
       throw new IllegalStateException(s"version $version of $path has no partitions manifest"))
+
+    /** The data dir, relative to the table root, of the partitions the
+      * manifest resolves to version `pv`.
+      */
+    def dirOf(pv: Long): String = dirs.getOrElse(pv,
+      throw new IllegalStateException(s"version $version of $path names no data dir for version $pv"))
 
     /** The textual fields whose name starts with `prefix` (`stream_batch`,
       * `zone:`, `dv:` — the marker families every commit carries forward).
@@ -476,7 +398,7 @@ object VersionedTable {
   private[graft] object Snapshot {
 
     /** Read and parse `_commits/<version>.json`. A json that does not exist
-      * (never published, or demoted meanwhile) is an IllegalArgumentException.
+      * (never published, or vacuumed) is an IllegalArgumentException.
       */
     def at(spark: SparkSession, path: String, version: Long): Snapshot = {
       import scala.jdk.CollectionConverters._
@@ -487,12 +409,29 @@ object VersionedTable {
         path, version, num("base"), num("committed_at"),
         if (parts.isObject) Some(parts.properties().asScala.iterator.map(e => e.getKey -> e.getValue.asLong()).toMap)
         else None,
+        root.path("dirs").properties().asScala.iterator.map(e => e.getKey.toLong -> e.getValue.asText()).toMap,
         root.properties().asScala.iterator.filter(_.getValue.isTextual).map(e => e.getKey -> e.getValue.asText()).toMap)
     }
 
     /** The given version, or the latest committed one. */
     def resolve(spark: SparkSession, path: String, version: Option[Long] = None): Snapshot =
-      version.map(at(spark, path, _)).orElse(latestSnapshot(spark, path)).getOrElse(noCommits(path))
+      version.map(servableAt(spark, path, _)).orElse(latestSnapshot(spark, path)).getOrElse(noCommits(path))
+
+    /** [[at]], refused like a json that does not exist once [[vacuum]] has
+      * reclaimed data the version names (its json may outlive that data by
+      * up to the vacuum's grace window).
+      */
+    def servableAt(spark: SparkSession, path: String, version: Long): Snapshot = {
+      val s = at(spark, path, version)
+      require(servable(spark, s), s"version $version of $path was vacuumed")
+      s
+    }
+  }
+
+  /** Whether every data dir the snapshot's manifest names still exists. */
+  private def servable(spark: SparkSession, s: Snapshot): Boolean = {
+    val f = fs(spark, s.path)
+    s.partitions.values.toSeq.distinct.forall(pv => f.exists(new Path(s"${s.path}/${s.dirOf(pv)}")))
   }
 
   /** A string field of a commit's metadata json (e.g. an exactly-once
@@ -504,20 +443,18 @@ object VersionedTable {
   /** Committed snapshots whose FULL referenced file set still exists on
     * disk, oldest first. Vacuum deletes version dirs referenced only by
     * non-retained manifests — but an old commit's JSON can survive (its own
-    * dir still carried forward by a newer manifest) while dirs IT references
-    * are gone. Such a version cannot be read or exported faithfully any
-    * more; exporters skip it rather than emit a silently partial snapshot.
+    * dir still carried forward by a newer manifest, or not yet past the
+    * vacuum's grace window) while dirs IT references are gone. Such a
+    * version cannot be read or exported faithfully any more; exporters
+    * skip it rather than emit a silently partial snapshot.
     * The newest commit must be servable: a table whose latest manifest
     * references vacuumed data is refused as corrupt.
     */
   private[graft] def servableSnapshots(spark: SparkSession, path: String): Seq[Snapshot] = {
-    val f = fs(spark, path)
-    val committed = committedVersions(f, path).sorted
-    val newest = Snapshot.resolve(spark, path, committed.lastOption)
-    def servable(s: Snapshot): Boolean =
-      s.partitions.values.toSeq.distinct.forall(pv => f.exists(new Path(s"$path/v=$pv")))
-    require(servable(newest), s"newest commit ${newest.version} of $path references vacuumed data — table is corrupt")
-    committed.filter(_ < newest.version).map(Snapshot.at(spark, path, _)).filter(servable) :+ newest
+    val committed = committedVersions(fs(spark, path), path).sorted
+    val newest = Snapshot.at(spark, path, committed.lastOption.getOrElse(noCommits(path)))
+    require(servable(spark, newest), s"newest commit ${newest.version} of $path references vacuumed data — table is corrupt")
+    committed.filter(_ < newest.version).map(Snapshot.at(spark, path, _)).filter(servable(spark, _)) :+ newest
   }
 
   /** The parquet files a snapshot's manifest references, sorted by their
@@ -527,7 +464,7 @@ object VersionedTable {
   private[graft] def dataFiles(spark: SparkSession, snap: Snapshot): Seq[(String, String, FileStatus)] = {
     val f = fs(spark, snap.path)
     snap.partitions.toSeq.flatMap { case (p, pv) =>
-      val d = s"v=$pv/p=$p"
+      val d = s"${snap.dirOf(pv)}/p=$p"
       val dp = new Path(s"${snap.path}/$d")
       if (!f.exists(dp)) Nil
       else f.listStatus(dp).toSeq
@@ -614,16 +551,19 @@ object VersionedTable {
     * them (by the pv<=boundary rule), each group anti-joins only its own
     * vectors, and the groups union back. Every group reads under the one
     * schema [[tableSchema]] folds from the commit log, so planning reads
-    * no parquet footer; with no pending vectors this is one read.
+    * no parquet footer; with no pending vectors this is one read. A
+    * snapshot whose deletions cleared every partition reads as no rows
+    * under the schema its own commit recorded.
     */
   private def readWithDv(spark: SparkSession, snap: Snapshot, parts: Seq[(String, Long)]): DataFrame = {
+    if (parts.isEmpty) return spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), snap.schema)
     val schema = tableSchema(spark, snap, parts)
     val groups = parts.sortBy(_._1)
       .groupBy { case (_, pv) => snap.dvSpecsFor(pv) }
       .toSeq
       .sortBy(_._2.head._1)
     val dfs = groups.map { case (specs, ps) =>
-      val dirs = ps.map { case (p, pv) => s"${snap.path}/v=$pv/p=$p" }
+      val dirs = ps.map { case (p, pv) => s"${snap.path}/${snap.dirOf(pv)}/p=$p" }
       applyDvSpecs(spark, snap.path, specs, spark.read.schema(schema).parquet(dirs: _*))
     }
     dfs.reduce(_.unionByName(_))
@@ -700,7 +640,7 @@ object VersionedTable {
     val snap = Snapshot.resolve(spark, path, version)
     val parts = snap.partitions.toSeq.sortBy(_._1)
     val recorded = parts.map(_._2).distinct.map(pv => pv -> foldSchemas(spark, snap, Seq(pv))).toMap
-    val dfs = parts.map { case (p, pv) => spark.read.schema(recorded(pv)).parquet(s"$path/v=$pv/p=$p") }
+    val dfs = parts.map { case (p, pv) => spark.read.schema(recorded(pv)).parquet(s"$path/${snap.dirOf(pv)}/p=$p") }
     val target: Seq[(String, org.apache.spark.sql.types.DataType)] = dfs
       .flatMap(_.schema.fields.map(f => f.name -> f.dataType))
       .groupBy(_._1)
@@ -1053,57 +993,65 @@ object VersionedTable {
     commitDeltaOn(spark, path, latest, current, partCol, clearedParts = snap.partitions.keys.toSeq, clearDv = true)
   }
 
-  /** VACUUM: delete version data no commit at-or-above `retainVersions`-ago
-    * can reference — dead orphans (reserved-but-never-published, demoted
-    * conflicts) and snapshots older than the retention window that no
-    * RETAINED delta manifest points into. Time travel keeps working for the
-    * newest `retainVersions` commits; older reads fail (their data may be
-    * gone), exactly Delta VACUUM's contract.
+  /** VACUUM: delete the data no commit among the newest `retainVersions`
+    * names. Time travel keeps working for those commits; older versions are
+    * refused (IllegalArgumentException), exactly Delta VACUUM's contract.
+    *  - A data dir or deletion-vector sidecar that only expired commits
+    *    name goes at once.
+    *  - One that no committed json names — an in-flight, losing or crashed
+    *    writer's — goes only once it is older than `orphanGraceMs`, and so
+    *    does a stray tmp file in `_commits`.
+    *  - An expired commit json goes once its own data dir is gone (or it
+    *    wrote none) and it is older than `orphanGraceMs`. Until then its
+    *    version number stays taken: a writer whose base precedes it may
+    *    still be in flight, and its put-if-absent must not win that old
+    *    number, or its update would never reach the latest version.
+    * `orphanGraceMs` is thus the longest a commit attempt may run; 0
+    * forces, which is only safe while nothing writes to the table.
     *
-    * @return the version directories removed
+    * @return the version of each data dir removed, ascending
     */
   def vacuum(spark: SparkSession, path: String, retainVersions: Int = 2, orphanGraceMs: Long = 24L * 3600 * 1000): Seq[Long] = {
     require(retainVersions >= 1, "must retain at least the latest version")
     val f = fs(spark, path)
-    val committed = committedVersions(f, path).sorted
+    val now = System.currentTimeMillis()
+    def aged(st: FileStatus): Boolean = now - st.getModificationTime >= orphanGraceMs
+    def ls(dir: String): Seq[FileStatus] = {
+      val p = new Path(dir)
+      if (f.exists(p)) f.listStatus(p).toSeq else Nil
+    }
+    val logs = ls(s"$path/_commits")
+    val committed = logs.map(_.getPath.getName).filter(_.endsWith(".json")).map(_.stripSuffix(".json").toLong).sorted
     if (committed.isEmpty) return Nil
-    val retained = committed.takeRight(retainVersions).map(Snapshot.at(spark, path, _))
-    // every v-dir any retained manifest references stays (delta commits
-    // reference OLDER version dirs for carried-forward partitions)
-    val referenced: Set[Long] = retained.map(_.version).toSet ++ retained.flatMap(_.partitions.values)
-    // a version with a live reservation marker may belong to an IN-FLIGHT
-    // writer (reserved, data staged, publish not yet run) — deleting it
-    // would corrupt the commit that then publishes. Only reclaim reserved
-    // versions whose marker is older than the grace window (crashed or
-    // demoted writers); pass orphanGraceMs=0 to force.
-    def reservedRecently(v: Long): Boolean = {
-      val marker = new Path(s"$path/_commits/$v.reserved")
-      f.exists(marker) &&
-      (System.currentTimeMillis() - f.getFileStatus(marker).getModificationTime) < orphanGraceMs
-    }
-    val root = new Path(path)
-    val vdirs = Option(f.listStatus(root)).getOrElse(Array.empty)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-      .map(_.getPath.getName.stripPrefix("v=").toLong)
-    val removable = vdirs.filter(v => !referenced.contains(v) && !reservedRecently(v)).sorted.toSeq
-    removable.foreach { v =>
-      f.delete(new Path(s"$path/v=$v"), true)
-      f.delete(new Path(s"$path/_commits/$v.json"), false) // expired commit (if published)
-      f.delete(new Path(s"$path/_commits/$v.reserved"), false) // stale marker (if any)
-    }
-    // deletion-vector sidecars: reclaim files no RETAINED manifest still
-    // references (compact clears dv entries; after the window rolls past
-    // the pre-compact versions, the doomed bytes' last index dies here —
-    // the point where a GDPR delete becomes physically irreversible)
-    val referencedDv: Set[String] =
-      retained.flatMap(_.fields("dv:").values.map(_.split("\\|", 2)(0))).toSet
-    val dvDir = new Path(s"$path/_dv")
-    if (f.exists(dvDir))
-      f.listStatus(dvDir).foreach { st =>
-        if (!referencedDv.contains(st.getPath.getName)) f.delete(st.getPath, true)
+    val (expired, retained) = committed.splitAt(committed.size - retainVersions)
+    val dataDirs = ls(path).filter(st => st.isDirectory && DataDir.matches(st.getPath.getName))
+    val sidecars = ls(s"$path/_dv")
+    // listed AFTER the dirs, so a commit published meanwhile keeps its dir
+    val live = (retained ++ committedVersions(f, path).filter(_ > committed.last)).map(Snapshot.at(spark, path, _))
+    val gone = expired.map(Snapshot.at(spark, path, _))
+    def dvIds(s: Snapshot): Iterable[String] = s.fields("dv:").values.map(_.split("\\|", 2)(0))
+    // an entry no live commit names goes at once when an expired one names
+    // it, else once it is older than the grace window
+    def reclaim(entries: Seq[FileStatus], keep: Set[String], expiredNamed: Set[String]): Seq[FileStatus] = {
+      val doomed = entries.filter { st =>
+        val n = st.getPath.getName
+        !keep(n) && (expiredNamed(n) || aged(st))
       }
-    removable
+      doomed.foreach(st => f.delete(st.getPath, true))
+      doomed
+    }
+    val keptDirs = live.flatMap(_.dirs.values).toSet
+    val removed = reclaim(dataDirs, keptDirs, gone.flatMap(_.dirs.values).toSet)
+    reclaim(sidecars, live.flatMap(dvIds).toSet, gone.flatMap(dvIds).toSet)
+    val agedLogs = logs.filter(aged).map(_.getPath.getName).toSet
+    gone.filter(s => agedLogs(s"${s.version}.json") && !s.dirs.get(s.version).exists(keptDirs))
+      .foreach(s => f.delete(new Path(s"$path/_commits/${s.version}.json"), false))
+    logs.filter(st => st.getPath.getName.endsWith(".tmp") && aged(st)).foreach(st => f.delete(st.getPath, false))
+    removed.map { st => val DataDir(v) = st.getPath.getName; v.toLong }.sorted
   }
+
+  /** A data dir name: `v=<version>-<8 hex>`. */
+  private val DataDir = """v=(\d+)-[0-9a-f]{8}""".r
 
   /** Change data feed between two committed versions of a delta-style
     * table: every row-level difference, typed Delta-CDF-style as `insert`,
@@ -1141,7 +1089,7 @@ object VersionedTable {
   ): DataFrame = {
     require(fromVersion < toVersion, s"changeFeed: fromVersion $fromVersion must precede toVersion $toVersion")
     require(keyCols.nonEmpty, "changeFeed: keyCols must be non-empty")
-    val (sOld, sNew) = (Snapshot.at(spark, path, fromVersion), Snapshot.at(spark, path, toVersion))
+    val (sOld, sNew) = (Snapshot.servableAt(spark, path, fromVersion), Snapshot.servableAt(spark, path, toVersion))
     // a partition changed when it resolves to another version dir OR
     // another set of deletion vectors applies to it (a deferred delete
     // rewrites no partition, it only adds a vector)

@@ -93,8 +93,9 @@ class DeltaExportSpec extends AnyFunSuite {
     // v2 swaps the file set: adds its own files, removes ALL of v1's
     val e1 = entries(1).actions.map(mapper.readTree)
     assert(e1.exists(_.has("add")) && e1.exists(_.has("remove")))
-    e1.filter(_.has("add")).foreach(n => assert(n.path("add").path("path").asText().startsWith("v=2/")))
-    e1.filter(_.has("remove")).foreach(n => assert(n.path("remove").path("path").asText().startsWith("v=1/")))
+    def dir(v: Long): String = VersionedTable.Snapshot.at(spark, path, v).dirOf(v) + "/"
+    e1.filter(_.has("add")).foreach(n => assert(n.path("add").path("path").asText().startsWith(dir(2L))))
+    e1.filter(_.has("remove")).foreach(n => assert(n.path("remove").path("path").asText().startsWith(dir(1L))))
 
     // widened schema ⇒ a fresh metaData action on the second entry
     assert(e1.exists(_.has("metaData")))

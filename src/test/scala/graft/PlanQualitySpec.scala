@@ -302,6 +302,13 @@ class PlanQualitySpec extends AnyFunSuite {
       "band-key equi-join missing")
   }
 
+  test("q168: the LSH verify walks each candidate pair at most twice — once in the join filter, once in the projection") {
+    val df = SparkEntry.queries("q168_crosscorpus_lsh")(spark, dir)
+    val formatted = df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+    val walks = "sortedarrays(intersectcount|jaccard)\\(".r.findAllIn(formatted).size
+    assert(walks >= 1 && walks <= 2, s"$walks merge walks per verified pair:\n$formatted")
+  }
+
   test("q165 probe: range serve scans the sketch table partitions, never the events table") {
     val path = graft.Queries.q165Build(spark, dir)
     val probe = graft.Queries.q165Probe(spark, path, dir)
@@ -399,8 +406,8 @@ class PlanQualitySpec extends AnyFunSuite {
     // carrying two shingle arrays (the q135 verify pattern), and |A∩B| is
     // the allocation-free sorted merge walk, not per-pair array builds
     val p = plan("q37_minhash_lsh")
-    assert(p.contains("sortedarraysintersectcount"),
-      s"merge-walk intersect missing — per-pair array_intersect churn is back:\n$p")
+    assert(p.contains("sortedarraysjaccard"),
+      s"merge-walk jaccard missing — per-pair array_intersect churn is back:\n$p")
     assert(!p.contains("array_intersect"),
       s"array_intersect materializes a throwaway array per verified pair:\n$p")
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 2,

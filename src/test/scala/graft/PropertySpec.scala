@@ -10,8 +10,9 @@ import graft.functions.Fernet
 import graft.operators.{Dedup, Scd2}
 
 /** Property-based invariants (SURVEY.md §5): SCD-2 active-uniqueness,
-  * idempotence and equality with the multi-scan reference forms, explode
-  * cardinality, encrypt-then-decrypt identity, Jaccard bounds/symmetry.
+  * idempotence and equality with the multi-scan reference forms, the
+  * versioned table against an in-memory model, explode cardinality,
+  * encrypt-then-decrypt identity, Jaccard bounds/symmetry.
   * Deterministic seeds (no scalatest-scalacheck bridge in
   * the offline cache, so generators are sampled directly).
   */
@@ -122,6 +123,141 @@ class PropertySpec extends AnyFunSuite {
       assert(two.columns.toSeq == ref2.columns.toSeq, ctx)
       assert(rows(two) == rows(ref2), ctx)
     }
+  }
+
+  // One step of the versioned-table model test.
+  private sealed trait VtStep
+  private final case class VtWrite(parts: Map[String, Set[Long]]) extends VtStep
+  private final case class VtDeleteWhere(parts: Seq[String], below: Long) extends VtStep
+  private final case class VtDeleteKeys(keys: Set[Long]) extends VtStep
+  private case object VtCompact extends VtStep
+  private final case class VtVacuum(retain: Int) extends VtStep
+  private case object VtNullPartition extends VtStep
+  private final case class VtStaleBase(pick: Int) extends VtStep
+
+  test("versioned table: seeded operation sequences match an in-memory model at every servable version") {
+    import java.nio.file.Files
+    import graft.sources.VersionedTable
+    type Model = Map[String, Map[Long, String]] // manifest partition -> visible k -> v
+    val keys = Gen.nonEmptyContainerOf[Set, Long](Gen.choose(0L, 5L))
+    val write = for {
+      n <- Gen.choose(1, 3) // one partition, or several touched buckets
+      ps <- Gen.pick(n, Seq("a", "b", "c"))
+      ks <- Gen.listOfN(n, keys)
+    } yield VtWrite(ps.toSeq.zip(ks).toMap)
+    val step: Gen[VtStep] = Gen.frequency(
+      5 -> write,
+      2 -> Gen.zip(Gen.nonEmptyContainerOf[Set, String](Gen.oneOf("a", "b", "c")), Gen.choose(0L, 6L))
+        .map { case (ps, below) => VtDeleteWhere(ps.toSeq.sorted, below) },
+      2 -> keys.map(VtDeleteKeys),
+      1 -> Gen.const(VtCompact),
+      1 -> Gen.choose(1, 3).map(VtVacuum),
+      1 -> Gen.const(VtNullPartition),
+      1 -> Gen.choose(0, 99).map(VtStaleBase))
+    val sequences = samples(Gen.choose(1, 12).flatMap(Gen.listOfN(_, step)), 100)
+    assert(sequences.size == 100)
+
+    def rows(m: Model): Set[(String, Long, String)] = m.toSeq.flatMap { case (p, kv) => kv.map { case (k, v) => (p, k, v) } }.toSet
+    def feed(a: Model, b: Model): Set[(String, Long, String, String)] = {
+      val (ra, rb) = (rows(a).map(r => (r._1, r._2) -> r._3).toMap, rows(b).map(r => (r._1, r._2) -> r._3).toMap)
+      (ra.keySet ++ rb.keySet).toSeq.flatMap { pk =>
+        (ra.get(pk), rb.get(pk)) match {
+          case (Some(x), None) => Seq((pk._1, pk._2, x, "delete"))
+          case (None, Some(y)) => Seq((pk._1, pk._2, y, "insert"))
+          case (Some(x), Some(y)) if x != y => Seq((pk._1, pk._2, x, "update_preimage"), (pk._1, pk._2, y, "update_postimage"))
+          case _ => Nil
+        }
+      }.toSet
+    }
+
+    // sequences run four at a time, each on its own table
+    def check(steps: List[VtStep], seq: Int): Unit = {
+      val path = Files.createTempDirectory("graft-vt-model").toString + "/t"
+      var history = Vector.empty[Model] // the model at version v is history(v - 1)
+      var vacuumedAt = 0L // the latest version when vacuum last ran
+      var fedPairs = Set.empty[(Long, Long)] // adjacent versions whose feed matched
+      def current: Model = history.lastOption.getOrElse(Map.empty)
+      def latest: Long = history.size.toLong
+      steps.zipWithIndex.foreach { case (s, i) =>
+        val ctx = s"sequence $seq step $i ($s) of ${steps.mkString(", ")}"
+        def commits(next: Model)(run: => Long): Unit = {
+          assert(run == latest + 1, s"$ctx: versions must be gap-free")
+          history :+= next
+        }
+        def refused[E <: Throwable](run: => Any)(implicit ct: scala.reflect.ClassTag[E]): Unit = {
+          intercept[E](run)
+          assert(VersionedTable.latestVersion(spark, path) == Some(latest).filter(_ > 0), s"$ctx: a refusal must not publish")
+        }
+        s match {
+          case VtWrite(parts) =>
+            val df = parts.toSeq.flatMap { case (p, ks) => ks.toSeq.map(k => (k, s"s$i", p)) }.toDF("k", "v", "p")
+            commits(current ++ parts.map { case (p, ks) => p -> ks.map(_ -> s"s$i").toMap })(
+              VersionedTable.commitDelta(spark, path, df, "p"))
+          case VtDeleteWhere(parts, below) =>
+            def run = VersionedTable.deleteWhere(spark, path, "p", parts, col("k") < below)
+            if (!parts.exists(current.contains)) refused[IllegalArgumentException](run)
+            else commits(parts.foldLeft(current) { (m, p) =>
+              m.get(p).map(_.filter(_._1 >= below)).fold(m)(kept => if (kept.isEmpty) m - p else m + (p -> kept))
+            })(run)
+          case VtDeleteKeys(doomed) =>
+            def run = VersionedTable.deleteKeysDeferred(spark, path, doomed.toSeq.toDF("k"), Seq("k"))
+            if (history.isEmpty) refused[IllegalArgumentException](run)
+            else commits(current.map { case (p, kv) => p -> kv.filter(kv => !doomed(kv._1)) })(run)
+          case VtCompact =>
+            def run = VersionedTable.compact(spark, path, "p")
+            if (history.isEmpty) refused[IllegalArgumentException](run)
+            else commits(current.filter(_._2.nonEmpty))(run)
+          case VtVacuum(retain) =>
+            VersionedTable.vacuum(spark, path, retainVersions = retain, orphanGraceMs = 0)
+            vacuumedAt = latest
+          case VtNullPartition =>
+            refused[Exception](VersionedTable.commitDelta(spark, path,
+              Seq((1L, "x", null.asInstanceOf[String])).toDF("k", "v", "p"), "p"))
+          case VtStaleBase(pick) =>
+            // a base overtaken since it was read, taken after the last vacuum
+            // (a grace-0 vacuum promises that no attempt is in flight)
+            val bases = (vacuumedAt until latest).toSeq
+            if (bases.nonEmpty) {
+              val b = bases(pick % bases.size)
+              val base = if (b == 0) None else Some(VersionedTable.Snapshot.at(spark, path, b))
+              refused[java.util.ConcurrentModificationException](VersionedTable.commitDeltaOn(
+                spark, path, base, Seq((9L, "stale", "a")).toDF("k", "v", "p"), "p"))
+            }
+        }
+        // the log: versions 1..latest, the latest always servable
+        if (history.nonEmpty) {
+          val committed = VersionedTable.committedVersionsPublic(spark, path).sorted
+          assert(committed.last == latest && committed.forall(v => v >= 1 && v <= latest), s"$ctx: log $committed")
+          val servable = VersionedTable.servableSnapshots(spark, path).map(_.version)
+          assert(servable.last == latest, ctx)
+          // the read at every servable version, and the change feed between
+          // adjacent ones (once per pair: a pair's feed can only change by
+          // losing data, which the reads see), in one job
+          val pairs = servable.sliding(2).collect { case Seq(a, b) => (a, b) }.filterNot(fedPairs).toSeq
+          val reads = servable.map(v => VersionedTable.read(spark, path, Some(v))
+            .select(lit(v).as("ver"), lit("read").as("kind"), col("p"), col("k"), col("v")))
+          val feeds = pairs.map { case (a, b) =>
+            VersionedTable.changeFeed(spark, path, a, b, Seq("p", "k"))
+              .select(lit(b).as("ver"), col("_change_type").as("kind"), col("p"), col("k"), col("v"))
+          }
+          val got = (reads ++ feeds).reduce(_.unionByName(_)).as[(Long, String, String, Long, String)].collect()
+          servable.foreach { v =>
+            val read = got.filter(r => r._1 == v && r._2 == "read").map(r => (r._3, r._4, r._5)).toSet
+            assert(read == rows(history(v.toInt - 1)), s"$ctx: read at $v")
+          }
+          pairs.foreach { case (a, b) =>
+            val fed = got.filter(r => r._1 == b && r._2 != "read").map(r => (r._3, r._4, r._5, r._2)).toSet
+            assert(fed == feed(history(a.toInt - 1), history(b.toInt - 1)), s"$ctx: changeFeed $a -> $b")
+          }
+          fedPairs ++= pairs
+        }
+      }
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try sequences.zipWithIndex
+      .map { case (steps, seq) => pool.submit((() => check(steps, seq)): java.util.concurrent.Callable[Unit]) }
+      .foreach(_.get())
+    finally pool.shutdownNow()
   }
 
   test("explode cardinality = sum of list lengths (empty lists drop rows)") {

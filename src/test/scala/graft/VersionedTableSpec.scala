@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.VersionedTable
 
 /** A competing writer for the stale-base abort test: copies a commit
-  * prepared in another copy of the table into place, data dir first and
-  * commit json last (the publish order), once.
+  * prepared in another copy of the table into place, once — the data dirs
+  * its json names that the table lacks first, the commit json last (the
+  * publish order).
   */
 object StaleBase {
   def copyTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
@@ -25,8 +26,13 @@ object StaleBase {
   def publishOnce(prep: String, path: String, v: Long): Unit = synchronized {
     val json = java.nio.file.Paths.get(s"$path/_commits/$v.json")
     if (!java.nio.file.Files.exists(json)) {
-      copyTree(java.nio.file.Paths.get(s"$prep/v=$v"), java.nio.file.Paths.get(s"$path/v=$v"))
-      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$prep/_commits/$v.json"), json)
+      val prepared = java.nio.file.Paths.get(s"$prep/_commits/$v.json")
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(prepared.toFile).path("dirs").elements()
+        .forEachRemaining { d =>
+          val to = java.nio.file.Paths.get(s"$path/${d.asText()}")
+          if (!java.nio.file.Files.exists(to)) copyTree(java.nio.file.Paths.get(s"$prep/${d.asText()}"), to)
+        }
+      java.nio.file.Files.copy(prepared, json)
     }
   }
 }
@@ -38,6 +44,16 @@ class VersionedTableSpec extends AnyFunSuite {
   // a whole-table rewrite: every row on one constant partition value
   private def commitWhole(df: DataFrame, path: String): Long =
     VersionedTable.commitDelta(spark, path, df.withColumn("p", lit("0")), "p")
+
+  // the data dir of version `v`, resolved through its own manifest
+  private def dirOf(path: String, v: Long): String =
+    s"$path/${VersionedTable.Snapshot.at(spark, path, v).dirOf(v)}"
+
+  // the names of every data dir under the table root
+  private def dataDirs(path: String): Set[String] =
+    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty).map(_.getName).filter(_.startsWith("v=")).toSet
+
+  private def dirName(path: String, v: Long): String = new java.io.File(dirOf(path, v)).getName
 
   test("commit/read/time-travel/rollback semantics") {
     val path = Files.createTempDirectory("graft-vt").toString + "/t"
@@ -61,39 +77,44 @@ class VersionedTableSpec extends AnyFunSuite {
       VersionedTable.read(spark, path).collect().map(r => (r.getInt(0), r.getString(1))).toSet
     commitWhole(Seq((1, "a")).toDF("id", "v"), path)
 
-    // the competitor: a v3 built on base 1 (version 2 is reserved, so the
-    // writer under test takes it), prepared in a copy of the table
+    // the competitor: a v2 built on base 1, prepared in a copy of the table
     val prep = Files.createTempDirectory("graft-vt-cc-prep").toString + "/t"
     StaleBase.copyTree(java.nio.file.Paths.get(path), java.nio.file.Paths.get(prep))
-    Files.writeString(java.nio.file.Paths.get(s"$prep/_commits/2.reserved"), "")
-    assert(commitWhole(Seq((2, "b")).toDF("id", "v"), prep) == 3L)
+    assert(commitWhole(Seq((2, "b")).toDF("id", "v"), prep) == 2L)
 
     // the competitor publishes WHILE our write job runs: the UDF copies its
     // data dir, then its commit json, into the table (local mode: the task
     // runs in this JVM)
-    val publishWinner = udf { (id: Int) => StaleBase.publishOnce(prep, path, 3L); id }
+    val publishWinner = udf { (id: Int) => StaleBase.publishOnce(prep, path, 2L); id }
     val ours = Seq((3, "c")).toDF("id", "v").withColumn("id", publishWinner(col("id")))
     intercept[java.util.ConcurrentModificationException] {
       commitWhole(ours, path)
     }
-    assert(VersionedTable.latestVersion(spark, path).contains(3L))
+    assert(VersionedTable.latestVersion(spark, path).contains(2L))
     assert(state == Set((2, "b")), "the concurrent winner must not be reverted")
-    assert(!new java.io.File(s"$path/v=2").exists(), "the aborted commit's data must be removed")
+    assert(dataDirs(path) == Set(dirName(path, 1L), dirName(path, 2L)), "the aborted commit's data must be removed")
     // the retry (fresh base) wins cleanly — the withLatest loop shape
-    assert(commitWhole(Seq((3, "c")).toDF("id", "v"), path) == 4L)
+    assert(commitWhole(Seq((3, "c")).toDF("id", "v"), path) == 3L)
     assert(state == Set((3, "c")))
   }
 
-  test("commit recovers from a crash-orphaned version directory") {
+  test("a crashed writer's staged dir never mixes into a commit; vacuum reclaims it by age") {
     val path = Files.createTempDirectory("graft-vt3").toString + "/t"
     commitWhole(Seq((1, "a")).toDF("id", "v"), path)
-    // crash orphan: v=2 data exists, no commit file
-    Seq((99, "dead")).toDF("id", "v").write.parquet(s"$path/v=2/p=0")
+    // crash orphan: a staged dir for version 2, no commit file
+    val orphan = s"$path/v=2-0badc0de"
+    Seq((99, "dead")).toDF("id", "v").write.parquet(s"$orphan/p=0")
     val v = commitWhole(Seq((2, "b"), (3, "c")).toDF("id", "v"), path)
     assert(v == 2L)
-    // the dead run's data must NOT survive inside the published v=2
+    // the dead run's data must NOT surface in the published version 2
     val got = VersionedTable.read(spark, path, Some(2)).collect().map(_.getInt(0)).sorted
     assert(got.toSeq == Seq(2, 3))
+    assert(new java.io.File(orphan).exists(), "a writer never deletes a dir it did not stage")
+    // no commit names the orphan: vacuum spares it inside the grace window
+    assert(VersionedTable.vacuum(spark, path) == Nil)
+    assert(VersionedTable.vacuum(spark, path, orphanGraceMs = 0) == Seq(2L))
+    assert(!new java.io.File(orphan).exists())
+    assert(VersionedTable.read(spark, path).count() == 2)
   }
 
   test("uncommitted versions are invisible") {
@@ -106,18 +127,21 @@ class VersionedTableSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException](VersionedTable.read(spark, path, Some(2)))
   }
 
-  test("a concurrent writer's reservation is never reused or deleted") {
+  test("an in-flight writer's staged dir is never reused or deleted") {
     val path = Files.createTempDirectory("graft-vt4").toString + "/t"
     commitWhole(Seq((1, "a")).toDF("id", "v"), path)
-    // another writer holds version 2 (reservation file, data not yet
-    // published) — round 1's protocol would have deleted its data dir
-    Files.createDirectories(java.nio.file.Paths.get(s"$path/_commits"))
-    Files.writeString(java.nio.file.Paths.get(s"$path/_commits/2.reserved"), "")
-    Seq((99, "other-writer")).toDF("id", "v").write.parquet(s"$path/v=2/p=0")
+    // another writer is staging version 2: its data dir exists, its commit
+    // json does not yet
+    val inFlight = s"$path/v=2-0000beef/p=0"
+    Seq((99, "other-writer")).toDF("id", "v").write.parquet(inFlight)
     val v = commitWhole(Seq((2, "b")).toDF("id", "v"), path)
-    assert(v == 3L) // skipped the reserved number
-    // the other writer's in-flight data is untouched
-    assert(spark.read.parquet(s"$path/v=2/p=0").head().getInt(0) == 99)
+    assert(v == 2L) // versions stay gap-free; the other writer's create loses
+    assert(dirOf(path, 2L) != s"$path/v=2-0000beef")
+    // the other writer's in-flight data is untouched, by the commit and by
+    // a vacuum inside the grace window
+    assert(spark.read.parquet(inFlight).head().getInt(0) == 99)
+    VersionedTable.vacuum(spark, path, retainVersions = 1)
+    assert(spark.read.parquet(inFlight).head().getInt(0) == 99)
     assert(VersionedTable.read(spark, path).head().getInt(0) == 2)
   }
 
@@ -159,7 +183,7 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(v2 == 2L)
     // physical check: v=2 holds exactly one partition dir; buckets 0/2 were
     // NOT copied
-    val v2dirs = new java.io.File(s"$path/v=2").listFiles().map(_.getName).filter(_.startsWith("p=")).sorted
+    val v2dirs = new java.io.File(dirOf(path, 2L)).listFiles().map(_.getName).filter(_.startsWith("p=")).sorted
     assert(v2dirs.toSeq == Seq("p=1"))
     // manifest: buckets 0/2 still reference v=1
     val m = VersionedTable.partitionMap(spark, path, 2L).get
@@ -193,7 +217,7 @@ class VersionedTableSpec extends AnyFunSuite {
     val after = VersionedTable.latestVersion(spark, path).get
     assert(after == before + 1)
     // only key 7's bucket was rewritten in the delete commit
-    val rewritten = new java.io.File(s"$path/v=$after").listFiles().map(_.getName).filter(_.startsWith("p=")).toSet
+    val rewritten = new java.io.File(dirOf(path, after)).listFiles().map(_.getName).filter(_.startsWith("p=")).toSet
     assert(rewritten.size == 1)
     val t = VersionedTable.read(spark, path)
     assert(t.filter($"k" === 7L).count() == 0) // both versions gone
@@ -281,11 +305,11 @@ class VersionedTableSpec extends AnyFunSuite {
       )
     finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
     def files(p: String) = new java.io.File(p).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(files(s"$path/v=2/p=0") > 1, "fixture should produce multiple small files")
+    assert(files(s"${dirOf(path, 2L)}/p=0") > 1, "fixture should produce multiple small files")
     val cv = VersionedTable.compact(spark, path, "bucket")
     val m = VersionedTable.partitionMap(spark, path, cv).get
     assert(m.values.toSet == Set(cv)) // every partition now lives in the compacted version
-    assert(files(s"$path/v=$cv/p=0") == 1 && files(s"$path/v=$cv/p=1") == 1)
+    assert(files(s"${dirOf(path, cv)}/p=0") == 1 && files(s"${dirOf(path, cv)}/p=1") == 1)
     val rows = VersionedTable.read(spark, path).collect().map(r => (r.getInt(1), r.getString(2))).sortBy(_._1)
     assert(rows.toSeq == Seq((2, "b"), (3, "c"), (4, "d"), (5, "e"))) // bucket 0 was REPLACED by load 2
     // old version dirs are now unreferenced -> vacuum reclaims them
@@ -308,7 +332,7 @@ class VersionedTableSpec extends AnyFunSuite {
     sc.setJobGroup(group, "small-band commit")
     try VersionedTable.commitDelta(spark, path, small, "bucket")
     finally sc.clearJobGroup()
-    val smallPerDir = (0 until 4).map(b => files(s"$path/v=1/p=$b"))
+    val smallPerDir = (0 until 4).map(b => files(s"${dirOf(path, 1L)}/p=$b"))
     assert(smallPerDir.forall(_ == 1),
       s"small commit must write one file per partition dir, got $smallPerDir")
     // the write stage is the last stage of the group's last job. Job
@@ -338,7 +362,7 @@ class VersionedTableSpec extends AnyFunSuite {
     try {
       val big = (0 until 20000).map(i => (i % 4L, i.toLong)).toDF("bucket", "id").repartition(8)
       VersionedTable.commitDelta(spark, path, big, "bucket")
-      val perDir = (0 until 4).map(b => files(s"$path/v=2/p=$b"))
+      val perDir = (0 until 4).map(b => files(s"${dirOf(path, 2L)}/p=$b"))
       assert(perDir.forall(n => n >= 1 && n <= 4),
         s"rebalanced commit must bound files per partition dir (AQE-sized), got $perDir")
     } finally spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", prevAdvisory)
@@ -349,17 +373,16 @@ class VersionedTableSpec extends AnyFunSuite {
     // delta table: v1 writes buckets 0/1/2; v2 rewrites only bucket 1
     VersionedTable.commitDelta(spark, path, Seq((0L, "a"), (1L, "b"), (2L, "c")).toDF("bucket", "v"), "bucket")
     VersionedTable.commitDelta(spark, path, Seq((1L, "b2")).toDF("bucket", "v"), "bucket")
-    // dead orphan: reserved + data, never published
-    Files.writeString(java.nio.file.Paths.get(s"$path/_commits/3.reserved"), "")
-    Seq((9L, "dead")).toDF("bucket", "v").write.parquet(s"$path/v=3")
-    // a FRESH reservation may belong to an in-flight writer mid-commit:
-    // the default grace window protects its staged data
+    // dead orphan: a staged dir no commit names
+    Seq((9L, "dead")).toDF("bucket", "v").write.parquet(s"$path/v=3-deadbeef")
+    // a FRESH one may belong to an in-flight writer mid-commit: the default
+    // grace window protects its staged data
     assert(VersionedTable.vacuum(spark, path, retainVersions = 1) == Nil)
-    assert(new java.io.File(s"$path/v=3").exists())
+    assert(new java.io.File(s"$path/v=3-deadbeef").exists())
     // past the grace window (forced to 0) the orphan is reclaimed
     val removed = VersionedTable.vacuum(spark, path, retainVersions = 1, orphanGraceMs = 0)
     assert(removed == Seq(3L)) // v1 still referenced by v2's manifest; orphan v3 goes
-    assert(!new java.io.File(s"$path/v=3").exists())
+    assert(!new java.io.File(s"$path/v=3-deadbeef").exists())
     val rows = VersionedTable.read(spark, path).collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
     assert(rows.toSeq == Seq((0L, "a"), (1L, "b2"), (2L, "c")))
 
@@ -382,13 +405,13 @@ class VersionedTableSpec extends AnyFunSuite {
     // initial load: keys spread over 4 buckets
     val batch1 = (1 to 40).map(k => (k.toLong, s"v$k")).toDF("k", "payload")
     Scd2.upsertPartitioned(spark, path, batch1, Seq("k"), nBuckets = 4, now = ts1)
-    val v1Buckets = new java.io.File(s"$path/v=1").listFiles().map(_.getName).filter(_.startsWith("p=")).toSet
+    val v1Buckets = new java.io.File(dirOf(path, 1L)).listFiles().map(_.getName).filter(_.startsWith("p=")).toSet
     assert(v1Buckets.size > 1, "fixture should span several buckets")
 
     // second load: ONE key -> exactly one bucket rewritten
     val batch2 = Seq((7L, "v7-new")).toDF("k", "payload")
     Scd2.upsertPartitioned(spark, path, batch2, Seq("k"), nBuckets = 4, now = ts2)
-    val v2Buckets = new java.io.File(s"$path/v=2").listFiles().map(_.getName).filter(_.startsWith("p=")).toSet
+    val v2Buckets = new java.io.File(dirOf(path, 2L)).listFiles().map(_.getName).filter(_.startsWith("p=")).toSet
     assert(v2Buckets.size == 1, s"expected 1 rewritten bucket, got $v2Buckets")
 
     // SCD-2 semantics across the partitioned table
@@ -438,33 +461,14 @@ class VersionedTableSpec extends AnyFunSuite {
       VersionedTable.commitDelta(spark, path, Seq((null.asInstanceOf[String], 2)).toDF("part", "id"), "part"))
     noStagedGarbage()
     assert(VersionedTable.latestVersion(spark, path).contains(1L))
-    assert(!new java.io.File(s"$path/v=2").exists(), "aborted stage must not leave a v-dir")
+    assert(dataDirs(path) == Set(dirName(path, 1L)), "aborted stage must not leave a data dir")
     // escape-needing value: same abort path
     intercept[Exception](
       VersionedTable.commitDelta(spark, path, Seq(("a b", 3)).toDF("part", "id"), "part"))
     noStagedGarbage()
-    // table stays fully writable after the aborts (burned numbers are fine)
-    VersionedTable.commitDelta(spark, path, Seq(("b2", 4)).toDF("part", "id"), "part")
+    // table stays fully writable after the aborts, with no version gap
+    assert(VersionedTable.commitDelta(spark, path, Seq(("b2", 4)).toDF("part", "id"), "part") == 2L)
     assert(VersionedTable.read(spark, path).count() == 2)
-  }
-
-  test("demote fence: a commit is durable once a successor records base >= v") {
-    val path = Files.createTempDirectory("graft-vt13").toString + "/t"
-    VersionedTable.commitDelta(spark, path, Seq((0L, 1, "a")).toDF("bucket", "id", "v"), "bucket") // v1
-    VersionedTable.commitDelta(spark, path, Seq((0L, 1, "a2")).toDF("bucket", "id", "v"), "bucket") // v2, base 1
-    val f = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // v2 recorded base=1: v1's effects are embedded in v2's lineage -> v1 durable
-    assert(VersionedTable.durableThroughSuccessor(spark, f, path, 1L))
-    // nothing built on v2 yet -> v2 may still be demoted on conflict
-    assert(!VersionedTable.durableThroughSuccessor(spark, f, path, 2L))
-    // a successor that never saw v2 (base < 2) does NOT make v2 durable
-    Files.writeString(java.nio.file.Paths.get(s"$path/_commits/3.json"),
-      """{"version": 3, "base": 1, "schema": "{}", "committed_at": 0, "partitions": {}}""")
-    assert(!VersionedTable.durableThroughSuccessor(spark, f, path, 2L))
-    // one that DID build on v2 fences its demote
-    Files.writeString(java.nio.file.Paths.get(s"$path/_commits/4.json"),
-      """{"version": 4, "base": 2, "schema": "{}", "committed_at": 0, "partitions": {}}""")
-    assert(VersionedTable.durableThroughSuccessor(spark, f, path, 2L))
   }
 
   test("partitioned SCD-2 load tolerates schema drift across buckets (write-path null-padding)") {
@@ -759,7 +763,7 @@ class VersionedTableSpec extends AnyFunSuite {
     val jobs = sc.statusTracker.getJobIdsForGroup(group)
     assert(jobs.isEmpty, s"an overtaken base must abort before any job; ran ${jobs.length}")
     assert(VersionedTable.latestVersion(spark, path).contains(2L))
-    assert(!new java.io.File(s"$path/v=3").exists(), "the aborted commit's data must be removed")
+    assert(dataDirs(path) == Set(dirName(path, 1L), dirName(path, 2L)), "the aborted commit must leave no data dir")
     assert(state == Set((2, "b")), "the winner's rows must stay")
   }
 
@@ -777,8 +781,8 @@ class VersionedTableSpec extends AnyFunSuite {
     val latest = VersionedTable.read(spark, path)
     assert(latest.filter($"k" === 1L).count() == 0, "a vector scoped before the compaction exempts every row")
     assert(latest.count() == 1)
-    // the attempt on v1 burned v3 and aborted; the retry committed on v2
-    assert(v == 4L && VersionedTable.Snapshot.at(spark, path, v).base.contains(2L))
+    // the attempt on v1 lost version 2 and aborted; the retry committed on v2
+    assert(v == 3L && VersionedTable.Snapshot.at(spark, path, v).base.contains(2L))
   }
 
   test("changeFeed across a deferred delete reports the deleted row; a replica following it drops the key") {
@@ -792,6 +796,99 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(feed.select("k", "v", "_change_type").as[(Long, String, String)].collect().toSeq == Seq((1L, "x", "delete")))
     VersionedTable.applyChangeFeed(spark, rep, feed, Seq("k"), "p")
     assert(VersionedTable.read(spark, rep).select("k").as[Long].collect().toSeq == Seq(2L))
+  }
+
+  test("concurrent blind writers get distinct gap-free versions and lose no committed partition") {
+    val path = Files.createTempDirectory("graft-vt-race").toString + "/t"
+    val (writers, rounds) = (3, 25)
+    val barrier = new java.util.concurrent.CyclicBarrier(writers)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(writers)
+    // per writer, per round: the version it won, or what it failed with
+    val outcomes: Seq[Seq[Either[Throwable, Long]]] =
+      try (0 until writers).map { w =>
+        pool.submit(() => {
+          barrier.await()
+          (0 until rounds).map { i =>
+            try Right(VersionedTable.commitDelta(spark, path, Seq((s"w$w", i)).toDF("p", "i"), "p"))
+            catch { case e: Throwable => Left(e) }
+          }
+        })
+      }.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      finally pool.shutdownNow()
+    val failures = outcomes.flatten.collect { case Left(e) => e }
+    assert(failures.forall(_.isInstanceOf[java.util.ConcurrentModificationException]),
+      s"a lost race must abort with ConcurrentModificationException: ${failures.filterNot(
+        _.isInstanceOf[java.util.ConcurrentModificationException]).take(3).mkString("; ")}")
+    val won = outcomes.zipWithIndex.flatMap { case (os, w) =>
+      os.zipWithIndex.collect { case (Right(v), i) => (v, s"w$w", i) }
+    }.sortBy(_._1)
+    assert(won.map(_._1) == (1L to won.size.toLong), "every win is a distinct version, gap-free")
+    assert(VersionedTable.committedVersionsPublic(spark, path).sorted == won.map(_._1))
+    // every version reads back as the last win of each writer up to it
+    won.foreach { case (v, _, _) =>
+      val expected = won.filter(_._1 <= v).groupBy(_._2).map { case (p, ws) => (p, ws.last._3) }.toSet
+      val got = VersionedTable.read(spark, path, Some(v)).select("p", "i").as[(String, Int)].collect().toSet
+      assert(got == expected, s"version $v")
+    }
+  }
+
+  test("a vacuum loop running beside a writer never loses a committed update") {
+    val path = Files.createTempDirectory("graft-vt-vacrace").toString + "/t"
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val vacuumErrors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val passes = new java.util.concurrent.atomic.AtomicInteger()
+    val vacuumer = new Thread(() =>
+      while (!done.get()) {
+        try VersionedTable.vacuum(spark, path, retainVersions = 1)
+        catch { case e: Throwable => vacuumErrors.add(e) }
+        passes.incrementAndGet()
+      })
+    vacuumer.start()
+    try (0 until 60).foreach(i => VersionedTable.commitDelta(spark, path, Seq(((i % 4).toString, i)).toDF("p", "i"), "p"))
+    finally { done.set(true); vacuumer.join() }
+    assert(vacuumErrors.isEmpty, s"vacuum failed: ${vacuumErrors.peek()}")
+    assert(passes.get() > 1, "the vacuum loop must overlap the commits")
+    val got = VersionedTable.read(spark, path).select("p", "i").as[(String, Int)].collect().toSet
+    assert(got == Set(("0", 56), ("1", 57), ("2", 58), ("3", 59)))
+  }
+
+  test("vacuum keeps an expired version number taken inside the grace window: a writer on an older base still aborts") {
+    val path = Files.createTempDirectory("graft-vt-vacbase").toString + "/t"
+    commitWhole(Seq((1, "a")).toDF("id", "v"), path)
+    val base1 = VersionedTable.latestSnapshot(spark, path) // a writer reads version 1 ...
+    commitWhole(Seq((2, "b")).toDF("id", "v"), path)
+    commitWhole(Seq((3, "c")).toDF("id", "v"), path)
+    // ... while others commit 2 and 3 and a vacuum expires version 2's data
+    assert(VersionedTable.vacuum(spark, path, retainVersions = 1) == Seq(1L, 2L))
+    intercept[IllegalArgumentException](VersionedTable.read(spark, path, Some(2L)))
+    // the writer's create of 2.json must still lose: had the expired json
+    // gone with its data, the stale commit would win version 2 and its row
+    // would never reach the latest version
+    intercept[java.util.ConcurrentModificationException](
+      VersionedTable.commitDeltaOn(spark, path, base1, Seq((9, "z")).toDF("id", "v").withColumn("p", lit("0")), "p"))
+    assert(VersionedTable.read(spark, path).collect().map(_.getInt(0)).toSeq == Seq(3))
+    // past the grace window the expired jsons go too
+    VersionedTable.vacuum(spark, path, retainVersions = 1, orphanGraceMs = 0)
+    assert(VersionedTable.committedVersionsPublic(spark, path) == Seq(3L))
+  }
+
+  test("vacuum spares an uncommitted deletion-vector sidecar inside the grace window") {
+    val path = Files.createTempDirectory("graft-vt-dv-grace").toString + "/t"
+    VersionedTable.commitDelta(spark, path, Seq((1L, "a"), (2L, "b")).toDF("k", "p"), "p")
+    // an in-flight deferred delete: its sidecar is written, its commit is not
+    val sidecar = new java.io.File(s"$path/_dv/dv-inflight")
+    Seq(1L).toDF("k").write.parquet(sidecar.toString)
+    VersionedTable.vacuum(spark, path, retainVersions = 1)
+    assert(sidecar.exists(), "a sidecar no commit names yet must survive the default grace")
+    VersionedTable.vacuum(spark, path, retainVersions = 1, orphanGraceMs = 0)
+    assert(!sidecar.exists(), "past the grace window the orphan sidecar is reclaimed")
+    assert(VersionedTable.read(spark, path).count() == 2)
+  }
+
+  test("a table on a store without an atomic put-if-absent is refused at commit, naming its scheme") {
+    val e = intercept[UnsupportedOperationException](
+      VersionedTable.commitDeltaOn(spark, "s3a://bucket/t", None, Seq((1L, "a")).toDF("k", "p"), "p"))
+    assert(e.getMessage.contains("'s3a'"), e.getMessage)
   }
 
   test("sinks commit only on the snapshot their marker check read; retired retry names stay gone") {
